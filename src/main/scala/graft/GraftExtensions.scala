@@ -3,57 +3,19 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-import graft.functions.{BloomSketch, CmsSketch, DotProduct, HllSketch, KmvSketch, Md5Long}
+import graft.functions.GraftFunctions
 
 /** Spark extensions entry point: register the engine's custom Catalyst
   * expressions cluster-wide via
   * `--conf spark.sql.extensions=graft.GraftExtensions` (no per-session
-  * registration call needed). The operator library also self-registers
-  * lazily (graft.functions.GraftFunctions.registerAll), so either path
-  * works; this one survives into pure-SQL contexts (thrift server,
-  * spark-sql shell).
+  * registration call needed). Injects exactly the functions
+  * [[GraftFunctions.registerAll]] registers — both read
+  * [[GraftFunctions.table]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      new FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      exprs => DotProduct(exprs(0), exprs(1))))
-    e.injectFunction((
-      new FunctionIdentifier("graft_md5long"),
-      new ExpressionInfo(classOf[Md5Long].getName, "graft_md5long"),
-      exprs => Md5Long(exprs.head)))
-    e.injectFunction((
-      new FunctionIdentifier("graft_kmv"),
-      new ExpressionInfo(classOf[KmvSketch].getName, "graft_kmv"),
-      exprs => {
-        require(exprs.length == 2,
-          s"graft_kmv expects 2 arguments (hash, k), got ${exprs.length}")
-        KmvSketch(exprs(0), exprs(1))
-      }))
-    e.injectFunction((
-      new FunctionIdentifier("graft_cms"),
-      new ExpressionInfo(classOf[CmsSketch].getName, "graft_cms"),
-      exprs => {
-        require(exprs.length == 2,
-          s"graft_cms expects 2 arguments (hashes, width), got ${exprs.length}")
-        CmsSketch(exprs(0), exprs(1))
-      }))
-    e.injectFunction((
-      new FunctionIdentifier("graft_hll"),
-      new ExpressionInfo(classOf[HllSketch].getName, "graft_hll"),
-      exprs => {
-        require(exprs.length == 2,
-          s"graft_hll expects 2 arguments (hash, p), got ${exprs.length}")
-        HllSketch(exprs(0), exprs(1))
-      }))
-    e.injectFunction((
-      new FunctionIdentifier("graft_bloom"),
-      new ExpressionInfo(classOf[BloomSketch].getName, "graft_bloom"),
-      exprs => {
-        require(exprs.length == 3,
-          s"graft_bloom expects 3 arguments (hash, m, k), got ${exprs.length}")
-        BloomSketch(exprs(0), exprs(1), exprs(2))
-      }))
-  }
+  override def apply(e: SparkSessionExtensions): Unit =
+    GraftFunctions.table.foreach(f => e.injectFunction((
+      new FunctionIdentifier(f.name),
+      new ExpressionInfo(f.cls.getName, f.name),
+      f.builder)))
 }

@@ -2,7 +2,6 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -142,11 +141,6 @@ case class BloomSketch(
 }
 
 object BloomSketch {
-  def register(s: SparkSession): Unit =
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom", exprs => BloomSketch(exprs(0), exprs(1), exprs(2)),
-      "built-in")
-
   /** Membership probe as a pure column expression (no new function —
     * stays inside whole-stage codegen): true iff ALL k probe bits of
     * `hash` are set in `bloom` (an ARRAY<BIGINT> column/expression from

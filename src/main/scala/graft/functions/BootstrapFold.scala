@@ -2,7 +2,6 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -225,9 +224,4 @@ object BootstrapFold {
     */
   val Cuts: Array[Long] = Array(385749L, 771499L, 964373L, 1028665L,
     1044738L, 1047952L, 1048488L)
-
-  def register(s: SparkSession): Unit =
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_boot_fold",
-      exprs => BootstrapFold(exprs(0), exprs(1), exprs(2)), "built-in")
 }

@@ -2,7 +2,6 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -144,10 +143,4 @@ case class CmsSketch(
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CmsSketch =
     copy(left = newLeft, right = newRight)
-}
-
-object CmsSketch {
-  def register(s: SparkSession): Unit =
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cms", exprs => CmsSketch(exprs(0), exprs(1)), "built-in")
 }

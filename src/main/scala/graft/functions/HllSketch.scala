@@ -2,7 +2,6 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -123,10 +122,4 @@ case class HllSketch(
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): HllSketch =
     copy(left = newLeft, right = newRight)
-}
-
-object HllSketch {
-  def register(s: SparkSession): Unit =
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_hll", exprs => HllSketch(exprs(0), exprs(1)), "built-in")
 }

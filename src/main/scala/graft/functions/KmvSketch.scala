@@ -4,7 +4,6 @@ import java.nio.ByteBuffer
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -124,10 +123,4 @@ case class KmvSketch(
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): KmvSketch =
     copy(left = newLeft, right = newRight)
-}
-
-object KmvSketch {
-  def register(s: SparkSession): Unit =
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_kmv", exprs => KmvSketch(exprs(0), exprs(1)), "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -52,24 +51,5 @@ object Md5Long {
         ((d(4) & 0xffL) << 24) | ((d(5) & 0xffL) << 16) |
         ((d(6) & 0xffL) << 8) | (d(7) & 0xffL)
     top8 >>> 4
-  }
-
-  def register(s: SparkSession): Unit =
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_md5long", exprs => Md5Long(exprs.head), "built-in")
-}
-
-/** One-stop registration for the engine's custom SQL functions. */
-object GraftFunctions {
-  def registerAll(s: SparkSession): Unit = {
-    DotProduct.register(s)
-    L2Distance.register(s)
-    Md5Long.register(s)
-    KmvSketch.register(s)
-    CmsSketch.register(s)
-    HllSketch.register(s)
-    BloomSketch.register(s)
-    QuantileSketch.register(s)
-    BootstrapFold.register(s)
   }
 }

@@ -4,7 +4,6 @@ import java.nio.ByteBuffer
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -152,11 +151,4 @@ case class QuantileSketch(
   override protected def withNewChildrenInternal(newFirst: Expression,
       newSecond: Expression, newThird: Expression): QuantileSketch =
     copy(first = newFirst, second = newSecond, third = newThird)
-}
-
-object QuantileSketch {
-  def register(s: SparkSession): Unit =
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_qsketch", exprs => QuantileSketch(exprs(0), exprs(1), exprs(2)),
-      "built-in")
 }

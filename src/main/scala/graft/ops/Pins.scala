@@ -1,6 +1,8 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.StorageLevel
 
 /** The engine's ONE lineage/fan-in cut — every operator pin routes
   * through here instead of hardcoding `localCheckpoint` at ~50 call
@@ -34,11 +36,28 @@ object Pins {
     */
   def cut(df: DataFrame, eager: Boolean = true): DataFrame =
     df.sparkSession.conf.get(ModeKey, "local") match {
-      case "reliable" => df.checkpoint(eager)
+      case "reliable" => reliable(df, eager)
       case "local" => df.localCheckpoint(eager)
       case other => throw new IllegalArgumentException(
         s"$ModeKey must be 'local' or 'reliable', got '$other'")
     }
+
+  /** `Dataset.checkpoint` writes the pin's RDD to the checkpoint store
+    * in a job of its own. An eager pin runs that job as the
+    * materialization itself, one pass over the source. A lazy pin runs
+    * it after the first action that reads the pin, and without a cache
+    * that job computes every partition a second time — so a lazy pin's
+    * RDD is persisted and the write reads the blocks the action left.
+    * The blocks live as long as the pinned frame, as a local pin's do.
+    */
+  private def reliable(df: DataFrame, eager: Boolean): DataFrame = {
+    val pinned = df.checkpoint(eager)
+    if (!eager) pinned.queryExecution.logical match {
+      case r: LogicalRDD => r.rdd.persist(StorageLevel.MEMORY_AND_DISK)
+      case _ => ()
+    }
+    pinned
+  }
 
   /** Method-chain syntax: `frame.pin(eager = false)` reads like the
     * `localCheckpoint` call it replaces.

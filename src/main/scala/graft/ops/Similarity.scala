@@ -264,11 +264,10 @@ object Similarity {
   }
 
   /** TOP PRINCIPAL COMPONENT of the embedding corpus by `rounds`
-    * POWER ITERATIONS on the centered data — distributed PCA without
-    * ever materializing the d×d covariance: each round computes
-    * w = Σ_rows c·(c·v) in long (vec_id, dim, value) form — one keyed
-    * join + two hash aggregates — then normalizes. The first PC is
-    * the workhorse of embedding hygiene (dominant-direction removal,
+    * POWER ITERATIONS on the centered data — PCA without ever
+    * materializing the d×d covariance: each round computes
+    * w = Σ_rows c·(c·v), then normalizes. The first PC is the
+    * workhorse of embedding hygiene (dominant-direction removal,
     * whitening diagnostics, drift detection on the spectral axis).
     *
     * DETERMINISM: components and the per-dim mean fix to DECIMAL, so
@@ -282,23 +281,69 @@ object Similarity {
     * rather than dividing by zero). The sign of the result is the
     * deterministic artifact of that start.
     *
-    * SCALE SHAPE: the long form is rows×dims; each round is one
-    * broadcast join with the d-row v frame, one per-row aggregate,
-    * one per-dim aggregate, one 1-row norm fold — O(rows·dims) per
-    * round with nothing keyed wider than vec_id. The centered frame
-    * is stage-cut with a lazy localCheckpoint so the `rounds` passes
-    * re-read one materialization. Returns dims rows
-    * (dim, loading, lambda) with λ = the final pre-normalization
-    * norm (the Rayleigh eigenvalue estimate once v is unit).
+    * SCALE SHAPE — two paths with byte-equal output (PcaEquivalenceSpec):
+    *  - at most [[PcaFoldCells]] non-null rows × dims: ONE bounded
+    *    collect of the rounded rows, then the whole iteration as an
+    *    exact driver-local fold ([[PcaFold]]); the result is a local
+    *    relation. At these sizes the distributed loop is orchestration,
+    *    not arithmetic: 29 jobs for a 500×64 corpus.
+    *  - above the guard, or for inputs the fold does not cover (null
+    *    elements, ragged rows, ANSI off): the distributed wide loop of
+    *    [[pcaTopComponent]] — per round one broadcast of the 1-row v
+    *    frame, a row-local dot and a per-dim aggregate, O(rows·dims)
+    *    with nothing shuffled wider than dims·partitions rows.
+    * Returns dims rows (dim, loading, lambda) with λ = the final
+    * pre-normalization norm (the Rayleigh eigenvalue estimate once v
+    * is unit).
     */
-  def pcaPower(corpus: DataFrame, rounds: Int = 6): DataFrame = {
-    val (_, vRow, lam) = pcaTopComponent(corpus, rounds)
-    vRow.select(posexplode(col("v")).as(Seq("dim", "v")))
-      .select(col("dim").cast("long").as("dim"), col("v"))
-      .crossJoin(broadcast(lam))
-      .select(col("dim"), round(col("v").cast("double"), 6).as("loading"),
-        round(col("nrm").cast("double"), 6).as("lambda"))
-      .orderBy("dim")
+  def pcaPower(corpus: DataFrame, rounds: Int = 6): DataFrame =
+    pcaPower(corpus, rounds, PcaFoldCells)
+
+  /** The PCA fold guard: corpora of at most this many non-null
+    * rows × dims cells run as one driver-local exact fold, and the
+    * guard read never holds more than this many cells on the driver.
+    * Measured crossover (local[4], 64 dims, warm, pcaPower; fold vs
+    * distributed): 256k cells 0.65 vs 3.2 s, 512k 1.7 vs 3.9 s, 1M 2.5
+    * vs 5.1 s — the fold still wins at 1M cells on 4 cores, but its
+    * per-cell cost is serial while the distributed one divides by the
+    * core count, so the guard sits 4× below that point: 2^18 cells
+    * (sf0.1's 2000×64 corpus is 128k).
+    */
+  private[graft] val PcaFoldCells: Long = 1L << 18
+
+  /** [[pcaPower]] with an explicit fold guard (a negative guard forces
+    * the distributed path).
+    */
+  private[graft] def pcaPower(corpus: DataFrame, rounds: Int,
+      foldCells: Long): DataFrame = {
+    pcaInput(corpus, rounds, foldCells) match {
+      case Left(fold) => fold.power(rounds)
+      case Right(xw) =>
+        val (_, vRow, lam) = pcaTopComponent(xw, rounds)
+        vRow.select(posexplode(col("v")).as(Seq("dim", "v")))
+          .select(col("dim").cast("long").as("dim"), col("v"))
+          .crossJoin(broadcast(lam))
+          .select(col("dim"),
+            round(col("v").cast("double"), 6).as("loading"),
+            round(col("nrm").cast("double"), 6).as("lambda"))
+          .orderBy("dim")
+    }
+  }
+
+  /** The input of both PCA paths: the non-null embeddings rounded to
+    * (vec_id, x ARRAY<DECIMAL(18,6)>) — null embeddings drop exactly as
+    * the long form's posexplode dropped them — as the driver-local fold
+    * when the guard admits them (Left), else as the frame the
+    * distributed loop reads (Right).
+    */
+  private def pcaInput(corpus: DataFrame, rounds: Int, foldCells: Long)
+      : Either[PcaFold, DataFrame] = {
+    require(rounds > 0 && rounds <= 20, "rounds in 1..20")
+    val xw = corpus.filter(col("embedding").isNotNull)
+      .select(col("vec_id"),
+        expr("transform(cast(embedding as array<double>), " +
+          "xr -> cast(round(xr, 6) as decimal(18,6)))").as("x"))
+    PcaFold.collect(xw, foldCells).toLeft(xw)
   }
 
   /** The power-iteration core shared by [[pcaPower]] and [[pcaDebias]],
@@ -320,15 +365,8 @@ object Similarity {
     * sf0.1: sim_pca_debias 10.8 s → see OPTIMIZATION_r15.md; plan
     * drops from 2 full-data exchanges per round to 0.
     */
-  private def pcaTopComponent(corpus: DataFrame, rounds: Int)
+  private def pcaTopComponent(xw: DataFrame, rounds: Int)
       : (DataFrame, DataFrame, DataFrame) = {
-    require(rounds > 0 && rounds <= 20, "rounds in 1..20")
-    // null embeddings drop exactly as the long form's posexplode
-    // dropped them (no rows → no vec_id in cx)
-    val xw = corpus.filter(col("embedding").isNotNull)
-      .select(col("vec_id"),
-        expr("transform(cast(embedding as array<double>), " +
-          "xr -> cast(round(xr, 6) as decimal(18,6)))").as("x"))
     // per-dim means as ONE array row (dim-sorted), exactly the old
     // per-dim decimal aggregate
     val muRow = xw
@@ -407,13 +445,26 @@ object Similarity {
     * DETERMINISM: the projection coefficient p = Σ c·v and both norm
     * sums are exact DECIMAL aggregates (the [[pcaPower]] discipline);
     * p rounds(,9) before the rank-1 subtraction so c − p·v is an
-    * exact DECIMAL row value. SCALE SHAPE: one broadcast join of the
-    * d-row component + two per-vector aggregates on top of the
-    * power-iteration core. Returns (vec_id, norm, resid_norm,
-    * removed_frac) ordered by vec_id.
+    * exact DECIMAL row value. SCALE SHAPE: [[pcaPower]]'s two paths —
+    * under the guard the projection runs in the same driver-local fold
+    * on the same collected rows; above it, one broadcast of the
+    * component + row-local folds on top of the distributed core.
+    * Returns (vec_id, norm, resid_norm, removed_frac) ordered by
+    * vec_id.
     */
-  def pcaDebias(corpus: DataFrame, rounds: Int = 6): DataFrame = {
-    val (cx, vRow, _) = pcaTopComponent(corpus, rounds)
+  def pcaDebias(corpus: DataFrame, rounds: Int = 6): DataFrame =
+    pcaDebias(corpus, rounds, PcaFoldCells)
+
+  /** [[pcaDebias]] with an explicit fold guard (a negative guard forces
+    * the distributed path).
+    */
+  private[graft] def pcaDebias(corpus: DataFrame, rounds: Int,
+      foldCells: Long): DataFrame =
+    pcaInput(corpus, rounds, foldCells)
+      .fold(_.debias(rounds), pcaDebiasWide(_, rounds))
+
+  private def pcaDebiasWide(xw: DataFrame, rounds: Int): DataFrame = {
+    val (cx, vRow, _) = pcaTopComponent(xw, rounds)
     // p rounds(,6) so p·v has exactly 12 decimals and c − p·v is an
     // EXACT decimal with no mid-cast rounding anywhere (a round-9 p
     // would force a 15-decimal product through a rounding cast — an

@@ -744,10 +744,11 @@ object Analytics extends QueryModule {
     // entrywise from md5(plane, dim) — nothing broadcast, nothing
     // trained. Per-term products round(,9) into DECIMAL so the
     // (vec, plane) sums are order-independent.
-    // ---- Distributed PCA: top principal component by 6 power
-    // iterations in long (vec_id, dim) form (Similarity.pcaPower) —
-    // exact DECIMAL dot products and recombinations (no IEEE fold
-    // anywhere), round-9 per round, deterministic all-ones start.
+    // ---- PCA: top principal component by 6 power iterations
+    // (Similarity.pcaPower — a driver-local exact fold on bounded
+    // corpora, the distributed wide loop above the guard) — exact
+    // DECIMAL dot products and recombinations (no IEEE fold anywhere),
+    // round-9 per round, deterministic all-ones start.
     // The oracle unrolls all six rounds (MATERIALIZED — plain CTEs
     // inline exponentially, the sim_kcenter_coreset lesson).
     QueryDef("sim_pca_power", (s, d) => {

@@ -1,5 +1,7 @@
 package graft.queries
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.{Wiki, WarcSource, Wikidata}
@@ -14,9 +16,26 @@ import graft.ops.{Mentions, LinkModels}
   */
 object Corpus extends QueryModule {
 
-  val FixtureWiki = "/root/repo/fixtures/wiki.xml"
-  val FixtureWarc = "/root/repo/fixtures/sample.warc"
-  val FixtureWikidata = "/root/repo/fixtures/wikidata.json"
+  /** The checkout's `fixtures/` directory: the nearest one above the
+    * working directory or above this class's code source (the build
+    * output inside the checkout), so the gates run from any clone.
+    */
+  private lazy val fixtures: String = {
+    val starts = Seq(Paths.get("").toAbsolutePath) ++
+      Option(getClass.getProtectionDomain.getCodeSource)
+        .map(cs => Paths.get(cs.getLocation.toURI))
+    starts.iterator
+      .flatMap(Iterator.iterate(_)(_.getParent).takeWhile(_ != null))
+      .map(_.resolve("fixtures"))
+      .find(f => Files.isRegularFile(f.resolve("wiki.xml")))
+      .getOrElse(throw new IllegalStateException(
+        s"no fixtures/wiki.xml above any of ${starts.mkString(", ")}"))
+      .toString
+  }
+
+  lazy val FixtureWiki = s"$fixtures/wiki.xml"
+  lazy val FixtureWarc = s"$fixtures/sample.warc"
+  lazy val FixtureWikidata = s"$fixtures/wikidata.json"
 
   /** DuckDB CTE: the two fixture documents' exact texts (same literals
     * the `s3_wiki_documents` golden asserts — verified output of the wiki

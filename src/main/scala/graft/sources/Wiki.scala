@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.textfn.{WikiXml, Wikitext}
+import graft.ops.Pins.PinSyntax
 
 /** Wikipedia-dump ingestion, the reference's front door (ref
   * sift/corpora/wikipedia.py:10-91 WikipediaCorpus / WikipediaRedirects /
@@ -75,7 +76,7 @@ object Wiki {
           col("l.target") === col("s2"), "left_outer")
         .select(col("l.source").as("source"),
           coalesce(col("t2"), col("l.target")).as("target"))
-      r = next.localCheckpoint(eager = true) // keep loop lineage flat
+      r = next.pin() // keep loop lineage flat
     }
     // self-redirect cycles degenerate to source==target; drop them
     r.filter(col("source") =!= col("target"))

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.ops.Pins.PinSyntax
 
 /** Structured-Streaming surface over the `events` table (SURVEY.md §2.9 —
   * absent in the reference; declared engine capability): file-source
@@ -782,7 +783,7 @@ object Events {
     * regardless of batch slicing (stream-vs-batch parity).
     */
   def seqPatterns(s: SparkSession, dir: String, k: Int = 20): DataFrame = {
-    // localCheckpoint: a MemorySink-backed view cannot self-join (the
+    // pin: a MemorySink-backed view cannot self-join (the
     // two sides resolve to the SAME attribute ids -> conflicting-
     // references INTERNAL_ERROR); cutting lineage renumbers one side.
     // The span frame is |users|x|types| — aggregate-sized.
@@ -791,7 +792,7 @@ object Events {
         .groupBy(col("user_id"), col("event_type"))
         .agg(min(expr("unix_micros(t)")).as("first_us"),
           max(expr("unix_micros(t)")).as("last_us"))
-    }, "st_seq_mem").localCheckpoint()
+    }, "st_seq_mem").pin()
     val totals = out.agg(countDistinct(col("user_id")).as("nu"))
     out.as("x").join(out.as("y"), "user_id")
       .filter(col("x.first_us") < col("y.last_us"))

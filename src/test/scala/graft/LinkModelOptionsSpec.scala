@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   */
 class LinkModelOptionsSpec extends AnyFunSuite {
   private lazy val spark = SharedSpark.session
-  private def docs = Wiki.documents(spark, "/root/repo/fixtures/wiki.xml")
+  private def docs = Wiki.documents(spark, graft.queries.Corpus.FixtureWiki)
 
   test("entityCounts filter_target keeps only the prefixed targets") {
     val all = LinkModels.entityCounts(docs, minCount = 0).collect()

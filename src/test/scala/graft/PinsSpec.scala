@@ -80,4 +80,71 @@ class PinsSpec extends AnyFunSuite {
       assert(e.getMessage.contains("bogus"))
     } finally spark.conf.unset("spark.graft.pins.mode")
   }
+
+  test("a reliable pin computes its source stage once, eager or lazy") {
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_pins_once").toString
+    spark.sparkContext.setCheckpointDir(dir)
+    spark.conf.set("spark.graft.pins.mode", "reliable")
+    // a UDF bumps a named accumulator per source row; a task that
+    // really evaluates the source stage reports a non-zero update
+    val evals = spark.sparkContext.longAccumulator("graft_pins_once_src")
+    val bump = org.apache.spark.sql.functions.udf { (a: Long) =>
+      evals.add(1); a * 3 }
+    var sourceTasks = 0
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(
+          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (t.taskInfo.accumulables.exists(a => a.id == evals.id &&
+            a.update.exists(_.toString.toLong > 0)))
+          synchronized(sourceTasks += 1)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      for (eager <- Seq(true, false)) {
+        evals.reset()
+        synchronized { sourceTasks = 0 }
+        val src = spark.range(0, 8, 1, 2)
+          .select(bump(org.apache.spark.sql.functions.col("id")).as("a"))
+        val pinned = Pins.cut(src, eager)
+        for (_ <- 1 to 2) // a second read hits the checkpoint
+          assert(pinned.collect().map(_.getLong(0)).sorted.toSeq ==
+            (0L until 8L).map(_ * 3))
+        assert(evals.value == 8L,
+          s"eager=$eager: source rows evaluated ${evals.value} times")
+        // task-end events reach the listener asynchronously
+        val deadline = System.nanoTime() + 10000000000L
+        while (synchronized(sourceTasks) < 2 &&
+            System.nanoTime() < deadline)
+          Thread.sleep(20)
+        Thread.sleep(300) // let a second pass's events land, if any
+        assert(synchronized(sourceTasks) == 2, s"eager=$eager: " +
+          s"$sourceTasks source-stage tasks ran for 2 partitions")
+        // no frame-level cache is left behind
+        assert(src.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+      }
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      spark.conf.unset("spark.graft.pins.mode")
+    }
+  }
+
+  test("no operator, query, source or streaming file cuts lineage " +
+      "outside Pins") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    val raw = Seq("localCheckpoint(", ".checkpoint(")
+    val offenders = Seq("ops", "queries", "sources", "streaming")
+      .flatMap(d => java.nio.file.Files.walk(root.resolve(d)).iterator
+        .asScala.filter(_.toString.endsWith(".scala")).toSeq)
+      .filterNot(_.getFileName.toString == "Pins.scala")
+      .flatMap { p =>
+        java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (l, i) if raw.exists(l.contains) => s"$p:${i + 1}: $l"
+        }
+      }
+    assert(offenders.isEmpty, "route these through Pins.cut / .pin():\n" +
+      offenders.mkString("\n"))
+  }
 }
+

@@ -248,10 +248,6 @@ class PlanAuditSpec extends AnyFunSuite {
     // the |types|-row encoding table, broadcast into the split scoring
     // (the e_cuped / m_naive_bayes shapes)
     "pipe_feature_store",
-    // sim_pca_power / sim_pca_debias: the six 1-row norm frames
-    // crossed into the d-row normalization (the m_logistic_newton
-    // per-round 1-row shape)
-    "sim_pca_power", "sim_pca_debias",
     // a_trimmed_mean / t_gini_tokens / o18_token_budget: the two-phase
     // running-sum triangular offset join (the a_mann_whitney shape) +
     // 1-row bounds/totals frames crossed into the readout
@@ -523,9 +519,6 @@ class PlanAuditSpec extends AnyFunSuite {
     // pipe_feature_store: the 1-row midpoint / train-moment / global
     // target-rate folds (one bounded partial per partition)
     "pipe_feature_store",
-    // sim_pca_power / sim_pca_debias: the six 1-row norm folds over
-    // the d-row weight frame (one bounded partial per partition)
-    "sim_pca_power", "sim_pca_debias",
     // a_trimmed_mean / t_gini_tokens / o18_token_budget: the 1-row
     // bounds / totals / kept-sum folds over the distinct-value or
     // running-sum table (the a_mann_whitney one-row-fold shape)

@@ -973,7 +973,7 @@ class DotProductSpec extends org.scalatest.funsuite.AnyFunSuite {
 
   test("graft_dot equals the zip_with/aggregate fold bit-for-bit") {
     val s = spark; import s.implicits._
-    graft.functions.DotProduct.register(s)
+    graft.functions.GraftFunctions.registerAll(s)
     val rnd = new scala.util.Random(11)
     val df = Seq.fill(200)((
       Array.fill(64)(rnd.nextFloat()), Array.fill(64)(rnd.nextFloat())))
@@ -991,7 +991,7 @@ class DotProductSpec extends org.scalatest.funsuite.AnyFunSuite {
 
   test("graft_dot handles empty and length-mismatched arrays") {
     val s = spark
-    graft.functions.DotProduct.register(s)
+    graft.functions.GraftFunctions.registerAll(s)
     val out = s.sql(
       "SELECT graft_dot(array(1.0d, 2.0d), array(3.0d)) AS a, " +
         "graft_dot(cast(array() as array<double>), " +
@@ -1018,12 +1018,53 @@ class Md5LongSpec extends org.scalatest.funsuite.AnyFunSuite {
   }
 }
 
+/** Child-JVM probe for [[GraftExtensionsSpec]]: a session whose only
+  * graft functions come from `spark.sql.extensions`.
+  */
+object ExtensionsProbe {
+  def main(args: Array[String]): Unit = {
+    val s = org.apache.spark.sql.SparkSession.builder().master("local[1]")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.extensions", "graft.GraftExtensions")
+      .getOrCreate()
+    try {
+      val names = s.sessionState.functionRegistry.listFunction()
+        .map(_.funcName).filter(_.startsWith("graft_")).sorted
+      val l2 = s.sql("SELECT graft_l2(array(0d, 3d), array(4d, 0d))")
+        .head().getDouble(0)
+      println(s"PROBE ${names.mkString(",")} $l2")
+    } finally s.stop()
+  }
+}
+
 class GraftExtensionsSpec extends org.scalatest.funsuite.AnyFunSuite {
+  import scala.jdk.CollectionConverters._
+
+  test("spark.sql.extensions=graft.GraftExtensions exposes exactly the " +
+      "functions registerAll registers") {
+    // the extensions conf is static — read once when the SparkContext's
+    // first session is built — so the probe session lives in a child JVM
+    val jvm = java.lang.management.ManagementFactory.getRuntimeMXBean
+    val cmd = Seq(s"${System.getProperty("java.home")}/bin/java") ++
+      jvm.getInputArguments.asScala.filterNot(_.startsWith("-Xmx")) ++
+      Seq("-Xmx768m", "-cp", System.getProperty("java.class.path"),
+        "graft.ExtensionsProbe")
+    val out = scala.sys.process.Process(cmd).!!
+    val probe = out.linesIterator.find(_.startsWith("PROBE ")).get
+      .stripPrefix("PROBE ").split(" ")
+    val plain = SharedSpark.session.newSession() // own function registry
+    graft.functions.GraftFunctions.registerAll(plain)
+    val registered = plain.sessionState.functionRegistry.listFunction()
+      .map(_.funcName).filter(_.startsWith("graft_")).sorted
+    assert(registered.size == 9)
+    assert(probe(0).split(",").toSeq == registered)
+    assert(probe(1).toDouble == 25.0) // an injected builder, end to end
+  }
+
   test("GraftExtensions injects all custom functions into a fresh extensions set") {
-    // the shared test JVM already holds a live session, so a full
-    // builder-with-config round-trip isn't possible here; exercise the
-    // injection callback against a real SparkSessionExtensions and the
-    // injected builders directly (the registry path itself is covered by
+    // the injection callback against a real SparkSessionExtensions and
+    // the expressions directly (the full conf round trip is the
+    // child-JVM test above; the registry path is covered by
     // DotProductSpec / Md5LongSpec via GraftFunctions.registerAll).
     val e = new org.apache.spark.sql.SparkSessionExtensions
     new graft.GraftExtensions().apply(e) // must not throw
