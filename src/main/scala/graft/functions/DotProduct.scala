@@ -1,65 +1,24 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
+import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Native dot product over two ARRAY<DOUBLE> columns.
   *
   * Semantically identical to
   * `aggregate(zip_with(a, b, (p, q) -> p * q), 0d, (acc, v) -> acc + v)`
-  * (same sequential left-to-right fold → bit-identical doubles, so the
-  * DuckDB oracles keep matching exactly), but compiled by whole-stage
-  * codegen into a tight primitive loop instead of per-element interpreted
-  * lambda evaluation — this is the hot inner operation of every cosine
-  * similarity/ANN operator, executed O(n·k) or O(n²) times.
-  *
-  * Elements must be non-null (embedding vectors are); lengths are
-  * truncated to the shorter side like `zip_with` without null padding.
+  * on the common prefix (see [[VectorFold]] for lengths and null
+  * elements), but compiled by whole-stage codegen into a tight
+  * primitive loop instead of per-element interpreted lambda evaluation
+  * — this is the hot inner operation of every cosine similarity/ANN
+  * operator, executed O(n·k) or O(n²) times.
   */
 case class DotProduct(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends VectorFold {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(DoubleType, _), ArrayType(DoubleType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires two ARRAY<DOUBLE> arguments, got " +
-          s"${left.dataType.sql} and ${right.dataType.sql}")
-    }
-  override def dataType: DataType = DoubleType
   override def prettyName: String = "graft_dot"
 
-  override protected def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    val n = math.min(a.numElements(), b.numElements())
-    var s = 0.0
-    var i = 0
-    while (i < n) {
-      s += a.getDouble(i) * b.getDouble(i)
-      i += 1
-    }
-    s
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $s = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $s += $a.getDouble($i) * $b.getDouble($i);
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
+  override protected def term(x: Double, y: Double): Double = x * y
+  override protected def termCode(x: String, y: String): String = s"$x * $y"
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =

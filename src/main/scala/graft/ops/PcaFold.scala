@@ -3,15 +3,14 @@ package graft.ops
 import java.math.{BigDecimal => JBigDecimal}
 
 import scala.collection.mutable.ArrayBuffer
-import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{Alias, BindReferences,
-  Cast, EvalMode, Expression, GenericInternalRow, Literal, RowOrdering}
-import org.apache.spark.sql.catalyst.plans.logical.Project
+import org.apache.spark.sql.catalyst.expressions.RowOrdering
 import org.apache.spark.sql.functions.{col, posexplode_outer}
 import org.apache.spark.sql.types._
+
+import graft.ops.DriverFold.{Scalar, fit, zero}
 
 /** The driver-local form of [[Similarity.pcaPower]] /
   * [[Similarity.pcaDebias]] for BOUNDED corpora: the rounded `x` rows
@@ -27,12 +26,13 @@ import org.apache.spark.sql.types._
   *    the per-row dot `Σ ci·vi` at scale 15, the per-dim `Σ ci·d` at
   *    scale 18, the squared-sum norms) is plain `java.math.BigDecimal`
   *    arithmetic at the SQL result scale, and every intermediate is
-  *    range-checked against its SQL type ([[fit]]): where the ANSI
-  *    cast or sum would overflow, the fold throws the same error;
+  *    range-checked against its SQL type ([[DriverFold.fit]]): where
+  *    the ANSI cast or sum would overflow, the fold throws the same
+  *    error;
   *  - every decimal→double, `round(double, s)`, `sqrt` and
   *    double→decimal step is the SAME SQL string the distributed path
-  *    uses, analyzed by the session ([[Scalar]]) and evaluated by
-  *    Catalyst — never re-implemented here.
+  *    uses, analyzed by the session ([[DriverFold.Scalar]]) and
+  *    evaluated by Catalyst — never re-implemented here.
   *
   * Inputs the fold does not cover decline to the distributed path
   * ([[collect]] returns None): ANSI mode off (overflow would be null,
@@ -114,7 +114,7 @@ private[ops] final class PcaFold private (
       "v" -> DecimalType(18, 6))
     val lambda = scalar("round(cast(nrm as double), 6)",
       "nrm" -> DecimalType(18, 9)).eval(nrm)
-    local(PowerSchema, v.indices.map(j =>
+    DriverFold.local(spark, PowerSchema, v.indices.map(j =>
       Row(j.toLong, loadingOf.eval(v(j)), lambda)))
   }
 
@@ -151,12 +151,9 @@ private[ops] final class PcaFold private (
       CatalystTypeConverters.createToCatalystConverter(idField.dataType)
     val byId =
       RowOrdering.createNaturalAscendingOrdering(Seq(idField.dataType))
-    local(StructType(idField +: DebiasFields),
+    DriverFold.local(spark, StructType(idField +: DebiasFields),
       rows.sortBy(r => InternalRow(toCatalyst(r.get(0))))(byId))
   }
-
-  private def local(schema: StructType, rows: Seq[Row]): DataFrame =
-    spark.createDataFrame(rows.asJava, schema)
 }
 
 private[ops] object PcaFold {
@@ -179,14 +176,11 @@ private[ops] object PcaFold {
     * null element, or ragged rows.
     */
   def collect(xw: DataFrame, maxCells: Long): Option[PcaFold] = {
-    val spark = xw.sparkSession
-    if (maxCells < 0 || !spark.sessionState.conf.ansiEnabled) return None
-    // one partition: the bounded read is one job however the input is
-    // split (a limit over n partitions scans them in growing waves)
-    val cells = xw.select(col("vec_id"), posexplode_outer(col("x")))
-      .coalesce(1).limit(math.min(maxCells + 1, Int.MaxValue).toInt)
-      .collect()
-    if (cells.length > maxCells) return None
+    val exploded = xw.select(col("vec_id"), posexplode_outer(col("x")))
+    val cells = DriverFold.collect(exploded, maxCells) match {
+      case Some(c) => c
+      case None => return None
+    }
     val ids = ArrayBuffer.empty[Any]
     val rows = ArrayBuffer.empty[ArrayBuffer[JBigDecimal]]
     // posexplode_outer emits a row's cells contiguously from pos 0; an
@@ -203,49 +197,7 @@ private[ops] object PcaFold {
     }
     val dims = rows.headOption.fold(0)(_.length)
     if (rows.exists(_.length != dims)) return None
-    Some(new PcaFold(spark, xw.schema("vec_id"), ids.toArray,
+    Some(new PcaFold(xw.sparkSession, xw.schema("vec_id"), ids.toArray,
       rows.map(_.toArray).toArray, dims))
-  }
-
-  private def zero(scale: Int): JBigDecimal = JBigDecimal.valueOf(0L, scale)
-
-  /** `v` as DECIMAL(p, s) — `v` is exact at scale ≤ s, so the only way
-    * the SQL cast (or sum) can fail is overflow, and then Catalyst's
-    * own ANSI cast throws its error.
-    */
-  private def fit(v: JBigDecimal, p: Int, s: Int): JBigDecimal = {
-    if (v.precision - v.scale > p - s)
-      Cast(Literal(Decimal(v)), DecimalType(p, s), None, EvalMode.ANSI).eval()
-    v
-  }
-
-  /** One scalar SQL expression over typed inputs, analyzed by the
-    * session exactly as the distributed path's strings are (same
-    * parser, type coercion and ANSI mode) and evaluated by Catalyst on
-    * the driver.
-    */
-  private final class Scalar(spark: SparkSession, sql: String,
-      in: Seq[(String, DataType)]) {
-    private val expr: Expression = spark
-      .createDataFrame(java.util.List.of[Row](),
-        StructType(in.map { case (n, t) => StructField(n, t) }))
-      .selectExpr(sql).queryExecution.analyzed match {
-        case Project(Seq(a: Alias), child) =>
-          BindReferences.bindReference(a.child, child.output)
-        case other => throw new IllegalStateException(
-          s"unexpected plan for '$sql': $other")
-      }
-
-    def eval(args: Any*): Any = {
-      val row = args.zip(in).map {
-        case (b: JBigDecimal, (_, t: DecimalType)) =>
-          Decimal(b, t.precision, t.scale)
-        case (a, _) => a
-      }
-      expr.eval(new GenericInternalRow(row.toArray))
-    }
-
-    def dec(args: Any*): JBigDecimal =
-      eval(args: _*).asInstanceOf[Decimal].toJavaBigDecimal
   }
 }

@@ -163,8 +163,8 @@ object Pq {
 
   /** ADC top-k over WIDE codes (vec_id, codes ARRAY<BIGINT>) — the
     * stored index layout, consumed directly. `candidates` (query_id,
-    * vec_id) restricts the scan per query — the hook [[ivfAdcTopK]]
-    * uses to prune by IVF cell.
+    * vec_id) restricts the scan per query; duplicate pairs in it are
+    * dropped, so each neighbour takes one rank slot.
     *
     * r16 restructure (guide §2.3 "aggregate before you shuffle" /
     * §2.4): the previous form joined the per-query m·k distance table
@@ -183,7 +183,18 @@ object Pq {
     */
   def adcTopKCodes(queries: DataFrame, books: DataFrame,
       codes: DataFrame, dims: Int, m: Int, k: Int,
-      candidates: Option[DataFrame] = None): DataFrame = {
+      candidates: Option[DataFrame] = None): DataFrame =
+    adcTopKUnique(queries, books, codes, dims, m, k,
+      candidates.map(_.select("query_id", "vec_id").dropDuplicates()))
+
+  /** [[adcTopKCodes]] over candidates already unique by (query_id,
+    * vec_id) — [[ivfAdcTopKLoaded]]'s are by construction (each query
+    * probes distinct cells, each vector sits in one cell), so it skips
+    * the dedupe and its aggregate.
+    */
+  private def adcTopKUnique(queries: DataFrame, books: DataFrame,
+      codes: DataFrame, dims: Int, m: Int, k: Int,
+      candidates: Option[DataFrame]): DataFrame = {
     Hashing.ensureRegistered(queries)
     val qsv = subvectors(
       queries.select(col("vec_id"), col("embedding")), dims, m)
@@ -281,6 +292,6 @@ object Pq {
     val cand = probed
       .join(cellAsg.select(col("vec_id"), col("cell")), Seq("cell"))
       .select("query_id", "vec_id")
-    adcTopKCodes(queries, books, codes, dims, m, k, Some(cand))
+    adcTopKUnique(queries, books, codes, dims, m, k, Some(cand))
   }
 }

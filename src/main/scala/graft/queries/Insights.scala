@@ -454,9 +454,10 @@ object Insights extends QueryModule {
 
     // ---- RFM quintile segmentation (EventAnalytics.rfmSegments):
     // recency/frequency/monetary NTILE(5) scores per user (5 = best),
-    // rolled into the ≤125-row segment grid. Three two-phase ordinals
-    // over the |users| table — never an unpartitioned NTILE window;
-    // monetary sums round(value,6) in DECIMAL.
+    // rolled into the ≤125-row segment grid. A driver-local fold on
+    // bounded user tables, else one fused two-phase ordinal over the
+    // |users| table — never an unpartitioned NTILE window; monetary
+    // sums round(value,6) in DECIMAL.
     QueryDef("e_rfm_segments", (s, d) => {
       EventAnalytics.rfmSegments(Tables.events(s, d))
     }, Some("""

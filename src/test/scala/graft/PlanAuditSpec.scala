@@ -127,12 +127,11 @@ class PlanAuditSpec extends AnyFunSuite {
     // g_hits: the 1-row L∞-max frame broadcast into each half-round's
     // rescale (the idf shape, ×2 per round)
     "g_hits",
-    // a_mann_whitney / e_rfm_segments / o16_compaction_plan /
-    // o17_epoch_shuffle: the two-phase ordinal/running-sum triangular
-    // offset join over the ≤ numPartitions-row per-partition totals
-    // (the q_skew_report shape), plus 1-row N/max frames
-    "a_mann_whitney", "e_rfm_segments", "o16_compaction_plan",
-    "o17_epoch_shuffle",
+    // a_mann_whitney / o16_compaction_plan / o17_epoch_shuffle: the
+    // two-phase ordinal/running-sum triangular offset join over the
+    // ≤ numPartitions-row per-partition totals (the q_skew_report
+    // shape), plus 1-row N/max frames
+    "a_mann_whitney", "o16_compaction_plan", "o17_epoch_shuffle",
     // sim_mips_topk: the broadcast query set against the corpus
     // (non-equi self-exclusion — the sim_topk_bruteforce shape)
     "sim_mips_topk",
@@ -425,9 +424,8 @@ class PlanAuditSpec extends AnyFunSuite {
     // partial max per partition)
     "g_hits",
     // a_mann_whitney: the one-row U/z fold (one bounded partial per
-    // partition); e_rfm_segments: the 1-row N and study-max combines;
-    // e_power_analysis: the 1-row closed-form fold
-    "a_mann_whitney", "e_rfm_segments", "e_power_analysis",
+    // partition); e_power_analysis: the 1-row closed-form fold
+    "a_mann_whitney", "e_power_analysis",
     // m_rank_eval: the 1-row metric folds + the ≤k-row rank windows
     // (the e_funnel_steps shape)
     "m_rank_eval",

@@ -49,6 +49,23 @@ class PqSpec extends AnyFunSuite {
     assert(top.forall(_ % 2 === 0), s"cross-cluster leak: ${top.toSeq}")
   }
 
+  test("duplicate candidate pairs take one rank slot each") {
+    val s = spark; import s.implicits._
+    val c = corpus(40)
+    val (books, asg) = Pq.train(c, dims = 8, m = 2, k = 4, iters = 2)
+    val q = c.filter(col("vec_id") < 2)
+    val cand = Seq(0L, 1L).flatMap(qid => (2L until 12L).map(qid -> _))
+      .toDF("query_id", "vec_id")
+    def top(candidates: org.apache.spark.sql.DataFrame) =
+      Pq.adcTopK(q, books, asg, 8, 2, k = 4, Some(candidates))
+        .orderBy("query_id", "rank").collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
+        .toSeq
+    val unique = top(cand)
+    assert(unique.size === 8)
+    assert(top(cand.union(cand).union(cand.limit(5))) === unique)
+  }
+
   test("train rejects m that does not divide dims") {
     intercept[IllegalArgumentException] {
       Pq.train(corpus(4), dims = 8, m = 3, k = 2, iters = 1)

@@ -999,6 +999,45 @@ class DotProductSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(out.getDouble(0) == 3.0)
     assert(out.getDouble(1) == 0.0)
   }
+
+  test("graft_dot and graft_l2 read a null element in range as a null " +
+      "result, with codegen on and off") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val s = spark
+    graft.functions.GraftFunctions.registerAll(s)
+    val vec = ArrayType(DoubleType, containsNull = true)
+    val df = s.createDataFrame(s.sparkContext.parallelize(Seq(
+      Row(Seq(1.0, null, 2.0), Seq(1.0, 1.0, 1.0)), // null in range
+      Row(Seq(1.0, 2.0, null), Seq(2.0, 3.0)),      // null past the end
+      Row(Seq(1.0, 2.0), Seq(3.0, 5.0))), 2),
+      StructType(Seq(StructField("a", vec), StructField("b", vec))))
+    // (kernel, reference lambda, value of the truncated second row)
+    val refs = Seq(
+      ("graft_dot", "(p, q) -> p * q", 8.0),
+      ("graft_l2", "(p, q) -> (p - q) * (p - q)", 2.0))
+    for ((wholeStage, factory) <- Seq(("true", "CODEGEN_ONLY"),
+        ("false", "NO_CODEGEN"))) {
+      s.conf.set("spark.sql.codegen.wholeStage", wholeStage)
+      s.conf.set("spark.sql.codegen.factoryMode", factory)
+      try for ((fn, lambda, truncated) <- refs) {
+        val out = df.selectExpr(s"$fn(a, b)",
+          s"aggregate(zip_with(a, b, $lambda), 0d, (acc, v) -> acc + v)")
+          .collect()
+        assert(out(0).isNullAt(0) && out(0).isNullAt(1), s"$fn $factory")
+        // past the shorter side: truncated, where zip_with pads
+        assert(out(1).getDouble(0) == truncated, s"$fn $factory")
+        assert(out(2).getDouble(0) == out(2).getDouble(1), s"$fn $factory")
+      } finally {
+        s.conf.unset("spark.sql.codegen.wholeStage")
+        s.conf.unset("spark.sql.codegen.factoryMode")
+      }
+    }
+    // element types that cannot hold null keep the result non-null
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    assert(!graft.functions.L2Distance(Literal.create(Array(1.0)),
+      Literal.create(Array(2.0))).nullable)
+  }
 }
 
 class Md5LongSpec extends org.scalatest.funsuite.AnyFunSuite {
