@@ -701,54 +701,6 @@ object Dedup {
     (result, () => { candCleanup(); sh.unpersist(); () })
   }
 
-  /** The historical near-dup INDEX for incremental ingest: (band table,
-    * shingle table) over the corpus. In production both are computed
-    * ONCE, written to parquet alongside the corpus, and read back per
-    * ingest batch — so a day's admission costs |batch| hashing plus one
-    * index join, never a corpus re-hash. Laziness/caching is the
-    * caller's choice (write-then-read IS the persistence).
-    */
-  def bandIndex(docs: DataFrame, shingleN: Int, k: Int, bands: Int,
-      hashFn: String => String = md5LongSql): (DataFrame, DataFrame) = {
-    require(k % bands == 0, "k must divide into bands")
-    val sh = shingled(docs, shingleN)
-    (bandKeys(minhashSignatures(sh, k, hashFn), bands, k / bands), sh)
-  }
-
-  /** Incremental near-dup admission: flag each NEW doc whose content
-    * near-duplicates the HISTORICAL corpus by banding only the batch
-    * and joining against the stored historical index ([[bandIndex]]) —
-    * the daily-ingest shape: batch-side work is |batch|, the join
-    * moves only band-key collisions, and only collisions are verified
-    * by exact Jaccard over the two shingle stores. Doc ids must be
-    * disjoint across index and batch (they are distinct generations of
-    * one corpus id space).
-    *
-    * Returns (doc_id, dup_of, n_matches) for flagged new docs only:
-    * the minimum matching historical doc and the number of historical
-    * matches at `threshold`. New-vs-new duplication within the batch
-    * is the ordinary [[minhashLsh]] over the batch alone — compose
-    * both for full admission control.
-    */
-  def dedupAgainstIndex(histBands: DataFrame, histShingles: DataFrame,
-      newDocs: DataFrame, shingleN: Int, k: Int, bands: Int,
-      threshold: Double,
-      hashFn: String => String = md5LongSql): DataFrame = {
-    require(k % bands == 0, "k must divide into bands")
-    val sh = shingled(newDocs, shingleN)
-    val cands = bandKeys(minhashSignatures(sh, k, hashFn), bands,
-        k / bands)
-      .join(histBands.select(col("doc_id").as("__hist_id"), col("band"),
-        col("bkey")), Seq("band", "bkey"))
-      .select(col("__hist_id").as("doc_a"), col("doc_id").as("doc_b"))
-      .distinct()
-    verifyJaccard(cands, histShingles.unionByName(sh))
-      .filter(col("jaccard") >= threshold)
-      .groupBy(col("doc_b").as("doc_id"))
-      .agg(min(col("doc_a")).as("dup_of"),
-        count(lit(1)).as("n_matches"))
-  }
-
   /** All-pairs n-gram Jaccard ≥ threshold. Relational: never builds the n²
     * pair space — only pairs sharing ≥1 shingle survive the equi-join.
     * `maxShingleDf` drops ubiquitous shingles (skew control: a shingle

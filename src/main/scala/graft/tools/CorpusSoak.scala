@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** End-to-end SCALE SOAK of the reference's own corpus pipeline (the
@@ -213,30 +212,13 @@ object CorpusSoak {
        |  </page>""".stripMargin
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val scales = if (args.nonEmpty) args.toSeq.map(_.toInt) else Seq(1, 10)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Scale.session()
     import spark.implicits._
+    import Scale.timed
 
     def emit(stage: String, scale: Int, sec: Double, extra: (String, Long)*)
-        : Unit = {
-      val e = extra.map { case (k, v) => s""","$k":$v""" }.mkString
-      val secs = String.format(java.util.Locale.ROOT, "%.2f",
-        Double.box(sec))
-      println(s"""{"stage":"$stage","scale":$scale,"sec":$secs$e}""")
-      Console.flush()
-    }
-    def timed[T](body: => T): (T, Double) = {
-      val t0 = System.nanoTime()
-      val r = body
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
+        : Unit = Scale.line("stage", stage, scale, sec, extra)
 
     val mad = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
