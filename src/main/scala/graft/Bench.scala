@@ -1,14 +1,34 @@
 package graft
 
+import org.apache.spark.SparkContext
+import org.apache.spark.graft.Bus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
-/** Benchmark main: runs every SparkEntry query against
-  * SPARK_GRAFT_SF_DIR and prints one JSON line of per-query seconds.
+import graft.tools.Scale
+
+/** The one gate runner: times, counts and explains SparkEntry gates
+  * against SPARK_GRAFT_SF_DIR.
+  *
+  *   runMain graft.Bench                   every gate; one JSON line of
+  *                                         per-gate seconds
+  *   runMain graft.Bench <gate…>           the named gates only, each
+  *                                         warmed once (isolation re-bench)
+  *   runMain graft.Bench explain <gate…>   the named gates' formatted
+  *                                         physical plans
+  *
+  * Every run also counts the Spark jobs, stages and tasks it submitted
+  * ([[counted]]). A `{"query":…,"median":…,"jobs":…,"stages":…,
+  * "tasks":…}` line prints as each gate finishes, and bench.json keeps
+  * every run's counts next to its seconds. Counts do not depend on host
+  * load; seconds do.
   *
   * Methodology: each query measured with a `noop`-format write —
   * unlike `count()`, the noop sink materializes every output column,
   * so Catalyst can't prune the projections being measured. Per-query
-  * values are the MEDIAN of `reps` runs (default 3): the median
+  * values are the MEDIAN of `reps` runs (SPARK_GRAFT_BENCH_REPS,
+  * default 3): the median
   * absorbs both single-JVM aging noise AND the first-rep codegen
   * compile, which is why the warmup pass only needs to heat the JVM /
   * parquet-footer caches on a REPRESENTATIVE SUBSET (one gate per
@@ -160,96 +180,154 @@ object Bench {
       Seq(s"degraded_main $degradedMain > 10% of $nGates gates " +
         s"despite wall $wallSec < budget $budgetSec") else Nil)
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // r13 advice: default to the actual host, not a hardcoded 32
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  /** Jobs, stages and tasks that one body submitted. */
+  final case class Counts(jobs: Int, stages: Int, tasks: Long)
 
-    // Hygiene scope between runs: "all" unpersists EVERY persistent
-    // RDD; "delta" only those the run itself created. The r11 advice
-    // noted "all" would break a gate that deliberately caches a
-    // lineage-truncated frame ACROSS reps (missing-block instead of
-    // recompute) — no gate does, and that is now a DOCUMENTED
-    // AUTHORING INVARIANT (see QueryDef): every gate rebuilds its
-    // frames from scratch per call. "all" stays the default because
-    // it is the empirically cleaner protocol: under delta scoping the
-    // round-12 full-suite dry run showed sim_ivfpq_topk's reps
-    // compounding 8.7 → 16.5 → 23.4 s (isolated: flat ~8 s), the r10
-    // leak signature, while the r11 unpersist-all capture held it
-    // flat at 7.9 s.
-    val hygiene = sys.env.getOrElse("SPARK_GRAFT_BENCH_HYGIENE", "all")
-    def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      // snapshot OUTSIDE the timed span (used by the delta scope)
-      val pre = if (hygiene == "delta")
-        spark.sparkContext.getPersistentRDDs.keySet
-      else Set.empty[Int]
+  /** One job per job start, one stage per completed stage, tasks summed
+    * over the completed stages' task counts. Only the bus thread writes.
+    */
+  private final class CountListener extends SparkListener {
+    @volatile var jobs = 0
+    @volatile var stages = 0
+    @volatile var tasks = 0L
+    override def onJobStart(j: SparkListenerJobStart): Unit = jobs += 1
+    override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
+      stages += 1
+      tasks += s.stageInfo.numTasks
+    }
+  }
+
+  /** `body`'s result and the work it submitted. The listener bus is
+    * drained before the listener attaches and after the body returns,
+    * so the counts hold exactly the body's events: no fixed sleep, and
+    * no job group (streaming gates run under their own).
+    */
+  def counted[T](sc: SparkContext)(body: => T): (T, Counts) = {
+    Bus.drain(sc)
+    val l = new CountListener
+    sc.addSparkListener(l)
+    try {
+      val r = body
+      Bus.drain(sc)
+      (r, Counts(l.jobs, l.stages, l.tasks))
+    } finally sc.removeSparkListener(l)
+  }
+
+  /** One gate run: seconds (-1 when it failed) and its counts. */
+  final case class Run(sec: Double, counts: Counts)
+
+  /** Run gate `name` once into a `noop` sink, timed and counted, then
+    * clear what it left behind, outside the timed span.
+    */
+  def once(spark: SparkSession, sfDir: String, name: String): Run = {
+    val fn = SparkEntry.queries(name)
+    val (sec, counts) = counted(spark.sparkContext) {
       val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        return -1.0
-      }
-      val sec = (System.nanoTime() - t0) / 1e9
-      // JVM-aging hygiene, OUTSIDE the timed span: ops that persist
-      // (jaccard shingle tables) leave cached blocks behind; across
-      // 200+ gates × reps in one JVM that residue contributed to
-      // downstream inflation (w_frames_running 9.1 s in-suite vs
-      // 1.0 s isolated, measured r9). Dropping the SQL cache between
-      // runs bounds the leak. (A per-run System.gc() was tried and
-      // REJECTED: 864 full-heap collections shifted GC debt into the
-      // timed spans — suite total 236 s → 271 s. Residual suite-
-      // context noise remains inherent to single-JVM sweeps — §11;
-      // IsoBench is the arbiter for any suspicious gate.)
-      spark.catalog.clearCache()
-      // clearCache() only drops the SQL cache — localCheckpoint blocks
-      // are persistent RDDs it never touches, and they COMPOUND across
-      // reps (r10 driver capture: pipe_incremental_refresh reps ran
-      // 10.8 → 51.3 → 104.6 s purely from leaked checkpoint blocks).
-      // BLOCKING, deliberately: unpersist(false) enqueues async block
-      // removal that bleeds INTO the next timed span (measured:
-      // m_entity_pagerank 8.8 s with async vs 4.4 s blocking vs 5.0 s
-      // with no unpersist at all — the hygiene must finish out here).
-      spark.sparkContext.getPersistentRDDs
-        .foreach { case (id, rdd) =>
-          if (hygiene != "delta" || !pre.contains(id))
-            rdd.unpersist(blocking = true) }
-      // streaming gates load HDFS-backed state-store providers keyed by
-      // their (per-run, already-deleted) checkpoint dirs; the providers'
-      // in-memory state maps linger until the maintenance task notices.
-      // Across 300+ gates × reps that residue is heap pressure in
-      // everyone else's timed span — unload eagerly, it's a no-op when
-      // nothing is loaded.
-      // (reflective: unloadAll is private[sql] to Scala but public in
-      // bytecode; a bench-harness hygiene call doesn't justify a shim
-      // object inside Spark's package namespace)
       try {
-        val cls = Class.forName(
-          "org.apache.spark.sql.execution.streaming.state.StateStore$")
-        cls.getMethod("unloadAll").invoke(cls.getField("MODULE$").get(null))
-      } catch { case _: Throwable => () }
-      sec
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        (System.nanoTime() - t0) / 1e9
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        -1.0
+      }
+    }
+    // JVM-aging hygiene, OUTSIDE the timed span: ops that persist
+    // (jaccard shingle tables) leave cached blocks behind; across
+    // 200+ gates × reps in one JVM that residue contributed to
+    // downstream inflation (w_frames_running 9.1 s in-suite vs
+    // 1.0 s isolated, measured r9). Dropping the SQL cache between
+    // runs bounds the leak. (A per-run System.gc() was tried and
+    // REJECTED: 864 full-heap collections shifted GC debt into the
+    // timed spans — suite total 236 s → 271 s. Residual suite-
+    // context noise remains inherent to single-JVM sweeps — §11;
+    // `Bench <gate>` in a fresh JVM is the arbiter for any
+    // suspicious gate.)
+    spark.catalog.clearCache()
+    // clearCache() only drops the SQL cache — localCheckpoint blocks
+    // are persistent RDDs it never touches, and they COMPOUND across
+    // reps (r10 capture: pipe_incremental_refresh reps ran
+    // 10.8 → 51.3 → 104.6 s purely from leaked checkpoint blocks).
+    // Every persistent RDD goes, not only the run's own: under that
+    // narrower scope the round-12 dry run showed sim_ivfpq_topk's reps
+    // compounding 8.7 → 16.5 → 23.4 s (isolated: flat ~8 s), which
+    // is why every gate rebuilds its frames from scratch per call (a
+    // documented authoring invariant, see QueryDef).
+    // BLOCKING, deliberately: unpersist(false) enqueues async block
+    // removal that bleeds INTO the next timed span (measured:
+    // m_entity_pagerank 8.8 s with async vs 4.4 s blocking vs 5.0 s
+    // with no unpersist at all — the hygiene must finish out here).
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = true))
+    // streaming gates load HDFS-backed state-store providers keyed by
+    // their (per-run, already-deleted) checkpoint dirs; the providers'
+    // in-memory state maps linger until the maintenance task notices.
+    // Across 300+ gates × reps that residue is heap pressure in
+    // everyone else's timed span — unload eagerly, it's a no-op when
+    // nothing is loaded.
+    // (reflective: unloadAll is private[sql] to Scala but public in
+    // bytecode; a bench-harness hygiene call doesn't justify a shim
+    // object inside Spark's package namespace)
+    try {
+      val cls = Class.forName(
+        "org.apache.spark.sql.execution.streaming.state.StateStore$")
+      cls.getMethod("unloadAll").invoke(cls.getField("MODULE$").get(null))
+    } catch { case _: Throwable => () }
+    Run(sec, counts)
+  }
+
+  def main(args: Array[String]): Unit = {
+    val spark = Scale.session()
+    if (args.headOption.contains("explain")) {
+      explain(spark, Scale.sfDir, args.toSeq.tail)
+      spark.stop()
+    } else sweep(spark, Scale.sfDir, args.toSeq) // stops the session
+  }
+
+  /** Print each named gate's formatted physical plan: the before/after
+    * plan a speed claim carries.
+    */
+  private def explain(spark: SparkSession, sfDir: String,
+      names: Seq[String]): Unit = {
+    require(names.nonEmpty, "usage: Bench explain <gate> [gate ...]")
+    for (n <- names) {
+      println(s"########## $n")
+      println(SparkEntry.queries(n)(spark, sfDir).queryExecution
+        .explainString(org.apache.spark.sql.execution.FormattedMode))
+    }
+  }
+
+  private def f3(v: Double): String =
+    String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+
+  /** Any failed run poisons the gate (-1): a median over a mix of
+    * failures and successes would silently hide flakiness.
+    */
+  private def median(ts: Seq[Double]): Double =
+    if (ts.exists(_ < 0)) -1.0
+    else {
+      val s = ts.sorted
+      if (s.length % 2 == 1) s(s.length / 2)
+      else (s(s.length / 2 - 1) + s(s.length / 2)) / 2.0
     }
 
-    // optional args: query names to bench in isolation (the driver
-    // always passes none — local-iteration convenience, like Verify's)
-    val only = args.toSet
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.isEmpty || only(n))
-    // SPARK_GRAFT_BENCH_REPS switches per-query values from a single
-    // run to the MEDIAN of N runs (the IsoBench denoising protocol,
-    // in-suite): streaming/ANN gates jitter run-to-run, and judging
-    // medians instead of single captures is the stated bench protocol.
-    // Default is 3 — reps=1 captures mis-measured three rounds running
-    // (r9: a 0.82 s query read as 13.5 s from single-JVM aging).
+  /** Time and count `only` (every gate when empty), print the per-gate
+    * lines, the compact line and the total-only line, and stop `spark`
+    * before the last two.
+    */
+  private def sweep(spark: SparkSession, sfDir: String,
+      only: Seq[String]): Unit = {
+    val cpus = Scale.cpus
+    val all = SparkEntry.queries.keySet
+    val unknown = only.filterNot(all)
+    require(unknown.isEmpty, s"unknown gate(s): ${unknown.mkString(", ")}")
+    // named gates run in isolation; the full sweep names none
+    val names = all.toSeq.sorted
+      .filter(n => only.isEmpty || only.contains(n))
+    // per-gate values are the MEDIAN of N runs: streaming/ANN gates
+    // jitter run-to-run, and judging medians instead of single
+    // captures is the stated bench protocol. Default is 3 — reps=1
+    // captures mis-measured three rounds running (r9: a 0.82 s query
+    // read as 13.5 s from single-JVM aging).
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
       .max(1)
     val budgetSec = sys.env
@@ -281,16 +359,14 @@ object Bench {
     val suiteT0 = System.nanoTime()
     def elapsedSec: Long = (System.nanoTime() - suiteT0) / 1000000000L
 
-    // warmup: one gate per name-prefix family (q1…, a_…, st_…, …) —
+    // warmup, untimed: named gates are each warmed once. The full sweep
+    // warms one gate per name-prefix family (q1…, a_…, st_…, …) —
     // enough to heat the JVM, the codegen compiler's own JIT, and the
     // parquet footer caches; per-gate codegen cost lands in rep 1 and
-    // the median absorbs it. SPARK_GRAFT_BENCH_WARMUP=full restores
-    // the old everything pass; =none skips.
-    val warmupMode = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARMUP", "subset")
-    val warmupNames = warmupMode match {
-      case "none" => Seq.empty[String]
-      case "full" => names
-      case _ =>
+    // the median absorbs it.
+    val warmupNames =
+      if (only.nonEmpty) names
+      else
         // + the one gate with an outsized first-execution codegen/JIT
         // bill the median of 3 can't hide: m_prf_expansion
         // (triple-BM25 machinery, 18 s cold vs 3.6 s warm in the r12
@@ -304,8 +380,7 @@ object Bench {
           .values.map(_.head).toSeq ++
           Seq("m_prf_expansion")
             .filter(names.contains)).distinct.sorted
-    }
-    warmupNames.foreach(n => once(n, SparkEntry.queries(n)))
+    warmupNames.foreach(once(spark, sfDir, _))
 
     // deadline-aware degradation, PROJECTION-based (r13 judge item 3):
     // a gate runs full reps unless the projected finish — elapsed +
@@ -321,7 +396,7 @@ object Bench {
     val calibMid = scala.collection.mutable.ArrayBuffer.empty[Long]
     val bwMid = scala.collection.mutable.ArrayBuffer.empty[Long]
     val gateRuns = scala.collection.mutable.LinkedHashMap
-      .empty[String, scala.collection.mutable.ArrayBuffer[Double]]
+      .empty[String, scala.collection.mutable.ArrayBuffer[Run]]
     var degradedMain = 0
     names.zipWithIndex.foreach { case (n, idx) =>
       // mid-sweep calibration sample every 30 gates (~0.5 s each):
@@ -340,13 +415,17 @@ object Bench {
               else if (projected(2) <= budgetSec * 0.95) math.min(2, reps)
               else 1
       if (r < reps) degradedMain += 1
-      val ts = scala.collection.mutable.ArrayBuffer.empty[Double]
+      val ts = scala.collection.mutable.ArrayBuffer.empty[Run]
       (1 to r).foreach { _ =>
-        val t = once(n, SparkEntry.queries(n))
+        val t = once(spark, sfDir, n)
         ts += t
-        if (t >= 0) repTimes += t
+        if (t.sec >= 0) repTimes += t.sec
       }
       gateRuns(n) = ts
+      val c = ts.last.counts
+      println(s"""{"query":"$n","median":${f3(median(ts.map(_.sec).toSeq))}""" +
+        s""","jobs":${c.jobs},"stages":${c.stages},"tasks":${c.tasks}}""")
+      Console.flush()
     }
     // tail re-runs: spend recovered headroom restoring degraded gates
     // to full reps (r13 judge item 3's second half) — one extra rep
@@ -357,16 +436,16 @@ object Bench {
     while (tailAdded) {
       tailAdded = false
       gateRuns.foreach { case (n, ts) =>
-        val est = math.max(ts.sum / ts.length, 0.05)
-        if (ts.length < reps && !ts.exists(_ < 0) &&
+        val est = math.max(ts.map(_.sec).sum / ts.length, 0.05)
+        if (ts.length < reps && !ts.exists(_.sec < 0) &&
             elapsedSec + est * 1.5 < budgetSec * 0.95) {
-          val t = once(n, SparkEntry.queries(n))
+          val t = once(spark, sfDir, n)
           // A FAILED tail re-run is dropped, not appended (r14 advice):
           // appending -1 here would poison a gate whose main-sweep reps
           // were all clean — the headroom-spending pass must never
           // retroactively invalidate a good measurement. (A main-sweep
           // failure still poisons the gate, by design.)
-          if (t >= 0) { ts += t; tailReruns += 1; tailAdded = true }
+          if (t.sec >= 0) { ts += t; tailReruns += 1; tailAdded = true }
         }
       }
     }
@@ -382,7 +461,7 @@ object Bench {
     var contRetryReps = 0
     if (elapsedSec < budgetSec / 2) {
       def spreadNames = gateRuns.toSeq.filter { case (_, ts) =>
-        val ok = ts.filter(_ >= 0).toSeq
+        val ok = ts.map(_.sec).filter(_ >= 0).toSeq
         ok.length >= 2 && ok.min > 0.5 && ok.max / ok.min > 4.0
       }.map(_._1)
       val calibNow = calibMd5PerSec()
@@ -390,30 +469,21 @@ object Bench {
       val bwNow = calibMemBwBytesPerSec()
       bwMid += bwNow
       val prov = contentionReasons(loadPre.toDouble,
-        loadavg().toDouble, cpus.toInt, calibPre, calibMid.toSeq,
+        loadavg().toDouble, cpus, calibPre, calibMid.toSeq,
         calibNow, calibRefOpt, spreadNames.size, names.length,
         degradedMain, elapsedSec, budgetSec,
         bwPre, bwMid.toSeq, bwNow, bwRefOpt)
       if (prov.nonEmpty) spreadNames.foreach { n =>
         if (elapsedSec < budgetSec * 0.95) {
-          val t = once(n, SparkEntry.queries(n))
-          if (t >= 0) { gateRuns(n) += t; contRetryReps += 1 }
+          val t = once(spark, sfDir, n)
+          if (t.sec >= 0) { gateRuns(n) += t; contRetryReps += 1 }
         }
       }
     }
     val runs = gateRuns.toSeq.map { case (n, ts) =>
-      (n, ts.toSeq, ts.length)
+      (n, ts.map(_.sec).toSeq, ts.map(_.counts).toSeq)
     }
-    val results = runs.map { case (n, ts, _) =>
-      // any failed rep poisons the query (-1): a median over a mix of
-      // failures and successes would silently hide flakiness
-      n -> (if (ts.exists(_ < 0)) -1.0
-            else {
-              val s = ts.sorted
-              if (s.length % 2 == 1) s(s.length / 2)
-              else (s(s.length / 2 - 1) + s(s.length / 2)) / 2.0
-            })
-    }
+    val results = runs.map { case (n, ts, _) => n -> median(ts) }
     val loadPost = loadavg()
     val calibPost = calibMd5PerSec()
     val bwPost = calibMemBwBytesPerSec()
@@ -448,7 +518,7 @@ object Bench {
       ok.length >= 2 && ok.min > 0.5 && ok.max / ok.min > 4.0
     }
     val contReasons = contentionReasons(loadPre.toDouble,
-      loadPost.toDouble, cpus.toInt, calibPre, calibMid.toSeq, calibPost,
+      loadPost.toDouble, cpus, calibPre, calibMid.toSeq, calibPost,
       calibRefOpt, spreadGates, names.length, degradedMain, elapsedSec,
       budgetSec, bwPre, bwMid.toSeq, bwPost, bwRefOpt)
     val contended = contReasons.nonEmpty
@@ -460,12 +530,16 @@ object Bench {
         runs.map { case (k, ts, _) =>
           "\"" + k + "\":[" + ts.map(fmt).mkString(",") + "]"
         }.mkString(""","runs":{""", ",", "}")
+      // one [jobs,stages,tasks] triple per entry of "runs", same order
+      val countsField = if (!withRuns) "" else
+        runs.map { case (k, _, cs) => "\"" + k + "\":" + cs.map(c =>
+          s"[${c.jobs},${c.stages},${c.tasks}]").mkString("[", ",", "]")
+        }.mkString(""","counts":{""", ",", "}")
       val repsUsed = if (!withRuns) "" else
-        runs.map { case (k, _, r) => "\"" + k + "\":" + r }
+        runs.map { case (k, ts, _) => "\"" + k + "\":" + ts.length }
           .mkString(""","reps_used":{""", ",", "}")
       val canary = if (!withRuns) "" else
         s""","budget_sec":$budgetSec,"wall_sec":$elapsedSec""" +
-        s""","warmup":"$warmupMode","hygiene":"$hygiene"""" +
         s""","warmup_gates":${warmupNames.size}""" +
         s""","loadavg_pre":$loadPre,"loadavg_post":$loadPost""" +
         s""","calib_md5_per_sec_pre":$calibPre""" +
@@ -484,7 +558,8 @@ object Bench {
         s""","contention_reasons":[${contReasons
           .map("\"" + _ + "\"").mkString(",")}]"""
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec",""" +
-        s""""reps":$reps,"queries":$qs$runsField$repsUsed$canary,""" +
+        s""""reps":$reps,"queries":$qs$runsField$countsField$repsUsed""" +
+        s"""$canary,""" +
         s""""sf":"$sfDir"}"""
     }
     // The harness tail-captures a fixed window of stdout and has cut the
@@ -494,10 +569,8 @@ object Bench {
     // per-query line. Defense in depth: the compact per-query line printed
     // first and late, full precision in bench.json, and — the actual fix —
     // a sub-100-byte TOTAL-ONLY line as the very last stdout line, small
-    // enough to survive any capture window. Locale.ROOT formatting: the
-    // default locale could render 1.234 as "1,234" and break the JSON.
-    def f3(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+    // enough to survive any capture window. Locale.ROOT formatting (f3):
+    // the default locale could render 1.234 as "1,234" and break the JSON.
     val compact = json(f3, withRuns = false)
     println(compact)
     Console.flush()

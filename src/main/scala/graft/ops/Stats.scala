@@ -813,13 +813,13 @@ object Stats {
     * identical arithmetic (same LCG, same cutoffs, Σw·x re-wrapped as
     * the same DECIMAL the exploded SUM produced, so the oracle — which
     * still replays the explode in SQL — hash-matches bit-for-bit), at
-    * ~reps× fewer aggregate-input rows. Measured at sf0.1
-    * (tools/AbBootstrap, median of 3, scan included): explode 7.1 s →
+    * ~reps× fewer aggregate-input rows. Measured at sf0.1 in r13
+    * (median of 3, scan included): explode 7.1 s →
     * fold 2.6 s idle, and under a 32-thread synthetic md5 antagonist
     * explode 9.5 s → fold 3.7 s — the form that drew 247-300 s/rep on
     * the loadavg-10 r12 official capture is no longer in the gate path
-    * ([[bootstrapCiExplode]] keeps the declarative twin for the A/B
-    * and the parity spec).
+    * ([[bootstrapCiExplode]] keeps the declarative twin for the
+    * parity spec).
     *
     * SCALE SHAPE: one map-side partial fold — each partition emits
     * ONE 2·reps-cell buffer, so shuffle volume is partitions ×
@@ -835,9 +835,9 @@ object Stats {
 
   /** The declarative explode-form twin of [[bootstrapCi]] — each row
     * expands into reps (row, b) copies and the replicate means ride a
-    * hash aggregate keyed by b. Kept for the A/B harness and the
-    * parity spec (both forms must agree row-for-row); production and
-    * the gate use the fold form.
+    * hash aggregate keyed by b. Kept for the parity spec (both forms
+    * must agree row-for-row); production and the gate use the fold
+    * form.
     */
   private[graft] def bootstrapCiExplode(df: DataFrame, valueCol: String,
       keyCols: Seq[String], reps: Int = 200, tailRank: Int = 5,

@@ -1,18 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: print the Corpus fixture-query outputs row by row so the
   * golden VALUES oracles in graft.queries.Corpus can be frozen and
   * eyeball-verified. Not part of the driver contract.
   */
 object DumpCorpus {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Scale.session()
     def lit(v: Any): String = v match {
       case null => "NULL"
       case s: String =>

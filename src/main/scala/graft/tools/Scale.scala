@@ -28,21 +28,24 @@ import org.apache.spark.storage.StorageLevel
   *
   * SPARK_GRAFT_SF_DIR selects the base dir (default ~/testdata/sf0.1)
   * and SPARK_GRAFT_CPUS the local thread and shuffle-partition count
-  * (default 32); both are read here and nowhere else in the harness.
+  * (default the host's cores); both are read here and nowhere else.
+  * [[session]] is the one session builder of the local mains (`Bench`,
+  * `Verify`, `Scale`, `CorpusSoak`, `DumpCorpus`).
   */
 object Scale {
 
-  private lazy val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
+  lazy val sfDir: String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
     s"${sys.props("user.home")}/testdata/sf0.1")
-  private lazy val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  lazy val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
 
-  /** The harness session: local[cpus], one shuffle partition per
-    * thread, UTC, nanosecond event timestamps read as longs.
+  /** The local session: local[cpus], one shuffle partition per thread,
+    * UTC, nanosecond event timestamps read as longs, no UI, WARN logs.
     */
   def session(): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toLong)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")

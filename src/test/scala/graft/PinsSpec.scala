@@ -56,19 +56,11 @@ class PinsSpec extends AnyFunSuite {
     for (mode <- Seq("local", "reliable")) {
       spark.conf.set("spark.graft.pins.mode", mode)
       try {
-        var jobs = 0
-        val listener = new org.apache.spark.scheduler.SparkListener {
-          override def onJobStart(
-              j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-            jobs += 1
-        }
-        spark.sparkContext.addSparkListener(listener)
-        try {
-          val pinned = Pins.cut(df, eager = false)
-          Thread.sleep(200) // let any spurious job-start event land
-          assert(jobs == 0, s"mode=$mode ran $jobs jobs at plan build")
-          assert(pinned.count() == 8L)
-        } finally spark.sparkContext.removeSparkListener(listener)
+        val (pinned, counts) =
+          Bench.counted(spark.sparkContext)(Pins.cut(df, eager = false))
+        assert(counts.jobs == 0,
+          s"mode=$mode ran ${counts.jobs} jobs at plan build")
+        assert(pinned.count() == 8L)
       } finally spark.conf.unset("spark.graft.pins.mode")
     }
   }
@@ -113,11 +105,7 @@ class PinsSpec extends AnyFunSuite {
         assert(evals.value == 8L,
           s"eager=$eager: source rows evaluated ${evals.value} times")
         // task-end events reach the listener asynchronously
-        val deadline = System.nanoTime() + 10000000000L
-        while (synchronized(sourceTasks) < 2 &&
-            System.nanoTime() < deadline)
-          Thread.sleep(20)
-        Thread.sleep(300) // let a second pass's events land, if any
+        org.apache.spark.graft.Bus.drain(spark.sparkContext)
         assert(synchronized(sourceTasks) == 2, s"eager=$eager: " +
           s"$sourceTasks source-stage tasks ran for 2 partitions")
         // no frame-level cache is left behind
@@ -134,7 +122,7 @@ class PinsSpec extends AnyFunSuite {
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get("src/main/scala/graft")
     val raw = Seq("localCheckpoint(", ".checkpoint(")
-    // tools too: the scale harness and profilers pin through Pins
+    // tools too: the scale harness pins through Pins
     val offenders = Seq("ops", "queries", "sources", "streaming", "tools")
       .flatMap(d => java.nio.file.Files.walk(root.resolve(d)).iterator
         .asScala.filter(_.toString.endsWith(".scala")).toSeq)

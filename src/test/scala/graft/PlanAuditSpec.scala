@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions.col
 import graft.queries.{Relational, Functions, Pipeline, Corpus, Analytics, Insights}
 
 /** Scale-killer tripwire over every table-backed gate query's physical
-  * plan (promotion of tools/ExplainAudit from print-for-humans to a
+  * plan (promotion of `Bench explain` from print-for-humans to a
   * failing assertion): re-introducing an O(n²) nested-loop join, a
   * cartesian product, or an unpartitioned single-task exchange breaks the
   * suite. Allow-lists name the queries where the pattern is a deliberate
@@ -615,37 +615,24 @@ class PlanAuditSpec extends AnyFunSuite {
     // attaching the counter so only the ANN construction is measured
     val e = spark.read.parquet(s"$d/embeddings.parquet")
     e.schema
-    val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        counter.incrementAndGet()
+    def jobsDuring(body: => Unit): Int =
+      Bench.counted(spark.sparkContext)(body)._2.jobs
+    val explicitJobs = jobsDuring {
+      graft.ops.Similarity
+        .lshTopK(e.filter(col("vec_id") < 10), e, 8, 5, dims = 64)
+        .queryExecution.executedPlan
     }
-    def jobsDuring(body: => Unit): Int = {
-      counter.set(0)
-      body
-      Thread.sleep(1000) // listener delivery is async; let the bus drain
-      counter.get()
+    assert(explicitJobs == 0,
+      s"explicit-dims ANN plan construction submitted $explicitJobs " +
+        "Spark job(s)")
+    val inferredJobs = jobsDuring {
+      graft.ops.Similarity
+        .lshTopK(e.filter(col("vec_id") < 10), e, 8, 5)
+        .queryExecution.executedPlan
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val explicitJobs = jobsDuring {
-        graft.ops.Similarity
-          .lshTopK(e.filter(col("vec_id") < 10), e, 8, 5, dims = 64)
-          .queryExecution.executedPlan
-      }
-      assert(explicitJobs == 0,
-        s"explicit-dims ANN plan construction submitted $explicitJobs " +
-          "Spark job(s)")
-      val inferredJobs = jobsDuring {
-        graft.ops.Similarity
-          .lshTopK(e.filter(col("vec_id") < 10), e, 8, 5)
-          .queryExecution.executedPlan
-      }
-      assert(inferredJobs > 0,
-        "expected the dims-inference fallback to submit a first-row job " +
-          "(the cost the explicit form avoids)")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(inferredJobs > 0,
+      "expected the dims-inference fallback to submit a first-row job " +
+        "(the cost the explicit form avoids)")
   }
 
   test("ordinal pre-checkpoint subplan: range exchange, no single task") {
