@@ -52,41 +52,19 @@ object AnnIndex {
       ivf.map { case (c, it) => s"ivf_cells=$c\nivf_iters=$it\n" }
         .getOrElse("")
 
-  private def fsPath(spark: SparkSession, indexPath: String,
-      name: String) = {
-    val p = new org.apache.hadoop.fs.Path(indexPath, name)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
-
-  private def writeSidecar(spark: SparkSession, indexPath: String,
-      content: String): Unit = {
-    val (fs, p) = fsPath(spark, indexPath, Sidecar)
-    val out = fs.create(p, true)
-    try out.write(content.getBytes(
-      java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+  private def sidecar(spark: SparkSession, indexPath: String) =
+    ParamsSidecar(spark, indexPath, Sidecar)
 
   private def requireSidecar(spark: SparkSession, indexPath: String,
       want: String): Unit = {
-    val (fs, p) = fsPath(spark, indexPath, Sidecar)
-    if (!fs.exists(p)) throw new IllegalStateException(
+    val side = sidecar(spark, indexPath)
+    if (!side.exists) throw new IllegalStateException(
       s"no $Sidecar sidecar at $indexPath: not an ANN index, or an " +
         "interrupted save — rebuild the index")
-    val in = fs.open(p)
-    val got = try new String(in.readAllBytes(),
-      java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-    if (got != want) throw new IllegalArgumentException(
-      s"ANN index at $indexPath was trained with " +
-        s"[${got.trim.replace('\n', ' ')}] but this call passed " +
-        s"[${want.trim.replace('\n', ' ')}]: scoring against foreign " +
-        "codebooks is silently wrong — rebuild or match the parameters")
-  }
-
-  private def deleteSidecar(spark: SparkSession,
-      indexPath: String): Unit = {
-    val (fs, p) = fsPath(spark, indexPath, Sidecar)
-    if (fs.exists(p)) { val _ = fs.delete(p, false) }
+    side.requireSame(want)((got, want) =>
+      s"ANN index at $indexPath was trained with [$got] but this call " +
+        s"passed [$want]: scoring against foreign codebooks is silently " +
+        "wrong — rebuild or match the parameters")
   }
 
   /** Persist a trained PQ index: `books` from [[Pq.train]], `codes`
@@ -95,7 +73,7 @@ object AnnIndex {
   def savePq(books: DataFrame, codes: DataFrame, indexPath: String,
       dims: Int, m: Int, k: Int, iters: Int): Unit = {
     val spark = books.sparkSession
-    deleteSidecar(spark, indexPath)
+    sidecar(spark, indexPath).delete()
     // codebooks are m·k rows by construction (the broadcast side) —
     // one file, not one near-empty file per shuffle partition (r15;
     // guide §6 output sizing). codes are the O(corpus) artifact and
@@ -103,7 +81,7 @@ object AnnIndex {
     books.coalesce(1).write.mode("overwrite")
       .parquet(s"$indexPath/codebooks")
     codes.write.mode("overwrite").parquet(s"$indexPath/codes")
-    writeSidecar(spark, indexPath, annParams(dims, m, k, iters, None))
+    sidecar(spark, indexPath).write(annParams(dims, m, k, iters, None))
   }
 
   /** Reload a PQ index saved by [[savePq]], validating the sidecar.
@@ -131,7 +109,7 @@ object AnnIndex {
       indexPath: String, dims: Int, m: Int, k: Int, iters: Int,
       ivfCells: Int, ivfIters: Int): Unit = {
     val spark = books.sparkSession
-    deleteSidecar(spark, indexPath)
+    sidecar(spark, indexPath).delete()
     // r15: the cell assignment feeds BOTH the centroid derivation and
     // the assignment write — pin one materialization so the coarse
     // quantizer's assignment pass does not execute twice (the
@@ -147,8 +125,8 @@ object AnnIndex {
       .mode("overwrite").parquet(s"$indexPath/ivf_centroids")
     pinned.select("vec_id", "cell").write.mode("overwrite")
       .parquet(s"$indexPath/ivf_cells")
-    writeSidecar(spark, indexPath,
-      annParams(dims, m, k, iters, Some((ivfCells, ivfIters))))
+    sidecar(spark, indexPath)
+      .write(annParams(dims, m, k, iters, Some((ivfCells, ivfIters))))
   }
 
   /** Reload an IVFADC index saved by [[saveIvfPq]]. Returns (books,

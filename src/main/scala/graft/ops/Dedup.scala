@@ -395,11 +395,8 @@ object Dedup {
       rows: Int): String =
     s"shingle_n=$shingleN\nk=$k\nbands=$bands\nrows=$rows\n"
 
-  private def paramsSidecar(df: DataFrame, indexPath: String) = {
-    val p = new org.apache.hadoop.fs.Path(indexPath, "_graft_lsh_params")
-    (p.getFileSystem(
-      df.sparkSession.sparkContext.hadoopConfiguration), p)
-  }
+  private def paramsSidecar(df: DataFrame, indexPath: String) =
+    ParamsSidecar(df.sparkSession, indexPath, "_graft_lsh_params")
 
   /** SIBLING of the index directory (so a `mode("overwrite")` parquet
     * write — which deletes the directory, sidecar included — cannot
@@ -411,33 +408,14 @@ object Dedup {
     */
   private def pendingSidecar(df: DataFrame, indexPath: String) = {
     val dir = new org.apache.hadoop.fs.Path(indexPath)
-    val p = new org.apache.hadoop.fs.Path(
+    ParamsSidecar(df.sparkSession, new org.apache.hadoop.fs.Path(
       Option(dir.getParent).getOrElse(dir),
-      "." + dir.getName + "._graft_lsh_params.pending")
-    (p.getFileSystem(
-      df.sparkSession.sparkContext.hadoopConfiguration), p)
-  }
-
-  private def writeParamsFile(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path, content: String): Unit = {
-    val out = fs.create(p, true)
-    try out.write(content
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
-  private def readParamsFile(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): String = {
-    val in = fs.open(p)
-    try new String(in.readAllBytes(),
-      java.nio.charset.StandardCharsets.UTF_8) finally in.close()
+      "." + dir.getName + "._graft_lsh_params.pending"))
   }
 
   private def writeLshParams(df: DataFrame, indexPath: String,
-      shingleN: Int, k: Int, bands: Int, rows: Int): Unit = {
-    val (fs, p) = paramsSidecar(df, indexPath)
-    writeParamsFile(fs, p, lshParams(shingleN, k, bands, rows))
-  }
+      shingleN: Int, k: Int, bands: Int, rows: Int): Unit =
+    paramsSidecar(df, indexPath).write(lshParams(shingleN, k, bands, rows))
 
   /** Validate `indexPath`'s sidecar against this call's parameters.
     * `adopt`: a legacy index without a sidecar gets one stamped with
@@ -448,25 +426,21 @@ object Dedup {
   private def requireLshParams(df: DataFrame, indexPath: String,
       shingleN: Int, k: Int, bands: Int, rows: Int,
       adopt: Boolean): Unit = {
-    val (fs, p) = paramsSidecar(df, indexPath)
+    val side = paramsSidecar(df, indexPath)
     val want = lshParams(shingleN, k, bands, rows)
-    def failMismatch(got: String, src: String): Nothing =
-      throw new IllegalArgumentException(
-        s"LSH band index at $indexPath was built with " +
-          s"[${got.trim.replace('\n', ' ')}] ($src) but this call " +
-          s"passed [${want.trim.replace('\n', ' ')}]: mixed parameters " +
-          "never collide correctly — rebuild the index or match its " +
-          "parameters")
-    if (!fs.exists(p)) {
+    def mismatch(src: String)(got: String, want: String): String =
+      s"LSH band index at $indexPath was built with [$got] ($src) but " +
+        s"this call passed [$want]: mixed parameters never collide " +
+        "correctly — rebuild the index or match its parameters"
+    if (!side.exists) {
       // a crash-interrupted overwrite leaves the parameters in the
       // sibling pending file — recover them instead of adopting
-      val (pfs, pp) = pendingSidecar(df, indexPath)
-      if (pfs.exists(pp)) {
-        val got = readParamsFile(pfs, pp)
-        if (got != want) failMismatch(got, "recovered from pending file")
+      val pending = pendingSidecar(df, indexPath)
+      if (pending.exists) {
+        pending.requireSame(want)(mismatch("recovered from pending file"))
         if (adopt) {
-          writeLshParams(df, indexPath, shingleN, k, bands, rows)
-          pfs.delete(pp, false)
+          side.write(want)
+          pending.delete()
         }
       } else if (adopt) {
         // true legacy index: parameters unverifiable — adopt (so every
@@ -474,12 +448,9 @@ object Dedup {
         System.err.println(s"[graft] WARN: band index at $indexPath " +
           "has no _graft_lsh_params sidecar; adopting this call's " +
           s"parameters [${want.trim.replace('\n', ' ')}] unverified")
-        writeLshParams(df, indexPath, shingleN, k, bands, rows)
+        side.write(want)
       }
-    } else {
-      val got = readParamsFile(fs, p)
-      if (got != want) failMismatch(got, "sidecar")
-    }
+    } else side.requireSame(want)(mismatch("sidecar"))
   }
 
   /** APPEND one run's band keys to the persistent cross-run index —
@@ -509,15 +480,14 @@ object Dedup {
       // parameters in the sibling pending file FIRST so a crash
       // before the re-stamp below is recoverable, not silently
       // adoptable (r14 advice)
-      val (pfs, pp) = pendingSidecar(batch, indexPath)
-      writeParamsFile(pfs, pp, lshParams(shingleN, k, bands, rows))
+      pendingSidecar(batch, indexPath)
+        .write(lshParams(shingleN, k, bands, rows))
     }
     bandIndexRows(batch, shingleN, k, bands, rows).write
       .mode(if (overwrite) "overwrite" else "append").parquet(indexPath)
     if (overwrite) {
       writeLshParams(batch, indexPath, shingleN, k, bands, rows)
-      val (pfs, pp) = pendingSidecar(batch, indexPath)
-      pfs.delete(pp, false)
+      pendingSidecar(batch, indexPath).delete()
     }
   }
 

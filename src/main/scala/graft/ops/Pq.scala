@@ -1,9 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 import graft.ops.Pins.PinSyntax
 
 /** Product Quantization (PQ) for embedding compression + ANN search
@@ -66,43 +64,19 @@ object Pq {
   }
 
   /** Nearest codebook cell per (vec_id, sub): squared-L2 argmin, ties to
-    * the smaller cell. Codebooks broadcast.
-    *
-    * (r15 note: a min(struct(d2, cell, sv)) hash-aggregate formulation
-    * was tried — it shuffles k× fewer rows — but Min over a struct is
-    * not hash-aggregable in Spark 4: the plan degrades to a
-    * non-codegen SortAggregate and measured SLOWER than this window
-    * (sim_ivfpq_topk 6.1 s → 8.0 s), which Spark 4 executes as a
-    * partial-mode WindowGroupLimit: per-partition top-1 rows drop
-    * BEFORE the exchange, so the shuffle is already ~n·m rows. Kept
-    * the window.)
+    * the smaller cell ([[Similarity.topN]]). Codebooks broadcast.
     */
-  private def assign(sv: DataFrame, books: DataFrame): DataFrame = {
-    val w = Window.partitionBy("vec_id", "sub")
-      .orderBy(asc("d2"), asc("cell"))
-    sv.join(broadcast(books), "sub")
-      .withColumn("d2", expr(l2Sql("sv", "centroid")))
-      .withColumn("pr", row_number().over(w)).filter(col("pr") === 1)
+  private def assign(sv: DataFrame, books: DataFrame): DataFrame =
+    Similarity.topN(sv.join(broadcast(books), "sub")
+        .withColumn("d2", expr(l2Sql("sv", "centroid"))),
+      Seq("vec_id", "sub"), 1, asc("d2"), asc("cell"))
       .select("vec_id", "sub", "sv", "cell")
-  }
 
-  /** Decimal-exact elementwise mean per (sub, cell) — the Lloyd update,
-    * shuffle-order independent (mirrors [[Similarity.centroids]]).
-    */
-  private def means(asg: DataFrame): DataFrame =
-    asg.select(col("sub"), col("cell"),
-        posexplode(col("sv")).as(Seq("j", "x")))
-      .groupBy("sub", "cell", "j")
-      .agg((sum(col("x").cast(DecimalType(25, 10))).cast("double") /
-        count(lit(1))).as("m"))
-      .groupBy("sub", "cell")
-      .agg(expr("transform(array_sort(collect_list(struct(j, m))), s -> s.m)")
-        .as("centroid"))
-
-  /** Train m codebooks of k centroids (`iters` Lloyd rounds). Returns
-    * (codebooks, assignment) — the assignment is computed against the
-    * returned codebooks, so codes and centroids are mutually consistent
-    * (what ADC requires).
+  /** Train m codebooks of k centroids (`iters` rounds of
+    * [[Similarity.lloyd]], the k-means loop with an L2 assignment per
+    * subspace). Returns (codebooks, assignment) — the assignment is
+    * computed against the returned codebooks, so codes and centroids
+    * are mutually consistent (what ADC requires).
     */
   def train(corpus: DataFrame, dims: Int, m: Int, k: Int,
       iters: Int): (DataFrame, DataFrame) = {
@@ -112,23 +86,10 @@ object Pq {
     // final assignment) — without this each round re-scans the source
     // and re-slices the subvectors.
     val sv = subvectors(corpus, dims, m).pin(true)
-    val seedW = Window.orderBy(asc("h"), asc("vec_id"))
-    val seedIds = corpus
-      .select(col("vec_id"),
-        expr(Hashing.md5LongSql("cast(vec_id as string)")).as("h"))
-      .orderBy(asc("h"), asc("vec_id")).limit(k)
-      .withColumn("cell", (row_number().over(seedW) - 1).cast("long"))
-      .select("vec_id", "cell")
-    var books = sv.join(seedIds, "vec_id")
+    val init = sv.join(Similarity.seeds(corpus.select("vec_id"), k), "vec_id")
       .select(col("sub"), col("cell"), col("sv").as("centroid"))
-    // r15: pin each Lloyd round's m·k-row codebook (lazy
-    // localCheckpoint) — the returned (books, assignment) pair
-    // otherwise inlines the whole training chain TWICE into every
-    // consumer (adcTopK references both), and each round's plan
-    // contains all previous rounds (the kmeansCentroids lesson;
-    // sim_ivfpq_topk's audited plan: 128 Exchanges → ~40).
-    for (_ <- 1 to iters)
-      books = means(assign(sv, books)).pin(false)
+    val books = Similarity.lloyd(init, iters, Seq("sub", "cell"), "sv")(
+      assign(sv, _))
     (books, assign(sv, books))
   }
 
@@ -232,10 +193,8 @@ object Pq {
       .filter(col("query_id") =!= col("vec_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         expr(adistSql).as("adist"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(asc("adist"), asc("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    Similarity.topN(scored, Seq("query_id"), k, asc("adist"),
+        asc("neighbor_id"))
       .select("query_id", "rank", "neighbor_id", "adist")
   }
 
@@ -281,15 +240,7 @@ object Pq {
     graft.functions.GraftFunctions.registerAll(queries.sparkSession)
     val q = queries.select(col("vec_id").as("query_id"),
       col("embedding").as("qe"))
-    val probeW = Window.partitionBy("query_id")
-      .orderBy(desc("ccos"), asc("cell"))
-    val probed = q.join(broadcast(cents))
-      .select(col("query_id"), col("cell"),
-        expr(Similarity.cosineSql("qe", "centroid")).as("ccos"))
-      .withColumn("pr", row_number().over(probeW))
-      .filter(col("pr") <= nprobe)
-      .select("query_id", "cell")
-    val cand = probed
+    val cand = Similarity.probe(q, cents, nprobe)
       .join(cellAsg.select(col("vec_id"), col("cell")), Seq("cell"))
       .select("query_id", "vec_id")
     adcTopKUnique(queries, books, codes, dims, m, k, Some(cand))

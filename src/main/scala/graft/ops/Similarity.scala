@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.DecimalType
 import graft.ops.Pins.PinSyntax
 
 /** Similarity search over an embedding column (`ARRAY<FLOAT>`) — the ANN
@@ -42,25 +43,55 @@ object Similarity {
     df
   }
 
-  /** Brute-force exact top-k cosine neighbors for each query vector.
-    * `queries`/`corpus`: (vec_id, embedding). Self-matches excluded.
+  /** Top `n` rows per `keys` group under `order` (which must end on a
+    * unique tie column), numbered 1..n in column `rank` — the one
+    * ranking step of every ANN assignment, probe and top-k here.
+    *
+    * (r15 note: a min/max(struct(score, cell, …)) hash-aggregate argmax
+    * was tried — it shuffles fewer rows — but Min/Max over a struct is
+    * not hash-aggregable in Spark 4: the plan degrades to a non-codegen
+    * SortAggregate and measured SLOWER than this window
+    * (sim_ivfpq_topk 6.1 s → 8.0 s), which Spark 4 executes as a
+    * partial-mode WindowGroupLimit: per-partition top-n rows drop
+    * BEFORE the exchange. Kept the window.)
     */
-  def bruteForceTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
+  private[graft] def topN(df: DataFrame, keys: Seq[String], n: Int,
+      order: Column*): DataFrame =
+    df.withColumn("rank", row_number()
+        .over(Window.partitionBy(keys.map(col): _*).orderBy(order: _*)))
+      .filter(col("rank") <= n)
+
+  /** Top-k neighbours of candidate (query_id, qe, neighbor_id, ce) pairs
+    * by `score` desc, ties to the smaller neighbor_id; the score is
+    * reported round(,6) as column `name`.
+    */
+  private def rankPairs(pairs: DataFrame, k: Int, score: String,
+      name: String): DataFrame =
+    topN(pairs.select(col("query_id"), col("neighbor_id"),
+        expr(score).as(name)), Seq("query_id"), k, desc(name),
+        asc("neighbor_id"))
+      .select(col("query_id"), col("rank"), col("neighbor_id"),
+        round(col(name), 6).as(name))
+
+  /** Exact top-k over the broadcast query set × corpus, self-matches
+    * excluded: the body of [[bruteForceTopK]] and [[mipsTopK]].
+    */
+  private def exactTopK(queries: DataFrame, corpus: DataFrame, k: Int,
+      score: String, name: String): DataFrame = {
     ensureRegistered(queries)
     val q = queries.select(col("vec_id").as("query_id"),
       col("embedding").as("qe"))
     val c = corpus.select(col("vec_id").as("neighbor_id"),
       col("embedding").as("ce"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(desc("cos"), asc("neighbor_id"))
-    broadcast(q).join(c, col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        expr(cosineSql("qe", "ce")).as("cos"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("cos"), 6).as("cos"))
+    rankPairs(broadcast(q).join(c, col("query_id") =!= col("neighbor_id")),
+      k, score, name)
   }
+
+  /** Brute-force exact top-k cosine neighbors for each query vector.
+    * `queries`/`corpus`: (vec_id, embedding). Self-matches excluded.
+    */
+  def bruteForceTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame =
+    exactTopK(queries, corpus, k, cosineSql("qe", "ce"), "cos")
 
   /** kNN MAJORITY-VOTE CLASSIFICATION over the labeled embedding
     * corpus — the zero-training baseline every embedding-quality
@@ -90,10 +121,7 @@ object Similarity {
           col("label").cast("long").as("label")), Seq("neighbor_id"))
       .groupBy("query_id", "label")
       .agg(count(lit(1)).as("votes"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(desc("votes"), asc("label"))
-    votes.withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
+    topN(votes, Seq("query_id"), 1, desc("votes"), asc("label"))
       .join(queries.select(col("vec_id").as("query_id"),
         col("label").cast("long").as("true_label")), Seq("query_id"))
       .select(col("query_id"), col("true_label"),
@@ -505,23 +533,10 @@ object Similarity {
     * norm). Same broadcast-query shape as [[bruteForceTopK]], ranked
     * by the raw dot product.
     */
-  def mipsTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
-    ensureRegistered(queries)
-    val q = queries.select(col("vec_id").as("query_id"),
-      col("embedding").as("qe"))
-    val c = corpus.select(col("vec_id").as("neighbor_id"),
-      col("embedding").as("ce"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(desc("dot"), asc("neighbor_id"))
-    broadcast(q).join(c, col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        expr("graft_dot(cast(qe as array<double>), " +
-          "cast(ce as array<double>))").as("dot"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("dot"), 6).as("dot"))
-  }
+  def mipsTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame =
+    exactTopK(queries, corpus, k,
+      "graft_dot(cast(qe as array<double>), cast(ce as array<double>))",
+      "dot")
 
   /** The MIPS → cosine reduction (Bachrach et al. 2014, RecSys —
     * "Speeding up the Xbox recommender"): append sqrt(M² − ‖x‖²) to
@@ -568,41 +583,75 @@ object Similarity {
   /** IVF cell centroids: elementwise mean per cell, computed relationally
     * (posexplode → mean per (cell, dim) → reassemble ordered). One shuffle
     * on (cell, dim); centroid count = cells × dim, tiny → broadcast-able.
-    * The per-dimension sum goes through DECIMAL so it is order-independent
-    * and exact — a plain double `avg` varies in the low bits with shuffle
-    * order, which would make probe selection (and the oracle compare)
-    * nondeterministic.
     */
   def centroids(corpus: DataFrame, cellCol: String): DataFrame =
-    corpus.select(col(cellCol).as("cell"),
-      posexplode(col("embedding")).as(Seq("j", "x")))
-      .groupBy("cell", "j")
-      .agg((sum(col("x").cast("double")
-        .cast(org.apache.spark.sql.types.DecimalType(25, 10)))
+    means(corpus.select(col("embedding"), col(cellCol).as("cell")),
+      Seq("cell"), "embedding")
+
+  /** Decimal-exact elementwise mean of the vector column `vec` per
+    * `keys` group, as (keys…, centroid ARRAY<DOUBLE>) — the Lloyd update
+    * of k-means (`cell`) and PQ (`sub`, `cell`) alike. The per-dimension
+    * sum goes through DECIMAL so it is order-independent and exact — a
+    * plain double `avg` varies in the low bits with shuffle order, which
+    * would make probe selection (and the oracle compare)
+    * nondeterministic.
+    */
+  private[graft] def means(df: DataFrame, keys: Seq[String],
+      vec: String): DataFrame =
+    df.select(keys.map(col) :+ posexplode(col(vec)).as(Seq("j", "x")): _*)
+      .groupBy((keys :+ "j").map(col): _*)
+      .agg((sum(col("x").cast("double").cast(DecimalType(25, 10)))
         .cast("double") / count(lit(1))).as("m"))
-      .groupBy("cell")
+      .groupBy(keys.map(col): _*)
       .agg(expr("transform(array_sort(collect_list(struct(j, m))), s -> s.m)")
         .as("centroid"))
+
+  /** The k Lloyd seeds: the `k` rows with the smallest md5Long(vec_id)
+    * (ties to the smaller vec_id), each with every input column plus
+    * `cell` = its seed rank − 1. The k-row window runs after the limit.
+    */
+  private[graft] def seeds(df: DataFrame, k: Int): DataFrame = {
+    ensureRegistered(df)
+    df.withColumn("h", expr(md5LongSql("cast(vec_id as string)")))
+      .orderBy(asc("h"), asc("vec_id")).limit(k)
+      .withColumn("cell",
+        (row_number().over(Window.orderBy(asc("h"), asc("vec_id"))) - 1)
+          .cast("long"))
+      .drop("h")
+  }
+
+  /** `iters` Lloyd rounds from the `init` centroids: `assign` labels every
+    * point with its nearest centroid's cell (ties to the smaller cell),
+    * then [[means]] over `keys` of the `vec` column is the next round's
+    * centroid frame — an empty cell has no row. Shared by
+    * [[kmeansCentroids]] and [[Pq.train]].
+    *
+    * r15: each round's k-row centroid frame is pinned (lazy
+    * localCheckpoint — no job at plan build, the PlanAuditSpec
+    * contract). Without the cut the training chain INLINES into every
+    * downstream reference and each round's plan contains all previous
+    * rounds — sim_davies_bouldin's audited plan carried 322 Exchange
+    * nodes because the centroids appear in the scatter join, the k×k
+    * pair grid AND the assignment, each replaying the full retrain
+    * (plans/r15: 322 → ~30 Exchanges; sim_ivfpq_topk 128 → ~40).
+    */
+  private[graft] def lloyd(init: DataFrame, iters: Int, keys: Seq[String],
+      vec: String)(assign: DataFrame => DataFrame): DataFrame =
+    (1 to iters).foldLeft(init)((cent, _) =>
+      means(assign(cent), keys, vec).pin(false))
 
   /** Assign every corpus vector to its nearest centroid by cosine
     * (ties break on the smaller cell id — cosines are bit-identical
     * across engines, so ties resolve identically). Centroids broadcast;
     * the corpus is touched once per call.
     */
-  private def assignByCosine(corpus: DataFrame, cent: DataFrame): DataFrame = {
-    // (r15 note: a max(struct(ccos, −cell)) hash-aggregate argmax was
-    // tried; Min/Max over a struct is not hash-aggregable in Spark 4 —
-    // the plan degrades to a non-codegen SortAggregate and measured
-    // slower than this window, which executes as a partial-mode
-    // WindowGroupLimit: top-1 rows drop before the exchange. Kept.)
-    val w = Window.partitionBy("vec_id").orderBy(desc("ccos"), asc("cell"))
-    corpus.select(col("vec_id"), col("embedding"))
-      .join(broadcast(cent))
-      .select(col("vec_id"), col("embedding"), col("cell"),
-        expr(cosineSql("embedding", "centroid")).as("ccos"))
-      .withColumn("pr", row_number().over(w)).filter(col("pr") === 1)
+  private def assignByCosine(corpus: DataFrame, cent: DataFrame): DataFrame =
+    topN(corpus.select(col("vec_id"), col("embedding"))
+        .join(broadcast(cent))
+        .select(col("vec_id"), col("embedding"), col("cell"),
+          expr(cosineSql("embedding", "centroid")).as("ccos")),
+      Seq("vec_id"), 1, desc("ccos"), asc("cell"))
       .select("vec_id", "embedding", "cell")
-  }
 
   /** TRAINED coarse quantizer for IVF: deterministic spherical k-means.
     * Seeds = the `k` vectors with the smallest md5Long(vec_id) (cell id
@@ -614,8 +663,7 @@ object Similarity {
     *
     * Scale shape per round: one broadcast join against k centroids +
     * one (cell, dim) hash aggregate; nothing quadratic, nothing on the
-    * driver. (At production scale checkpoint between rounds to keep
-    * lineage flat; the gate runs a fixed small `iters`.)
+    * driver.
     */
   def kmeansCells(corpus: DataFrame, k: Int, iters: Int): DataFrame =
     assignByCosine(corpus, kmeansCentroids(corpus, k, iters))
@@ -627,29 +675,10 @@ object Similarity {
     */
   def kmeansCentroids(corpus: DataFrame, k: Int, iters: Int)
       : DataFrame = {
-    ensureRegistered(corpus)
-    val seeds = corpus
-      .select(col("vec_id"), col("embedding"),
-        expr(md5LongSql("cast(vec_id as string)")).as("h"))
-      .orderBy(asc("h"), asc("vec_id")).limit(k)
-    var cent = seeds
-      .withColumn("cell",
-        (row_number().over(Window.orderBy(asc("h"), asc("vec_id"))) - 1)
-          .cast("long"))
+    val init = seeds(corpus.select(col("vec_id"), col("embedding")), k)
       .select(col("cell"),
         expr("transform(embedding, x -> cast(x as double))").as("centroid"))
-    // r15: pin each Lloyd round's k-row centroid frame (lazy
-    // localCheckpoint — no job at plan build, the PlanAuditSpec
-    // contract). Without the cut the training chain INLINES into every
-    // downstream reference — sim_davies_bouldin's audited plan carried
-    // 322 Exchange nodes because cent appears in the scatter join, the
-    // k×k pair grid AND the assignment, each replaying the full
-    // retrain; with per-round cuts the consumers all read one k-row
-    // RDD leaf (plan: 322 → ~30 Exchanges, see plans/r15).
-    for (_ <- 1 to iters)
-      cent = centroids(assignByCosine(corpus, cent), "cell")
-        .pin(false)
-    cent
+    lloyd(init, iters, Seq("cell"), "embedding")(assignByCosine(corpus, _))
   }
 
   /** Davies–Bouldin cluster-quality index (Davies & Bouldin 1979) in
@@ -753,6 +782,19 @@ object Similarity {
       .orderBy("cell")
   }
 
+  /** IVF probe: each (query_id, qe) row routed to its `nprobe` nearest
+    * broadcast centroids by cosine (ties to the smaller cell), as
+    * (query_id, qe, cell). Shared by [[ivfTopK]] and
+    * [[Pq.ivfAdcTopKLoaded]].
+    */
+  private[graft] def probe(q: DataFrame, cents: DataFrame,
+      nprobe: Int): DataFrame =
+    topN(q.join(broadcast(cents))
+        .select(col("query_id"), col("qe"), col("cell"),
+          expr(cosineSql("qe", "centroid")).as("ccos")),
+      Seq("query_id"), nprobe, desc("ccos"), asc("cell"))
+      .select("query_id", "qe", "cell")
+
   /** IVF probe search: route each query to its `nprobe` nearest centroids,
     * then brute-force only within those cells. Exact within the probed
     * fraction; recall governed by nprobe (classic IVF trade-off).
@@ -760,29 +802,14 @@ object Similarity {
   def ivfTopK(queries: DataFrame, corpus: DataFrame, cellCol: String,
       nprobe: Int, k: Int): DataFrame = {
     ensureRegistered(queries)
-    val cents = centroids(corpus, cellCol)
     val q = queries.select(col("vec_id").as("query_id"),
       col("embedding").as("qe"))
-    val probeW = Window.partitionBy("query_id")
-      .orderBy(desc("ccos"), asc("cell"))
-    val probed = q.join(broadcast(cents))
-      .select(col("query_id"), col("qe"), col("cell"),
-        expr(cosineSql("qe", "centroid")).as("ccos"))
-      .withColumn("pr", row_number().over(probeW))
-      .filter(col("pr") <= nprobe)
-      .select("query_id", "qe", "cell")
     val c = corpus.select(col("vec_id").as("neighbor_id"),
       col(cellCol).as("cell"), col("embedding").as("ce"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(desc("cos"), asc("neighbor_id"))
-    probed.join(c, Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        expr(cosineSql("qe", "ce")).as("cos"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("cos"), 6).as("cos"))
+    rankPairs(probe(q, centroids(corpus, cellCol), nprobe)
+        .join(c, Seq("cell"))
+        .filter(col("query_id") =!= col("neighbor_id")),
+      k, cosineSql("qe", "ce"), "cos")
   }
 
   /** ANN RECALL evaluation — the number that decides whether an
@@ -818,7 +845,7 @@ object Similarity {
 
   /** md5-derived hyperplane weight for global plane index `p`, dimension
     * `j`: (md5Long("p,j") mod 2001 − 1000) / 1000 — the identical value
-    * [[hyperplaneBucketSql]] (and the DuckDB oracle) derives per row.
+    * the DuckDB oracle derives per row.
     * The weights are CONSTANTS, so the engine computes them once on the
     * driver and inlines them as a plan literal; hashing per row per
     * dimension was the one bench regression of the banded near-dup.
@@ -834,9 +861,9 @@ object Similarity {
     * planes [t·b, (t+1)·b)). Weights ride along as one typed literal;
     * per row a bucket costs b·dims fused multiply-adds inside
     * whole-stage codegen — no hashing. Fold order over dimensions is
-    * identical to [[hyperplaneBucketSql]], so bucket ids are
-    * bit-identical to the md5-per-row form and to the DuckDB twin
-    * (PlaneLiteralSpec asserts the bit-identity). Fixed dimensionality is
+    * identical to the md5-per-row SQL form, so bucket ids are
+    * bit-identical to it and to the DuckDB twin (PlaneLiteralSpec
+    * holds that form and asserts the bit-identity). Fixed dimensionality is
     * the embedding-column contract — a ragged row raises instead of
     * silently zero-folding its tail.
     */
@@ -889,27 +916,6 @@ object Similarity {
       .drop("__planes")
   }
 
-  /** Signed-random-projection (hyperplane) LSH bucket id: bit p of the
-    * bucket = sign of ⟨v, w_p⟩ where w_p[j] = (md5Long(p ‖ ',' ‖ j) mod
-    * 2001 − 1000) / 1000 — deterministic pseudo-random weights both
-    * engines can recompute. This md5-per-row form is the oracle-twin
-    * reference; the hot path inlines the same weights as literals
-    * ([[withBucketArray]]).
-    */
-  def hyperplaneBucketSql(vec: String, nPlanes: Int,
-      planeOffset: String = "0"): String = {
-    // the weight is parenthesized so it rounds to a double BEFORE the
-    // multiply — identical to the precomputed [[planeWeight]] literal and
-    // the DuckDB twin (left-assoc (x*(m-1000))/1000.0 could differ by an
-    // ulp and flip a bucket bit on a projection straddling 0)
-    val proj = s"aggregate(zip_with($vec, sequence(0, size($vec) - 1), " +
-      s"(x, j) -> cast(x as double) * (((${md5LongSql(s"concat(cast(($planeOffset) + p as string), ',', cast(j as string))")} % 2001) - 1000) / 1000.0)), " +
-      s"cast(0.0 as double), (acc, v) -> acc + v)"
-    s"aggregate(transform(sequence(0, ${nPlanes - 1}), p -> " +
-      s"case when ($proj) >= 0 then shiftleft(cast(1 as bigint), p) else cast(0 as bigint) end), " +
-      s"cast(0 as bigint), (acc, v) -> acc + v)"
-  }
-
   /** LSH-bucketed ANN: bucket every vector, search only within the query's
     * bucket. Output may have < k rows per query (recall/bucket trade-off).
     */
@@ -923,16 +929,9 @@ object Similarity {
       col("embedding").as("qe"), col("bucket"))
     val c = bucket(corpus).select(col("vec_id").as("neighbor_id"),
       col("embedding").as("ce"), col("bucket"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(desc("cos"), asc("neighbor_id"))
-    q.join(c, Seq("bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        expr(cosineSql("qe", "ce")).as("cos"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("cos"), 6).as("cos"))
+    rankPairs(q.join(c, Seq("bucket"))
+        .filter(col("query_id") =!= col("neighbor_id")),
+      k, cosineSql("qe", "ce"), "cos")
   }
 
   /** L2-unit-normalize an embedding corpus: (vec_id, u ARRAY<DOUBLE>).

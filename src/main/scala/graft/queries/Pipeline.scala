@@ -103,11 +103,13 @@ object Pipeline extends QueryModule {
        |${duckKmAsg(s"cent$iters", "asgf")}""".stripMargin
   }
 
-  /** DuckDB twin of [[Similarity.hyperplaneBucketSql]]. */
+  /** DuckDB twin of the hyperplane bucket of
+    * [[Similarity.withBucketArray]] (md5-per-row weights, as in
+    * PlaneLiteralSpec's reference form). */
   private def duckBucket(vec: String, nPlanes: Int,
       planeOffset: String = "0"): String = {
     // weight parenthesized to round before the multiply — matches
-    // Similarity.planeWeight / hyperplaneBucketSql exactly (not the
+    // Similarity.planeWeight / withBucketArray exactly (not the
     // left-assoc (x*(m-1000))/1000.0, which can differ by one ulp)
     val proj = s"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), " +
       s"list_transform(range(0, len($vec)), " +

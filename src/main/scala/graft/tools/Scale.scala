@@ -35,7 +35,14 @@ import org.apache.spark.storage.StorageLevel
 object Scale {
 
   lazy val sfDir: String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
-    s"${sys.props("user.home")}/testdata/sf0.1")
+    testData("sf0.1"))
+
+  /** The generated tables of scale factor `sf` (e.g. `sf0.001`) under
+    * `~/testdata` (TESTDATA.md) — the default behind [[sfDir]] and the
+    * tier-1 specs' one input path.
+    */
+  def testData(sf: String): String = s"${sys.props("user.home")}/testdata/$sf"
+
   lazy val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
     .getOrElse(Runtime.getRuntime.availableProcessors)
 

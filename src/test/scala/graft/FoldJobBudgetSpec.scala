@@ -10,8 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class FoldJobBudgetSpec extends AnyFunSuite {
   private lazy val spark = SharedSpark.session
-  // the generated tables live under ~/testdata (TESTDATA.md)
-  private val d = s"${sys.props("user.home")}/testdata/sf0.001"
+  private val d = SharedSpark.testData()
 
   private def run(gate: String): Bench.Run = {
     val r = Bench.once(spark, d, gate)

@@ -20,7 +20,7 @@ import org.apache.spark.sql.types.{ArrayType, DecimalType, MapType, StructType}
   */
 class GateOutputContractSpec extends AnyFunSuite {
   private lazy val spark = SharedSpark.session
-  private val d = "/root/testdata/sf0.001"
+  private val d = SharedSpark.testData()
 
   /** A gate-output field the driver's comparator can't hash stably:
     * ARRAY/MAP/STRUCT crash its pandas row sort (round-9 lesson), and

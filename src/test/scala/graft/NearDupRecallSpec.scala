@@ -11,7 +11,7 @@ import graft.ops.Similarity
   */
 class NearDupRecallSpec extends AnyFunSuite {
   private lazy val spark = SharedSpark.session
-  private val emb = "/root/testdata/sf0.001/embeddings.parquet"
+  private val emb = s"${SharedSpark.testData()}/embeddings.parquet"
   private val threshold = 0.45
 
   private def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =

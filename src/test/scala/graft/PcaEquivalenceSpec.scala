@@ -151,11 +151,9 @@ class PcaEquivalenceSpec extends AnyFunSuite {
   // ---- cases -----------------------------------------------------------
   test("sf0.001/0.01/0.1 embeddings: long, wide and fold forms are " +
       "byte-equal") {
-    // the generated tables live under ~/testdata (TESTDATA.md)
-    val home = sys.props("user.home")
     for (sf <- Seq("sf0.001", "sf0.01", "sf0.1"))
-      assertThreeForms(sf,
-        spark.read.parquet(s"$home/testdata/$sf/embeddings.parquet"))
+      assertThreeForms(sf, spark.read.parquet(
+        s"${SharedSpark.testData(sf)}/embeddings.parquet"))
   }
 
   test("seeded random corpora: long, wide and fold forms are byte-equal") {

@@ -17,7 +17,7 @@ import graft.queries.{Relational, Functions, Pipeline, Corpus, Analytics, Insigh
   */
 class PlanAuditSpec extends AnyFunSuite {
   private lazy val spark = SharedSpark.session
-  private val d = "/root/testdata/sf0.001"
+  private val d = SharedSpark.testData()
 
   // Nested-loop joins whose build side is provably tiny — O(n·k) with a
   // bounded k, not O(n²):

@@ -6,15 +6,34 @@ import graft.ops.Similarity
 
 /** The hyperplane-LSH bucket has three computations that MUST agree
   * bit-for-bit: the literal-weight hot path (Similarity.withBucketArray),
-  * the md5-per-row SQL form (hyperplaneBucketSql — the DuckDB twin's
-  * shape), and the driver-side planeWeight constants. All three round the
+  * the md5-per-row SQL form (hyperplaneBucketSql below — the DuckDB
+  * twin's shape), and the driver-side planeWeight constants. All three round the
   * weight (m % 2001 − 1000) / 1000 to a double BEFORE multiplying by the
   * coordinate; a left-assoc (x·(m−1000))/1000 can differ by one ulp and
   * flip a sign bit on a projection straddling zero.
   */
 class PlaneLiteralSpec extends AnyFunSuite {
   private lazy val spark = SharedSpark.session
-  private val emb = "/root/testdata/sf0.001/embeddings.parquet"
+  private val emb = s"${SharedSpark.testData()}/embeddings.parquet"
+
+  /** Signed-random-projection (hyperplane) LSH bucket id in the
+    * md5-per-row form: bit p of the bucket = sign of ⟨v, w_p⟩ where
+    * w_p[j] = (md5Long(p ‖ ',' ‖ j) mod 2001 − 1000) / 1000 — the
+    * reference the literal-weight path is proven against.
+    */
+  private def hyperplaneBucketSql(vec: String, nPlanes: Int,
+      planeOffset: String): String = {
+    // the weight is parenthesized so it rounds to a double BEFORE the
+    // multiply — identical to the precomputed planeWeight literal and
+    // the DuckDB twin (left-assoc (x*(m-1000))/1000.0 could differ by an
+    // ulp and flip a bucket bit on a projection straddling 0)
+    val proj = s"aggregate(zip_with($vec, sequence(0, size($vec) - 1), " +
+      s"(x, j) -> cast(x as double) * (((${graft.ops.Hashing.md5LongSql(s"concat(cast(($planeOffset) + p as string), ',', cast(j as string))")} % 2001) - 1000) / 1000.0)), " +
+      s"cast(0.0 as double), (acc, v) -> acc + v)"
+    s"aggregate(transform(sequence(0, ${nPlanes - 1}), p -> " +
+      s"case when ($proj) >= 0 then shiftleft(cast(1 as bigint), p) else cast(0 as bigint) end), " +
+      s"cast(0 as bigint), (acc, v) -> acc + v)"
+  }
 
   test("literal-weight buckets are bit-identical to the md5-per-row form") {
     val corpus = spark.read.parquet(emb)
@@ -22,7 +41,7 @@ class PlaneLiteralSpec extends AnyFunSuite {
     val b = 4; val l = 3
     val sqlForm = corpus.select(col("vec_id"), expr(
       s"transform(sequence(0, ${l - 1}), tt -> " +
-        Similarity.hyperplaneBucketSql("embedding", b, s"tt * $b") + ")")
+        hyperplaneBucketSql("embedding", b, s"tt * $b") + ")")
       .as("bk"))
     val litForm = Similarity.withBucketArray(corpus, "embedding", b, l, "bk")
       .select(col("vec_id"), col("bk"))

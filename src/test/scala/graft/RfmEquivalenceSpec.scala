@@ -65,10 +65,8 @@ class RfmEquivalenceSpec extends AnyFunSuite {
 
   // ---- cases -----------------------------------------------------------
   test("sf0.001/0.01 events: fold and distributed paths are byte-equal") {
-    // the generated tables live under ~/testdata (TESTDATA.md)
-    val home = sys.props("user.home")
     for (sf <- Seq("sf0.001", "sf0.01"))
-      assertBothPaths(sf, Tables.events(spark, s"$home/testdata/$sf"))
+      assertBothPaths(sf, Tables.events(spark, SharedSpark.testData(sf)))
   }
 
   test("seeded events with ties on every metric are byte-equal") {

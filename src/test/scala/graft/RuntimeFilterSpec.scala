@@ -12,7 +12,7 @@ import graft.ops.RuntimeFilter
   */
 class RuntimeFilterSpec extends AnyFunSuite {
   private lazy val spark = SharedSpark.session
-  private val d = "/root/testdata/sf0.001"
+  private val d = SharedSpark.testData()
 
   test("bloom-prefiltered join == plain join; prefilter sheds rows") {
     val li = spark.read.parquet(s"$d/lineitem.parquet")

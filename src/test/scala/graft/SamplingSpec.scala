@@ -8,7 +8,7 @@ import graft.ops.Sampling
 class SamplingSpec extends AnyFunSuite {
   private lazy val spark = SharedSpark.session
   private def docs = spark.read
-    .parquet("/root/testdata/sf0.001/documents.parquet")
+    .parquet(s"${SharedSpark.testData()}/documents.parquet")
 
   test("hashSplit is exhaustive, disjoint, and repartition-stable") {
     val split = Sampling.hashSplit(docs, "doc_id", 80, 10)

@@ -13,8 +13,7 @@ import graft.tools.{Scale, ScaleCases}
   */
 class ScaleInvariantSpec extends AnyFunSuite {
   private lazy val spark = SharedSpark.session
-  // the generated tables live under ~/testdata (TESTDATA.md)
-  private val d = s"${sys.props("user.home")}/testdata/sf0.001"
+  private val d = SharedSpark.testData()
 
   for (c <- ScaleCases.all(spark, d))
     test(s"${c.name} holds its invariants at k = 1 and 2") {

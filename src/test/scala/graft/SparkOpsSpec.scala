@@ -20,6 +20,9 @@ object SharedSpark {
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  /** The generated tables of scale factor `sf` ([[graft.tools.Scale.testData]]). */
+  def testData(sf: String = "sf0.001"): String = graft.tools.Scale.testData(sf)
 }
 
 class SparkOpsSpec extends AnyFunSuite {
@@ -584,7 +587,7 @@ class SparkOpsSpec extends AnyFunSuite {
 
   test("streaming seasonal forecast equals the batch op row-for-row " +
     "(sf0.001)") {
-    val dir = "/root/testdata/sf0.001"
+    val dir = SharedSpark.testData()
     val streamed = graft.streaming.Events.seasonalDaily(spark, dir)
       .orderBy("event_type").collect().map(_.toSeq)
     val batch = graft.ops.EventAnalytics.seasonalNaiveForecast(
@@ -595,7 +598,7 @@ class SparkOpsSpec extends AnyFunSuite {
   }
 
   test("streaming CUSUM equals the batch op row-for-row (sf0.001)") {
-    val dir = "/root/testdata/sf0.001"
+    val dir = SharedSpark.testData()
     val streamed = graft.streaming.Events.cusumDaily(spark, dir)
       .collect().map(_.toSeq)
     val batch = graft.ops.EventAnalytics.cusumChangepoint(
@@ -607,7 +610,7 @@ class SparkOpsSpec extends AnyFunSuite {
 
   test("streaming EWMA forecast equals the batch op row-for-row " +
     "(sf0.001)") {
-    val dir = "/root/testdata/sf0.001"
+    val dir = SharedSpark.testData()
     val streamed = graft.streaming.Events.ewmaDaily(spark, dir)
       .orderBy("event_type").collect().map(_.toSeq)
     val batch = graft.ops.EventAnalytics.ewmaForecast(
@@ -618,7 +621,7 @@ class SparkOpsSpec extends AnyFunSuite {
   }
 
   test("streaming window counts equal the batch aggregation (sf0.001)") {
-    val dir = "/root/testdata/sf0.001"
+    val dir = SharedSpark.testData()
     val streamed = graft.streaming.Events.windowCounts(spark, dir)
       .collect().map(r => (r.get(0).toString, r.getString(1), r.getLong(2)))
     val batch = graft.queries.Tables.events(spark, dir)
