@@ -36,9 +36,12 @@ object Hashing {
   def duckMd5Long(inner: String): String =
     s"CAST(('0x' || substring(md5($inner),1,15)) AS BIGINT)"
 
-  /** Engine tokenizer as a SQL expression — MUST stay in sync with
-    * graft.textfn.Text.tokenize and the DuckDB oracle regex.
+  /** Engine tokenizer over the string SQL expression `c`, as a SQL
+    * expression — MUST stay in sync with graft.textfn.Text.tokenize and
+    * the DuckDB oracle regex.
     */
-  val tokensSql = "regexp_extract_all(lower(text), '[a-z0-9]+', 0)"
+  def tokens(c: String = "text"): String =
+    s"regexp_extract_all(lower($c), '[a-z0-9]+', 0)"
+  val tokensSql: String = tokens()
   val duckTokensSql = "regexp_extract_all(lower(text), '[a-z0-9]+')"
 }

@@ -69,8 +69,6 @@ object LinkModels {
     * anchors contribute B and E for the same n-gram, as in the ref.
     */
   def namePartCounts(docs: DataFrame, maxNgram: Int = 2): DataFrame = {
-    def toks(c: String) =
-      s"regexp_extract_all(lower($c), '[a-z0-9]+', 0)"
     // sequence(1, 0) would DESCEND; guard short token lists with an
     // explicit empty array.
     def ngr(n: Int, src: String) =
@@ -79,7 +77,8 @@ object LinkModels {
         s"i -> concat_ws(' ', slice($src, i, $n))) " +
         s"else cast(array() as array<string>) end"
 
-    val anchors = anchored(docs).select(expr(toks("anchor")).as("at"))
+    val anchors = anchored(docs)
+      .select(expr(Hashing.tokens("anchor")).as("at"))
       .filter(size(col("at")) > 0)
     val partEntries = (1 to maxNgram).map { n =>
       anchors.select(expr(ngr(n, "at")).as("ng"))
@@ -98,7 +97,7 @@ object LinkModels {
     val partCounts = partEntries.groupBy("term", "pos")
       .agg(count(lit(1)).as("n"))
 
-    val textToks = docs.select(expr(toks("text")).as("tt"))
+    val textToks = docs.select(expr(Hashing.tokens()).as("tt"))
     val oCounts = (1 to maxNgram).map { n =>
       textToks.select(explode(expr(ngr(n, "tt"))).as("term"))
     }.reduce(_ unionByName _)

@@ -116,13 +116,12 @@ object Mentions {
   private def indexMappedImpl(mentions: DataFrame, vocab: DataFrame,
       vocabSize: Option[Long]): DataFrame = {
     import org.apache.spark.sql.functions._
-    val toks = "regexp_extract_all(lower(%s), '[a-z0-9]+', 0)"
     val withParts = mentions.select(col("target"), col("source"),
       col("text"), col("start"), col("stop"),
-      expr(toks.format("substring(text, 1, start)")).as("pre"),
-      expr(toks.format("substring(text, start + 1, stop - start)"))
+      expr(Hashing.tokens("substring(text, 1, start)")).as("pre"),
+      expr(Hashing.tokens("substring(text, start + 1, stop - start)"))
         .as("ins"),
-      expr(toks.format("substring(text, stop + 1)")).as("post"))
+      expr(Hashing.tokens("substring(text, stop + 1)")).as("post"))
     val exploded = withParts
       .select(col("target"), col("source"), col("start"), col("stop"),
         size(col("pre")).as("n_pre"), size(col("ins")).as("n_ins"),

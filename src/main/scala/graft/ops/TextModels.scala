@@ -18,16 +18,14 @@ import graft.ops.Pins.PinSyntax
   */
 object TextModels {
 
-  private def toks(c: String) =
-    s"regexp_extract_all(lower($c), '[a-z0-9]+', 0)"
-
   /** F12 / ref TermIdfs (text.py:152-168): idf = ln(N / df) over the
     * corpus token vocabulary, keeping terms with df > `minDf` (the ref's
     * `TermDocumentFrequencies` floor; its default 2 assumes web-scale
     * corpora — callers pick the floor for their corpus size).
     */
   def termIdfs(docs: DataFrame, minDf: Long = 2): DataFrame = {
-    val tk = docs.select(col("doc_id"), explode(expr(toks("text"))).as("tok"))
+    val tk = docs.select(col("doc_id"),
+      explode(expr(Hashing.tokens())).as("tok"))
     // df via the (doc, tok) partial-aggregate: the distinct-shuffle over
     // the raw token explode collapses map-side before it moves
     val dfreq = tk.groupBy("doc_id", "tok").agg(count(lit(1)))
@@ -57,7 +55,7 @@ object TextModels {
   def entityMentionTermFrequency(mentions: DataFrame, idfs: DataFrame,
       normalize: Boolean = true): DataFrame = {
     val tf = mentions
-      .select(col("target"), explode(expr(toks("text"))).as("tok"))
+      .select(col("target"), explode(expr(Hashing.tokens())).as("tok"))
       .groupBy("target", "tok").agg(count(lit(1)).as("tf"))
     val w = tf.join(idfs, "tok")
       .select(col("target"), col("tok"),
@@ -95,8 +93,8 @@ object TextModels {
     mentions
       .filter(col("target").startsWith(entityPrefix))
       .select(col("target"), col("source"), col("start"), col("stop"),
-        expr(s"concat(${toks("substring(text, 1, start)")}, " +
-          s"array(target), ${toks("substring(text, stop + 1)")})")
+        expr(s"concat(${Hashing.tokens("substring(text, 1, start)")}, " +
+          s"array(target), ${Hashing.tokens("substring(text, stop + 1)")})")
           .as("sentence"))
 
   /** Per-class minimum-count vocabulary filter (ref embeddings.py:36-42,

@@ -262,7 +262,7 @@ object Corpus extends QueryModule {
     QueryDef("m_indexed_mentions", (s, d) => {
       val docs = Wiki.documents(s, FixtureWiki)
       val words = docs.select(
-        explode(expr("regexp_extract_all(lower(text), '[a-z0-9]+', 0)"))
+        explode(expr(graft.ops.Hashing.tokens()))
           .as("w"))
       val vocab = graft.ops.Rank.globalOrdinal(
         words.groupBy("w").agg(count(lit(1)).as("cnt")),

@@ -30,7 +30,7 @@ object Functions extends QueryModule {
     QueryDef("p2_explode_wordcount", (s, d) => {
       t(s, d, "documents")
         .select(explode(
-          expr("regexp_extract_all(lower(text), '[a-z0-9]+', 0)")).as("w"))
+          expr(graft.ops.Hashing.tokens())).as("w"))
         .groupBy("w").agg(count(lit(1)).as("n"))
     }, Some("""
       SELECT w, COUNT(*) AS n FROM (
@@ -208,7 +208,7 @@ object Functions extends QueryModule {
     // are JSON-serialized at the query boundary (the gate's compare handles
     // scalar columns only).
     QueryDef("f_array_battery", (s, d) => {
-      val words = expr("regexp_extract_all(lower(text), '[a-z0-9]+', 0)")
+      val words = expr(graft.ops.Hashing.tokens())
       t(s, d, "documents").select(
         col("doc_id"),
         size(words).cast("long").as("n_words"),

@@ -2578,7 +2578,7 @@ object Insights extends QueryModule {
       val docs = t(s, d, "documents")
       graft.ops.Sampling.curriculumOrder(
         docs.withColumn("difficulty", expr(
-          "size(regexp_extract_all(lower(text), '[a-z0-9]+', 0))")),
+          s"size(${graft.ops.Hashing.tokens()})")),
         "doc_id", "difficulty", buckets = 4)
     }, Some(s"""
       WITH sc AS (SELECT doc_id AS key,

@@ -406,7 +406,7 @@ object Relational extends QueryModule {
     // single-partition window anywhere in the plan.
     QueryDef("j7_vocab_oov_broadcast", (s, d) => {
       val words = t(s, d, "documents").select(
-        explode(expr("regexp_extract_all(lower(text), '[a-z0-9]+', 0)"))
+        explode(expr(graft.ops.Hashing.tokens()))
           .as("w"))
       val byCount = words.groupBy("w").agg(count(lit(1)).as("cnt"))
       val vocab = graft.ops.Rank
@@ -767,7 +767,7 @@ object Relational extends QueryModule {
     QueryDef("a6_doc_vocab", (s, d) => {
       t(s, d, "documents").select(col("doc_id"),
         to_json(array_sort(array_distinct(
-          expr("regexp_extract_all(lower(text), '[a-z0-9]+', 0)"))))
+          expr(graft.ops.Hashing.tokens()))))
           .as("vocab"))
     }, Some("""
       SELECT doc_id,
@@ -975,7 +975,7 @@ object Relational extends QueryModule {
     // past the single-partition-window vocab-cardinality limit.
     QueryDef("w1_vocab_rank_band", (s, d) => {
       val words = t(s, d, "documents").select(
-        explode(expr("regexp_extract_all(lower(text), '[a-z0-9]+', 0)"))
+        explode(expr(graft.ops.Hashing.tokens()))
           .as("w"))
       val byCount = words.groupBy("w").agg(count(lit(1)).as("cnt"))
       graft.ops.Rank

@@ -356,7 +356,7 @@ object StreamML extends QueryModule {
     // ---- M1: distributed skip-gram embeddings; structural oracle.
     QueryDef("m1_word2vec_vocab", (s, d) => {
       val toks = t(s, d, "documents")
-        .select(expr("regexp_extract_all(lower(text), '[a-z0-9]+', 0)")
+        .select(expr(graft.ops.Hashing.tokens())
           .as("tokens"))
       // numPartitions=1 pins the gate output deterministic; production
       // training raises it (partitioned skip-gram trades exactness of

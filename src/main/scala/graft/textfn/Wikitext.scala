@@ -73,21 +73,6 @@ object Wikitext {
       r: String): String =
     if (triggers.exists(s.contains(_))) sub(p, s, r) else s
 
-  /** Named regex passes, exposed for the profiling harness
-    * (tools/RegexProf) — measurement only, not an API.
-    */
-  private[graft] def profilingPatterns: Seq[(String, Pattern)] = Seq(
-    "Comments" -> Comments, "Refs" -> Refs, "NoWiki" -> NoWiki,
-    "MathTag" -> MathTag, "OtherTags" -> OtherTags,
-    "Headings" -> Headings, "InterLang" -> InterLang,
-    "Categories" -> Categories, "ExtUrl" -> ExtUrl,
-    "WikiLinkPiped" -> WikiLinkPiped, "WikiLinkPlain" -> WikiLinkPlain,
-    "TableLines" -> TableLines, "TableCells" -> TableCells,
-    "BoldItalic" -> BoldItalic, "Bold" -> Bold,
-    "ItalicQuote" -> ItalicQuote, "Italic" -> Italic,
-    "DoubleQuotes" -> DoubleQuotes, "EmptyParens" -> EmptyParens,
-    "Anchor" -> Anchor)
-
   /** Remove `{{…}}` templates, tracking nesting with a brace counter.
     * Bails out gracefully on unbalanced braces (keeps the tail verbatim),
     * matching the reference's tolerance of broken markup.

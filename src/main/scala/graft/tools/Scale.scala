@@ -30,7 +30,7 @@ import org.apache.spark.storage.StorageLevel
   * and SPARK_GRAFT_CPUS the local thread and shuffle-partition count
   * (default the host's cores); both are read here and nowhere else.
   * [[session]] is the one session builder of the local mains (`Bench`,
-  * `Verify`, `Scale`, `CorpusSoak`, `DumpCorpus`).
+  * `Verify`, `Scale`, `DumpCorpus`).
   */
 object Scale {
 
@@ -90,9 +90,17 @@ object Scale {
     * materialized once by its row count; unpersisted even when the
     * body throws, so a failed case leaves no cache in a shared session.
     */
-  def cached[T](df: DataFrame)(body: (DataFrame, Long) => T): T = {
+  def cached[T](df: DataFrame)(body: (DataFrame, Long) => T): T =
+    timedCached(df)((p, n, _) => body(p, n))
+
+  /** [[cached]] whose body also gets the seconds of the materializing
+    * count, i.e. of computing `df` once.
+    */
+  def timedCached[T](df: DataFrame)(body: (DataFrame, Long, Double) => T)
+      : T = {
     val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-    try body(p, p.count()) finally { val _ = p.unpersist(blocking = true) }
+    try { val (n, sec) = timed(p.count()); body(p, n, sec) }
+    finally { val _ = p.unpersist(blocking = true) }
   }
 
   // ---------------- the four replication functions ----------------
@@ -146,10 +154,11 @@ object Scale {
   // ---------------- the case table ----------------
 
   /** One row of the case table, named after the first op line it
-    * prints. `replicate(k)` builds the ×k base input, `plant(k, d)`
-    * adds the planted rows, `op(k, d)` runs and times the operator(s)
-    * and prints their JSON lines, and `invariant(k, obs, base)` asserts
-    * the closed forms, `base` being the k = 1 observables.
+    * prints (a corpus case after the dump it ingests). `replicate(k)`
+    * builds the ×k base input, `plant(k, d)` adds the planted rows,
+    * `op(k, d)` runs and times the operator(s) and prints their JSON
+    * lines, and `invariant(k, obs, base)` asserts the closed forms,
+    * `base` being the k = 1 observables.
     */
   final case class ScaleCase[D, O](name: String, scales: Seq[Int],
       replicate: Int => D, plant: (Int, D) => D, op: (Int, D) => O,

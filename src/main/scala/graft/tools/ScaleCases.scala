@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
@@ -8,6 +8,7 @@ import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 import graft.ops._
 import graft.ops.Pins.PinSyntax
 import graft.queries.{Scratch, Tables}
+import graft.sources.{WarcSource, Wiki, Wikidata}
 import graft.tools.Scale._
 
 /** The [[Scale]] case table. Every case reads its base tables from
@@ -33,7 +34,9 @@ import graft.tools.Scale._
   *  - text models: χ² terms, TF-IDF neighbors and substring removal;
   *  - curation: token budget, source interleave, LM filter, line dedup,
   *    incremental near-dup, perplexity buckets, Gopher rules and the
-  *    persisted PQ index append.
+  *    persisted PQ index append;
+  *  - corpus ingest: wiki-XML, WARC and Wikidata dumps of k synthetic
+  *    units with planted defects, through each ingest pipeline.
   */
 object ScaleCases {
 
@@ -172,36 +175,51 @@ object ScaleCases {
         s"substring dup docs $n at $k, not $k × $base"))
 
     // fuzzy join with a HOT q-gram: every target name ends with the
-    // same " zzzz" tail, so its trigrams are the most common in the
-    // corpus at every scale — rarest-prefix blocking must keep them OUT
-    // of prefixes (no candidate flood) while recall at the edit bound
-    // holds. (This soak caught the previous absolute df-cap design
-    // dropping EVERY gram at 10× — n_matches was 0.)
-    val fuzzy = ScaleCase[DataFrame, (Long, Long)]("j_fuzzy_names", S50,
+    // planted " zzzz" tail, so its trigrams " zz" and "zzz" sit in EVERY
+    // target at every scale (copy i ≥ 1 also carries a " v{i}" tag,
+    // which no k makes universal) — rarest-prefix blocking must keep
+    // them OUT of prefixes (no candidate flood) while recall at the
+    // edit bound holds, so the prefix scheme must match exactly what
+    // the recall-exact segment scheme matches. (This soak caught the
+    // previous absolute df-cap design dropping EVERY gram at 10× —
+    // n_matches was 0.)
+    val hotTail = " zzzz"
+    val fuzzy = ScaleCase[DataFrame, (Long, Long, Long, Long)](
+      "j_fuzzy_names", S50,
       k => replicas(k)(i => shiftIds(part0.select(col("p_partkey").as("t_key"),
-        concat(col("p_name"), lit(s" v$i")).as("t_name")), i,
-        "t_key" -> 10000000L)),
-      (_, d) => d.withColumn("t_name", concat(col("t_name"), lit(" zzzz"))),
+        concat(col("p_name"), lit(if (i == 0) "" else s" v$i")).as("t_name")),
+        i, "t_key" -> 10000000L)),
+      (_, d) => d.withColumn("t_name", concat(col("t_name"), lit(hotTail))),
       (k, d) => cached(d) { (targets, nTargets) =>
         val probes = part0.filter(col("p_partkey") < 500)
           .select(col("p_partkey").as("q_key"),
             concat(substring(col("p_name"), 1, 2),
-              expr("substring(p_name, 4)"), lit(" v0 zzzz")).as("q_name"))
+              expr("substring(p_name, 4)"), lit(hotTail)).as("q_name"))
         val nHotGrams = Fuzzy.grams(targets, "t_key", "t_name", 3)
           .groupBy("gram").agg(count(lit(1)).as("df"))
-          .filter(col("df") > 1000).count()
-        val (nFz, fzSec) = timed {
+          .filter(col("df") === nTargets).count()
+        def join(blocking: String) = timed {
           Fuzzy.fuzzyJoin(probes, "q_key", "q_name", targets, "t_key",
-            "t_name", maxDist = 1).count()
+            "t_name", maxDist = 1, blocking = blocking).count()
         }
+        val (nFz, fzSec) = join("segment")
+        val (nPrefix, prefixSec) = join("prefix")
         emit("j_fuzzy_names", k, fzSec, "n_targets" -> nTargets,
-          "n_matches" -> nFz, "n_hot_grams" -> nHotGrams)
-        (nTargets, nFz)
+          "n_matches" -> nFz, "n_hot_grams" -> nHotGrams,
+          "n_matches_prefix" -> nPrefix, "prefix_sec" -> secs(prefixSec))
+        (nTargets, nFz, nPrefix, nHotGrams)
       },
-      // probes carry copy 0's " v0" tail after one deletion, so every
-      // target of copy i ≥ 1 is at least two edits away
-      (k, o, base) => assert(o == ((k * base._1, base._2)),
-        s"fuzzy (targets, matches) $o at $k vs $base at 1"))
+      // probes carry copy 0's untagged name after one deletion, so
+      // every target of copy i ≥ 1 is at least two edits away
+      (k, o, base) => {
+        assert((o._1, o._2) == ((k * base._1, base._2)),
+          s"fuzzy (targets, matches) ${(o._1, o._2)} at $k vs " +
+            s"${(base._1, base._2)} at 1")
+        assert(o._3 == o._2,
+          s"prefix blocking matched ${o._3}, segment ${o._2} at $k")
+        assert(o._4 == hotTail.sliding(3).toSet.size.toLong,
+          s"${o._4} grams in every target at $k, not the planted tail's")
+      })
 
     // degree-oriented triangle counting with a PLANTED degree-10⁴ hub:
     // star edges into one node plus a closing path through its
@@ -1588,6 +1606,170 @@ object ScaleCases {
           "_graft_ann_params sidecar")
       })
 
+    // ========================= corpus ingest =========================
+
+    // The three ingest front doors end to end over dumps synthesized by
+    // the generators below. One unit (k = 1) is 400 articles + 80
+    // redirects, 600 WARC records and 2,500 Wikidata items; k = 100
+    // writes about 0.25 GB per dump. Each case prints one `stage` line
+    // per pipeline stage. Every count is closed form in the unit sizes;
+    // characters, links, bytes and the link-model counts are printed
+    // only.
+    def stage(name: String, k: Int, sec: Double, extra: (String, Any)*)
+        : Unit = line("stage", name, k, sec, extra)
+    // 64 text parts (a splittable multi-part dump); each row ends where
+    // the reader's record delimiter completes: (dir, bytes, seconds)
+    def dump(rows: Dataset[String]): (String, Long, Double) = {
+      val dir = Scratch.dir("graft_corpus_dump")
+      val (bytes, sec) = timed {
+        rows.repartition(64).write.mode("overwrite").text(dir)
+        java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+          .filter(p => java.nio.file.Files.isRegularFile(p))
+          .mapToLong(p => java.nio.file.Files.size(p)).sum()
+      }
+      (dir, bytes, sec)
+    }
+    // n_chars, n_links and n_astral (docs keeping an astral-plane char)
+    def textObs(docs: DataFrame): Seq[(String, Long)] = {
+      val r = docs.agg(sum(length(col("text"))), sum(size(col("links"))),
+        count(when(col("text").rlike("[\\x{1F300}-\\x{1F6FF}]"), 1))).head()
+      Seq("n_chars" -> r.getLong(0), "n_links" -> r.getLong(1),
+        "n_astral" -> r.getLong(2))
+    }
+
+    // wiki dump (S2 scan, S3 StAX parse, J6 redirect fixpoint, F5-F10
+    // markup removal and link resolution, link models). Planted:
+    // depth-6 redirect chains, which J6's 3 doubling hops (2³ = 8)
+    // must collapse onto their article; a dangling tail of nRed mod 6
+    // redirects whose last one names the missing page "Redir nRed", so
+    // it must stay unresolved rather than fail; a 2-cycle RedirCycleA ↔
+    // RedirCycleB that must degenerate to self-maps and be dropped; and
+    // astral-plane text on every 7th article that the parse must keep.
+    def wikiUnit(k: Int) = (400L * k, 80L * k)
+    val wiki = ScaleCase[Dataset[String], (Long, Long, Long, Long, Long,
+        Long)]("s2_wiki_dump", Seq(100, 1000),
+      k => {
+        val (nArt, nRed) = wikiUnit(k)
+        spark.range(0, nArt).map(i => articleXml(i, nArt, nRed))
+          .unionAll(spark.range(0, nRed).map(j => redirectXml(j, nArt, nRed)))
+      },
+      (_, d) => d.unionAll(Seq(
+        cycleXml("RedirCycleA", "RedirCycleB", 20000001L),
+        cycleXml("RedirCycleB", "RedirCycleA", 20000002L)).toDS()),
+      (k, rows) => {
+        val (nArt, nRed) = wikiUnit(k)
+        val (dir, bytes, genSec) = dump(rows)
+        stage("dump_synthesis", k, genSec, "bytes" -> bytes,
+          "n_articles" -> nArt, "n_redirects" -> (nRed + 2))
+        timedCached(Wiki.pages(spark, dir)) {
+            (pages, nPages, scanSec) =>
+          stage("s2_s3_scan_parse", k, scanSec, "n_pages" -> nPages)
+          timedCached(Wiki.redirects(spark, pages)) {
+              (red, nRedirects, redSec) =>
+            // a target still naming a redirect page is unresolved
+            val unresolved = red
+              .filter(col("target").contains("/wiki/Redir_")).count()
+            val cycleRows = red
+              .filter(col("source").contains("RedirCycle")).count()
+            stage("j6_redirect_fixpoint", k, redSec,
+              "n_redirects" -> nRedirects, "n_unresolved" -> unresolved,
+              "n_cycle_rows" -> cycleRows)
+            timedCached(Wiki.articles(spark, pages, red)) {
+                (docs, nDocs, parseSec) =>
+              val obs = textObs(docs)
+              stage("f5_f10_markup_links", k, parseSec,
+                ("n_docs" -> nDocs) +: obs: _*)
+              val (nCounts, ecSec) = timed {
+                LinkModels.entityCounts(docs, minCount = 1).count()
+              }
+              stage("m_entity_counts", k, ecSec, "n_entities" -> nCounts)
+              val (nInl, inlSec) = timed(LinkModels.entityInlinks(docs).count())
+              stage("m_entity_inlinks", k, inlSec, "n_entities" -> nInl)
+              (nPages, nRedirects, unresolved, cycleRows, nDocs, obs(2)._2)
+            }
+          }
+        }
+      },
+      (k, o, _) => {
+        val (nArt, nRed) = wikiUnit(k)
+        assert(o == ((nArt + nRed + 2, nRed, nRed % 6, 0L, nArt,
+          (nArt + 6) / 7)), s"wiki (pages, redirects, unresolved, cycle " +
+          s"rows, docs, astral docs) $o at $k")
+      })
+
+    // WARC dump (S4 + F11). Planted by record id: ids 0-4 oversized
+    // (the 250 KB cleaned-text gate must drop them), every 23rd a
+    // request and every 29th a 404 (the parser must skip both), astral
+    // text every 7th page (it must survive the HTML sweep).
+    def warcKept(n: Long) =
+      (5L until n).filter(i => i % 23 != 0 && i % 29 != 0)
+    val warc = ScaleCase[Dataset[String], (Long, Long)]("s4_warc_dump",
+      Seq(100, 1000),
+      k => { val n = 600L * k; spark.range(0, n).map(i => warcRecord(i, n)) },
+      asIs,
+      (k, rows) => {
+        val (dir, bytes, genSec) = dump(rows)
+        stage("warc_synthesis", k, genSec, "bytes" -> bytes,
+          "n_records" -> 600L * k,
+          "n_expected_docs" -> warcKept(600L * k).size.toLong)
+        timedCached(WarcSource.documents(spark, dir)) {
+            (docs, nDocs, sec) =>
+          val obs = textObs(docs)
+          stage("s4_warc_pipeline", k, sec, ("n_docs" -> nDocs) +: obs: _*)
+          (nDocs, obs(2)._2)
+        }
+      },
+      (k, o, _) => {
+        val kept = warcKept(600L * k)
+        assert(o == ((kept.size.toLong, kept.count(_ % 7 == 0).toLong)),
+          s"WARC (docs, astral docs) $o at $k")
+      })
+
+    // Wikidata dump (S5 + F14/F15 + J4/J5), three predicate items and
+    // the JSON array brackets planted. Item Q(i+1): no en label every
+    // 13th (dropped from the label tables, item kept), no enwiki
+    // sitelink every 10th (no relations row), P2 snaktype "somevalue"
+    // every 11th (filtered). A linked item's row holds 3 entries, 2
+    // when its P2 was filtered.
+    def wikidataExpect(n: Long) = {
+      val rows = (1L to n).count(_ % 10 != 0).toLong
+      (rows, 3 * rows - (1L to n).count(id => id % 10 != 0 && id % 11 == 0))
+    }
+    val wikidata = ScaleCase[Dataset[String], (Long, Long, Long)](
+      "s5_wikidata_dump", Seq(100, 1000),
+      k => {
+        val n = 2500L * k
+        spark.range(0, n).map(i => wikidataItem(i, n))
+      },
+      (_, d) => d.unionAll(Seq(
+        """{"id":"P1","labels":{"en":{"value":"references"}},"claims":{}},""",
+        """{"id":"P2","labels":{"en":{"value":"inception"}},"claims":{}},""",
+        """{"id":"P3","labels":{"en":{"value":"motto"}},"claims":{}},""",
+        "[", "]").toDS()),
+      (k, rows) => {
+        val (dir, bytes, genSec) = dump(rows)
+        val (expRows, expEntries) = wikidataExpect(2500L * k)
+        stage("wd_synthesis", k, genSec, "bytes" -> bytes,
+          "n_items" -> 2500L * k, "n_expected_rows" -> expRows,
+          "n_expected_entries" -> expEntries)
+        val (nItems, itSec) = timed {
+          Wikidata.items(spark, dir).count()
+        }
+        stage("s5_items_scan", k, itSec, "n_items" -> nItems)
+        timedCached(Wikidata.relations(spark, dir)) {
+            (rel, nRel, relSec) =>
+          val nEntries = rel.agg(sum(size(col("relations")))).head().getLong(0)
+          stage("s5_relations", k, relSec, "n_rows" -> nRel,
+            "n_entries" -> nEntries)
+          (nItems, nRel, nEntries)
+        }
+      },
+      (k, o, _) => {
+        val (rows, entries) = wikidataExpect(2500L * k)
+        assert(o == ((2500L * k + 3, rows, entries)),
+          s"Wikidata (items, relation rows, entries) $o at $k")
+      })
+
     Seq(lsh, embNd, salted, substr, fuzzy, triangles,
       bpe, hitters, quantiles, graphs,
       er, scd,
@@ -1597,7 +1779,184 @@ object ScaleCases {
       logistic, irls, fisher, kendall, theilSen, acf, kCenter, debias,
       chi2, tfidf, substrRm,
       budget, interleave, lmFilter, lineDedup, incremental, ppl, gopher,
-      pqAppend)
+      pqAppend,
+      wiki, warc, wikidata)
+  }
+
+  // ---------------- corpus dump generators ----------------
+
+  private val vocab: Array[String] = Array(
+    "history", "river", "system", "valley", "empire", "music", "theory",
+    "battle", "bridge", "canton", "design", "energy", "forest", "garden",
+    "harbor", "island", "jungle", "kernel", "ledger", "market", "nation",
+    "origin", "palace", "quarry", "region", "signal", "temple", "union",
+    "vessel", "window", "archive", "balance", "culture", "dynasty",
+    "economy", "faculty", "granite", "horizon", "imperial", "journal",
+    "kingdom", "lattice", "mansion", "network", "observer", "province",
+    "quantum", "railway", "station", "treaty", "uplands", "village",
+    "western", "textile", "ancient", "borough", "citadel", "document",
+    "estuary", "frontier", "gallery", "heritage", "industry", "junction")
+
+  /** Deterministic word soup: `n` vocab words seeded by (seed, salt),
+    * sentence-cased with periods — regex-shaped like real prose.
+    */
+  private def words(seed: Long, salt: Long, n: Int): String = {
+    val sb = new StringBuilder(n * 8)
+    var x = seed * 6364136223846793005L + salt
+    var i = 0
+    while (i < n) {
+      x = x * 6364136223846793005L + 1442695040888963407L
+      val w = vocab(((x >>> 33) % vocab.length).toInt)
+      if (i > 0) sb.append(' ')
+      sb.append(w)
+      if (i % 13 == 12) sb.append('.')
+      i += 1
+    }
+    sb.toString
+  }
+
+  /** One article page (~6 KB of wikitext): nested-template infobox,
+    * links direct and via redirects, refs/comments/entities, astral
+    * text every 7th page, File/Category/interlang footers. The row
+    * ends with "\n  </page>" so the text sink's row separator completes
+    * the S2 record delimiter exactly as a real dump does.
+    */
+  private def articleXml(id: Long, nArt: Long, nRed: Long): String = {
+    def art(k: Long) = s"Article ${(id * 7 + k * 131 + 1) % nArt}"
+    def red(k: Long) = s"Redir ${(id * 5 + k * 17) % nRed}"
+    val astral = if (id % 7 == 0)
+      " Unicode stress: 🌍😀 𝄞 " +
+        "𠀋 title." else ""
+    val body = new StringBuilder(8192)
+    body.append(s"{{Infobox place|name=Article $id|population=")
+      .append(id % 90000)
+      .append("|era={{circa|").append(1200 + id % 800)
+      .append("}}|box={{nest|{{deep|inner}}}}}}\n")
+    body.append(s"'''Article $id''' is a [[${art(0)}]] of the ")
+      .append(s"[[${art(1)}|${words(id, 11, 3)}]] group.")
+      .append("&lt;ref&gt;Primary cite.&lt;/ref&gt; ")
+      .append(s"It derives from [[${red(0)}]] custom &amp; practice.")
+      .append("&lt;!-- editorial note --&gt;").append(astral).append("\n\n")
+    body.append("== History ==\n")
+      .append(words(id, 23, 220)).append(' ')
+      .append(s"See [[${red(1)}|the older form]] and [[${art(2)}]]. ")
+      .append("See [http://example.org/archive the archive] for ")
+      .append("the letter &#65; aside.\n\n")
+    body.append("== Geography ==\n")
+      .append(words(id, 37, 240)).append(' ')
+      .append(s"Compare [[${art(3)}]] and [[${art(4)}|nearby]].\n\n")
+    body.append("== Economy ==\n")
+      .append(words(id, 41, 220)).append('\n')
+    body.append(s"[[File:Map $id.svg|thumb|left|Survey map.]]\n")
+      .append("[[Category:Synthetic articles]]\n")
+      .append(s"[[fr:Article $id]]")
+    s"""  <page>
+       |    <title>Article $id</title>
+       |    <ns>0</ns>
+       |    <id>${1000 + id}</id>
+       |    <revision>
+       |      <id>${500000000L + id}</id>
+       |      <text bytes="${body.length}" xml:space="preserve">$body</text>
+       |    </revision>
+       |  </page>""".stripMargin
+  }
+
+  /** Redirect pages in chains of depth 6: positions 0..4 of each chain
+    * point at the next redirect, position 5 at an article.
+    */
+  private def redirectXml(j: Long, nArt: Long, nRed: Long): String = {
+    val target =
+      if (j % 6 == 5) s"Article ${(j / 6 * 37) % nArt}"
+      else s"Redir ${j + 1}"
+    s"""  <page>
+       |    <title>Redir $j</title>
+       |    <ns>0</ns>
+       |    <id>${10000000L + j}</id>
+       |    <redirect title="$target" />
+       |    <revision>
+       |      <id>${600000000L + j}</id>
+       |      <text bytes="30" xml:space="preserve">#REDIRECT [[$target]]</text>
+       |    </revision>
+       |  </page>""".stripMargin
+  }
+
+  private def cycleXml(a: String, b: String, pid: Long): String =
+    s"""  <page>
+       |    <title>$a</title>
+       |    <ns>0</ns>
+       |    <id>$pid</id>
+       |    <redirect title="$b" />
+       |    <revision>
+       |      <id>${700000000L + pid}</id>
+       |      <text bytes="30" xml:space="preserve">#REDIRECT [[$b]]</text>
+       |    </revision>
+       |  </page>""".stripMargin
+
+  /** One CommonCrawl-style HTML page (~4.5 KB): head/style/script to
+    * DROP, nav + footer boilerplate, main content with anchors,
+    * entities, comments, astral text every 7th page.
+    */
+  private def htmlPage(id: Long, nPages: Long): String = {
+    def link(k: Long) =
+      s"""<a href="http://site.example/p${(id * 7 + k * 113 + 1) % nPages}">${words(id, 50 + k, 3)}</a>"""
+    val astral = if (id % 7 == 0) " 🌍😀 astral marker." else ""
+    s"""<html><head><title>Page $id</title><style>body{color:#000}</style>
+       |<script>var x = $id; function f(){return x*2;}</script></head>
+       |<body><div class="nav"><ul><li>${link(0)}</li><li>${link(1)}</li></ul></div>
+       |<!-- boilerplate comment -->
+       |<div id="main"><h1>Page $id</h1>
+       |<p>${words(id, 61, 200)} ${link(2)} &amp; more.$astral</p>
+       |<p>${words(id, 67, 220)}</p>
+       |<table><tr><td>${words(id, 71, 40)}</td></tr></table>
+       |<p>${words(id, 73, 200)} ${link(3)}.</p>
+       |</div><div class="footer">${link(4)} &#169; site</div></body></html>"""
+      .stripMargin
+  }
+
+  /** WARC record `id` of `nPages` as a text-sink row: the row ends with
+    * the "WARC/1.0\r" marker so the sink's row separator completes the
+    * "WARC/1.0\r\n" record delimiter the S4 scan splits on. Ids 0-4
+    * are oversized responses, then every 23rd a request record and
+    * every 29th a 404.
+    */
+  private def warcRecord(id: Long, nPages: Long): String = {
+    val url = s"http://site.example/p$id"
+    val ok = "HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n"
+    val payload =
+      if (id < 5)
+        ok + s"<html><body><p>${words(id, 91, 40000)}</p></body></html>"
+      else if (id % 23 == 0) s"GET /p$id HTTP/1.1"
+      else if (id % 29 == 0) "HTTP/1.1 404 Not Found\r\n" +
+        "Content-Type: text/html\r\n\r\n<html>gone</html>"
+      else ok + htmlPage(id, nPages)
+    val warcType = if (id >= 5 && id % 23 == 0) "request" else "response"
+    s"WARC-Type: $warcType\r\nWARC-Target-URI: $url\r\n" +
+      s"Content-Length: ${payload.length}\r\n\r\n$payload\r\nWARC/1.0\r"
+  }
+
+  /** One Wikidata item line (~0.9 KB JSON, trailing comma as real dumps
+    * have): en label missing on every 13th item, enwiki sitelink on
+    * 90%, claims P1 wikibase-item reference, P2 time (snaktype
+    * "somevalue" on every 11th item), P3 string.
+    */
+  private def wikidataItem(i: Long, nQ: Long): String = {
+    val id = i + 1
+    val ref1 = (id * 31) % nQ + 1
+    val labels =
+      if (id % 13 != 0) s"""{"en":{"value":"Entity $id"}}""" else "{}"
+    val site =
+      if (id % 10 != 0)
+        s""","sitelinks":{"enwiki":{"title":"Entity $id"}}"""
+      else ""
+    val p2 =
+      if (id % 11 == 0)
+        """"P2":[{"mainsnak":{"snaktype":"somevalue","datatype":"time"}}]"""
+      else
+        s""""P2":[{"mainsnak":{"snaktype":"value","datatype":"time","datavalue":{"value":{"time":"+${1000 + id % 1000}-01-01T00:00:00Z","precision":11},"type":"time"}}}]"""
+    s"""{"id":"Q$id","labels":$labels$site,"claims":{""" +
+      s""""P1":[{"mainsnak":{"snaktype":"value","datatype":"wikibase-item","datavalue":{"value":{"numeric-id":$ref1},"type":"wikibase-entityid"}}}],""" +
+      p2 + "," +
+      s""""P3":[{"mainsnak":{"snaktype":"value","datatype":"string","datavalue":{"value":"${words(id, 83, 40)}","type":"string"}}}]}},"""
   }
 
   /** JVM twin of Hashing.md5Long (conv(substring(md5(x),1,15),16,10))
