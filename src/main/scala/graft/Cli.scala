@@ -129,11 +129,8 @@ object Cli {
             .as("h"))
           .agg(expr(s"graft_kmv(h, $k)").as("ks"))
           .select(size(col("ks")).cast("long").as("n_min"),
-            expr("try_element_at(ks, -1)").as("kth"))
-          .select(col("n_min"), col("kth"),
-            when(col("n_min") < k, col("n_min")).otherwise(
-              floor(lit((k - 1).toDouble) * lit(1152921504606846976.0) /
-                col("kth").cast("double"))).cast("long")
+            expr("try_element_at(ks, -1)").as("kth"),
+            expr(graft.functions.KmvSketch.estimateSql("ks", k))
               .as("est_distinct_docs"))
       case "char-quantiles" =>
         import org.apache.spark.sql.functions.asc
@@ -167,18 +164,11 @@ object Cli {
         val df = spark.read.parquet(p)
         graft.ops.Clean.madOutliers(df, c, Seq(asc(df.columns.head)))
       case "active-users" =>
-        import org.apache.spark.sql.functions._
-        import org.apache.spark.sql.types.LongType
         val e = spark.read.parquet(input)
-        // probe the physical ts form the same way Tables.events /
-        // Events.stream do: BIGINT nanos (legacy nanosAsLong dumps),
-        // TIMESTAMP/_NTZ (micros dumps), or a ready ts_us column
+        // a ready ts_us column, else the Tables.events rule on ts
         val withUs =
           if (e.columns.contains("ts_us")) e
-          else if (e.schema("ts").dataType == LongType)
-            e.withColumn("ts_us", expr("ts div 1000"))
-          else e.withColumn("ts_us",
-            unix_micros(col("ts").cast("timestamp")))
+          else e.withColumn("ts_us", graft.queries.Tables.tsMicros(e))
         graft.ops.EventAnalytics.activeUsers(withUs)
       case "merge-upsert" =>
         val parts = input.split(",")

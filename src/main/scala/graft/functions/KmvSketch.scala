@@ -124,3 +124,19 @@ case class KmvSketch(
       newLeft: Expression, newRight: Expression): KmvSketch =
     copy(left = newLeft, right = newRight)
 }
+
+object KmvSketch {
+  /** The distinct estimate read off a `graft_kmv` sketch, as a SQL
+    * expression over the sketch array `ks` of capacity `k`: the exact
+    * count while it holds fewer than k hashes, else
+    * `(k−1) · 2⁶⁰ / kth`. The IEEE order is fixed — (k−1) times 2⁶⁰,
+    * then one division — so the DuckDB oracles replay it bit-for-bit;
+    * the `D` suffix keeps 2⁶⁰ a DOUBLE (Spark SQL reads the bare
+    * literal as a DECIMAL).
+    */
+  def estimateSql(ks: String, k: Int): String =
+    s"case when size($ks) < $k then cast(size($ks) as bigint) " +
+      s"else cast(floor(cast(${k - 1} as double) * " +
+      s"1152921504606846976.0D / " +
+      s"cast(try_element_at($ks, -1) as double)) as bigint) end"
+}

@@ -21,7 +21,7 @@ import graft.ops.Pins.PinSyntax
   */
 object EventAnalytics {
 
-  private val DayUs = 86400000000L
+  private[graft] val DayUs = 86400000000L
 
   /** Ordered-step funnel: for each prefix of `steps`, the number of
     * users who performed those event types IN ORDER (strictly
@@ -89,14 +89,24 @@ object EventAnalytics {
     val sets = steps.indices
       .scanLeft(Option.empty[DataFrame])((p, i) => Some(reached(i, p)))
       .flatten
-    val counts = sets.zipWithIndex.map { case (df, i) =>
-      df.agg(count(lit(1)).as("n_users"))
+    funnelReadout(steps, sets)
+  }
+
+  /** The funnel readout shared by [[funnelImpl]] and its streaming twin
+    * (`streaming/Events.windowedFunnelCounts`): one (step, step_name,
+    * n_users) row per step, `reached(i)` holding one row per user who
+    * reached step i, plus conversion rates off the previous step and
+    * off step 0.
+    */
+  private[graft] def funnelReadout(steps: Seq[String],
+      reached: Int => DataFrame): DataFrame = {
+    val counts = steps.indices.map { i =>
+      reached(i).agg(count(lit(1)).as("n_users"))
         .select(lit(i.toLong).as("step"), lit(steps(i)).as("step_name"),
           col("n_users"))
-    }
-    val all = counts.reduce(_.unionAll(_))
+    }.reduce(_.unionAll(_))
     val w = Window.orderBy("step") // ≤ |steps| rows: global window is fine
-    all
+    counts
       .withColumn("conv_prev", round(
         col("n_users").cast("double") /
           lag(col("n_users"), 1).over(w).cast("double"), 6))
@@ -345,11 +355,21 @@ object EventAnalytics {
     * user total attaches broadcast. Top-k by (support desc, pattern
     * asc) — pure BIGINT ordering, no float in the cut.
     */
-  def sequencePatterns(events: DataFrame, k: Int = 20): DataFrame = {
-    val spans = events.select("user_id", "event_type", "ts_us")
+  def sequencePatterns(events: DataFrame, k: Int = 20): DataFrame =
+    patternsFromSpans(events.select("user_id", "event_type", "ts_us")
       .groupBy("user_id", "event_type")
-      .agg(min(col("ts_us")).as("first_us"), max(col("ts_us")).as("last_us"))
-    val totals = events.agg(countDistinct(col("user_id")).as("nu"))
+      .agg(min(col("ts_us")).as("first_us"), max(col("ts_us")).as("last_us")),
+      k)
+
+  /** The pattern grid + support readout from a (user_id, event_type,
+    * first_us, last_us) span frame — shared by [[sequencePatterns]] and
+    * its streaming twin (`streaming/Events.spans`, where the spans are
+    * the finished state). The user total counts off the spans: every
+    * user has at least one span row.
+    */
+  private[graft] def patternsFromSpans(spans: DataFrame, k: Int)
+      : DataFrame = {
+    val totals = spans.agg(countDistinct(col("user_id")).as("nu"))
     spans.as("x").join(spans.as("y"), "user_id")
       .filter(col("x.first_us") < col("y.last_us"))
       .select(concat_ws(">", col("x.event_type"), col("y.event_type"))
@@ -1230,28 +1250,19 @@ object EventAnalytics {
     * |keys| rows joined back on the key. No global sort, no
     * single-partition exchange.
     */
-  def cusumChangepoint(events: DataFrame, keyCol: String,
-      baseline: Int = 7, slackDiv: Int = 10,
-      thresholdDays: Int = 2): DataFrame =
-    cusumFromDaily(events
-      .select(col(keyCol).as("k"), expr(s"ts_us div $DayUs").as("day"))
-      .groupBy("k", "day").agg(count(lit(1)).as("n")),
-      keyCol, baseline, slackDiv, thresholdDays)
+  def cusumChangepoint(events: DataFrame, keyCol: String): DataFrame =
+    cusumFromDaily(daily(events, keyCol), keyCol)
 
-  /** The CUSUM chain from an already-aggregated (k, day, n) daily
-    * frame — shared verbatim by [[cusumChangepoint]] and its streaming
-    * twin (`streaming/Events.cusumDaily`, where the daily counts come
-    * out of the state store), so stream-vs-batch parity is structural.
+  /** The CUSUM chain from a (k, day, n) [[daily]] frame — shared by
+    * [[cusumChangepoint]] and its streaming twin (the `st_cusum_daily`
+    * gate over `streaming/Events.daily`, whose counts come out of the
+    * state store), so stream-vs-batch parity is structural.
     */
   private[graft] def cusumFromDaily(daily: DataFrame, keyCol: String,
-      baseline: Int, slackDiv: Int, thresholdDays: Int): DataFrame = {
-    val grid = daily.groupBy("k")
-      .agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
-      .select(col("k"), explode(sequence(col("d0"), col("d1"))).as("day"))
+      baseline: Int = 7, slackDiv: Int = 10, thresholdDays: Int = 2)
+      : DataFrame = {
     val byDay = Window.partitionBy("k").orderBy("day")
-    val idx = grid.join(daily, Seq("k", "day"), "left")
-      .na.fill(0L, Seq("n"))
-      .withColumn("i", row_number().over(byDay))
+    val idx = fillDaily(daily).withColumn("i", row_number().over(byDay))
     val base = idx.filter(col("i") <= baseline).groupBy("k")
       .agg(sum(col("n")).as("s_base"), count(lit(1)).as("n_base"))
     // scaled deviations, units of 1/B events: slack = s_base div
@@ -1284,6 +1295,28 @@ object EventAnalytics {
       .orderBy(keyCol, "day")
   }
 
+  /** The observed (k, day, n) daily count frame every series op here
+    * starts from: one (key, day) hash aggregate over the log, DAYS×KEYS
+    * rows — bounded by calendar, not data. Each op reads it through a
+    * `*FromDaily` chain; the streaming twins build the same frame in
+    * the state store (`streaming/Events.daily`) and read it through the
+    * same chain.
+    */
+  def daily(events: DataFrame, keyCol: String): DataFrame =
+    events
+      .select(col(keyCol).as("k"), expr(s"ts_us div $DayUs").as("day"))
+      .groupBy("k", "day").agg(count(lit(1)).as("n"))
+
+  /** Calendar-spine zero-fill of an observed (k, day, n) frame: absent
+    * days read as honest zeros.
+    */
+  private def fillDaily(daily: DataFrame): DataFrame = {
+    val grid = daily.groupBy("k")
+      .agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
+      .select(col("k"), explode(sequence(col("d0"), col("d1"))).as("day"))
+    grid.join(daily, Seq("k", "day"), "left").na.fill(0L, Seq("n"))
+  }
+
   /** AUTOCORRELATION function of the zero-filled daily count series
     * per key, lags 1..`maxLag`, with the cumulative LJUNG–BOX Q
     * portmanteau statistic — the standard whiteness check behind every
@@ -1309,37 +1342,15 @@ object EventAnalytics {
     * calendar, not data. Per-key windows only. Returns
     * (key, lag, n_days, acf, q) ordered by (key, lag).
     */
-  /** The zero-filled (k, day, n) daily count frame every series op
-    * here starts from: one (key, day) hash aggregate over the log,
-    * then the calendar spine per key with absent days as honest
-    * zeros. DAYS×KEYS rows — bounded by calendar, not data.
-    */
-  private def zeroFilledDaily(events: DataFrame, keyCol: String)
-      : DataFrame =
-    fillDaily(events
-      .select(col(keyCol).as("k"), expr(s"ts_us div $DayUs").as("day"))
-      .groupBy("k", "day").agg(count(lit(1)).as("n")))
+  def acfLjungBox(events: DataFrame, keyCol: String): DataFrame =
+    acfFromDaily(daily(events, keyCol), keyCol)
 
-  /** Calendar-spine zero-fill of an observed (k, day, n) frame. */
-  private def fillDaily(daily: DataFrame): DataFrame = {
-    val grid = daily.groupBy("k")
-      .agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
-      .select(col("k"), explode(sequence(col("d0"), col("d1"))).as("day"))
-    grid.join(daily, Seq("k", "day"), "left").na.fill(0L, Seq("n"))
-  }
-
-  def acfLjungBox(events: DataFrame, keyCol: String, maxLag: Int = 10)
-      : DataFrame =
-    acfFromDaily(events
-      .select(col(keyCol).as("k"), expr(s"ts_us div $DayUs").as("day"))
-      .groupBy("k", "day").agg(count(lit(1)).as("n")), keyCol, maxLag)
-
-  /** The ACF/Ljung–Box chain from an already-aggregated (k, day, n)
-    * daily frame — shared by [[acfLjungBox]] and its streaming twin
-    * (`streaming/Events.acfDaily`), the [[cusumFromDaily]] pattern.
+  /** The ACF/Ljung–Box chain from a (k, day, n) [[daily]] frame —
+    * shared by [[acfLjungBox]], [[pacfYuleWalker]] and the streaming
+    * twin `st_acf_daily`, the [[cusumFromDaily]] pattern.
     */
   private[graft] def acfFromDaily(daily: DataFrame, keyCol: String,
-      maxLag: Int): DataFrame = {
+      maxLag: Int = 10): DataFrame = {
     require(maxLag > 0, "maxLag must be positive")
     val filled = fillDaily(daily)
     val stats = filled.groupBy("k")
@@ -1397,7 +1408,7 @@ object EventAnalytics {
     * (key, n_days, n_pairs, slope, intercept).
     */
   def theilSen(events: DataFrame, keyCol: String): DataFrame = {
-    val filled = zeroFilledDaily(events, keyCol)
+    val filled = fillDaily(daily(events, keyCol))
     val rhs = filled.select(col("k").as("k2"), col("day").as("db"),
       col("n").as("nb"))
     val pairs = filled
@@ -1449,7 +1460,7 @@ object EventAnalytics {
     * Returns one row per key: (key, n_days, slope, intercept, dw).
     */
   def durbinWatson(events: DataFrame, keyCol: String): DataFrame = {
-    val filled = zeroFilledDaily(events, keyCol)
+    val filled = fillDaily(daily(events, keyCol))
     val d0 = filled.groupBy("k").agg(min(col("day")).as("d0"))
     val xy = filled.join(d0, Seq("k"))
       .select(col("k"), col("day"), (col("day") - col("d0")).as("x"),
@@ -1506,7 +1517,7 @@ object EventAnalytics {
     * (key, day, n, trend, seasonal, resid) ordered by (key, day).
     */
   def stlDecompose(events: DataFrame, keyCol: String): DataFrame = {
-    val filled = zeroFilledDaily(events, keyCol)
+    val filled = fillDaily(daily(events, keyCol))
     val ctr = Window.partitionBy("k").orderBy("day").rowsBetween(-3, 3)
     val t = filled
       .withColumn("n_obs", count(lit(1)).over(ctr))
@@ -1584,30 +1595,37 @@ object EventAnalytics {
     * Integer weights make the whole numerator EXACT BIGINT — a day
     * with no events contributes 0 to the numerator and its weight to
     * the fixed denominator Σⱼ₌₀⁷ 4ʲ = 21845, so no calendar gap-fill
-    * is needed at all: the op is one filtered aggregate over the raw
-    * event rows. Output per series: (key, day, n_actual, forecast,
-    * resid), forecast = round(num/21845, 6), both divisions single
-    * IEEE expressions the oracle mirrors.
+    * is needed at all. Output per series: (key, day, n_actual,
+    * forecast, resid), forecast = round(num/21845, 6), both divisions
+    * single IEEE expressions the oracle mirrors.
     *
     * The anchor day is the GLOBAL max day (one 1-row frame, broadcast)
     * so every series forecasts the same calendar day — the shape of a
-    * daily run. SCALE SHAPE: one scalar max + one (key) hash aggregate
-    * over an 9-day slice of the log; nothing grows past |keys|.
+    * daily run. SCALE SHAPE: the (key, day) [[daily]] aggregate, one
+    * scalar max over it and one (key) hash aggregate over its 9-day
+    * slice; nothing grows past days × |keys|.
     */
-  def ewmaForecast(events: DataFrame, keyCol: String): DataFrame = {
-    val days = events.select(col(keyCol).as("k"),
-      expr(s"ts_us div $DayUs").as("day"))
-    val anchor = days.agg(max("day").as("d1"))
-    days.crossJoin(broadcast(anchor))
+  def ewmaForecast(events: DataFrame, keyCol: String): DataFrame =
+    ewmaFromDaily(daily(events, keyCol), keyCol)
+
+  /** The EWMA-8 chain from a (k, day, n) [[daily]] frame — shared by
+    * [[ewmaForecast]] and its streaming twin `st_ewma_daily`, the
+    * [[cusumFromDaily]] pattern. Each day's weight multiplies its count,
+    * so the numerator stays exact BIGINT.
+    */
+  private[graft] def ewmaFromDaily(daily: DataFrame, keyCol: String)
+      : DataFrame = {
+    val anchor = daily.agg(max("day").as("d1"))
+    daily.crossJoin(broadcast(anchor))
       .filter(col("day") >= col("d1") - 8)
       .groupBy(col("k"), col("d1"))
       .agg(
-        sum(when(col("day") === col("d1"), 1L).otherwise(0L))
+        sum(when(col("day") === col("d1"), col("n")).otherwise(0L))
           .as("n_actual"),
         // recency offset j = day − (d1 − 8) ∈ 0..7 for history days
         sum(when(col("day") < col("d1"),
-          expr("cast(pow(4.0, cast(day - (d1 - 8) as int)) as bigint)"))
-          .otherwise(0L)).as("num"))
+          expr("cast(pow(4.0, cast(day - (d1 - 8) as int)) as bigint)")
+            * col("n")).otherwise(0L)).as("num"))
       .select(col("k").as(keyCol), col("d1").as("day"), col("n_actual"),
         round(expr("cast(num as double) / 21845.0"), 6).as("forecast"))
       .withColumn("resid", round(expr(
@@ -1632,14 +1650,11 @@ object EventAnalytics {
     * recursion is a per-row column expression chain — |keys| rows.
     */
   def holtForecast(events: DataFrame, keyCol: String): DataFrame =
-    holtFromDaily(events
-      .select(col(keyCol).as("k"), expr(s"ts_us div $DayUs").as("day"))
-      .groupBy("k", "day").agg(count(lit(1)).as("n")),
-      keyCol)
+    holtFromDaily(daily(events, keyCol), keyCol)
 
-  /** The Holt level+trend chain from an already-aggregated (k, day, n)
-    * daily frame — shared by [[holtForecast]] and its streaming twin
-    * (`streaming/Events.holtDaily`), the [[cusumFromDaily]] pattern.
+  /** The Holt level+trend chain from a (k, day, n) [[daily]] frame —
+    * shared by [[holtForecast]] and its streaming twin `st_holt_daily`,
+    * the [[cusumFromDaily]] pattern.
     */
   private[graft] def holtFromDaily(daily: DataFrame, keyCol: String)
       : DataFrame = {
@@ -1685,20 +1700,16 @@ object EventAnalytics {
     * SCALE SHAPE: the [[ewmaForecast]] contract — one scalar max +
     * one per-key hash aggregate over a ≤29-day slice; |keys| rows out.
     */
-  def seasonalNaiveForecast(events: DataFrame, keyCol: String,
-      cycles: Int = 4): DataFrame =
-    seasonalFromDaily(events
-      .select(col(keyCol).as("k"), expr(s"ts_us div $DayUs").as("day"))
-      .groupBy("k", "day").agg(count(lit(1)).as("n")),
-      keyCol, cycles)
+  def seasonalNaiveForecast(events: DataFrame, keyCol: String)
+      : DataFrame =
+    seasonalFromDaily(daily(events, keyCol), keyCol)
 
-  /** The seasonal-naive chain from an already-aggregated (k, day, n)
-    * daily frame — shared by [[seasonalNaiveForecast]] and its
-    * streaming twin (`streaming/Events.seasonalDaily`), the
-    * [[cusumFromDaily]] pattern.
+  /** The seasonal-naive chain from a (k, day, n) [[daily]] frame —
+    * shared by [[seasonalNaiveForecast]] and its streaming twin
+    * `st_seasonal_daily`, the [[cusumFromDaily]] pattern.
     */
   private[graft] def seasonalFromDaily(daily: DataFrame, keyCol: String,
-      cycles: Int): DataFrame = {
+      cycles: Int = 4): DataFrame = {
     val anchor = daily.agg(max("day").as("d1"))
     val histDays = (1 to cycles)
     val c = cycles.toDouble
@@ -1802,22 +1813,16 @@ object EventAnalytics {
     * (key, n_days, mu, max_deficit, alarm_day — null when λ never
     * trips).
     */
-  def pageHinkley(events: DataFrame, keyCol: String,
-      deltaFrac: String = "0.05", lambdaMeans: String = "2.0")
-      : DataFrame =
-    pageHinkleyFromDaily(events
-      .select(col(keyCol).as("k"), expr(s"ts_us div $DayUs").as("day"))
-      .groupBy("k", "day").agg(count(lit(1)).as("n")),
-      keyCol, deltaFrac, lambdaMeans)
+  def pageHinkley(events: DataFrame, keyCol: String): DataFrame =
+    pageHinkleyFromDaily(daily(events, keyCol), keyCol)
 
-  /** The Page–Hinkley chain from an already-aggregated (k, day, n)
-    * daily frame — the [[cusumFromDaily]] shared-chain discipline, so
-    * a streaming twin computes its daily counts in the state store and
-    * reads out through THIS code.
+  /** The Page–Hinkley chain from a (k, day, n) [[daily]] frame — shared
+    * by [[pageHinkley]] and its streaming twin `st_page_hinkley`, the
+    * [[cusumFromDaily]] pattern.
     */
   private[graft] def pageHinkleyFromDaily(daily: DataFrame,
-      keyCol: String, deltaFrac: String, lambdaMeans: String)
-      : DataFrame = {
+      keyCol: String, deltaFrac: String = "0.05",
+      lambdaMeans: String = "2.0"): DataFrame = {
     val filled = fillDaily(daily)
     val mu = filled.groupBy("k")
       .agg(count(lit(1)).as("nd"), sum(col("n")).as("s"))
@@ -1875,13 +1880,11 @@ object EventAnalytics {
     * ordered by key.
     */
   def mannKendall(events: DataFrame, keyCol: String): DataFrame =
-    mannKendallFromDaily(events
-      .select(col(keyCol).as("k"), expr(s"ts_us div $DayUs").as("day"))
-      .groupBy("k", "day").agg(count(lit(1)).as("n")), keyCol)
+    mannKendallFromDaily(daily(events, keyCol), keyCol)
 
-  /** The Mann–Kendall chain from an already-aggregated (k, day, n)
-    * daily frame — the [[cusumFromDaily]] shared-chain discipline for
-    * the streaming twin.
+  /** The Mann–Kendall chain from a (k, day, n) [[daily]] frame — shared
+    * by [[mannKendall]] and its streaming twin `st_mann_kendall`, the
+    * [[cusumFromDaily]] pattern.
     */
   private[graft] def mannKendallFromDaily(daily: DataFrame,
       keyCol: String): DataFrame = {
@@ -1933,7 +1936,7 @@ object EventAnalytics {
     * (key, n_days, rho1, rho2, rho3, pacf1, pacf2, pacf3, ar1, ar2).
     */
   def pacfYuleWalker(events: DataFrame, keyCol: String): DataFrame = {
-    val a = acfLjungBox(events, keyCol, maxLag = 3)
+    val a = acfFromDaily(daily(events, keyCol), keyCol, maxLag = 3)
     val wide = a.groupBy(keyCol)
       .agg(max(col("n_days")).as("n_days"),
         max(when(col("lag") === 1, col("acf"))).as("rho1"),

@@ -43,5 +43,4 @@ object Hashing {
   def tokens(c: String = "text"): String =
     s"regexp_extract_all(lower($c), '[a-z0-9]+', 0)"
   val tokensSql: String = tokens()
-  val duckTokensSql = "regexp_extract_all(lower(text), '[a-z0-9]+')"
 }

@@ -365,11 +365,8 @@ object Profile {
     val wide = df.agg(metrics.head, metrics.tail: _*)
     val stacked = cols.map { c =>
       s"struct('$c' as column, __n_$c as n_rows, __null_$c as n_null, " +
-        s"(case when size(__ks_$c) < $k then cast(size(__ks_$c) as bigint) " +
-        s"else cast(floor(cast(${k - 1} as double) * " +
-        s"1152921504606846976.0D / " +
-        s"cast(try_element_at(__ks_$c, -1) as double)) as bigint) end) " +
-        s"as nd_est, " +
+        s"(${graft.functions.KmvSketch.estimateSql(s"__ks_$c", k)}) " +
+        "as nd_est, " +
         s"__min_$c as min_s, __max_$c as max_s)"
     }.mkString("array(", ", ", ")")
     wide.select(explode(expr(stacked)).as("p")).select("p.*")

@@ -17,6 +17,14 @@ object Analytics extends QueryModule {
   private def docs(s: SparkSession, d: String): DataFrame =
     t(s, d, "documents")
 
+  /** Operator parameters of the gates with a streaming twin in
+    * [[StreamML]]: each twin reads them here, as it reads its oracle
+    * from the batch gate's.
+    */
+  private[queries] val FunnelSteps = Seq("signup", "click", "purchase")
+  private[queries] val FunnelWindowUs = 259200000000L // 3 days
+  private[queries] val SeqTopK = 20
+
   /** Shared WITH-body of the sim_pca_power / sim_pca_debias oracles:
     * the long-form decomposition, centering, and all six unrolled
     * power-iteration rounds (each CTE MATERIALIZED — plain CTEs inline
@@ -1540,8 +1548,8 @@ object Analytics extends QueryModule {
     // days of the user's first signup (first-touch-anchored greedy —
     // semantics documented on EventAnalytics.windowedFunnel).
     QueryDef("e_funnel_windowed", (s, d) => {
-      EventAnalytics.windowedFunnel(Tables.events(s, d),
-        Seq("signup", "click", "purchase"), windowUs = 259200000000L)
+      EventAnalytics.windowedFunnel(Tables.events(s, d), FunnelSteps,
+        FunnelWindowUs)
     }, Some("""
       WITH e AS (SELECT user_id, event_id, event_type, epoch_us(ts)
                    AS ts_us FROM events),
@@ -1993,7 +2001,7 @@ object Analytics extends QueryModule {
     // type grid — never an event×event pair join. Equal-µs pairs do
     // not count (strict first_us < last_us, both engines).
     QueryDef("e_seq_patterns", (s, d) => {
-      EventAnalytics.sequencePatterns(Tables.events(s, d), 20)
+      EventAnalytics.sequencePatterns(Tables.events(s, d), SeqTopK)
     }, Some("""
       WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS ts_us
                  FROM events),

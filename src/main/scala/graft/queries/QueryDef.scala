@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** One gate-checked query: a Spark DataFrame program plus (optionally) the
   * equivalent ANSI SQL the driver runs in DuckDB over the same parquet
@@ -123,15 +123,24 @@ object Tables {
     */
   def events(s: SparkSession, dir: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    import org.apache.spark.sql.functions.{col, timestamp_micros}
+    val raw = s.read.parquet(s"$dir/events.parquet")
+    spread(raw.withColumn("ts_us", tsMicros(raw))
+      .withColumn("ts", timestamp_micros(col("ts_us"))))
+  }
+
+  /** The exact microsecond epoch of a raw events frame's `ts`, whichever
+    * form the dump stores: BIGINT nanos (read as a raw long under
+    * `spark.sql.legacy.parquet.nanosAsLong`) or a TIMESTAMP(_NTZ) of
+    * micros.
+    */
+  def tsMicros(raw: DataFrame): Column = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types.{LongType, TimestampType}
-    val raw = s.read.parquet(s"$dir/events.parquet")
-    val tsUs = raw.schema("ts").dataType match {
+    raw.schema("ts").dataType match {
       case LongType => expr("ts div 1000") // nanos as raw long
       // MICROS (NTZ or not): sessions run UTC, so the cast is exact
       case _ => unix_micros(col("ts").cast(TimestampType))
     }
-    spread(raw.withColumn("ts_us", tsUs)
-      .withColumn("ts", timestamp_micros(col("ts_us"))))
   }
 }

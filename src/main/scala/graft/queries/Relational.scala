@@ -497,11 +497,8 @@ object Relational extends QueryModule {
           "cast(l_partkey as string)")).as("h"))
         .agg(expr(s"graft_kmv(h, $k)").as("ks"))
         .select(size(col("ks")).cast("long").as("n_min"),
-          expr("try_element_at(ks, -1)").as("kth"))
-        .select(col("n_min"), col("kth"),
-          when(col("n_min") < k, col("n_min")).otherwise(
-            floor(lit((k - 1).toDouble) * lit(1152921504606846976.0) /
-              col("kth").cast("double"))).cast("long").as("est"))
+          expr("try_element_at(ks, -1)").as("kth"),
+          expr(graft.functions.KmvSketch.estimateSql("ks", k)).as("est"))
     }, Some("""
       WITH h AS (SELECT DISTINCT
           CAST(('0x' || substring(md5(CAST(l_partkey AS VARCHAR)),1,15)) AS BIGINT) AS h
@@ -535,11 +532,8 @@ object Relational extends QueryModule {
         .withColumn("u",
           expr(s"slice(array_sort(array_distinct(concat(a, b))), 1, $k)"))
         .withColumn("n_u", size(col("u")).cast("long"))
-        .withColumn("kth", expr("try_element_at(u, -1)"))
         .withColumn("union_est",
-          when(col("n_u") < k, col("n_u")).otherwise(
-            floor(lit((k - 1).toDouble) * lit(1152921504606846976.0) /
-              col("kth").cast("double"))).cast("long"))
+          expr(graft.functions.KmvSketch.estimateSql("u", k)))
         .withColumn("n_common", expr(
           "cast(size(array_intersect(u, array_intersect(a, b))) as long)"))
         .select(expr("cast(size(a) as long)").as("n_a"),

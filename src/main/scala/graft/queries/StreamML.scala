@@ -2,6 +2,8 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.ml.feature.Word2Vec
+import graft.ops.EventAnalytics
+import graft.streaming.Events
 
 /** Streaming (§2.9) and ML (M1) coverage. The streaming query's oracle is
   * the equivalent batch aggregation (a bounded file source processed in
@@ -11,25 +13,39 @@ import org.apache.spark.ml.feature.Word2Vec
   * corpus count ≥ minCount, fixed dimensionality (ref
   * sift/models/embeddings.py:36-42 trains gensim on the driver; here
   * training is distributed ml.feature.Word2Vec).
+  *
+  * TWIN RULE: a streaming twin of a batch gate accumulates only what
+  * its state store must hold (daily counts, spans, per-user reach),
+  * reads that finished state through its batch op's own chain
+  * (`EventAnalytics.*FromDaily`, `patternsFromSpans`, `funnelReadout`)
+  * with the batch gate's own parameters, and shares the batch gate's
+  * oracle by reference (`<module>.oracleSql("e_…")`, which throws at
+  * module init if the key is gone) — stream-vs-batch parity holds by
+  * construction, and StreamTwinSpec checks it row for row.
   */
 object StreamML extends QueryModule {
   import Tables.t
 
+  /** Hourly per-type event counts: the batch twin of both the
+    * deduplicated (`st_window_counts`) and the doubled-then-bounded-
+    * dedup (`st_dedup_bounded`) streams.
+    */
+  private val hourlyCountsOracle = """
+      SELECT time_bucket(INTERVAL 1 HOUR, CAST(ts AS TIMESTAMP)) AS wstart,
+             event_type, COUNT(*) AS n
+      FROM events GROUP BY 1, 2 ORDER BY 1, 2"""
+
   val defs: Seq[QueryDef] = Seq(
 
     // ---- §2.9: watermark + tumbling event-time window + streaming dedup.
-    QueryDef("st_window_counts", (s, d) => {
-      graft.streaming.Events.windowCounts(s, d)
-    }, Some("""
-      SELECT time_bucket(INTERVAL 1 HOUR, CAST(ts AS TIMESTAMP)) AS wstart,
-             event_type, COUNT(*) AS n
-      FROM events GROUP BY 1, 2 ORDER BY 1, 2""")),
+    QueryDef("st_window_counts", (s, d) => Events.windowCounts(s, d),
+      Some(hourlyCountsOracle)),
 
     // ---- §2.9: per-user session windows (30-min gap). The oracle is
     // gap-based sessionization in SQL — identical semantics when the
     // bounded source processes in one micro-batch.
     QueryDef("st_session_counts", (s, d) => {
-      graft.streaming.Events.sessionCounts(s, d)
+      Events.sessionCounts(s, d)
     }, Some("""
       WITH e AS (SELECT CAST(ts AS TIMESTAMP) AS t, user_id FROM events),
       gaps AS (SELECT t, user_id,
@@ -55,7 +71,7 @@ object StreamML extends QueryModule {
     // 10 min, at Spark's millisecond watermark precision); the late
     // window itself must be absent.
     QueryDef("st_late_data", (s, d) => {
-      graft.streaming.Events.lateDataWindowCounts(s, d)
+      Events.lateDataWindowCounts(s, d)
     }, Some("""
       WITH e AS (SELECT CAST(ts AS TIMESTAMP) AS t, event_type,
                    time_bucket(INTERVAL 1 HOUR, CAST(ts AS TIMESTAMP))
@@ -81,7 +97,7 @@ object StreamML extends QueryModule {
     // watermark-finalization rule: only windows ending at or before
     // max(t) − 10 min (millisecond watermark precision) are emitted.
     QueryDef("st_host_stats", (s, d) => {
-      graft.streaming.Events.hostStatsWindowed(s, d, Pipeline.synthUrl)
+      Events.hostStatsWindowed(s, d, Pipeline.synthUrl)
     }, Some(s"""
       WITH eb AS (SELECT event_id, CAST(ts AS TIMESTAMP) AS t
                   FROM events),
@@ -102,17 +118,12 @@ object StreamML extends QueryModule {
       WHERE wstart + INTERVAL 1 HOUR <= (SELECT wm FROM wm)
       GROUP BY 1, 2 ORDER BY 1, 2""")),
 
-    // ---- §2.9: custom keyed state (flatMapGroupsWithState) — running
-    // per-user counts; final state equals the batch aggregation.
     // ---- §2.9: bounded-state streaming dedup — the production dedup
     // form (state evicted past the watermark) proven on a doubled
-    // stream: every event arrives twice, is counted once.
-    QueryDef("st_dedup_bounded", (s, d) => {
-      graft.streaming.Events.dedupBoundedCounts(s, d)
-    }, Some("""
-      SELECT time_bucket(INTERVAL 1 HOUR, CAST(ts AS TIMESTAMP)) AS wstart,
-             event_type, COUNT(*) AS n
-      FROM events GROUP BY 1, 2 ORDER BY 1, 2""")),
+    // stream: every event arrives twice, is counted once, so the
+    // oracle is st_window_counts'.
+    QueryDef("st_dedup_bounded", (s, d) => Events.dedupBoundedCounts(s, d),
+      Some(hourlyCountsOracle)),
 
     // ---- §2.9 extension: streaming NEAR-dup suppression — MinHash-LSH
     // band keys (identical expressions to the batch d_lsh_neardup
@@ -121,7 +132,7 @@ object StreamML extends QueryModule {
     // surviving bucket set; the oracle recomputes the SAME band keys
     // from the raw documents in DuckDB — stream-vs-batch parity.
     QueryDef("st_neardup_dedup", (s, d) => {
-      graft.streaming.Events.neardupDedupBuckets(s, d)
+      Events.neardupDedupBuckets(s, d)
     }, Some(s"""
       WITH ${Pipeline.duckShingleCtes},
       sig AS (SELECT doc_id, list_transform(range(0, 8), i ->
@@ -142,7 +153,7 @@ object StreamML extends QueryModule {
     // sketch; the bounded source must land bit-exactly on the batch
     // oracle's DISTINCT..ORDER BY..LIMIT k regardless of batch slicing.
     QueryDef("st_sketch_distinct", (s, d) => {
-      graft.streaming.Events.sketchDistinct(s, d)
+      Events.sketchDistinct(s, d)
     }, Some(s"""
       WITH h AS (SELECT DISTINCT ${graft.ops.Hashing.duckMd5Long(
         "CAST(event_id AS VARCHAR)")} AS h FROM events),
@@ -154,29 +165,10 @@ object StreamML extends QueryModule {
              END AS BIGINT) AS est
       FROM mins""")),
 
-    // ---- §2.9 + forecast family: the EWMA-8 daily forecast with its
-    // counts accumulated as a STREAMING windowed aggregation — the
-    // oracle is char-identical to e_ewma_forecast's, so this gate is
-    // stream-vs-batch parity on the hard signal (the st_transitions
-    // shape applied to the forecast family).
-    QueryDef("st_ewma_daily", (s, d) => {
-      graft.streaming.Events.ewmaDaily(s, d)
-    }, Some("""
-      WITH e AS (SELECT event_type,
-              epoch_us(ts) // 86400000000 AS day FROM events),
-      a AS (SELECT MAX(day) AS d1 FROM e),
-      f AS (SELECT event_type, d1,
-              CAST(SUM(CASE WHEN day = d1 THEN 1 ELSE 0 END) AS BIGINT)
-                AS n_actual,
-              CAST(SUM(CASE WHEN day < d1 THEN
-                CAST(pow(4.0, CAST(day - (d1 - 8) AS INT)) AS BIGINT)
-                ELSE 0 END) AS BIGINT) AS num
-            FROM e CROSS JOIN a WHERE day >= d1 - 8 GROUP BY 1, 2)
-      SELECT event_type, d1 AS day, n_actual,
-        round(CAST(num AS DOUBLE) / 21845.0, 6) AS forecast,
-        round(CAST(n_actual AS DOUBLE) -
-          round(CAST(num AS DOUBLE) / 21845.0, 6), 6) AS resid
-      FROM f ORDER BY event_type""")),
+    // ---- §2.9 + forecast family: the EWMA-8 daily forecast twin.
+    QueryDef("st_ewma_daily", (s, d) =>
+      EventAnalytics.ewmaFromDaily(Events.daily(s, d, "st_ewma_mem"),
+        "event_type"), Some(Insights.oracleSql("e_ewma_forecast"))),
 
     // ---- §2.9 + sketch family: the count-min sketch under the
     // streaming state store — micro-batches fold into the bounded
@@ -184,7 +176,7 @@ object StreamML extends QueryModule {
     // must land bit-exactly on the batch CMS (overcount-only
     // guarantee included), regardless of batch slicing.
     QueryDef("st_cms_counts", (s, d) => {
-      graft.streaming.Events.cmsCounts(s, d)
+      Events.cmsCounts(s, d)
     }, Some("""
       WITH cells AS (
         SELECT ii.i,
@@ -207,29 +199,10 @@ object StreamML extends QueryModule {
       ORDER BY user_id""")),
 
     // ---- §2.9 + sequence family: gapped sequential-pattern support
-    // with per-(user, type) spans accumulated as a STREAMING
-    // aggregation (min/max fold associatively — the state IS the span
-    // frame), pattern grid read off the finished state; the oracle is
-    // char-identical to e_seq_patterns' -> stream-vs-batch parity.
-    QueryDef("st_seq_patterns", (s, d) => {
-      graft.streaming.Events.seqPatterns(s, d)
-    }, Some("""
-      WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS ts_us
-                 FROM events),
-      sp AS (SELECT user_id, event_type, MIN(ts_us) AS first_us,
-               MAX(ts_us) AS last_us
-             FROM e GROUP BY 1, 2),
-      tot AS (SELECT CAST(COUNT(DISTINCT user_id) AS BIGINT) AS nu
-              FROM e),
-      pats AS (SELECT x.event_type || '>' || y.event_type AS pattern,
-                 CAST(COUNT(*) AS BIGINT) AS n_users
-               FROM sp x JOIN sp y ON x.user_id = y.user_id
-               WHERE x.first_us < y.last_us GROUP BY 1)
-      SELECT pattern, n_users,
-        round(CAST(n_users AS DOUBLE) / CAST(nu AS DOUBLE), 6)
-          AS support
-      FROM pats CROSS JOIN tot
-      ORDER BY n_users DESC, pattern LIMIT 20""")),
+    // twin — the per-(user, type) spans are the finished state.
+    QueryDef("st_seq_patterns", (s, d) =>
+      EventAnalytics.patternsFromSpans(Events.spans(s, d),
+        Analytics.SeqTopK), Some(Analytics.oracleSql("e_seq_patterns"))),
 
     // ---- §2.9 + sketch family: the Bloom filter under the streaming
     // state store — micro-batches OR into the fixed m-bit state
@@ -238,7 +211,7 @@ object StreamML extends QueryModule {
     // oracle rebuilds it bit-for-bit from the shared hash family and
     // compares the set-bit count.
     QueryDef("st_bloom_filter", (s, d) => {
-      graft.streaming.Events.bloomBits(s, d)
+      Events.bloomBits(s, d)
     }, Some(s"""
       WITH h AS (SELECT DISTINCT ${graft.ops.Hashing.duckMd5Long(
         "CAST(event_id AS VARCHAR)")} AS h FROM events),
@@ -256,7 +229,7 @@ object StreamML extends QueryModule {
     // micro-batch, broadcast when small; no state store) + windowed
     // tier split.
     QueryDef("st_enrich_counts", (s, d) => {
-      graft.streaming.Events.enrichedWindowCounts(s, d)
+      Events.enrichedWindowCounts(s, d)
     }, Some("""
       WITH dim AS (SELECT o_custkey AS user_id, COUNT(*) AS n_orders
                    FROM orders GROUP BY 1)
@@ -271,7 +244,7 @@ object StreamML extends QueryModule {
     // state on both sides; bounded one-batch source => stream ≡ the
     // batch interval join the oracle runs.
     QueryDef("st_stream_join", (s, d) => {
-      graft.streaming.Events.clickErrorJoin(s, d)
+      Events.clickErrorJoin(s, d)
     }, Some("""
       SELECT e.event_id AS error_id, c.event_id AS click_id,
              e.user_id AS user_id
@@ -281,11 +254,23 @@ object StreamML extends QueryModule {
         AND epoch_us(c.ts) <= epoch_us(e.ts)
       ORDER BY error_id, click_id""")),
 
+    // ---- §2.9: custom keyed state (flatMapGroupsWithState) — running
+    // per-user counts; final state equals the batch aggregation.
     QueryDef("st_stateful_counts", (s, d) => {
-      graft.streaming.Events.statefulUserCounts(s, d)
+      Events.statefulUserCounts(s, d)
     }, Some("""
       SELECT user_id, COUNT(*) AS n FROM events
       GROUP BY user_id ORDER BY user_id""")),
+
+    // ---- Streaming windowed funnel (Events.windowedFunnelCounts):
+    // one (step, reach, anchor) quadruple of state per user under
+    // flatMapGroupsWithState; the greedy fold equals the batch
+    // per-step min-qualifying chain, so the one-batch gate equals
+    // e_funnel_windowed exactly.
+    QueryDef("st_funnel_windowed", (s, d) =>
+      Events.windowedFunnelCounts(s, d, Analytics.FunnelSteps,
+        Analytics.FunnelWindowUs),
+      Some(Analytics.oracleSql("e_funnel_windowed"))),
 
     // ---- Streaming first-order transition counts
     // (Events.transitionCounts): one (ts, id, type) triple of state
@@ -293,55 +278,8 @@ object StreamML extends QueryModule {
     // recovered by (ts, event_id); the single-batch gate equals the
     // batch lag computation exactly — the streaming twin of
     // e_transitions.
-    // ---- Streaming windowed funnel (Events.windowedFunnelCounts):
-    // one (step, reach, anchor) quadruple of state per user under
-    // flatMapGroupsWithState; the greedy fold equals the batch
-    // per-step min-qualifying chain, so the one-batch gate replays the
-    // e_funnel_windowed oracle EXACTLY — stream-vs-batch parity, the
-    // same shape as st_sketch_distinct / st_transitions.
-    QueryDef("st_funnel_windowed", (s, d) => {
-      graft.streaming.Events.windowedFunnelCounts(s, d,
-        Seq("signup", "click", "purchase"), windowUs = 259200000000L)
-    }, Some("""
-      WITH e AS (SELECT user_id, event_id, event_type, epoch_us(ts)
-                   AS ts_us FROM events),
-      r0 AS (SELECT user_id, ts_us AS reach_ts, event_id AS reach_id,
-               ts_us AS anchor FROM e
-             WHERE event_type = 'signup'
-             QUALIFY ROW_NUMBER() OVER (PARTITION BY user_id
-               ORDER BY ts_us, event_id) = 1),
-      r1 AS (SELECT e.user_id, e.ts_us AS reach_ts,
-               e.event_id AS reach_id, r0.anchor
-             FROM e JOIN r0 USING (user_id)
-             WHERE event_type = 'click' AND (e.ts_us > r0.reach_ts
-               OR (e.ts_us = r0.reach_ts AND e.event_id > r0.reach_id))
-               AND e.ts_us <= r0.anchor + 259200000000
-             QUALIFY ROW_NUMBER() OVER (PARTITION BY e.user_id
-               ORDER BY e.ts_us, e.event_id) = 1),
-      r2 AS (SELECT e.user_id, e.ts_us AS reach_ts,
-               e.event_id AS reach_id, r1.anchor
-             FROM e JOIN r1 USING (user_id)
-             WHERE event_type = 'purchase' AND (e.ts_us > r1.reach_ts
-               OR (e.ts_us = r1.reach_ts AND e.event_id > r1.reach_id))
-               AND e.ts_us <= r1.anchor + 259200000000
-             QUALIFY ROW_NUMBER() OVER (PARTITION BY e.user_id
-               ORDER BY e.ts_us, e.event_id) = 1),
-      c AS (
-        SELECT CAST(0 AS BIGINT) AS step, 'signup' AS step_name,
-          CAST(COUNT(*) AS BIGINT) AS n_users FROM r0
-        UNION ALL SELECT 1, 'click', COUNT(*) FROM r1
-        UNION ALL SELECT 2, 'purchase', COUNT(*) FROM r2)
-      SELECT step, step_name, n_users,
-        round(CAST(n_users AS DOUBLE) /
-          CAST(lag(n_users) OVER (ORDER BY step) AS DOUBLE), 6)
-          AS conv_prev,
-        round(CAST(n_users AS DOUBLE) /
-          CAST(first_value(n_users) OVER (ORDER BY step
-            ROWS UNBOUNDED PRECEDING) AS DOUBLE), 6) AS conv_first
-      FROM c ORDER BY step""")),
-
     QueryDef("st_transitions", (s, d) => {
-      graft.streaming.Events.transitionCounts(s, d)
+      Events.transitionCounts(s, d)
     }, Some("""
       WITH e AS (SELECT user_id, event_id, event_type, epoch_us(ts)
                    AS ts_us FROM events),
@@ -398,274 +336,34 @@ object StreamML extends QueryModule {
       SELECT * FROM (VALUES ('syn_a', 'syn_b'), ('syn_b', 'syn_a'))
         AS t(probe, neighbor) ORDER BY probe""")),
 
-    // ---- §2.9 + monitoring family: Mann–Kendall trend with its
-    // daily counts accumulated as a STREAMING windowed aggregation,
-    // the exact BIGINT S/tie readout on the finished state through
-    // the SAME shared chain as the batch op (EventAnalytics.
-    // mannKendallFromDaily). Oracle char-identical to
-    // e_mann_kendall's -> stream-vs-batch parity.
-    QueryDef("st_mann_kendall", (s, d) => {
-      graft.streaming.Events.mannKendallDaily(s, d)
-    }, Some("""
-      WITH daily AS (
-        SELECT event_type AS k, epoch_us(ts) // 86400000000 AS day,
-          CAST(COUNT(*) AS BIGINT) AS n
-        FROM events GROUP BY 1, 2),
-      grid AS (SELECT k, unnest(generate_series(d0, d1)) AS day
-               FROM (SELECT k, MIN(day) AS d0, MAX(day) AS d1
-                     FROM daily GROUP BY 1)),
-      g AS (SELECT gr.k, gr.day, COALESCE(d.n, 0) AS n
-            FROM grid gr LEFT JOIN daily d
-              ON gr.k = d.k AND gr.day = d.day),
-      sf AS (SELECT a.k,
-               CAST(SUM(CAST(sign(b.n - a.n) AS BIGINT)) AS BIGINT) AS s
-             FROM g a JOIN g b ON b.k = a.k AND b.day > a.day
-             GROUP BY 1),
-      tv AS (SELECT k, CAST(COUNT(*) AS BIGINT) AS t
-             FROM g GROUP BY k, n),
-      ti AS (SELECT k, CAST(SUM(t) AS BIGINT) AS nd,
-               CAST(SUM(t * (t - 1) * (2 * t + 5)) AS BIGINT) AS tie
-             FROM tv GROUP BY 1)
-      SELECT sf.k AS event_type, nd AS n_days, s,
-        round((CAST(nd AS DOUBLE) * (nd - 1) * (2 * nd + 5) -
-          CAST(tie AS DOUBLE)) / 18.0, 6) AS var_s,
-        round(CASE WHEN
-          (CAST(nd AS DOUBLE) * (nd - 1) * (2 * nd + 5) -
-          CAST(tie AS DOUBLE)) / 18.0 > 0.0 THEN
-          CASE WHEN s > 0 THEN (CAST(s AS DOUBLE) - 1.0) ELSE
-          CASE WHEN s < 0 THEN (CAST(s AS DOUBLE) + 1.0)
-          ELSE 0.0 END END /
-          sqrt((CAST(nd AS DOUBLE) * (nd - 1) * (2 * nd + 5) -
-          CAST(tie AS DOUBLE)) / 18.0) END, 6) AS z
-      FROM sf JOIN ti ON sf.k = ti.k ORDER BY 1""")),
+    // ---- §2.9 + monitoring family: the series twins. Daily counts
+    // accumulate in the state store (Events.daily) and read out
+    // through the batch op's own chain with its own parameters.
+    QueryDef("st_mann_kendall", (s, d) =>
+      EventAnalytics.mannKendallFromDaily(
+        Events.daily(s, d, "st_mann_kendall_mem"), "event_type"),
+      Some(Analytics.oracleSql("e_mann_kendall"))),
 
-    // ---- §2.9 + monitoring family: Page–Hinkley drift with its
-    // daily counts accumulated as a STREAMING windowed aggregation,
-    // the running-mean readout on the finished state through the SAME
-    // shared chain as the batch op (EventAnalytics.
-    // pageHinkleyFromDaily). Oracle char-identical to
-    // e_page_hinkley's -> stream-vs-batch parity.
-    QueryDef("st_page_hinkley", (s, d) => {
-      graft.streaming.Events.pageHinkleyDaily(s, d)
-    }, Some("""
-      WITH daily AS (
-        SELECT event_type AS k, epoch_us(ts) // 86400000000 AS day,
-          CAST(COUNT(*) AS BIGINT) AS n
-        FROM events GROUP BY 1, 2),
-      grid AS (SELECT k, unnest(generate_series(d0, d1)) AS day
-               FROM (SELECT k, MIN(day) AS d0, MAX(day) AS d1
-                     FROM daily GROUP BY 1)),
-      g AS (SELECT gr.k, gr.day, COALESCE(d.n, 0) AS n
-            FROM grid gr LEFT JOIN daily d
-              ON gr.k = d.k AND gr.day = d.day),
-      st AS (SELECT k, CAST(COUNT(*) AS BIGINT) AS nd,
-               CAST(SUM(n) AS BIGINT) AS s,
-               CAST(round(CAST(SUM(n) AS DOUBLE) /
-                 CAST(COUNT(*) AS DOUBLE), 9) AS DECIMAL(28,9)) AS mu9
-             FROM g GROUP BY 1),
-      st2 AS (SELECT *,
-                CAST(round(CAST(mu9 AS DOUBLE) *
-                  CAST('0.05' AS DOUBLE), 9) AS DECIMAL(28,9)) AS del9,
-                CAST(round(CAST(mu9 AS DOUBLE) *
-                  CAST('2.0' AS DOUBLE), 9) AS DECIMAL(28,9)) AS lam9
-              FROM st),
-      w AS (SELECT g.k, g.day, g.n, st2.nd, st2.mu9, st2.del9, st2.lam9,
-              SUM(g.n) OVER (PARTITION BY g.k ORDER BY g.day
-                ROWS UNBOUNDED PRECEDING) AS ps,
-              ROW_NUMBER() OVER (PARTITION BY g.k ORDER BY g.day) AS i
-            FROM g JOIN st2 ON g.k = st2.k),
-      t AS (SELECT *,
-              CAST(round(CAST(n AS DOUBLE) - CAST(ps AS DOUBLE) /
-                CAST(i AS DOUBLE) - CAST(del9 AS DOUBLE), 9)
-                AS DECIMAL(28,9)) AS term
-            FROM w),
-      m AS (SELECT *,
-              SUM(term) OVER (PARTITION BY k ORDER BY day
-                ROWS UNBOUNDED PRECEDING) AS m
-            FROM t),
-      dq AS (SELECT *,
-               m - MIN(m) OVER (PARTITION BY k ORDER BY day
-                 ROWS UNBOUNDED PRECEDING) AS deficit
-             FROM m)
-      SELECT k AS event_type, MAX(nd) AS n_days,
-        round(CAST(MAX(mu9) AS DOUBLE), 6) AS mu,
-        round(CAST(MAX(deficit) AS DOUBLE), 6) AS max_deficit,
-        MIN(CASE WHEN deficit > lam9 THEN day END) AS alarm_day
-      FROM dq GROUP BY 1 ORDER BY 1""")),
+    QueryDef("st_page_hinkley", (s, d) =>
+      EventAnalytics.pageHinkleyFromDaily(
+        Events.daily(s, d, "st_page_hinkley_mem"), "event_type"),
+      Some(Analytics.oracleSql("e_page_hinkley"))),
 
-    // ---- §2.9 + monitoring family: CUSUM changepoint with its daily
-    // counts accumulated as a STREAMING windowed aggregation, the
-    // closed-form readout running on the finished state through the
-    // SAME shared chain as the batch op (EventAnalytics.
-    // cusumFromDaily). Oracle char-identical to e_cusum_changepoint's
-    // -> stream-vs-batch parity.
-    QueryDef("st_cusum_daily", (s, d) => {
-      graft.streaming.Events.cusumDaily(s, d)
-    }, Some("""
-      WITH daily AS (
-        SELECT event_type AS k, epoch_us(ts) // 86400000000 AS day,
-          CAST(COUNT(*) AS BIGINT) AS n
-        FROM events GROUP BY 1, 2),
-      grid AS (SELECT k, unnest(generate_series(d0, d1)) AS day
-               FROM (SELECT k, MIN(day) AS d0, MAX(day) AS d1
-                     FROM daily GROUP BY 1)),
-      g AS (SELECT gr.k, gr.day, COALESCE(d.n, 0) AS n,
-              ROW_NUMBER() OVER (PARTITION BY gr.k ORDER BY gr.day) AS i
-            FROM grid gr LEFT JOIN daily d
-              ON gr.k = d.k AND gr.day = d.day),
-      b AS (SELECT k, CAST(SUM(n) AS BIGINT) AS s_base,
-              COUNT(*) AS n_base
-            FROM g WHERE i <= 7 GROUP BY 1),
-      m AS (SELECT g.k, g.day, g.n, s_base,
-              7 * g.n - s_base - (s_base // 10) AS d_up,
-              s_base - 7 * g.n - (s_base // 10) AS d_dn
-            FROM g JOIN b USING (k) WHERE n_base = 7 AND i > 7),
-      w AS (SELECT k, day, n, s_base,
-              CAST(SUM(d_up) OVER t AS BIGINT) AS p_up,
-              CAST(SUM(d_dn) OVER t AS BIGINT) AS p_dn
-            FROM m WINDOW t AS (PARTITION BY k ORDER BY day
-              ROWS UNBOUNDED PRECEDING)),
-      s AS (SELECT k, day, n, s_base,
-              p_up - least(CAST(0 AS BIGINT), MIN(p_up) OVER t) AS s_up,
-              p_dn - least(CAST(0 AS BIGINT), MIN(p_dn) OVER t) AS s_dn
-            FROM w WINDOW t AS (PARTITION BY k ORDER BY day
-              ROWS UNBOUNDED PRECEDING))
-      SELECT k AS event_type, day, n AS n_events,
-        round(CAST(s_up AS DOUBLE) / 7.0, 6) AS cusum_up,
-        round(CAST(s_dn AS DOUBLE) / 7.0, 6) AS cusum_dn,
-        s_up > 2 * s_base AS alarm_up,
-        s_dn > 2 * s_base AS alarm_dn
-      FROM s ORDER BY event_type, day""")),
+    QueryDef("st_cusum_daily", (s, d) =>
+      EventAnalytics.cusumFromDaily(Events.daily(s, d, "st_cusum_mem"),
+        "event_type"), Some(Analytics.oracleSql("e_cusum_changepoint"))),
 
-    // ---- §2.9 + forecast family: the seasonal-naive day-of-week
-    // forecast with its daily counts accumulated as a STREAMING
-    // windowed aggregation, the readout running through the SAME
-    // shared seasonalFromDaily chain as the batch op. Oracle
-    // char-identical to e_seasonal_forecast's -> parity.
-    // ---- Streaming ACF/Ljung–Box twin: daily counts as a watermarked
-    // windowed aggregation, the whiteness readout through the SAME
-    // shared acfFromDaily chain as the batch op. Oracle char-identical
-    // to e_acf_ljung_box's -> parity.
-    QueryDef("st_acf_daily", (s, d) => {
-      graft.streaming.Events.acfDaily(s, d)
-    }, Some("""
-      WITH daily AS (
-        SELECT event_type AS k, epoch_us(ts) // 86400000000 AS day,
-          CAST(COUNT(*) AS BIGINT) AS n
-        FROM events GROUP BY 1, 2),
-      grid AS (SELECT k, unnest(generate_series(d0, d1)) AS day
-               FROM (SELECT k, MIN(day) AS d0, MAX(day) AS d1
-                     FROM daily GROUP BY 1)),
-      g AS (SELECT gr.k, gr.day, COALESCE(d.n, 0) AS n
-            FROM grid gr LEFT JOIN daily d
-              ON gr.k = d.k AND gr.day = d.day),
-      st AS (SELECT k, CAST(COUNT(*) AS BIGINT) AS nd,
-               (1000000 * CAST(SUM(n) AS BIGINT)) //
-                 CAST(COUNT(*) AS BIGINT) AS mu6
-             FROM g GROUP BY 1),
-      dv AS (SELECT g.k, g.day, st.nd, 1000000 * g.n - st.mu6 AS d
-             FROM g JOIN st ON g.k = st.k),
-      dn AS (SELECT k, SUM(CAST(d AS DECIMAL(19,0)) * d) AS den
-             FROM dv GROUP BY 1),
-      lg AS (SELECT a.k, a.nd, l.lag,
-               SUM(CAST(a.d AS DECIMAL(19,0)) * b.d) AS num
-             FROM dv a
-               JOIN (SELECT unnest(generate_series(1, 10)) AS lag) l
-                 ON l.lag < a.nd
-               JOIN dv b ON b.k = a.k AND b.day = a.day + l.lag
-             GROUP BY 1, 2, 3),
-      ac AS (SELECT lg.k, lg.lag, lg.nd,
-               CASE WHEN dn.den > 0 THEN
-                 round(CAST(num AS DOUBLE) / CAST(den AS DOUBLE), 6)
-               END AS acf
-             FROM lg JOIN dn ON lg.k = dn.k),
-      cq AS (SELECT k, lag, nd, acf,
-               SUM(CAST(round(acf * acf / CAST(nd - lag AS DOUBLE), 12)
-                 AS DECIMAL(28,12))) OVER (PARTITION BY k ORDER BY lag
-                 ROWS UNBOUNDED PRECEDING) AS qsum
-             FROM ac)
-      SELECT k AS event_type, CAST(lag AS BIGINT) AS lag,
-        nd AS n_days, acf,
-        round(CAST(nd AS DOUBLE) * (nd + 2) * CAST(qsum AS DOUBLE), 6)
-          AS q
-      FROM cq ORDER BY 1, 2""")),
+    QueryDef("st_acf_daily", (s, d) =>
+      EventAnalytics.acfFromDaily(Events.daily(s, d, "st_acf_mem"),
+        "event_type"), Some(Analytics.oracleSql("e_acf_ljung_box"))),
 
-    // ---- Streaming Holt level+trend twin: daily counts as a
-    // watermarked windowed aggregation, the dyadic double unroll
-    // running through the SAME shared holtFromDaily chain as the
-    // batch op. Oracle char-identical to e_holt_forecast's -> parity.
-    QueryDef("st_holt_daily", (s, d) => {
-      graft.streaming.Events.holtDaily(s, d)
-    }, Some("""
-      WITH e AS (SELECT event_type,
-              epoch_us(ts) // 86400000000 AS day FROM events),
-      a AS (SELECT MAX(day) AS d1 FROM e),
-      g AS (SELECT event_type, d1,
-              CAST(SUM(CASE WHEN day = d1 THEN 1 ELSE 0 END) AS BIGINT)
-                AS n_actual,
-              CAST(SUM(CASE WHEN day = d1 - 8 THEN 1 ELSE 0 END)
-                AS BIGINT) AS y1,
-              CAST(SUM(CASE WHEN day = d1 - 7 THEN 1 ELSE 0 END)
-                AS BIGINT) AS y2,
-              CAST(SUM(CASE WHEN day = d1 - 6 THEN 1 ELSE 0 END)
-                AS BIGINT) AS y3,
-              CAST(SUM(CASE WHEN day = d1 - 5 THEN 1 ELSE 0 END)
-                AS BIGINT) AS y4,
-              CAST(SUM(CASE WHEN day = d1 - 4 THEN 1 ELSE 0 END)
-                AS BIGINT) AS y5,
-              CAST(SUM(CASE WHEN day = d1 - 3 THEN 1 ELSE 0 END)
-                AS BIGINT) AS y6,
-              CAST(SUM(CASE WHEN day = d1 - 2 THEN 1 ELSE 0 END)
-                AS BIGINT) AS y7,
-              CAST(SUM(CASE WHEN day = d1 - 1 THEN 1 ELSE 0 END)
-                AS BIGINT) AS y8
-            FROM e CROSS JOIN a WHERE day >= d1 - 8 GROUP BY 1, 2),
-      h AS (SELECT event_type, d1, n_actual,
-              CAST(y1 AS DOUBLE) AS l1,
-              CAST(y2 - y1 AS DOUBLE) AS b1,
-              (CAST(y2 AS DOUBLE) + l1 + b1) * 0.5 AS l2,
-              (l2 - l1) * 0.5 + b1 * 0.5 AS b2,
-              (CAST(y3 AS DOUBLE) + l2 + b2) * 0.5 AS l3,
-              (l3 - l2) * 0.5 + b2 * 0.5 AS b3,
-              (CAST(y4 AS DOUBLE) + l3 + b3) * 0.5 AS l4,
-              (l4 - l3) * 0.5 + b3 * 0.5 AS b4,
-              (CAST(y5 AS DOUBLE) + l4 + b4) * 0.5 AS l5,
-              (l5 - l4) * 0.5 + b4 * 0.5 AS b5,
-              (CAST(y6 AS DOUBLE) + l5 + b5) * 0.5 AS l6,
-              (l6 - l5) * 0.5 + b5 * 0.5 AS b6,
-              (CAST(y7 AS DOUBLE) + l6 + b6) * 0.5 AS l7,
-              (l7 - l6) * 0.5 + b6 * 0.5 AS b7,
-              (CAST(y8 AS DOUBLE) + l7 + b7) * 0.5 AS l8,
-              (l8 - l7) * 0.5 + b7 * 0.5 AS b8
-            FROM g)
-      SELECT event_type, d1 AS day, n_actual,
-        round(l8, 6) AS level, round(b8, 6) AS trend,
-        round(l8 + b8, 6) AS forecast,
-        round(CAST(n_actual AS DOUBLE) - (l8 + b8), 6) AS resid
-      FROM h ORDER BY event_type""")),
+    QueryDef("st_holt_daily", (s, d) =>
+      EventAnalytics.holtFromDaily(Events.daily(s, d, "st_holt_mem"),
+        "event_type"), Some(Insights.oracleSql("e_holt_forecast"))),
 
-    QueryDef("st_seasonal_daily", (s, d) => {
-      graft.streaming.Events.seasonalDaily(s, d)
-    }, Some("""
-      WITH e0 AS (SELECT event_type AS k,
-             epoch_us(ts) // 86400000000 AS day FROM events),
-      a AS (SELECT MAX(day) AS d1 FROM e0),
-      g AS (SELECT k, d1,
-              CAST(SUM(CASE WHEN day = d1 THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_actual,
-              CAST(SUM(CASE WHEN day IN (d1-7, d1-14, d1-21, d1-28)
-                THEN 1 ELSE 0 END) AS BIGINT) AS hist_sum,
-              CAST(SUM(CASE WHEN day IN (d1-6, d1-13, d1-20, d1-27)
-                THEN 1 ELSE 0 END) AS BIGINT) AS next_sum
-            FROM e0 CROSS JOIN a
-            WHERE day >= d1 - 28 AND day <= d1
-            GROUP BY 1, 2)
-      SELECT k AS event_type, d1 AS day, n_actual,
-        round(CAST(hist_sum AS DOUBLE) / 4.0, 6) AS forecast,
-        round(CAST(n_actual AS DOUBLE) -
-          CAST(hist_sum AS DOUBLE) / 4.0, 6) AS resid,
-        d1 + 1 AS next_day,
-        round(CAST(next_sum AS DOUBLE) / 4.0, 6) AS next_forecast
-      FROM g"""))
+    QueryDef("st_seasonal_daily", (s, d) =>
+      EventAnalytics.seasonalFromDaily(
+        Events.daily(s, d, "st_seasonal_mem"), "event_type"),
+      Some(Analytics.oracleSql("e_seasonal_forecast")))
   )
 }

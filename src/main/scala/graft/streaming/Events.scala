@@ -509,35 +509,20 @@ object Events {
   }
 
   /** The gate entry over the bounded file source: run
-    * [[funnelUserReach]] to completion, then roll the per-user reach
-    * into the batch funnel's exact output shape (step, step_name,
-    * n_users, conv_prev, conv_first) — the `e_funnel_windowed` oracle
+    * [[funnelUserReach]] to completion, then read the per-user reach
+    * out through the batch funnel's own readout
+    * (`EventAnalytics.funnelReadout`) — the `e_funnel_windowed` oracle
     * replays it unchanged (stream-vs-batch parity).
     */
   def windowedFunnelCounts(s: SparkSession, dir: String,
       steps: Seq[String], windowUs: Long): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val per = runToCompletion(s, ss =>
       funnelUserReach(stream(ss, dir)
         .withColumn("ts_us", unix_micros(col("t"))), steps, windowUs),
       "st_funnel_mem", mode = "update")
       .groupBy("user_id").agg(max("reached").as("reached"))
-    val counts = steps.indices.map { i =>
-      per.filter(col("reached") > i).agg(count(lit(1)).as("n_users"))
-        .select(lit(i.toLong).as("step"), lit(steps(i)).as("step_name"),
-          col("n_users"))
-    }.reduce(_.unionAll(_))
-    val w = Window.orderBy("step") // ≤ |steps| rows: global window is fine
-    counts
-      .withColumn("conv_prev", round(
-        col("n_users").cast("double") /
-          lag(col("n_users"), 1).over(w).cast("double"), 6))
-      .withColumn("conv_first", round(
-        col("n_users").cast("double") /
-          first(col("n_users")).over(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-            .cast("double"), 6))
-      .orderBy("step")
+    graft.ops.EventAnalytics.funnelReadout(steps,
+      i => per.filter(col("reached") > i))
   }
 
   /** STREAM-STATIC enrichment join (§2.9): the event stream joined to a
@@ -579,17 +564,6 @@ object Events {
         col("n"))
       .orderBy("sstart", "user_id")
 
-  /** STREAMING distinct sketch: the KMV aggregate
-    * ([[graft.functions.KmvSketch]]) running as a Structured Streaming
-    * aggregation — each micro-batch folds its rows into the bounded
-    * k-row sketch state and the merge is associative, so the streaming
-    * state IS the sketch (this incremental-merge property is the whole
-    * reason sketches exist; here it is exercised under the streaming
-    * state store, not just batch partial aggregation). Complete-mode
-    * global aggregate; the bounded source yields the same sketch the
-    * batch oracle computes as DISTINCT…ORDER BY…LIMIT k — exact
-    * stream-vs-batch parity, independent of micro-batch slicing.
-    */
   /** STREAMING Bloom filter: [[graft.functions.BloomSketch]] running as
     * a Structured Streaming aggregation — each micro-batch ORs its
     * bits into the fixed m-bit state. OR is idempotent, so replayed or
@@ -612,199 +586,41 @@ object Events {
       "(acc, w) -> acc + cast(bit_count(w) as bigint))").as("n_bits_set"))
   }
 
-  /** Streaming twin of [[graft.ops.EventAnalytics.ewmaForecast]]: the
-    * per-(day, event_type) counts accumulate as a watermarked windowed
-    * streaming aggregation — identical counts regardless of
-    * micro-batch slicing — and the EWMA-8 readout (4ʲ integer recency
-    * weights over the 8 days before the anchor, fixed denominator
-    * 21845) folds the tiny |days|×|types| result exactly as the batch
-    * op does over raw rows. The gate's oracle is CHAR-IDENTICAL to
-    * e_ewma_forecast's: stream-vs-batch parity on the hard signal.
+  /** Per-(event_type, day) counts accumulated as a watermarked 1-day
+    * windowed streaming aggregation — identical counts regardless of
+    * micro-batch slicing. Yields the (k, day, n) frame that
+    * [[graft.ops.EventAnalytics.daily]] builds from the log, so each
+    * streaming series twin (`st_ewma_daily`, `st_cusum_daily`, …) reads
+    * its finished state through its batch op's own `*FromDaily` chain.
     */
-  def ewmaDaily(s: SparkSession, dir: String): DataFrame = {
-    val DayUs = 86400000000L
-    val out = runToCompletion(s, ss => {
+  def daily(s: SparkSession, dir: String, sink: String): DataFrame =
+    runToCompletion(s, ss =>
       stream(ss, dir)
         .groupBy(window(col("t"), "1 day"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-    }, "st_ewma_mem")
-    val days = out.select(col("event_type"),
-      expr(s"unix_micros(window.start) div $DayUs").as("day"), col("n"))
-    val anchor = days.agg(max("day").as("d1"))
-    days.crossJoin(broadcast(anchor))
-      .filter(col("day") >= col("d1") - 8)
-      .groupBy(col("event_type"), col("d1"))
-      .agg(
-        sum(when(col("day") === col("d1"), col("n")).otherwise(0L))
-          .as("n_actual"),
-        sum(when(col("day") < col("d1"),
-          expr("cast(pow(4.0, cast(day - (d1 - 8) as int)) as bigint)")
-            * col("n")).otherwise(0L)).as("num"))
-      .select(col("event_type"), col("d1").as("day"), col("n_actual"),
-        round(expr("cast(num as double) / 21845.0"), 6).as("forecast"))
-      .withColumn("resid", round(expr(
-        "cast(n_actual as double) - forecast"), 6))
-  }
+        .agg(count(lit(1)).as("n")), sink)
+      .select(col("event_type").as("k"),
+        expr(s"unix_micros(window.start) div " +
+          s"${graft.ops.EventAnalytics.DayUs}").as("day"),
+        col("n"))
 
-  /** Streaming twin of [[graft.ops.EventAnalytics.cusumChangepoint]]:
-    * the per-(day, type) counts accumulate as a watermarked windowed
-    * streaming aggregation — identical regardless of micro-batch
-    * slicing — and the CUSUM closed form (integer-scaled prefix sums −
-    * running min) runs on the tiny finished state through the SAME
-    * shared chain the batch op uses (`EventAnalytics.cusumFromDaily`),
-    * so stream-vs-batch parity is structural, not coincidental. The
-    * gate's oracle is CHAR-IDENTICAL to e_cusum_changepoint's.
+  /** Per-(user, type) first/last event-time spans accumulated as a
+    * STREAMING aggregation — min/max fold associatively, so the
+    * finished state IS the span frame the batch op
+    * ([[graft.ops.EventAnalytics.sequencePatterns]]) builds, and the
+    * `st_seq_patterns` gate reads it through the same
+    * `patternsFromSpans` chain regardless of batch slicing.
     */
-  def cusumDaily(s: SparkSession, dir: String): DataFrame = {
-    val DayUs = 86400000000L
-    val out = runToCompletion(s, ss => {
-      stream(ss, dir)
-        .groupBy(window(col("t"), "1 day"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-    }, "st_cusum_mem")
-    graft.ops.EventAnalytics.cusumFromDaily(
-      out.select(col("event_type").as("k"),
-        expr(s"unix_micros(window.start) div $DayUs").as("day"),
-        col("n")),
-      "event_type", baseline = 7, slackDiv = 10, thresholdDays = 2)
-  }
-
-  /** Streaming twin of [[graft.ops.EventAnalytics.pageHinkley]]: the
-    * per-(day, type) counts accumulate as a watermarked windowed
-    * streaming aggregation, then the running-mean drift statistic
-    * (round-9 DECIMAL terms → running sum − running min) reads out of
-    * the finished state through the SAME shared chain the batch op
-    * uses (`EventAnalytics.pageHinkleyFromDaily`). The gate's oracle
-    * is CHAR-IDENTICAL to e_page_hinkley's.
-    */
-  def pageHinkleyDaily(s: SparkSession, dir: String): DataFrame = {
-    val DayUs = 86400000000L
-    val out = runToCompletion(s, ss => {
-      stream(ss, dir)
-        .groupBy(window(col("t"), "1 day"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-    }, "st_page_hinkley_mem")
-    graft.ops.EventAnalytics.pageHinkleyFromDaily(
-      out.select(col("event_type").as("k"),
-        expr(s"unix_micros(window.start) div $DayUs").as("day"),
-        col("n")),
-      "event_type", deltaFrac = "0.05", lambdaMeans = "2.0")
-  }
-
-  /** Streaming twin of [[graft.ops.EventAnalytics.mannKendall]]: the
-    * per-(day, type) counts accumulate as a watermarked windowed
-    * streaming aggregation, then the trend statistics (exact BIGINT
-    * S and tie folds over the calendar-bounded pair frame) read out of
-    * the finished state through the SAME shared chain
-    * (`EventAnalytics.mannKendallFromDaily`). The gate's oracle is
-    * CHAR-IDENTICAL to e_mann_kendall's.
-    */
-  def mannKendallDaily(s: SparkSession, dir: String): DataFrame = {
-    val DayUs = 86400000000L
-    val out = runToCompletion(s, ss => {
-      stream(ss, dir)
-        .groupBy(window(col("t"), "1 day"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-    }, "st_mann_kendall_mem")
-    graft.ops.EventAnalytics.mannKendallFromDaily(
-      out.select(col("event_type").as("k"),
-        expr(s"unix_micros(window.start) div $DayUs").as("day"),
-        col("n")),
-      "event_type")
-  }
-
-  /** Streaming twin of [[graft.ops.EventAnalytics
-    * .seasonalNaiveForecast]] — daily counts out of the state store,
-    * the same-weekday readout through the shared
-    * `EventAnalytics.seasonalFromDaily` chain (the [[cusumDaily]]
-    * pattern); the gate's oracle is char-identical to
-    * e_seasonal_forecast's.
-    */
-  def seasonalDaily(s: SparkSession, dir: String): DataFrame = {
-    val DayUs = 86400000000L
-    val out = runToCompletion(s, ss => {
-      stream(ss, dir)
-        .groupBy(window(col("t"), "1 day"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-    }, "st_seasonal_mem")
-    graft.ops.EventAnalytics.seasonalFromDaily(
-      out.select(col("event_type").as("k"),
-        expr(s"unix_micros(window.start) div $DayUs").as("day"),
-        col("n")),
-      "event_type", cycles = 4)
-  }
-
-  /** Streaming twin of [[graft.ops.EventAnalytics.holtForecast]] —
-    * daily counts out of the state store, the dyadic level+trend
-    * unroll through the shared `EventAnalytics.holtFromDaily` chain
-    * (the [[cusumDaily]] pattern); the gate's oracle is char-identical
-    * to e_holt_forecast's.
-    */
-  def holtDaily(s: SparkSession, dir: String): DataFrame = {
-    val DayUs = 86400000000L
-    val out = runToCompletion(s, ss => {
-      stream(ss, dir)
-        .groupBy(window(col("t"), "1 day"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-    }, "st_holt_mem")
-    graft.ops.EventAnalytics.holtFromDaily(
-      out.select(col("event_type").as("k"),
-        expr(s"unix_micros(window.start) div $DayUs").as("day"),
-        col("n")),
-      "event_type")
-  }
-
-  /** Streaming twin of [[graft.ops.EventAnalytics.acfLjungBox]] —
-    * daily counts out of the state store, the ACF/Ljung–Box readout
-    * through the shared `EventAnalytics.acfFromDaily` chain (the
-    * [[cusumDaily]] pattern); the gate's oracle is char-identical to
-    * e_acf_ljung_box's.
-    */
-  def acfDaily(s: SparkSession, dir: String): DataFrame = {
-    val DayUs = 86400000000L
-    val out = runToCompletion(s, ss => {
-      stream(ss, dir)
-        .groupBy(window(col("t"), "1 day"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-    }, "st_acf_mem")
-    graft.ops.EventAnalytics.acfFromDaily(
-      out.select(col("event_type").as("k"),
-        expr(s"unix_micros(window.start) div $DayUs").as("day"),
-        col("n")),
-      "event_type", maxLag = 10)
-  }
-
-  /** Gapped sequential-pattern support with the per-(user, type) spans
-    * accumulated as a STREAMING aggregation — min/max fold
-    * associatively, so the streaming state IS the span frame the
-    * batch op ([[graft.ops.EventAnalytics.sequencePatterns]]) builds;
-    * the pattern grid + support readout runs batch on the finished
-    * state and must land char-identically on e_seq_patterns' oracle
-    * regardless of batch slicing (stream-vs-batch parity).
-    */
-  def seqPatterns(s: SparkSession, dir: String, k: Int = 20): DataFrame = {
+  def spans(s: SparkSession, dir: String): DataFrame =
     // pin: a MemorySink-backed view cannot self-join (the
     // two sides resolve to the SAME attribute ids -> conflicting-
     // references INTERNAL_ERROR); cutting lineage renumbers one side.
     // The span frame is |users|x|types| — aggregate-sized.
-    val out = runToCompletion(s, ss => {
+    runToCompletion(s, ss => {
       stream(ss, dir)
         .groupBy(col("user_id"), col("event_type"))
         .agg(min(expr("unix_micros(t)")).as("first_us"),
           max(expr("unix_micros(t)")).as("last_us"))
     }, "st_seq_mem").pin()
-    val totals = out.agg(countDistinct(col("user_id")).as("nu"))
-    out.as("x").join(out.as("y"), "user_id")
-      .filter(col("x.first_us") < col("y.last_us"))
-      .select(concat_ws(">", col("x.event_type"), col("y.event_type"))
-        .as("pattern"))
-      .groupBy("pattern").agg(count(lit(1)).as("n_users"))
-      .crossJoin(broadcast(totals))
-      .select(col("pattern"), col("n_users"),
-        round(col("n_users").cast("double") / col("nu").cast("double"), 6)
-          .as("support"))
-      .orderBy(desc("n_users"), asc("pattern")).limit(k)
-  }
 
   /** Count–min sketch under the streaming state store — the frequency
     * companion of [[sketchDistinct]]: micro-batches fold into the
@@ -842,6 +658,17 @@ object Events {
       .orderBy("user_id")
   }
 
+  /** STREAMING distinct sketch: the KMV aggregate
+    * ([[graft.functions.KmvSketch]]) running as a Structured Streaming
+    * aggregation — each micro-batch folds its rows into the bounded
+    * k-row sketch state and the merge is associative, so the streaming
+    * state IS the sketch (this incremental-merge property is the whole
+    * reason sketches exist; here it is exercised under the streaming
+    * state store, not just batch partial aggregation). Complete-mode
+    * global aggregate; the bounded source yields the same sketch the
+    * batch oracle computes as DISTINCT…ORDER BY…LIMIT k — exact
+    * stream-vs-batch parity, independent of micro-batch slicing.
+    */
   def sketchDistinct(s: SparkSession, dir: String, k: Int = 256)
       : DataFrame = {
     val out = runToCompletion(s, ss => {
@@ -853,10 +680,7 @@ object Events {
     }, "st_sketch_distinct_mem")
     graft.ops.Hashing.ensureRegistered(out)
     out.select(size(col("ks")).cast("long").as("n_min"),
-        expr("try_element_at(ks, -1)").as("kth"))
-      .select(col("n_min"), col("kth"),
-        when(col("n_min") < k, col("n_min")).otherwise(
-          floor(lit((k - 1).toDouble) * lit(1152921504606846976.0) /
-            col("kth").cast("double"))).cast("long").as("est"))
+      expr("try_element_at(ks, -1)").as("kth"),
+      expr(graft.functions.KmvSketch.estimateSql("ks", k)).as("est"))
   }
 }

@@ -797,7 +797,8 @@ class EventAnalyticsSpec extends AnyFunSuite {
     assert(hi.getDouble(2) === 3.5 && hi.getDouble(3) === 4.325)
     assert(hi.isNullAt(4))
     // λ = 1·μ = 3.5 trips on day 3 (4.325 > 3.5)
-    val lo = EventAnalytics.pageHinkley(ev(rows: _*), "event_type",
+    val lo = EventAnalytics.pageHinkleyFromDaily(
+      EventAnalytics.daily(ev(rows: _*), "event_type"), "event_type",
       lambdaMeans = "1.0").collect().head
     assert(lo.getLong(4) === 3L)
   }

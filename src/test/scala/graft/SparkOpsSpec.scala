@@ -585,41 +585,6 @@ class SparkOpsSpec extends AnyFunSuite {
     assert(out.head._1 === "solo")
   }
 
-  test("streaming seasonal forecast equals the batch op row-for-row " +
-    "(sf0.001)") {
-    val dir = SharedSpark.testData()
-    val streamed = graft.streaming.Events.seasonalDaily(spark, dir)
-      .orderBy("event_type").collect().map(_.toSeq)
-    val batch = graft.ops.EventAnalytics.seasonalNaiveForecast(
-        graft.queries.Tables.events(spark, dir), "event_type")
-      .orderBy("event_type").collect().map(_.toSeq)
-    assert(streamed.toSeq === batch.toSeq)
-    assert(streamed.nonEmpty)
-  }
-
-  test("streaming CUSUM equals the batch op row-for-row (sf0.001)") {
-    val dir = SharedSpark.testData()
-    val streamed = graft.streaming.Events.cusumDaily(spark, dir)
-      .collect().map(_.toSeq)
-    val batch = graft.ops.EventAnalytics.cusumChangepoint(
-        graft.queries.Tables.events(spark, dir), "event_type")
-      .collect().map(_.toSeq)
-    assert(streamed.toSeq === batch.toSeq)
-    assert(streamed.nonEmpty)
-  }
-
-  test("streaming EWMA forecast equals the batch op row-for-row " +
-    "(sf0.001)") {
-    val dir = SharedSpark.testData()
-    val streamed = graft.streaming.Events.ewmaDaily(spark, dir)
-      .orderBy("event_type").collect().map(_.toSeq)
-    val batch = graft.ops.EventAnalytics.ewmaForecast(
-        graft.queries.Tables.events(spark, dir), "event_type")
-      .orderBy("event_type").collect().map(_.toSeq)
-    assert(streamed.toSeq === batch.toSeq)
-    assert(streamed.nonEmpty)
-  }
-
   test("streaming window counts equal the batch aggregation (sf0.001)") {
     val dir = SharedSpark.testData()
     val streamed = graft.streaming.Events.windowCounts(spark, dir)

@@ -2,11 +2,14 @@
 """Diff two `Bench explain` outputs gate by gate.
 
 Splits each file on its `########## <gate>` headers, drops sbt's own log
-lines, normalizes the run-specific parts of the formatted physical plans
-(expression ids `#123`, `plan_id=…`, RDD ids `…RDD[123]`, checkpoint
-block ids, object hashes `@1a2b3c4d`, the random suffix of scratch
-directories), and prints, for each gate whose plans differ, the differing
-lines. A gate present in only one file counts as a difference.
+lines and Spark's timestamped `WARN`/`INFO`/`ERROR` log lines, normalizes
+the run-specific parts of the formatted physical plans (expression ids
+`#123`, `plan_id=…`, RDD ids `…RDD[123]`, checkpoint block ids, object
+hashes `@1a2b3c4d`, lambda class names `$Lambda$4866/0x…`, the random
+suffix of scratch directories, the checkout path before `/fixtures/`),
+and prints, for each gate whose plans differ, the differing lines. A gate
+present in only one file counts as a difference, so two checkouts of an
+unchanged plan read 0 differing gates.
 
 Usage: python3 tools/plan_diff.py <before.txt> <after.txt>
 Exit status: 0 when every gate's plan is identical, 1 otherwise.
@@ -21,10 +24,13 @@ IDS = [
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
     (re.compile(r"rdd_\d+_\d+"), "rdd_N_N"),
+    (re.compile(r"\$\$?Lambda(\$\d+)?/0x[0-9a-f]+"), "$Lambda$N"),
     (re.compile(r"@[0-9a-f]{5,}\b"), "@N"),
     (re.compile(r"(/[A-Za-z_]+?)\d{6,}/"), r"\1N/"),
+    (re.compile(r"file:[^\s,\]]*/fixtures/"), "file:<checkout>/fixtures/"),
 ]
 SBT_LOG = re.compile(r"^\[(success|info|warn|error)\] ")
+SPARK_LOG = re.compile(r"^\d{2}/\d{2}/\d{2} \d{2}:\d{2}:\d{2} (WARN|INFO|ERROR) ")
 
 
 def normalize(line: str) -> str:
@@ -41,7 +47,8 @@ def split_gates(path: str) -> dict:
             if m:
                 cur = m.group(1)
                 gates[cur] = []
-            elif cur is not None and not SBT_LOG.match(line):
+            elif cur is not None and not (SBT_LOG.match(line)
+                                          or SPARK_LOG.match(line)):
                 gates[cur].append(normalize(line))
     return {g: [l for l in ls if l] for g, ls in gates.items()}
 
