@@ -27,6 +27,7 @@ object GraftFunctions {
     Fn("graft_dot", classOf[DotProduct], 2, e => DotProduct(e(0), e(1))),
     Fn("graft_l2", classOf[L2Distance], 2, e => L2Distance(e(0), e(1))),
     Fn("graft_md5long", classOf[Md5Long], 1, e => Md5Long(e(0))),
+    Fn("graft_ngrams", classOf[NGrams], 2, e => NGrams(e(0), e(1))),
     Fn("graft_kmv", classOf[KmvSketch], 2, e => KmvSketch(e(0), e(1))),
     Fn("graft_cms", classOf[CmsSketch], 2, e => CmsSketch(e(0), e(1))),
     Fn("graft_hll", classOf[HllSketch], 2, e => HllSketch(e(0), e(1))),

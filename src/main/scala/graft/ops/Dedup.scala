@@ -38,25 +38,13 @@ object Dedup {
     docs.select(col("doc_id"), expr(tokensSql).as("tokens"))
 
   /** Distinct word n-gram shingles per doc (drops docs shorter than n). */
-  def shingled(docs: DataFrame, n: Int): DataFrame =
+  def shingled(docs: DataFrame, n: Int): DataFrame = {
+    Hashing.ensureRegistered(docs)
     tokenized(docs)
       .filter(size(col("tokens")) >= n)
-      // LET-BINDING (single-element transform): the lambda variable `tk`
-      // pins the token array so CollapseProject cannot inline the
-      // tokenizer regex into the per-shingle lambda — inlined, the
-      // regex re-runs once per shingle (measured 6-13x on the
-      // decontamination gates). Same trick everywhere a lambda body
-      // references a COMPUTED array column.
-      // greatest(..., 1): keeps the sequence ascending even if Catalyst
-      // evaluates this expression before the size filter (InferFilters-
-      // FromGenerate can clone it into a pushed-down predicate, where a
-      // short doc would make sequence(1, 0) DESCEND into slice(tk, 0, n)
-      // and throw); the one junk shingle a short doc computes is
-      // discarded with its row by the filter above
-      .select(col("doc_id"), array_distinct(expr(
-        s"element_at(transform(array(tokens), tk -> " +
-          s"transform(sequence(1, greatest(size(tk) - ${n - 1}, 1)), " +
-          s"i -> concat_ws(' ', slice(tk, i, $n)))), 1)")).as("shingles"))
+      .select(col("doc_id"),
+        array_distinct(expr(s"graft_ngrams(tokens, $n)")).as("shingles"))
+  }
 
   /** Benchmark CONTAMINATION hits — training-data hygiene: for each
     * training document, how many of its distinct n-token shingles occur
@@ -244,8 +232,13 @@ object Dedup {
   def minhashSignatures(sh: DataFrame, k: Int,
       hashFn: String => String = md5LongSql): DataFrame = {
     Hashing.ensureRegistered(sh)
-    // let-bound (see shingled): without it a computed `shingles` column
-    // would be re-built once per signature row
+    // LET-BINDING (single-element transform): the lambda variable `shs`
+    // pins the shingle array, so CollapseProject cannot inline a
+    // computed `shingles` column (and the tokenizer regex under it)
+    // into the per-signature-row lambda, where it would be re-built once
+    // per row (measured 6-13x on the decontamination gates when the
+    // shingle lambda itself was unbound). Same trick everywhere a lambda
+    // body references a COMPUTED array column.
     sh.select(col("doc_id"), expr(
       s"element_at(transform(array(shingles), shs -> " +
         s"transform(sequence(0, ${k - 1}), i -> " +
@@ -261,8 +254,9 @@ object Dedup {
     * ([[graft.streaming.Events.neardupDedupBuckets]]).
     */
   def bandKeys(sigs: DataFrame, bands: Int, rows: Int): DataFrame =
-    // let-bound (see shingled): `sig` is a computed column — unbound,
-    // the whole signature pipeline would be inlined and re-run per band
+    // let-bound (see minhashSignatures): `sig` is a computed column —
+    // unbound, the whole signature pipeline would be inlined and re-run
+    // per band
     sigs.select(col("doc_id"), explode(expr(
       s"element_at(transform(array(sig), sg -> " +
         s"transform(sequence(0, ${bands - 1}), b -> struct(b as band, " +
@@ -743,9 +737,13 @@ object Dedup {
     * Scale shape: one df aggregate, one per-doc window (partitioned by
     * doc — no global sort), the prefix self-join, then
     * [[verifyJaccard]] on surviving candidates only.
+    *
+    * Returns (result, cleanup), as [[minhashLshPlan]] does: the result
+    * is LAZY and reads a persisted shingle table, which the caller
+    * releases with `cleanup()` once the result has materialized.
     */
   def jaccardPrefixPairs(docs: DataFrame, shingleN: Int,
-      threshold: Double): DataFrame = {
+      threshold: Double): (DataFrame, () => Unit) = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must lie in (0, 1], got $threshold")
     val sh = shingled(docs, shingleN)
@@ -785,10 +783,11 @@ object Dedup {
         tauDec * col("b.__n") <= col("a.__n"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
-    // LAZY persist, same contract as [[jaccardAllPairs]]: the shingle
-    // table feeds the df aggregate, the prefix window, and the verify —
-    // unpersisting here would drop the cache before any action runs
-    verifyJaccard(cands, sh).filter(col("jaccard") >= threshold)
+    // the shingle table feeds the df aggregate, the prefix window and
+    // the verify — unpersisting here would drop the cache before any
+    // action runs, so the caller does it
+    (verifyJaccard(cands, sh).filter(col("jaccard") >= threshold),
+      () => { sh.unpersist(); () })
   }
 
   /** Asymmetric shingle CONTAINMENT pairs, C(A→B) = |A ∩ B| / |A|
@@ -1029,8 +1028,8 @@ object Dedup {
 
   /** Every w-token sliding window of every document, as (doc_id, pos,
     * wh) with `pos` the 1-based token offset and `wh` the window-content
-    * hash. Per-row expression work only (the window hashes are built by
-    * a codegen'd higher-order lambda, let-bound like [[shingled]]); docs
+    * hash. Per-row expression work only (the windows come from the
+    * codegen'd `graft_ngrams` kernel, each hashed by one lambda); docs
     * shorter than w tokens have no windows.
     */
   def windowHashes(docs: DataFrame, w: Int,
@@ -1038,14 +1037,8 @@ object Dedup {
     Hashing.ensureRegistered(docs)
     tokenized(docs)
       .filter(size(col("tokens")) >= w)
-      // greatest(..., 1): total even when evaluated before the size
-      // filter (InferFiltersFromGenerate clones this into a predicate;
-      // a short doc would otherwise descend sequence(1, 0) into
-      // slice(tk, 0, w) and throw — observed at sf0.01)
       .select(col("doc_id"), expr(
-        s"element_at(transform(array(tokens), tk -> " +
-          s"transform(sequence(1, greatest(size(tk) - ${w - 1}, 1)), " +
-          s"k -> ${hashFn(s"concat_ws(' ', slice(tk, k, $w))")})), 1)")
+        s"transform(graft_ngrams(tokens, $w), g -> ${hashFn("g")})")
         .as("whs"))
       .select(col("doc_id"), posexplode(col("whs")))
       .select(col("doc_id"), (col("pos") + 1).as("pos"), col("col").as("wh"))

@@ -11,9 +11,10 @@ import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.types._
 
 /** The shared machinery of the driver-local folds ([[PcaFold]],
-  * [[RfmFold]]): operators whose state is BOUNDED collect it once,
-  * iterate in plain Scala and return a local relation, instead of
-  * paying a job (and its planning gap) per round or per ordinal.
+  * [[RfmFold]], [[graft.sources.Wiki.redirects]]): operators whose
+  * state is BOUNDED collect it once, iterate in plain Scala and return
+  * a local relation, instead of paying a job (and its planning gap) per
+  * round or per ordinal.
   *
   * The exactness rules every fold follows:
   *  - exact DECIMAL arithmetic is `java.math.BigDecimal` at the SQL
@@ -23,7 +24,7 @@ import org.apache.spark.sql.types._
   *    values) is the SAME SQL string the distributed path uses,
   *    analyzed by the session and evaluated by Catalyst ([[Scalar]]).
   */
-private[ops] object DriverFold {
+private[graft] object DriverFold {
 
   /** The rows of `df`, read with ONE bounded collect, when a fold may
     * replace its distributed plan: ANSI mode on (a fold throws where
@@ -39,6 +40,34 @@ private[ops] object DriverFold {
     val rows = df.coalesce(1)
       .limit(math.min(maxRows + 1, Int.MaxValue).toInt).collect()
     if (rows.length > maxRows) None else Some(rows)
+  }
+
+  /** The rows of `df` when it holds at most `maxRows` (None otherwise,
+    * and for a negative guard), read in ONE job with one task per
+    * input partition, each stopping at `maxRows` + 1 rows. [[collect]]
+    * coalesces to one partition, which is free over an aggregate's
+    * shuffle but would run a shuffle-free input — a scan and parse —
+    * in one task; this read keeps that input parallel. The driver
+    * keeps at most `maxRows` rows: once the partitions' rows pass the
+    * guard, every partition result is dropped as it arrives. Rows come
+    * in partition order. No ANSI condition: for folds that do no
+    * arithmetic.
+    */
+  def collectParallel(df: DataFrame, maxRows: Long): Option[Array[Row]] = {
+    if (maxRows < 0) return None
+    val cap = math.min(maxRows + 1, Int.MaxValue).toInt
+    val rdd = df.rdd
+    val parts = new Array[Array[Row]](rdd.getNumPartitions)
+    var held = 0L
+    df.sparkSession.sparkContext.runJob(rdd,
+      (it: Iterator[Row]) => it.take(cap).toArray,
+      (i: Int, rows: Array[Row]) =>
+        if (held <= maxRows) {
+          held += rows.length
+          if (held <= maxRows) parts(i) = rows
+          else java.util.Arrays.fill(parts.asInstanceOf[Array[AnyRef]], null)
+        })
+    if (held > maxRows) None else Some(parts.flatten)
   }
 
   def zero(scale: Int): JBigDecimal = JBigDecimal.valueOf(0L, scale)

@@ -211,9 +211,9 @@ object Graph {
     */
   def wordGraph(docs: DataFrame): DataFrame =
     docs.select(expr(Hashing.tokensSql).as("tk"))
-      // let-bound (see Dedup.shingled): the lambda references the token
-      // array per element; without the binding the tokenizer regex is
-      // inlined and re-runs once per bigram
+      // let-bound (see Dedup.minhashSignatures): the lambda references
+      // the token array per element; without the binding the tokenizer
+      // regex is inlined and re-runs once per bigram
       .select(explode(expr(
         "element_at(transform(array(tk), t -> " +
           "transform(slice(t, 1, greatest(size(t) - 1, 0)), " +

@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
   * `documents(doc_id, text, links ARRAY<STRUCT<target, start, stop>>)` —
   * all declarative column expressions and hash aggregations (the ref's
   * `groupByKey().mapValues(Counter/dict/list)` forms become partial-
-  * aggregating two-level groupBys; anchor slicing is `substring`, never a
-  * UDF).
+  * aggregating groupBys; anchor slicing is `substring` and word n-grams
+  * are the codegen'd `graft_ngrams` kernel, never a UDF).
   */
 object LinkModels {
 
@@ -67,50 +67,41 @@ object LinkModels {
     * anchor context. Terms kept only when they occur both inside anchors
     * and in open text ('O' present, >= 2 position kinds) — single-part
     * anchors contribute B and E for the same n-gram, as in the ref.
+    *
+    * One aggregation: every n-gram occurrence is one (term, len, idx)
+    * row — an anchor's n-gram list of length `len` yields B at idx 0, E
+    * at idx len - 1 (both for a one-part list) and I in between; open
+    * text rows carry len 0 and count as O — grouped once by term into
+    * the four position counts. `counts` lists the non-zero ones in B, E,
+    * I, O order, the order `sort_array` gave the former per-(term, pos)
+    * form. N-grams come from the codegen'd `graft_ngrams` kernel.
     */
   def namePartCounts(docs: DataFrame, maxNgram: Int = 2): DataFrame = {
-    // sequence(1, 0) would DESCEND; guard short token lists with an
-    // explicit empty array.
-    def ngr(n: Int, src: String) =
-      s"case when size($src) >= $n then " +
-        s"transform(sequence(1, size($src) - ${n - 1}), " +
-        s"i -> concat_ws(' ', slice($src, i, $n))) " +
-        s"else cast(array() as array<string>) end"
-
-    val anchors = anchored(docs)
+    Hashing.ensureRegistered(docs)
+    // every n from one tokenization per anchor and per document
+    def ngrams(src: String) =
+      (1 to maxNgram).map(n => expr(s"graft_ngrams($src, $n)"))
+    val inAnchors = anchored(docs)
       .select(expr(Hashing.tokens("anchor")).as("at"))
-      .filter(size(col("at")) > 0)
-    val partEntries = (1 to maxNgram).map { n =>
-      anchors.select(expr(ngr(n, "at")).as("ng"))
-        .filter(size(col("ng")) > 0)
-        // let-bound (see Dedup.shingled): ng is computed — unbound, the
-        // n-gram build (and the anchor tokenization under it) would be
-        // inlined once per reference below
-        .select(explode(expr(
-          "element_at(transform(array(ng), g -> " +
-            "concat(array(struct(g[0] as term, 'B' as pos)), " +
-            "array(struct(element_at(g, -1) as term, 'E' as pos)), " +
-            "transform(slice(g, 2, greatest(size(g) - 2, 0)), " +
-            "t -> struct(t as term, 'I' as pos)))), 1)")).as("e"))
-        .select(col("e.term").as("term"), col("e.pos").as("pos"))
-    }.reduce(_ unionByName _)
-    val partCounts = partEntries.groupBy("term", "pos")
-      .agg(count(lit(1)).as("n"))
-
-    val textToks = docs.select(expr(Hashing.tokens()).as("tt"))
-    val oCounts = (1 to maxNgram).map { n =>
-      textToks.select(explode(expr(ngr(n, "tt"))).as("term"))
-    }.reduce(_ unionByName _)
-      .groupBy("term").agg(count(lit(1)).as("n"))
-      .filter(col("n") > 1)
-      .select(col("term"), lit("O").as("pos"), col("n"))
-
-    partCounts.select("term", "pos", "n").unionByName(oCounts)
-      .groupBy("term")
-      .agg(sort_array(collect_list(struct(col("pos"), col("n"))))
-        .as("counts"))
-      .filter(expr("exists(counts, c -> c.pos = 'O')") &&
-        size(col("counts")) > 1)
+      .select(explode(array(ngrams("at"): _*)).as("ng"))
+      .select(size(col("ng")).as("len"),
+        posexplode(col("ng")).as(Seq("idx", "term")))
+    val inText = docs.select(expr(Hashing.tokens()).as("tt"))
+      .select(lit(0).as("len"), lit(0).as("idx"),
+        explode(concat(ngrams("tt"): _*)).as("term"))
+    val (len, idx) = (col("len"), col("idx"))
+    val perKind = Seq(
+      "B" -> (len > 0 && idx === 0),
+      "E" -> (len > 0 && idx === len - 1),
+      "I" -> (idx > 0 && idx < len - 1),
+      "O" -> (len === 0)).map { case (p, c) => count(when(c, 1)).as(p) }
+    val entry = (p: String) => s"array(named_struct('pos', '$p', 'n', $p))"
+    inAnchors.unionByName(inText)
+      .groupBy("term").agg(perKind.head, perKind.tail: _*)
+      .filter(col("O") > 1 && col("B") + col("E") + col("I") > 0)
+      .select(col("term"), expr(Seq("B", "E", "I")
+        .map(p => s"if($p > 0, ${entry(p)}, array())")
+        .mkString("concat(", ", ", s", ${entry("O")})")).as("counts"))
   }
 
   /** EntityInlinks (links.py:136-152): per-entity inlink source list

@@ -890,7 +890,7 @@ object Similarity {
         // silently fold the extra dimensions to 0-bits (and a null vector
         // would silently yield a null bucket), desyncing from the
         // per-row-size md5 form and the oracle
-        // let-bound (see Dedup.shingled): harmless for a raw parquet
+        // let-bound (see Dedup.minhashSignatures): harmless for a raw parquet
         // column, essential when $vecCol is a computed vector — unbound,
         // its pipeline would be inlined into the per-table/per-plane
         // lambdas and re-run nTables x nPlanes times per row

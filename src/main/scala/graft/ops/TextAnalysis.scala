@@ -63,17 +63,11 @@ object TextAnalysis {
     * shape as the shingle pipeline. Output as a DECIMAL(10,6) string
     * (the small-denominator rationals here hit round() ties).
     */
-  def repetitionScore(docs: DataFrame, n: Int = 3): DataFrame =
+  def repetitionScore(docs: DataFrame, n: Int = 3): DataFrame = {
+    Hashing.ensureRegistered(docs)
     docs.select(col("doc_id"), expr(tokensSql).as("tokens"))
       .select(col("doc_id"), size(col("tokens")).as("n_tokens"),
-        // let-bound (see Dedup.shingled): keeps the tokenizer regex out
-        // of the per-n-gram lambda
-        explode(expr(
-          s"element_at(transform(array(tokens), tk -> " +
-            s"case when size(tk) >= $n then " +
-            s"transform(sequence(1, size(tk) - ${n - 1}), " +
-            s"i -> concat_ws(' ', slice(tk, i, $n))) " +
-            s"else cast(array() as array<string>) end), 1)")).as("g"))
+        explode(expr(s"graft_ngrams(tokens, $n)")).as("g"))
       .groupBy("doc_id", "n_tokens", "g")
       .agg(count(lit(1)).as("c"))
       .groupBy("doc_id", "n_tokens")
@@ -82,6 +76,7 @@ object TextAnalysis {
         (col("top_c").cast("double") * n /
           greatest(col("n_tokens"), lit(1)).cast("double"))
           .cast("decimal(10,6)").cast("string").as("top_ngram_ratio"))
+  }
 
   /** (doc_id, n_tokens, n_distinct, avg_token_len) */
   def tokenStats(docs: DataFrame): DataFrame =
@@ -205,8 +200,8 @@ object TextAnalysis {
           .cast("long").as("n_bullet_lines"),
         expr(s"size(filter($lines, l -> endswith(rtrim(l), '...') or " +
           "endswith(rtrim(l), '…')))").cast("long").as("n_ellipsis_lines"),
-        // let-bound tokens array (the [[shingled]] trick) so the 8
-        // membership probes share ONE tokenizer pass
+        // let-bound tokens array (the [[Dedup.minhashSignatures]] trick)
+        // so the 8 membership probes share ONE tokenizer pass
         expr("element_at(transform(array(" + tokensSql + "), tk -> " +
           GopherStops.map(s =>
             s"(case when array_contains(tk, '$s') then 1 else 0 end)")

@@ -602,7 +602,11 @@ object Pipeline extends QueryModule {
     // pair on this corpus (the theorem's empirical witness, beside the
     // capped gate's filtered-universe semantics).
     QueryDef("d_jaccard_exact_prefix", (s, d) => {
-      Dedup.jaccardPrefixPairs(docs(s, d), 3, 0.5)
+      // materialize the pairs, then release the shingle table they read
+      val (pairs, cleanup) = Dedup.jaccardPrefixPairs(docs(s, d), 3, 0.5)
+      val out = pairs.pin()
+      cleanup()
+      out
     }, Some(s"""
       WITH $duckShingleCtes,
       ex AS (SELECT doc_id, unnest(shingles) AS shg FROM sh),

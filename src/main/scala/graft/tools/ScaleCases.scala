@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
@@ -718,10 +719,11 @@ object ScaleCases {
               .replace(" ", s"z$i ") + s"z$i")))
         .toDF("doc_id", "text")),
       (k, d) => cached(d) { (sd, nDocs) =>
+        val (prefixPairs, prefixCleanup) = Dedup.jaccardPrefixPairs(sd, 3, 0.5)
         val (pairs, pjSec) = timed {
-          Dedup.jaccardPrefixPairs(sd, 3, 0.5)
-            .where(col("doc_a") % 10000000L === 9000001L).collect()
+          prefixPairs.where(col("doc_a") % 10000000L === 9000001L).collect()
         }
+        prefixCleanup()
         emit("d_jaccard_exact_prefix", k, pjSec, "n_docs" -> nDocs,
           "n_planted_pairs" -> pairs.length)
         pairs.length.toLong
@@ -1671,9 +1673,12 @@ object ScaleCases {
               .filter(col("target").contains("/wiki/Redir_")).count()
             val cycleRows = red
               .filter(col("source").contains("RedirCycle")).count()
+            // which side of Wiki.RedirectFoldRows the closure ran on
+            val folded =
+              red.queryExecution.analyzed.isInstanceOf[LocalRelation]
             stage("j6_redirect_fixpoint", k, redSec,
               "n_redirects" -> nRedirects, "n_unresolved" -> unresolved,
-              "n_cycle_rows" -> cycleRows)
+              "n_cycle_rows" -> cycleRows, "driver_fold" -> folded)
             timedCached(Wiki.articles(spark, pages, red)) {
                 (docs, nDocs, parseSec) =>
               val obs = textObs(docs)

@@ -1,12 +1,19 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Job budgets for the gates that run as bounded driver-local folds.
-  * A change that silently sends either gate back to its distributed
-  * path (32 and 22 jobs) fails here on a counter that does not depend
-  * on host noise. The counts come from `Bench.once`, the run that
-  * `Bench` times and prints, so this pins the counter `Bench` reports.
+import graft.ops.LinkModels
+import graft.queries.Corpus
+import graft.sources.Wiki
+
+/** Job budgets for the gates and corpus calls that run as bounded
+  * driver-local folds or single aggregations. A change that silently
+  * sends one back to its distributed path (32 and 22 jobs for the
+  * gates; 11 and 5 for the corpus calls in a traced `corpus_build`
+  * pass) fails here on a counter that does not depend on host noise. The gate counts come from
+  * `Bench.once`, the run that `Bench` times and prints, so this pins
+  * the counter `Bench` reports.
   */
 class FoldJobBudgetSpec extends AnyFunSuite {
   private lazy val spark = SharedSpark.session
@@ -26,4 +33,28 @@ class FoldJobBudgetSpec extends AnyFunSuite {
       // counts do not depend on host load: two runs report the same work
       assert(a == b, s"$gate: $a then $b")
     }
+
+  // the corpus calls that fold (the redirect closure) or aggregate once
+  // (the name-part counts), over cached inputs as the corpus benchmark
+  // runs them
+  private def jobs(df: => DataFrame): Int =
+    Bench.counted(spark.sparkContext)(
+      df.write.format("noop").mode("overwrite").save())._2.jobs
+
+  test("the corpus calls on the fixture wiki stay within their budgets") {
+    val pages = Wiki.pages(spark, Corpus.FixtureWiki).cache()
+    val docs = Wiki.documents(spark, Corpus.FixtureWiki).cache()
+    try {
+      assert(pages.count() > 0 && docs.count() > 0)
+      for ((call, budget, df) <- Seq[(String, Int, () => DataFrame)](
+          ("Wiki.redirects", 2, () => Wiki.redirects(spark, pages)),
+          ("LinkModels.namePartCounts", 3,
+            () => LinkModels.namePartCounts(docs)))) {
+        jobs(df()) // warm: registration, codegen
+        val (a, b) = (jobs(df()), jobs(df()))
+        assert(a <= budget, s"$call ran $a jobs")
+        assert(a == b, s"$call: $a then $b jobs")
+      }
+    } finally { pages.unpersist(); docs.unpersist() }
+  }
 }

@@ -19,6 +19,17 @@ class PrefixJaccardSpec extends AnyFunSuite {
   private def pairsOf(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
+  /** The prefix-join rows, collected before its cleanup runs. */
+  private def prefixRows(d: org.apache.spark.sql.DataFrame, n: Int,
+      t: Double) = {
+    val (out, cleanup) = Dedup.jaccardPrefixPairs(d, n, t)
+    try out.collect() finally cleanup()
+  }
+
+  private def prefixPairs(d: org.apache.spark.sql.DataFrame, n: Int,
+      t: Double) =
+    prefixRows(d, n, t).map(r => (r.getLong(0), r.getLong(1))).toSet
+
   test("matches the uncapped all-pairs ground truth on a skewed corpus") {
     // d1/d2 are near-dups through RARE shingles; d10..d29 all share the
     // HOT shingle "the quick fox" but are mutually far apart — the
@@ -29,7 +40,7 @@ class PrefixJaccardSpec extends AnyFunSuite {
     val d = docsDf(Seq(
       1L -> "alpha beta gamma delta epsilon zeta eta",
       2L -> "alpha beta gamma delta epsilon zeta theta") ++ hotDocs: _*)
-    val pref = pairsOf(Dedup.jaccardPrefixPairs(d, 3, 0.5))
+    val pref = prefixPairs(d, 3, 0.5)
     val truth = pairsOf(Dedup.jaccardAllPairs(d, 3, 0.5,
       maxShingleDf = Long.MaxValue))
     assert(pref === truth)
@@ -48,8 +59,7 @@ class PrefixJaccardSpec extends AnyFunSuite {
       4L -> "one two three four five",
       5L -> "p q r s t u",          // shingles: pqr qrs rst stu (4)
       6L -> "p q r s")              // shingles: pqr qrs (2), J = 2/4
-    val out = Dedup.jaccardPrefixPairs(d, 3, 0.5)
-    val m = out.collect().map(r =>
+    val m = prefixRows(d, 3, 0.5).map(r =>
       (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     assert(m((3L, 4L)) === 1.0)
     assert(m((5L, 6L)) === 0.5)
@@ -59,8 +69,19 @@ class PrefixJaccardSpec extends AnyFunSuite {
     val d = docsDf(
       1L -> "a b c d e f g",
       2L -> "a b c d e f h")  // J = 4/6 ≈ 0.667
-    assert(pairsOf(Dedup.jaccardPrefixPairs(d, 3, 0.6)) ===
+    assert(prefixPairs(d, 3, 0.6) ===
       Set((1L, 2L)))
-    assert(pairsOf(Dedup.jaccardPrefixPairs(d, 3, 0.7)) === Set())
+    assert(prefixPairs(d, 3, 0.7) === Set())
+  }
+
+  test("cleanup releases the shingle table the pairs read") {
+    val cache = spark.sharedState.cacheManager
+    spark.catalog.clearCache()
+    val (out, cleanup) = Dedup.jaccardPrefixPairs(
+      docsDf(1L -> "a b c d e f g", 2L -> "a b c d e f h"), 3, 0.6)
+    assert(out.count() === 1L)
+    assert(!cache.isEmpty, "the shingle table was not persisted")
+    cleanup()
+    assert(cache.isEmpty, "cleanup left the shingle table cached")
   }
 }

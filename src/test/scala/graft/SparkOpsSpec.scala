@@ -1063,7 +1063,7 @@ class GraftExtensionsSpec extends org.scalatest.funsuite.AnyFunSuite {
     graft.functions.GraftFunctions.registerAll(plain)
     val registered = plain.sessionState.functionRegistry.listFunction()
       .map(_.funcName).filter(_.startsWith("graft_")).sorted
-    assert(registered.size == 9)
+    assert(registered.size == 10)
     assert(probe(0).split(",").toSeq == registered)
     assert(probe(1).toDouble == 25.0) // an injected builder, end to end
   }

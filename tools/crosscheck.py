@@ -49,7 +49,7 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
             return v.isoformat()
         return v
 
-    out = df.applymap(norm_cell)
+    out = df.map(norm_cell)
     out = out.sort_values(by=list(out.columns), key=lambda c: c.map(repr)) \
         if len(out.columns) else out
     return out.reset_index(drop=True)
