@@ -139,4 +139,11 @@ object KmvSketch {
       s"else cast(floor(cast(${k - 1} as double) * " +
       s"1152921504606846976.0D / " +
       s"cast(try_element_at($ks, -1) as double)) as bigint) end"
+
+  /** DuckDB twin of [[estimateSql]] over a sketch read as the count `n`
+    * of its smallest hashes and the largest of them, `kth`.
+    */
+  def duckEstimate(n: String, kth: String, k: Int): String =
+    s"CAST(CASE WHEN $n < $k THEN $n ELSE floor(${k - 1}.0 * " +
+      s"1152921504606846976.0 / CAST($kth AS DOUBLE)) END AS BIGINT)"
 }

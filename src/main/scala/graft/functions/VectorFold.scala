@@ -87,3 +87,13 @@ abstract class VectorFold extends BinaryExpression {
        """.stripMargin
     })
 }
+
+object VectorFold {
+  /** DuckDB twin of the kernels' fold order: the sequential left fold,
+    * from 0.0, of the DOUBLE list expression `list`. `acc` and `x` name
+    * the lambda's parameters (the names change no result).
+    */
+  def duckSum(list: String, acc: String = "acc", x: String = "v"): String =
+    s"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), $list), " +
+      s"($acc, $x) -> $acc + $x)"
+}

@@ -114,6 +114,17 @@ object Bpe {
       .groupBy("sym").agg(sum(col("cnt")).as("cnt"))
   }
 
+  /** DuckDB twin of the word-count table [[learnMerges]] starts from:
+    * `wc(w, cnt)`, then `s0(cnt, ss)` with each word spelled as
+    * space-separated symbols.
+    */
+  private val duckWordSymbols =
+    s"""wc AS (SELECT tok AS w, CAST(COUNT(*) AS BIGINT) AS cnt
+       |  FROM (SELECT unnest(${Hashing.duckTokensSql}) AS tok FROM documents) tt
+       |  GROUP BY 1),
+       |s0 AS (SELECT cnt,
+       |    ' ' || regexp_replace(w, '(.)', '\\1 ', 'g') AS ss FROM wc)""".stripMargin
+
   /** DuckDB oracle for [[symbolCounts]] fed by the merges of
     * [[learnMerges]]`(numMerges)`: replays the training rounds, then
     * histograms the final symbol table `s{n}` (which already carries
@@ -121,12 +132,7 @@ object Bpe {
     */
   def duckEncodeOracle(numMerges: Int): String = {
     val rounds = (1 to numMerges).map(duckRound).mkString(",\n")
-    s"""WITH wc AS (SELECT tok AS w, CAST(COUNT(*) AS BIGINT) AS cnt
-       |  FROM (SELECT unnest(regexp_extract_all(lower(text),
-       |          '[a-z0-9]+')) AS tok FROM documents) tt
-       |  GROUP BY 1),
-       |s0 AS (SELECT cnt,
-       |    ' ' || regexp_replace(w, '(.)', '\\1 ', 'g') AS ss FROM wc),
+    s"""WITH $duckWordSymbols,
        |$rounds
        |SELECT u AS sym, CAST(SUM(cnt) AS BIGINT) AS cnt
        |FROM (SELECT cnt, unnest(string_split(trim(ss), ' ')) AS u
@@ -161,12 +167,7 @@ object Bpe {
       .map(i => s"SELECT CAST($i AS BIGINT) AS step, src, dst, c AS cnt " +
         s"FROM b$i")
       .mkString("\nUNION ALL\n")
-    s"""WITH wc AS (SELECT tok AS w, CAST(COUNT(*) AS BIGINT) AS cnt
-       |  FROM (SELECT unnest(regexp_extract_all(lower(text),
-       |          '[a-z0-9]+')) AS tok FROM documents) tt
-       |  GROUP BY 1),
-       |s0 AS (SELECT cnt,
-       |    ' ' || regexp_replace(w, '(.)', '\\1 ', 'g') AS ss FROM wc),
+    s"""WITH $duckWordSymbols,
        |$rounds
        |$union
        |ORDER BY step""".stripMargin

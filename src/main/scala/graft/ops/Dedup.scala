@@ -247,6 +247,21 @@ object Dedup {
       .as("sig"))
   }
 
+  /** DuckDB twin of [[minhashSignatures]] then [[bandKeys]] over a
+    * shingle CTE `sh(doc_id, shingles)`: CTEs `sig(doc_id, sig)` and
+    * `banded(doc_id, band, bkey)`, md5 family.
+    */
+  def duckMinhashBands(k: Int, bands: Int, rows: Int): String =
+    s"""sig AS (SELECT doc_id, list_transform(range(0, $k), i ->
+       |    list_min(list_transform(shingles, s ->
+       |      ${Hashing.duckMd5Long("CAST(i AS VARCHAR) || ':' || s")}))) AS sig
+       |  FROM sh),
+       |banded AS (SELECT doc_id, bb.b AS band,
+       |    md5(array_to_string(list_transform(
+       |      sig[bb.b * $rows + 1 : bb.b * $rows + $rows],
+       |      x -> CAST(x AS VARCHAR)), ',')) AS bkey
+       |  FROM sig CROSS JOIN (SELECT unnest(range(0, $bands)) AS b) bb)""".stripMargin
+
   /** (doc_id, band, bkey) — one row per signature band, bkey = md5 of
     * the band's `rows` signature slots. Per-row expression (explode of a
     * computed array), no shuffle; the shared banding step of the batch

@@ -23,6 +23,11 @@ object EventAnalytics {
 
   private[graft] val DayUs = 86400000000L
 
+  /** DuckDB twin of the day bucket `ts_us div DayUs` that [[daily]]
+    * keys on, read off the raw `events.ts`.
+    */
+  val duckDay: String = s"epoch_us(ts) // $DayUs"
+
   /** Ordered-step funnel: for each prefix of `steps`, the number of
     * users who performed those event types IN ORDER (strictly
     * increasing timestamps; ties on ts broken by event id so both

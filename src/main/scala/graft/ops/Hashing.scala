@@ -38,9 +38,17 @@ object Hashing {
 
   /** Engine tokenizer over the string SQL expression `c`, as a SQL
     * expression — MUST stay in sync with graft.textfn.Text.tokenize and
-    * the DuckDB oracle regex.
+    * its DuckDB twin [[duckTokens]].
     */
   def tokens(c: String = "text"): String =
     s"regexp_extract_all(lower($c), '[a-z0-9]+', 0)"
   val tokensSql: String = tokens()
+
+  /** DuckDB twin of [[tokens]]: the one spelling of the tokenizer in
+    * every gate oracle (DuckDB's `regexp_extract_all` defaults to the
+    * whole match, Spark's to group 1 — hence no group argument here).
+    */
+  def duckTokens(c: String = "text"): String =
+    s"regexp_extract_all(lower($c), '[a-z0-9]+')"
+  val duckTokensSql: String = duckTokens()
 }

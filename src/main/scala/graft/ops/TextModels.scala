@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ops.Pins.PinSyntax
@@ -18,6 +18,30 @@ import graft.ops.Pins.PinSyntax
   */
 object TextModels {
 
+  /** idf = ln(N / df), rounded to 6 places, over the columns `n_docs`
+    * and `df`.
+    */
+  private[graft] def idf: Column =
+    round(log(col("n_docs").cast("double") / col("df")), 6)
+
+  /** The BM25 idf of a term that `df` of the `nd` documents hold, as a
+    * SQL expression rounded to 6 places.
+    */
+  private def bm25IdfSql(df: String): String =
+    s"round(ln(1.0 + (cast(nd as double) - cast($df as double) + 0.5) / " +
+      s"(cast($df as double) + 0.5)), 6)"
+
+  /** One BM25 term: the idf times the frequency `tf` normalized by the
+    * document's `len` against the mean length `sl / nd`. Structure
+    * mirrors the oracle SQL text exactly, so the IEEE op sequence is
+    * identical on both engines.
+    */
+  private def bm25TermSql(tf: String, df: String, k1: Double,
+      b: Double): String =
+    s"${bm25IdfSql(df)} * (cast($tf as double) * ${k1 + 1.0})" +
+      s" / (cast($tf as double) + $k1 * (1.0 - $b + $b *" +
+      s" (cast(len as double) / (cast(sl as double) / cast(nd as double)))))"
+
   /** F12 / ref TermIdfs (text.py:152-168): idf = ln(N / df) over the
     * corpus token vocabulary, keeping terms with df > `minDf` (the ref's
     * `TermDocumentFrequencies` floor; its default 2 assumes web-scale
@@ -33,8 +57,7 @@ object TextModels {
       .filter(col("df") > minDf)
     val n = docs.agg(count(lit(1)).as("n_docs"))
     dfreq.crossJoin(n) // 1-row broadcast, not a real cross product
-      .select(col("tok"),
-        round(log(col("n_docs").cast("double") / col("df")), 6).as("idf"))
+      .select(col("tok"), idf.as("idf"))
   }
 
   /** EntityMentionTermFrequency (ref text.py:170-206, fixing ref defect
@@ -274,14 +297,7 @@ object TextModels {
       count(lit(1)).as("nd")) ++ idx.map(i =>
       sum(when(col(s"tf_$i") > 0, 1L).otherwise(0L)).as(s"df_$i"))
     val stats = perDoc.agg(statAggs.head, statAggs.tail: _*)
-    // per-term score: structure mirrors the oracle SQL text exactly so
-    // the IEEE op sequence is identical on both engines
-    def term(i: Int): org.apache.spark.sql.Column = expr(
-      s"round(ln(1.0 + (cast(nd as double) - cast(df_$i as double) + 0.5)" +
-        s" / (cast(df_$i as double) + 0.5)), 6)" +
-        s" * (cast(tf_$i as double) * ${k1 + 1.0})" +
-        s" / (cast(tf_$i as double) + $k1 * (1.0 - $b + $b *" +
-        s" (cast(len as double) / (cast(sl as double) / cast(nd as double)))))")
+    def term(i: Int): Column = expr(bm25TermSql(s"tf_$i", s"df_$i", k1, b))
     perDoc.crossJoin(broadcast(stats))
       .filter(idx.map(i => col(s"tf_$i") > 0).reduce(_ || _))
       .select(col("doc_id"),
@@ -379,12 +395,7 @@ object TextModels {
       .join(lens, Seq("doc_id"))
       .crossJoin(broadcast(stats))
       .withColumn("tscore", expr(
-        "cast(round(round(ln(1.0 + (cast(nd as double) - " +
-          "cast(df as double) + 0.5) / (cast(df as double) + 0.5)), 6)" +
-          s" * (cast(tf as double) * ${k1 + 1.0})" +
-          s" / (cast(tf as double) + $k1 * (1.0 - $b + $b *" +
-          " (cast(len as double) / (cast(sl as double) /" +
-          " cast(nd as double))))), 6) as decimal(18,6))"))
+        s"cast(round(${bm25TermSql("tf", "df", k1, b)}, 6) as decimal(18,6))"))
       .groupBy("doc_id").agg(sum(col("tscore")).as("s"))
       .select(col("doc_id"), round(col("s").cast("double"), 6).as("score"))
       .orderBy(desc("score"), asc("doc_id"))
@@ -485,10 +496,8 @@ object TextModels {
       .filter(!col("tok").isInCollection(seeds))
       .join(dfAll, Seq("tok"))
       .crossJoin(broadcast(nd))
-      .withColumn("escore", expr(
-        "round(cast(ftf as double) * round(ln(1.0 + " +
-          "(cast(nd as double) - cast(df as double) + 0.5) / " +
-          "(cast(df as double) + 0.5)), 6), 6)"))
+      .withColumn("escore",
+        expr(s"round(cast(ftf as double) * ${bm25IdfSql("df")}, 6)"))
       .orderBy(desc("escore"), asc("tok")).limit(mTerms)
       .select(col("tok").as("term"))
     val terms = expansion.unionByName(
@@ -546,10 +555,8 @@ object TextModels {
     val dfreq = tf.groupBy("tok").agg(count(lit(1)).as("df"))
       .filter(col("df") > minDf && col("df") <= maxDf)
     val n = docs.agg(count(lit(1)).as("n_docs"))
-    val idf = dfreq.crossJoin(broadcast(n))
-      .select(col("tok"),
-        round(log(col("n_docs").cast("double") / col("df")), 6).as("idf"))
-    val w = tf.join(idf, "tok")
+    val idfs = dfreq.crossJoin(broadcast(n)).select(col("tok"), idf.as("idf"))
+    val w = tf.join(idfs, "tok")
       .select(col("doc_id"), col("tok"),
         (sqrt(col("tf").cast("double")) * col("idf")).as("wt"))
     // a zero norm is reachable (every surviving term with idf = 0,

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.ops.{EventAnalytics, Hashing, TextModels}
 import graft.queries.Tables.t
+import graft.ops.Hashing.duckTokensSql
 
 /** Event-stream product analytics and held-out language-model scoring
   * gates: funnel progression, retention cohorts, calendar gap-fill,
@@ -24,6 +25,43 @@ object Analytics extends QueryModule {
   private[queries] val FunnelSteps = Seq("signup", "click", "purchase")
   private[queries] val FunnelWindowUs = 259200000000L // 3 days
   private[queries] val SeqTopK = 20
+
+  /** DuckDB twin of the calendar that [[EventAnalytics.fillDaily]]
+    * zero-fills over: CTE `grid(<cols> day)`, one row per day of each
+    * `from` row's [d0, d1] span (`cols` lists the key columns, each
+    * with its trailing comma).
+    */
+  private def duckGrid(cols: String, from: String): String =
+    s"grid AS (SELECT ${cols}unnest(generate_series(d0, d1)) AS day " +
+      s"FROM $from)"
+
+  /** [[duckGrid]] per event type, over `daily(k, day, …)`. */
+  private val duckKeyedGrid = duckGrid("k, ",
+    "(SELECT k, MIN(day) AS d0, MAX(day) AS d1 FROM daily GROUP BY 1)")
+
+  /** DuckDB twin of [[EventAnalytics.daily]] then
+    * [[EventAnalytics.fillDaily]] per event type: `daily(k, day, n)`,
+    * the [[duckKeyedGrid]] and the zero-filled series `g(k, day, n)`.
+    */
+  private val duckDailySeries =
+    s"""daily AS (
+       |  SELECT event_type AS k, ${EventAnalytics.duckDay} AS day,
+       |    CAST(COUNT(*) AS BIGINT) AS n
+       |  FROM events GROUP BY 1, 2),
+       |$duckKeyedGrid,
+       |g AS (SELECT gr.k, gr.day, COALESCE(d.n, 0) AS n
+       |  FROM grid gr LEFT JOIN daily d
+       |    ON gr.k = d.k AND gr.day = d.day)""".stripMargin
+
+  /** Spark's `round(double, d)`: HALF_UP on the double's shortest
+    * decimal rendering. DuckDB's own `round(double, d)` scales by 10^d
+    * in binary first, so a double just short of a tie rounds past it:
+    * at sf0.1 the `sim_pca_*` mean of dim 63 is
+    * -0.0013534414999999999, which Spark rounds to -0.001353441 and
+    * DuckDB's `round` to -0.001353442.
+    */
+  private def duckRoundShortest(x: String, d: Int): String =
+    s"round(CAST(CAST($x AS VARCHAR) AS DECIMAL(38,24)), $d)"
 
   /** Shared WITH-body of the sim_pca_power / sim_pca_debias oracles:
     * the long-form decomposition, centering, and all six unrolled
@@ -59,8 +97,9 @@ object Analytics extends QueryModule {
                 AS t
               FROM embeddings)),
       mu AS MATERIALIZED (SELECT dim,
-          CAST(round(CAST(SUM(x) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE),
-            9) AS DECIMAL(18,9)) AS mu
+          CAST(${duckRoundShortest(
+            "CAST(SUM(x) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)", 9)}
+            AS DECIMAL(18,9)) AS mu
         FROM xs GROUP BY 1),
       cx AS MATERIALIZED (SELECT vec_id, xs.dim,
           CAST(x - mu AS DECIMAL(18,9)) AS c
@@ -80,9 +119,8 @@ object Analytics extends QueryModule {
     QueryDef("e_funnel_steps", (s, d) => {
       EventAnalytics.funnel(
         Tables.events(s, d), Seq("signup", "click", "purchase"))
-    }, Some("""
-      WITH e AS (SELECT user_id, event_id, event_type, epoch_us(ts) AS ts_us
-                 FROM events),
+    }, Some(s"""
+      WITH ${Tables.duckEventsCte},
       r0 AS (SELECT user_id, ts_us AS reach_ts, event_id AS reach_id FROM e
              WHERE event_type = 'signup'
              QUALIFY ROW_NUMBER() OVER (PARTITION BY user_id
@@ -141,16 +179,14 @@ object Analytics extends QueryModule {
     // double is engine-identical.
     QueryDef("e_gapfill_daily", (s, d) => {
       EventAnalytics.gapFillDaily(Tables.events(s, d), "event_type")
-    }, Some("""
+    }, Some(s"""
       WITH daily AS (
-        SELECT event_type AS k, epoch_us(ts) // 86400000000 AS day,
+        SELECT event_type AS k, ${EventAnalytics.duckDay} AS day,
           CAST(COUNT(*) AS BIGINT) AS n_events,
           round(CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) /
             CAST(COUNT(*) AS DOUBLE), 6) AS day_value
         FROM events GROUP BY 1, 2),
-      grid AS (SELECT k, unnest(generate_series(d0, d1)) AS day
-               FROM (SELECT k, MIN(day) AS d0, MAX(day) AS d1
-                     FROM daily GROUP BY 1)),
+      $duckKeyedGrid,
       j AS (SELECT g.k, g.day, COALESCE(d.n_events, 0) AS n_events,
               d.day_value
             FROM grid g LEFT JOIN daily d ON g.k = d.k AND g.day = d.day),
@@ -168,14 +204,12 @@ object Analytics extends QueryModule {
     // through one fixed IEEE expression — bit-identical cross-engine.
     QueryDef("e_rolling_anomaly", (s, d) => {
       EventAnalytics.rollingAnomalies(Tables.events(s, d), "event_type")
-    }, Some("""
+    }, Some(s"""
       WITH daily AS (
-        SELECT event_type AS k, epoch_us(ts) // 86400000000 AS day,
+        SELECT event_type AS k, ${EventAnalytics.duckDay} AS day,
           CAST(COUNT(*) AS BIGINT) AS n_events
         FROM events GROUP BY 1, 2),
-      grid AS (SELECT k, unnest(generate_series(d0, d1)) AS day
-               FROM (SELECT k, MIN(day) AS d0, MAX(day) AS d1
-                     FROM daily GROUP BY 1)),
+      $duckKeyedGrid,
       g AS (SELECT gr.k, gr.day, COALESCE(d.n_events, 0) AS n
             FROM grid gr LEFT JOIN daily d
               ON gr.k = d.k AND gr.day = d.day),
@@ -209,17 +243,8 @@ object Analytics extends QueryModule {
     // DECIMAL before the per-key cumulative window.
     QueryDef("e_acf_ljung_box", (s, d) => {
       EventAnalytics.acfLjungBox(Tables.events(s, d), "event_type")
-    }, Some("""
-      WITH daily AS (
-        SELECT event_type AS k, epoch_us(ts) // 86400000000 AS day,
-          CAST(COUNT(*) AS BIGINT) AS n
-        FROM events GROUP BY 1, 2),
-      grid AS (SELECT k, unnest(generate_series(d0, d1)) AS day
-               FROM (SELECT k, MIN(day) AS d0, MAX(day) AS d1
-                     FROM daily GROUP BY 1)),
-      g AS (SELECT gr.k, gr.day, COALESCE(d.n, 0) AS n
-            FROM grid gr LEFT JOIN daily d
-              ON gr.k = d.k AND gr.day = d.day),
+    }, Some(s"""
+      WITH $duckDailySeries,
       st AS (SELECT k, CAST(COUNT(*) AS BIGINT) AS nd,
                (1000000 * CAST(SUM(n) AS BIGINT)) //
                  CAST(COUNT(*) AS BIGINT) AS mu6
@@ -258,17 +283,8 @@ object Analytics extends QueryModule {
     // expression.
     QueryDef("e_mann_kendall", (s, d) => {
       EventAnalytics.mannKendall(Tables.events(s, d), "event_type")
-    }, Some("""
-      WITH daily AS (
-        SELECT event_type AS k, epoch_us(ts) // 86400000000 AS day,
-          CAST(COUNT(*) AS BIGINT) AS n
-        FROM events GROUP BY 1, 2),
-      grid AS (SELECT k, unnest(generate_series(d0, d1)) AS day
-               FROM (SELECT k, MIN(day) AS d0, MAX(day) AS d1
-                     FROM daily GROUP BY 1)),
-      g AS (SELECT gr.k, gr.day, COALESCE(d.n, 0) AS n
-            FROM grid gr LEFT JOIN daily d
-              ON gr.k = d.k AND gr.day = d.day),
+    }, Some(s"""
+      WITH $duckDailySeries,
       sf AS (SELECT a.k,
                CAST(SUM(CAST(sign(b.n - a.n) AS BIGINT)) AS BIGINT) AS s
              FROM g a JOIN g b ON b.k = a.k AND b.day > a.day
@@ -300,16 +316,7 @@ object Analytics extends QueryModule {
     QueryDef("e_pacf_ar2", (s, d) => {
       EventAnalytics.pacfYuleWalker(Tables.events(s, d), "event_type")
     }, Some(s"""
-      WITH daily AS (
-        SELECT event_type AS k, epoch_us(ts) // 86400000000 AS day,
-          CAST(COUNT(*) AS BIGINT) AS n
-        FROM events GROUP BY 1, 2),
-      grid AS (SELECT k, unnest(generate_series(d0, d1)) AS day
-               FROM (SELECT k, MIN(day) AS d0, MAX(day) AS d1
-                     FROM daily GROUP BY 1)),
-      g AS (SELECT gr.k, gr.day, COALESCE(d.n, 0) AS n
-            FROM grid gr LEFT JOIN daily d
-              ON gr.k = d.k AND gr.day = d.day),
+      WITH $duckDailySeries,
       st AS (SELECT k, CAST(COUNT(*) AS BIGINT) AS nd,
                (1000000 * CAST(SUM(n) AS BIGINT)) //
                  CAST(COUNT(*) AS BIGINT) AS mu6
@@ -350,17 +357,8 @@ object Analytics extends QueryModule {
     // engines.
     QueryDef("e_page_hinkley", (s, d) => {
       EventAnalytics.pageHinkley(Tables.events(s, d), "event_type")
-    }, Some("""
-      WITH daily AS (
-        SELECT event_type AS k, epoch_us(ts) // 86400000000 AS day,
-          CAST(COUNT(*) AS BIGINT) AS n
-        FROM events GROUP BY 1, 2),
-      grid AS (SELECT k, unnest(generate_series(d0, d1)) AS day
-               FROM (SELECT k, MIN(day) AS d0, MAX(day) AS d1
-                     FROM daily GROUP BY 1)),
-      g AS (SELECT gr.k, gr.day, COALESCE(d.n, 0) AS n
-            FROM grid gr LEFT JOIN daily d
-              ON gr.k = d.k AND gr.day = d.day),
+    }, Some(s"""
+      WITH $duckDailySeries,
       st AS (SELECT k, CAST(COUNT(*) AS BIGINT) AS nd,
                CAST(SUM(n) AS BIGINT) AS s,
                CAST(round(CAST(SUM(n) AS DOUBLE) /
@@ -403,17 +401,8 @@ object Analytics extends QueryModule {
     // products of the selected slope.
     QueryDef("e_theil_sen", (s, d) => {
       EventAnalytics.theilSen(Tables.events(s, d), "event_type")
-    }, Some("""
-      WITH daily AS (
-        SELECT event_type AS k, epoch_us(ts) // 86400000000 AS day,
-          CAST(COUNT(*) AS BIGINT) AS n
-        FROM events GROUP BY 1, 2),
-      grid AS (SELECT k, unnest(generate_series(d0, d1)) AS day
-               FROM (SELECT k, MIN(day) AS d0, MAX(day) AS d1
-                     FROM daily GROUP BY 1)),
-      g AS (SELECT gr.k, gr.day, COALESCE(d.n, 0) AS n
-            FROM grid gr LEFT JOIN daily d
-              ON gr.k = d.k AND gr.day = d.day),
+    }, Some(s"""
+      WITH $duckDailySeries,
       p AS (SELECT a.k, a.day AS da, b.day AS db,
               CAST(round(CAST(b.n - a.n AS DOUBLE) /
                 CAST(b.day - a.day AS DOUBLE), 9) AS DECIMAL(18,9)) AS sl
@@ -448,17 +437,8 @@ object Analytics extends QueryModule {
     // e_acf_ljung_box asks lag-by-lag.
     QueryDef("e_durbin_watson", (s, d) => {
       EventAnalytics.durbinWatson(Tables.events(s, d), "event_type")
-    }, Some("""
-      WITH daily AS (
-        SELECT event_type AS k, epoch_us(ts) // 86400000000 AS day,
-          CAST(COUNT(*) AS BIGINT) AS n
-        FROM events GROUP BY 1, 2),
-      grid AS (SELECT k, unnest(generate_series(d0, d1)) AS day
-               FROM (SELECT k, MIN(day) AS d0, MAX(day) AS d1
-                     FROM daily GROUP BY 1)),
-      g AS (SELECT gr.k, gr.day, COALESCE(d.n, 0) AS n
-            FROM grid gr LEFT JOIN daily d
-              ON gr.k = d.k AND gr.day = d.day),
+    }, Some(s"""
+      WITH $duckDailySeries,
       m0 AS (SELECT k, MIN(day) AS d0 FROM g GROUP BY 1),
       xy AS (SELECT g.k, g.day, g.day - m0.d0 AS x, g.n AS y
              FROM g JOIN m0 ON g.k = m0.k),
@@ -501,17 +481,8 @@ object Analytics extends QueryModule {
     // window sums, DECIMAL detrended values, honest null edges.
     QueryDef("e_stl_decompose", (s, d) => {
       EventAnalytics.stlDecompose(Tables.events(s, d), "event_type")
-    }, Some("""
-      WITH daily AS (
-        SELECT event_type AS k, epoch_us(ts) // 86400000000 AS day,
-          CAST(COUNT(*) AS BIGINT) AS n
-        FROM events GROUP BY 1, 2),
-      grid AS (SELECT k, unnest(generate_series(d0, d1)) AS day
-               FROM (SELECT k, MIN(day) AS d0, MAX(day) AS d1
-                     FROM daily GROUP BY 1)),
-      g AS (SELECT gr.k, gr.day, COALESCE(d.n, 0) AS n
-            FROM grid gr LEFT JOIN daily d
-              ON gr.k = d.k AND gr.day = d.day),
+    }, Some(s"""
+      WITH $duckDailySeries,
       t AS (SELECT k, day, n,
               COUNT(*) OVER c AS n_obs, SUM(n) OVER c AS s7
             FROM g WINDOW c AS (PARTITION BY k ORDER BY day
@@ -830,9 +801,9 @@ object Analytics extends QueryModule {
     // table. One explode → one (doc, bucket) aggregate.
     QueryDef("m_feature_hash", (s, d) => {
       TextModels.featureHash(docs(s, d), 256)
-    }, Some("""
+    }, Some(s"""
       WITH toks AS (SELECT doc_id,
-             unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok
+             unnest($duckTokensSql) AS tok
            FROM documents),
       h AS (SELECT doc_id,
               CAST(('0x' || substring(md5(tok),1,15)) AS BIGINT) % 256
@@ -885,9 +856,8 @@ object Analytics extends QueryModule {
     QueryDef("pipe_event_insights", (s, d) => {
       EventAnalytics.sessionInsights(Tables.events(s, d),
         600000000L, Seq("signup", "click", "purchase"))
-    }, Some("""
-      WITH e AS (SELECT user_id, event_id, event_type,
-                   epoch_us(ts) AS ts_us FROM events),
+    }, Some(s"""
+      WITH ${Tables.duckEventsCte},
       flg AS (SELECT user_id, event_id, event_type, ts_us,
           CASE WHEN lag(ts_us) OVER w IS NULL
                  OR ts_us - lag(ts_us) OVER w > 600000000 THEN 1
@@ -928,8 +898,7 @@ object Analytics extends QueryModule {
                   CAST(SUM(CASE WHEN conv THEN 1 ELSE 0 END) AS BIGINT)
                     AS n_converted
                 FROM conv GROUP BY 1),
-      grid AS (SELECT unnest(generate_series(d0, d1)) AS day
-               FROM (SELECT MIN(day) AS d0, MAX(day) AS d1 FROM daily)),
+      ${duckGrid("", "(SELECT MIN(day) AS d0, MAX(day) AS d1 FROM daily)")},
       g AS (SELECT grid.day, COALESCE(d.n_sessions, 0) AS n_sessions,
               COALESCE(d.n_converted, 0) AS n_converted
             FROM grid LEFT JOIN daily d ON grid.day = d.day),
@@ -1071,9 +1040,9 @@ object Analytics extends QueryModule {
     // stickiness.
     QueryDef("e_active_users", (s, d) => {
       EventAnalytics.activeUsers(Tables.events(s, d))
-    }, Some("""
+    }, Some(s"""
       WITH acts AS (SELECT DISTINCT user_id,
-              epoch_us(ts) // 86400000000 AS day FROM events),
+              ${EventAnalytics.duckDay} AS day FROM events),
       span AS (SELECT MIN(day) AS d0, MAX(day) AS d1 FROM acts),
       fan AS (SELECT user_id, day, day + off.o AS anchor
               FROM acts
@@ -1086,7 +1055,7 @@ object Analytics extends QueryModule {
                 AS wau FROM fan WHERE anchor - day <= 6 GROUP BY 1),
       dau AS (SELECT day, CAST(COUNT(DISTINCT user_id) AS BIGINT)
                 AS dau FROM acts GROUP BY 1),
-      grid AS (SELECT unnest(generate_series(d0, d1)) AS day FROM span)
+      ${duckGrid("", "span")}
       SELECT g.day AS day, COALESCE(d.dau, 0) AS dau,
         COALESCE(w.wau, 0) AS wau, COALESCE(m.mau, 0) AS mau,
         CASE WHEN COALESCE(m.mau, 0) > 0 THEN
@@ -1150,9 +1119,8 @@ object Analytics extends QueryModule {
     QueryDef("e_time_to_convert", (s, d) => {
       EventAnalytics.timeToConvert(Tables.events(s, d),
         "signup", "purchase")
-    }, Some("""
-      WITH e AS (SELECT user_id, event_id, event_type, epoch_us(ts)
-                   AS ts_us FROM events),
+    }, Some(s"""
+      WITH ${Tables.duckEventsCte},
       f AS (SELECT user_id, ts_us AS from_ts, event_id AS from_id
             FROM e WHERE event_type = 'signup'
             QUALIFY ROW_NUMBER() OVER (PARTITION BY user_id
@@ -1181,9 +1149,8 @@ object Analytics extends QueryModule {
     // the entry distribution.
     QueryDef("e_transitions", (s, d) => {
       EventAnalytics.transitionMatrix(Tables.events(s, d))
-    }, Some("""
-      WITH e AS (SELECT user_id, event_id, event_type, epoch_us(ts)
-                   AS ts_us FROM events),
+    }, Some(s"""
+      WITH ${Tables.duckEventsCte},
       p AS (SELECT COALESCE(lag(event_type, 1) OVER (
                 PARTITION BY user_id ORDER BY ts_us, event_id),
                 '__start__') AS from_type,
@@ -1203,9 +1170,8 @@ object Analytics extends QueryModule {
     // total (count desc, path asc) order.
     QueryDef("e_top_paths", (s, d) => {
       EventAnalytics.topPaths(Tables.events(s, d), 3, 20)
-    }, Some("""
-      WITH e AS (SELECT user_id, event_id, event_type, epoch_us(ts)
-                   AS ts_us FROM events),
+    }, Some(s"""
+      WITH ${Tables.duckEventsCte},
       g AS (SELECT lag(event_type, 2) OVER w AS w2,
               lag(event_type, 1) OVER w AS w1, event_type AS w0
             FROM e WINDOW w AS (PARTITION BY user_id
@@ -1456,10 +1422,9 @@ object Analytics extends QueryModule {
     // diagnostic (natural text ≈ −1).
     QueryDef("t_zipf_fit", (s, d) => {
       graft.ops.TextAnalysis.zipfFit(docs(s, d))
-    }, Some("""
+    }, Some(s"""
       WITH tc AS (SELECT tok, CAST(COUNT(*) AS BIGINT) AS cnt FROM (
-              SELECT unnest(regexp_extract_all(lower(text),
-                '[a-z0-9]+')) AS tok FROM documents) GROUP BY 1),
+              SELECT unnest($duckTokensSql) AS tok FROM documents) GROUP BY 1),
       r AS (SELECT cnt,
               ROW_NUMBER() OVER (ORDER BY cnt DESC, tok) AS rk FROM tc),
       p AS (SELECT
@@ -1496,10 +1461,9 @@ object Analytics extends QueryModule {
     // two final IEEE divisions.
     QueryDef("t_vocab_chao1", (s, d) => {
       graft.ops.TextAnalysis.vocabChao1(docs(s, d))
-    }, Some("""
+    }, Some(s"""
       WITH tc AS (SELECT tok, CAST(COUNT(*) AS BIGINT) AS cnt FROM (
-              SELECT unnest(regexp_extract_all(lower(text),
-                '[a-z0-9]+')) AS tok FROM documents) GROUP BY 1),
+              SELECT unnest($duckTokensSql) AS tok FROM documents) GROUP BY 1),
       a AS (SELECT CAST(SUM(cnt) AS BIGINT) AS n_tokens,
               CAST(COUNT(*) AS BIGINT) AS v_obs,
               CAST(SUM(CASE WHEN cnt = 1 THEN 1 ELSE 0 END) AS BIGINT)
@@ -1523,9 +1487,8 @@ object Analytics extends QueryModule {
     // counts + shares, total broadcast.
     QueryDef("e_attribution", (s, d) => {
       EventAnalytics.lastTouchAttribution(Tables.events(s, d), "purchase")
-    }, Some("""
-      WITH e AS (SELECT user_id, event_id, event_type, epoch_us(ts)
-                   AS ts_us FROM events),
+    }, Some(s"""
+      WITH ${Tables.duckEventsCte},
       m AS (SELECT user_id, event_id, event_type, ts_us,
               CASE WHEN event_type <> 'purchase' THEN event_type END AS t
             FROM e),
@@ -1550,9 +1513,8 @@ object Analytics extends QueryModule {
     QueryDef("e_funnel_windowed", (s, d) => {
       EventAnalytics.windowedFunnel(Tables.events(s, d), FunnelSteps,
         FunnelWindowUs)
-    }, Some("""
-      WITH e AS (SELECT user_id, event_id, event_type, epoch_us(ts)
-                   AS ts_us FROM events),
+    }, Some(s"""
+      WITH ${Tables.duckEventsCte},
       r0 AS (SELECT user_id, ts_us AS reach_ts, event_id AS reach_id,
                ts_us AS anchor FROM e
              WHERE event_type = 'signup'
@@ -1593,9 +1555,8 @@ object Analytics extends QueryModule {
     // credit-conserving twin of the last-touch gate.
     QueryDef("e_attribution_linear", (s, d) => {
       EventAnalytics.linearAttribution(Tables.events(s, d), "purchase")
-    }, Some("""
-      WITH e AS (SELECT user_id, event_id, event_type, epoch_us(ts)
-                   AS ts_us FROM events),
+    }, Some(s"""
+      WITH ${Tables.duckEventsCte},
       m AS (SELECT *, CASE WHEN event_type <> 'purchase'
               THEN event_type END AS t FROM e),
       c AS (SELECT *, COUNT(t) OVER (PARTITION BY user_id
@@ -1629,9 +1590,8 @@ object Analytics extends QueryModule {
     // so every fold is order-exact.
     QueryDef("e_attribution_ushape", (s, d) => {
       EventAnalytics.uShapeAttribution(Tables.events(s, d), "purchase")
-    }, Some("""
-      WITH e AS (SELECT user_id, event_id, event_type, epoch_us(ts)
-                   AS ts_us FROM events),
+    }, Some(s"""
+      WITH ${Tables.duckEventsCte},
       m AS (SELECT *, CASE WHEN event_type <> 'purchase'
               THEN event_type END AS t FROM e),
       c AS (SELECT *, COUNT(t) OVER (PARTITION BY user_id
@@ -1757,10 +1717,9 @@ object Analytics extends QueryModule {
     // (chi2 desc, term asc).
     QueryDef("m_chi2_terms", (s, d) => {
       TextModels.chi2Terms(docs(s, d), "lang", 20)
-    }, Some("""
+    }, Some(s"""
       WITH pres AS (SELECT DISTINCT doc_id, lang AS lbl,
-              unnest(list_distinct(regexp_extract_all(lower(text),
-                '[a-z0-9]+'))) AS term
+              unnest(list_distinct($duckTokensSql)) AS term
             FROM documents),
       btl AS (SELECT term, lbl, CAST(COUNT(*) AS BIGINT) AS o1
               FROM pres GROUP BY 1, 2),
@@ -1833,9 +1792,8 @@ object Analytics extends QueryModule {
     // index (maxDf = the quadratic-hazard prune); top-20 pairs.
     QueryDef("m_tfidf_neighbors", (s, d) => {
       TextModels.tfidfNeighbors(docs(s, d), 20, minDf = 2, maxDf = 50)
-    }, Some("""
-      WITH tk AS (SELECT doc_id, unnest(regexp_extract_all(lower(text),
-              '[a-z0-9]+')) AS tok FROM documents),
+    }, Some(s"""
+      WITH tk AS (SELECT doc_id, unnest($duckTokensSql) AS tok FROM documents),
       tf AS (SELECT doc_id, tok, CAST(COUNT(*) AS BIGINT) AS tf
              FROM tk GROUP BY 1, 2),
       dfq AS (SELECT tok, CAST(COUNT(*) AS BIGINT) AS df FROM tf
@@ -1866,9 +1824,9 @@ object Analytics extends QueryModule {
     // sums, exact replay.
     QueryDef("t_trigram_backoff", (s, d) => {
       TextModels.trigramBackoffNll(docs(s, d))
-    }, Some("""
+    }, Some(s"""
       WITH dd AS (SELECT doc_id,
-             regexp_extract_all(lower(text), '[a-z0-9]+') AS tk,
+             $duckTokensSql AS tk,
              CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR)),1,15))
                AS BIGINT) % 2 AS par
            FROM documents),
@@ -1923,9 +1881,9 @@ object Analytics extends QueryModule {
     // engines, so the argmax (score desc, label asc) cannot race.
     QueryDef("m_naive_bayes", (s, d) => {
       TextModels.naiveBayes(docs(s, d), "lang")
-    }, Some("""
+    }, Some(s"""
       WITH lab AS (SELECT doc_id, lang AS lbl,
-             regexp_extract_all(lower(text), '[a-z0-9]+') AS tk,
+             $duckTokensSql AS tk,
              CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR)),1,15))
                AS BIGINT) % 2 AS par
            FROM documents WHERE lang IS NOT NULL),
@@ -1975,8 +1933,8 @@ object Analytics extends QueryModule {
     // (,6) BEFORE the order-by so libm ulps cannot reorder the cut.
     QueryDef("t_collocations", (s, d) => {
       graft.ops.TextAnalysis.collocations(docs(s, d), 5, 20)
-    }, Some("""
-      WITH tkk AS (SELECT regexp_extract_all(lower(text), '[a-z0-9]+')
+    }, Some(s"""
+      WITH tkk AS (SELECT $duckTokensSql
                AS tk FROM documents),
       uni AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS cu
               FROM (SELECT unnest(tk) AS w FROM tkk) GROUP BY 1),
@@ -2037,7 +1995,7 @@ object Analytics extends QueryModule {
           ") as double) >= 0.6D then 'good' else 'bad' end end")
           .as("r_ttr"))
       graft.ops.Stats.cohensKappa(dd, "r_len", "r_ttr")
-    }, Some("""
+    }, Some(s"""
       WITH r AS (SELECT
              CASE WHEN n_chars >= 306 THEN 'good' ELSE 'bad' END AS a,
              CASE WHEN len(tk) > 0 THEN CASE WHEN
@@ -2045,7 +2003,7 @@ object Analytics extends QueryModule {
                CAST(len(tk) AS DOUBLE) >= 0.6 THEN 'good'
                ELSE 'bad' END END AS b
            FROM (SELECT n_chars,
-                   regexp_extract_all(lower(text), '[a-z0-9]+') AS tk
+                   $duckTokensSql AS tk
                  FROM documents)),
       cc AS (SELECT a, b FROM r
              WHERE a IS NOT NULL AND b IS NOT NULL),
@@ -2084,7 +2042,7 @@ object Analytics extends QueryModule {
         col("lang") === "en", 1024)
     }, Some(s"""
       WITH toks AS (SELECT doc_id, lang = 'en' AS is_t,
-             unnest(regexp_extract_all(lower(text), '[a-z0-9]+'))
+             unnest($duckTokensSql)
                AS term
            FROM documents),
       tb AS (SELECT doc_id, is_t,
@@ -2116,12 +2074,11 @@ object Analytics extends QueryModule {
     // moments, closed-form readout.
     QueryDef("t_heaps_fit", (s, d) => {
       graft.ops.TextAnalysis.heapsFit(docs(s, d))
-    }, Some("""
+    }, Some(s"""
       WITH tp AS (SELECT doc_id, unnest(list_transform(
                range(1, len(tk) + 1), i -> {'pos': i, 'tok': tk[i]}))
                AS u
-             FROM (SELECT doc_id, regexp_extract_all(lower(text),
-                     '[a-z0-9]+') AS tk FROM documents) z),
+             FROM (SELECT doc_id, $duckTokensSql AS tk FROM documents) z),
       toks AS (SELECT doc_id, u.pos AS pos, u.tok AS tok FROM tp),
       o AS (SELECT tok, ROW_NUMBER() OVER (ORDER BY doc_id, pos) AS i
             FROM toks),
@@ -2171,7 +2128,7 @@ object Analytics extends QueryModule {
            SELECT unnest(list_transform(
              range(1, greatest(len(tk) - ${n - 1}, 0) + 1),
              i -> array_to_string(tk[i:i+${n - 1}], ' '))) AS gram
-           FROM (SELECT regexp_extract_all(lower(text), '[a-z0-9]+')
+           FROM (SELECT $duckTokensSql
                    AS tk FROM documents) z) g
            GROUP BY gram) gc"""
     }.mkString("\nUNION ALL\n") + "\nORDER BY n")),
@@ -2187,7 +2144,7 @@ object Analytics extends QueryModule {
         col("lang") === "en", 1024)
     }, Some(s"""
       WITH toks AS (SELECT lang = 'en' AS is_p,
-             unnest(regexp_extract_all(lower(text), '[a-z0-9]+'))
+             unnest($duckTokensSql)
                AS term
            FROM documents),
       tb AS (SELECT is_p,
@@ -2369,14 +2326,12 @@ object Analytics extends QueryModule {
     // readout, so both engines hold identical integers throughout.
     QueryDef("e_cusum_changepoint", (s, d) => {
       EventAnalytics.cusumChangepoint(Tables.events(s, d), "event_type")
-    }, Some("""
+    }, Some(s"""
       WITH daily AS (
-        SELECT event_type AS k, epoch_us(ts) // 86400000000 AS day,
+        SELECT event_type AS k, ${EventAnalytics.duckDay} AS day,
           CAST(COUNT(*) AS BIGINT) AS n
         FROM events GROUP BY 1, 2),
-      grid AS (SELECT k, unnest(generate_series(d0, d1)) AS day
-               FROM (SELECT k, MIN(day) AS d0, MAX(day) AS d1
-                     FROM daily GROUP BY 1)),
+      $duckKeyedGrid,
       g AS (SELECT gr.k, gr.day, COALESCE(d.n, 0) AS n,
               ROW_NUMBER() OVER (PARTITION BY gr.k ORDER BY gr.day) AS i
             FROM grid gr LEFT JOIN daily d
@@ -2465,9 +2420,9 @@ object Analytics extends QueryModule {
     QueryDef("e_seasonal_forecast", (s, d) => {
       EventAnalytics.seasonalNaiveForecast(Tables.events(s, d),
         "event_type")
-    }, Some("""
+    }, Some(s"""
       WITH e0 AS (SELECT event_type AS k,
-             epoch_us(ts) // 86400000000 AS day FROM events),
+             ${EventAnalytics.duckDay} AS day FROM events),
       a AS (SELECT MAX(day) AS d1 FROM e0),
       g AS (SELECT k, d1,
               CAST(SUM(CASE WHEN day = d1 THEN 1 ELSE 0 END)

@@ -5,7 +5,9 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.{Wiki, WarcSource, Wikidata}
-import graft.ops.{Mentions, LinkModels}
+import graft.ops.{Hashing, Mentions, LinkModels}
+import graft.ops.Hashing.duckTokensSql
+import Pipeline.duckWtNorm
 
 /** Corpus-ingestion coverage (SURVEY.md §2.1 S2-S4, §2.8 F5-F11, §2.5 W2):
   * the wiki-dump and WARC front doors and the sentence-window mention
@@ -73,10 +75,8 @@ object Corpus extends QueryModule {
     * tokens, anchor span excluded).
     */
   private val duckSkipgramToks =
-    "list_concat(list_concat(" +
-      "regexp_extract_all(lower(substr(text, 1, start)), '[a-z0-9]+'), " +
-      "[target]), " +
-      "regexp_extract_all(lower(substr(text, stop + 1)), '[a-z0-9]+'))"
+    s"list_concat(list_concat(${Hashing.duckTokens("substr(text, 1, start)")}, " +
+      s"[target]), ${Hashing.duckTokens("substr(text, stop + 1)")})"
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -331,20 +331,17 @@ object Corpus extends QueryModule {
       // web-scale default floor of 2 would empty it)
       val idfs = graft.ops.TextModels.termIdfs(docs, minDf = 0)
       graft.ops.TextModels.entityMentionTermFrequency(mentions, idfs)
-    }, Some {
-      val norm = "sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), " +
-        "list_transform(es, e2 -> e2.wt * e2.wt)), (a, b) -> a + b))"
-      s"""
+    }, Some(s"""
       WITH $duckFixtureDocs,
       $duckFixtureMentions,
-      tk AS (SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok
+      tk AS (SELECT doc_id, unnest($duckTokensSql) AS tok
              FROM docs),
       dfq AS (SELECT tok, COUNT(*) AS df
               FROM (SELECT DISTINCT doc_id, tok FROM tk) GROUP BY tok),
       n AS (SELECT COUNT(*) AS n_docs FROM docs),
       idf AS (SELECT tok, round(ln(CAST(n_docs AS DOUBLE) / df), 6) AS idf
               FROM dfq CROSS JOIN n),
-      mt AS (SELECT target, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok
+      mt AS (SELECT target, unnest($duckTokensSql) AS tok
              FROM mentions),
       tf AS (SELECT target, tok, COUNT(*) AS tf FROM mt GROUP BY 1, 2),
       w AS (SELECT target, tf.tok AS tok,
@@ -355,11 +352,10 @@ object Corpus extends QueryModule {
               FROM w GROUP BY target)
       SELECT target, to_json(list_transform(es, e ->
           struct_pack(tok := e.tok,
-            w := CAST(CAST(CASE WHEN $norm > 0 THEN e.wt / $norm
+            w := CAST(CAST(CASE WHEN $duckWtNorm > 0 THEN e.wt / $duckWtNorm
                            ELSE CAST(0.0 AS DOUBLE) END
                       AS DECIMAL(10,6)) AS VARCHAR))))::VARCHAR AS counts
-      FROM ess ORDER BY target"""
-    }),
+      FROM ess ORDER BY target""")),
 
     // ---- Entity skip-gram training corpus (ref embeddings.py:44-55):
     // pre-context ⧺ entity token ⧺ post-context per prefix-filtered

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.ops.Hashing.duckTokensSql
 
 /** Scalar-function and projection/filter coverage (SURVEY.md §2.2, §2.8)
   * plus source/sink round-trips (§2.1). Everything is a codegen'd built-in
@@ -32,9 +33,9 @@ object Functions extends QueryModule {
         .select(explode(
           expr(graft.ops.Hashing.tokens())).as("w"))
         .groupBy("w").agg(count(lit(1)).as("n"))
-    }, Some("""
+    }, Some(s"""
       SELECT w, COUNT(*) AS n FROM (
-        SELECT unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS w
+        SELECT unnest($duckTokensSql) AS w
         FROM documents)
       GROUP BY w ORDER BY n DESC, w""")),
 
@@ -220,9 +221,9 @@ object Functions extends QueryModule {
         array_join(slice(words, 1, 5), " ").as("joined5"),
         to_json(array_sort(array_distinct(words))).as("uniq"),
         to_json(filter(words, w => length(w) > 4)).as("long_words"))
-    }, Some("""
+    }, Some(s"""
       WITH w AS (SELECT doc_id,
-                   regexp_extract_all(lower(text), '[a-z0-9]+') AS words
+                   $duckTokensSql AS words
                  FROM documents)
       SELECT doc_id,
         CAST(len(words) AS BIGINT) AS n_words,

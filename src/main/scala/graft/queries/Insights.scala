@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.ops.{Drift, EventAnalytics, Market, Rank, Survival}
 import graft.queries.Tables.t
+import graft.ops.Hashing.duckTokensSql
 
 /** Recommendation, drift, and lifetime analytics gates: market-basket
   * association rules and item-based collaborative filtering
@@ -496,9 +497,9 @@ object Insights extends QueryModule {
           concat(col("lang"), lit("|"), col("source")).as("g"),
           col("type_token_ratio").as("score"))
       graft.ops.Preference.dpoPairs(scored, "g", "doc_id", "score")
-    }, Some("""
+    }, Some(s"""
       WITH t AS (SELECT doc_id, lang || '|' || source AS g,
-               regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
+               $duckTokensSql AS toks
              FROM documents),
       q AS (SELECT doc_id, g,
               round(CAST(len(list_distinct(toks)) AS DOUBLE) /
@@ -978,9 +979,9 @@ object Insights extends QueryModule {
     // BIGINT and the fixed denominator 21845 means no gap-fill at all.
     QueryDef("e_ewma_forecast", (s, d) => {
       EventAnalytics.ewmaForecast(Tables.events(s, d), "event_type")
-    }, Some("""
+    }, Some(s"""
       WITH e AS (SELECT event_type,
-              epoch_us(ts) // 86400000000 AS day FROM events),
+              ${EventAnalytics.duckDay} AS day FROM events),
       a AS (SELECT MAX(day) AS d1 FROM e),
       f AS (SELECT event_type, d1,
               CAST(SUM(CASE WHEN day = d1 THEN 1 ELSE 0 END) AS BIGINT)
@@ -1003,9 +1004,9 @@ object Insights extends QueryModule {
     // recursion the Spark column chain evaluates.
     QueryDef("e_holt_forecast", (s, d) => {
       EventAnalytics.holtForecast(Tables.events(s, d), "event_type")
-    }, Some("""
+    }, Some(s"""
       WITH e AS (SELECT event_type,
-              epoch_us(ts) // 86400000000 AS day FROM events),
+              ${EventAnalytics.duckDay} AS day FROM events),
       a AS (SELECT MAX(day) AS d1 FROM e),
       g AS (SELECT event_type, d1,
               CAST(SUM(CASE WHEN day = d1 THEN 1 ELSE 0 END) AS BIGINT)
@@ -1339,9 +1340,9 @@ object Insights extends QueryModule {
           round(sum(col("value").cast("decimal(18,2)")).cast("double") /
             count(lit(1)).cast("double"), 6).as("v"))
       graft.ops.Stats.kendallTau(daily, "event_type", "day", "v", "n")
-    }, Some("""
+    }, Some(s"""
       WITH daily AS (
-        SELECT event_type AS k, epoch_us(ts) // 86400000000 AS day,
+        SELECT event_type AS k, ${EventAnalytics.duckDay} AS day,
           CAST(COUNT(*) AS BIGINT) AS n,
           round(CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) /
             CAST(COUNT(*) AS DOUBLE), 6) AS v
@@ -1883,8 +1884,8 @@ object Insights extends QueryModule {
       graft.ops.Stats.hodgesLehmann(Tables.events(s, d),
         expr("ts_us div 86400000000"), "event_type", "value",
         "click", "view")
-    }, Some("""
-      WITH r AS (SELECT epoch_us(ts) // 86400000000 AS k,
+    }, Some(s"""
+      WITH r AS (SELECT ${EventAnalytics.duckDay} AS k,
                event_type AS g,
                CAST(round(CAST(value AS DOUBLE), 6) AS DECIMAL(28,6))
                  AS v
@@ -2005,8 +2006,8 @@ object Insights extends QueryModule {
     QueryDef("a_friedman", (s, d) => {
       graft.ops.Stats.friedmanTest(Tables.events(s, d),
         expr("ts_us div 86400000000"), "event_type", "value")
-    }, Some("""
-      WITH r AS (SELECT epoch_us(ts) // 86400000000 AS k,
+    }, Some(s"""
+      WITH r AS (SELECT ${EventAnalytics.duckDay} AS k,
                event_type AS g,
                CAST(round(CAST(value AS DOUBLE), 6) AS DECIMAL(28,6))
                  AS v
@@ -2456,10 +2457,10 @@ object Insights extends QueryModule {
       graft.ops.EventAnalytics.interruptedTimeSeries(
         e.crossJoin(broadcast(mid)), "value",
         col("ts_us") < col("__mid"))
-    }, Some("""
+    }, Some(s"""
       WITH b AS (SELECT (MIN(epoch_us(ts)) + MAX(epoch_us(ts))) // 2
                    AS mid FROM events),
-      r AS (SELECT epoch_us(ts) // 86400000000 AS t,
+      r AS (SELECT ${EventAnalytics.duckDay} AS t,
               epoch_us(ts) < mid AS pre,
               CAST(round(CAST(value AS DOUBLE), 6) AS DECIMAL(28,6))
                 AS vv
@@ -2530,7 +2531,7 @@ object Insights extends QueryModule {
       graft.ops.TextAnalysis.pplBuckets(t(s, d, "documents"))
     }, Some(s"""
       WITH tg AS (SELECT doc_id,
-               regexp_extract_all(lower(text), '[a-z0-9]+') AS tk,
+               $duckTokensSql AS tk,
                (${graft.ops.Hashing.duckMd5Long(
                  "'lmsplit:' || CAST(doc_id AS VARCHAR)")})
                  % 5 <> 0 AS is_train
@@ -2582,7 +2583,7 @@ object Insights extends QueryModule {
         "doc_id", "difficulty", buckets = 4)
     }, Some(s"""
       WITH sc AS (SELECT doc_id AS key,
-               CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+'))
+               CAST(len($duckTokensSql)
                  AS DOUBLE) AS difficulty
              FROM documents),
       nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM sc),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops.{Dedup, Fuzzy, Similarity, TextAnalysis, Hashing, Multimodal, Url}
 import graft.ops.Pins.PinSyntax
+import graft.functions.VectorFold.duckSum
 
 /** Gate coverage for the LLM-data-pipeline operator layer (`graft.ops`):
   * deduplication (exact, MinHash-LSH, SimHash, n-gram Jaccard), similarity
@@ -19,7 +20,7 @@ import graft.ops.Pins.PinSyntax
   */
 object Pipeline extends QueryModule {
   import Tables.t
-  import Hashing.{duckMd5Long, tokensSql}
+  import Hashing.{duckMd5Long, duckTokensSql, tokensSql}
 
   // --- DuckDB twins of the engine's hash/vector primitives -------------
 
@@ -27,32 +28,106 @@ object Pipeline extends QueryModule {
     * mirrors [[Dedup.shingled]].
     */
   private[queries] val duckShingleCtes =
-    """toks AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
+    s"""toks AS (SELECT doc_id, $duckTokensSql AS toks
       |           FROM documents),
       |sh AS (SELECT doc_id,
       |         list_distinct(list_transform(range(1, len(toks) - 1),
       |           i -> array_to_string(toks[i:i+2], ' '))) AS shingles
       |       FROM toks WHERE len(toks) >= 3)""".stripMargin
 
+  /** DuckDB twin of the token pairs under [[graft.ops.Graph.wordGraph]]:
+    * `toks(tk)` per document, `pairs(p)` one struct per adjacent pair.
+    */
+  private val duckBigramCtes =
+    s"""toks AS (SELECT $duckTokensSql AS tk FROM documents),
+       |pairs AS (SELECT unnest(list_transform(range(1, len(tk)),
+       |           i -> {'src': tk[i], 'dst': tk[i+1]})) AS p FROM toks)""".stripMargin
+
+  /** [[duckBigramCtes]] plus the weighted, self-loop-free word graph
+    * `edges(src, dst, w)` — the twin of [[graft.ops.Graph.wordGraph]].
+    */
+  private def duckWordGraph(edges: String = "e"): String =
+    s"""$duckBigramCtes,
+       |$edges AS (SELECT p.src AS src, p.dst AS dst,
+       |    CAST(COUNT(*) AS BIGINT) AS w
+       |  FROM pairs WHERE p.src <> p.dst GROUP BY 1, 2)""".stripMargin
+
+  /** DuckDB twin of the BM25 idf of [[graft.ops.TextModels.bm25TopK]]:
+    * `df` of the corpus' `nd` documents hold the term.
+    */
+  private def duckBm25Idf(df: String): String =
+    s"round(ln(1.0 + (CAST(nd AS DOUBLE) - CAST($df AS DOUBLE) + 0.5) / " +
+      s"(CAST($df AS DOUBLE) + 0.5)), 6)"
+
+  /** One BM25 term (k1 = 1.2, b = 0.75): the idf times the term's
+    * length-normalized frequency `tf` in a document of `len` tokens, the
+    * corpus holding `sl` tokens over `nd` documents.
+    */
+  private def duckBm25Term(tf: String, df: String): String =
+    s"${duckBm25Idf(df)} * (CAST($tf AS DOUBLE) * 2.2) / " +
+      s"(CAST($tf AS DOUBLE) + 1.2 * (1.0 - 0.75 + 0.75 * " +
+      s"(CAST(len AS DOUBLE) / (CAST(sl AS DOUBLE) / CAST(nd AS DOUBLE)))))"
+
+  /** The query of the BM25 retrieval gates. */
+  private val Bm25Query = Seq("hash", "join", "stream")
+
+  /** DuckDB twin of [[graft.ops.TextModels.bm25TopK]]'s statistics for
+    * [[Bm25Query]]: `tok(doc_id, tok)`, `pd(doc_id, len, tf_i)` and the
+    * one-row `st(sl, nd, df_i)`.
+    */
+  private val duckBm25Ctes: String = {
+    val ix = Bm25Query.indices
+    val tfs = Bm25Query.zip(ix).map { case (t, i) =>
+      s"CAST(SUM(CASE WHEN tok = '$t' THEN 1 ELSE 0 END) AS BIGINT) AS tf_$i" }
+    val dfs = ix.map(i =>
+      s"CAST(SUM(CASE WHEN tf_$i > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df_$i")
+    s"""tok AS (SELECT doc_id, unnest($duckTokensSql) AS tok FROM documents),
+       |pd AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS len,
+       |    ${tfs.mkString(",\n    ")}
+       |  FROM tok GROUP BY 1),
+       |st AS (SELECT CAST(SUM(len) AS BIGINT) AS sl,
+       |    CAST(COUNT(*) AS BIGINT) AS nd,
+       |    ${dfs.mkString(",\n    ")}
+       |  FROM pd)""".stripMargin
+  }
+
+  /** The BM25 score of a `pd` × `st` row for [[Bm25Query]]. */
+  private val duckBm25Score: String = Bm25Query.indices
+    .map(i => duckBm25Term(s"tf_$i", s"df_$i")).mkString(" + ")
+
+  /** L2 norm of a term-weight list `es` of structs with field `wt`,
+    * the DuckDB twin of the normalization of
+    * [[graft.ops.TextModels.entityMentionTermFrequency]].
+    */
+  private[queries] val duckWtNorm =
+    s"sqrt(${duckSum("list_transform(es, e2 -> e2.wt * e2.wt)", "a", "b")})"
+
+  /** Σ sqrt(c) over the class counts `cnt(lang, c)`, folded in sorted
+    * class order — the denominator of
+    * [[graft.ops.Sampling.temperatureSampleSqrt]]'s keep rates.
+    */
+  private val duckSqrtClassSum = duckSum("list_transform(list_sort(list(" +
+    "struct_pack(cls := lang, s := sqrt(CAST(c AS DOUBLE))))), x -> x.s)", "a")
+
+  /** The English stopwords of [[TextAnalysis.langProfiles]] as a DuckDB
+    * list literal.
+    */
+  private val duckEnStops = TextAnalysis.langProfiles.toMap.apply("en")
+    .map(w => s"'$w'").mkString("[", ", ", "]")
+
+  /** DuckDB sequential-order dot product over the first `len(n)`
+    * elements, the twin of `graft_dot` — the inner fold of [[duckCos]],
+    * exposed for inner-product gates. */
+  private def duckDot(a: String, b: String, n: String = ""): String =
+    duckSum(s"list_transform(range(1, len(${if (n.isEmpty) a else n}) + 1), " +
+      s"kk -> CAST($a[kk] AS DOUBLE) * CAST($b[kk] AS DOUBLE))")
+
   /** DuckDB twin of [[Similarity.cosineSql]]: sequential left-fold dot
     * products in doubles — bit-identical to Spark's `aggregate(zip_with)`.
     */
-  /** DuckDB sequential-order dot product, the twin of `graft_dot` —
-    * the inner fold of [[duckCos]], exposed for inner-product gates. */
-  private def duckDot(a: String, b: String): String =
-    s"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), " +
-      s"list_transform(range(1, len($a) + 1), " +
-      s"kk -> CAST($a[kk] AS DOUBLE) * CAST($b[kk] AS DOUBLE))), " +
-      s"(acc, v) -> acc + v)"
-
-  private def duckCos(a: String, b: String): String = {
-    def dot(x: String, y: String) =
-      s"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), " +
-        s"list_transform(range(1, len($a) + 1), " +
-        s"kk -> CAST($x[kk] AS DOUBLE) * CAST($y[kk] AS DOUBLE))), " +
-        s"(acc, v) -> acc + v)"
-    s"((${dot(a, b)}) / (sqrt(${dot(a, a)}) * sqrt(${dot(b, b)})))"
-  }
+  private def duckCos(a: String, b: String): String =
+    s"((${duckDot(a, b)}) / (sqrt(${duckDot(a, a)}) * " +
+      s"sqrt(${duckDot(b, b, a)})))"
 
   /** DuckDB twin of one [[Similarity.centroids]] update (decimal-exact
     * elementwise mean per cell) from an assignment CTE `asg(cell, e)`.
@@ -111,11 +186,9 @@ object Pipeline extends QueryModule {
     // weight parenthesized to round before the multiply — matches
     // Similarity.planeWeight / withBucketArray exactly (not the
     // left-assoc (x*(m-1000))/1000.0, which can differ by one ulp)
-    val proj = s"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), " +
-      s"list_transform(range(0, len($vec)), " +
+    val proj = duckSum(s"list_transform(range(0, len($vec)), " +
       s"jj -> CAST($vec[jj + 1] AS DOUBLE) * " +
-      s"(((${duckMd5Long(s"CAST(($planeOffset) + pp AS VARCHAR) || ',' || CAST(jj AS VARCHAR)")} % 2001) - 1000) / 1000.0))), " +
-      s"(acc, v) -> acc + v)"
+      s"(((${duckMd5Long(s"CAST(($planeOffset) + pp AS VARCHAR) || ',' || CAST(jj AS VARCHAR)")} % 2001) - 1000) / 1000.0))")
     s"list_reduce(list_prepend(CAST(0 AS BIGINT), " +
       s"list_transform(range(0, $nPlanes), pp -> " +
       s"CASE WHEN ($proj) >= 0 THEN (CAST(1 AS BIGINT) << pp) " +
@@ -126,7 +199,7 @@ object Pipeline extends QueryModule {
     * [[Dedup.simhash]].
     */
   private val duckSimhashCtes =
-    s"""tok AS (SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok
+    s"""tok AS (SELECT doc_id, unnest($duckTokensSql) AS tok
        |          FROM documents),
        |tc AS (SELECT doc_id, tok, COUNT(*) AS cnt FROM tok GROUP BY 1, 2),
        |th AS (SELECT doc_id, cnt, ${duckMd5Long("tok")} AS h FROM tc),
@@ -282,12 +355,12 @@ object Pipeline extends QueryModule {
         base.filter(col("doc_id") < 50)
           .select((col("doc_id") + 100000).as("doc_id"), col("text")))
       Dedup.exact(aug)
-    }, Some("""
+    }, Some(s"""
       WITH aug AS (SELECT doc_id, text FROM documents
                    UNION ALL
                    SELECT doc_id + 100000, text FROM documents
                    WHERE doc_id < 50)
-      SELECT md5(array_to_string(regexp_extract_all(lower(text), '[a-z0-9]+'), ' ')) AS fp,
+      SELECT md5(array_to_string($duckTokensSql, ' ')) AS fp,
              MIN(doc_id) AS keep_doc, CAST(COUNT(*) AS BIGINT) AS n_dups
       FROM aug GROUP BY fp ORDER BY fp""")),
 
@@ -304,14 +377,13 @@ object Pipeline extends QueryModule {
           .select((col("doc_id") + 100000).as("doc_id"),
             concat(col("text"), lit(" !!!")).as("text")))
       Dedup.canonical(aug, length(col("text")))
-    }, Some("""
+    }, Some(s"""
       WITH aug AS (SELECT doc_id, text FROM documents
                    UNION ALL
                    SELECT doc_id + 100000, text || ' !!!' FROM documents
                    WHERE doc_id < 50),
       f AS (SELECT doc_id, CAST(length(text) AS BIGINT) AS q,
-              md5(array_to_string(regexp_extract_all(lower(text),
-                '[a-z0-9]+'), ' ')) AS fp
+              md5(array_to_string($duckTokensSql, ' ')) AS fp
             FROM aug),
       r AS (SELECT fp, doc_id, q,
               ROW_NUMBER() OVER (PARTITION BY fp
@@ -472,15 +544,7 @@ object Pipeline extends QueryModule {
       Dedup.minhashLsh(docs(s, d), 3, 8, 4, 0.5)
     }, Some(s"""
       WITH $duckShingleCtes,
-      sig AS (SELECT doc_id, list_transform(range(0, 8), i ->
-                list_min(list_transform(shingles, s ->
-                  ${duckMd5Long("CAST(i AS VARCHAR) || ':' || s")}))) AS sig
-              FROM sh),
-      banded AS (SELECT doc_id, bb.b AS band,
-                   md5(array_to_string(list_transform(
-                     sig[bb.b * 2 + 1 : bb.b * 2 + 2],
-                     x -> CAST(x AS VARCHAR)), ',')) AS bkey
-                 FROM sig CROSS JOIN (SELECT unnest(range(0, 4)) AS b) bb),
+      ${Dedup.duckMinhashBands(8, 4, 2)},
       cands AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
                 FROM banded a JOIN banded b
                   ON a.band = b.band AND a.bkey = b.bkey
@@ -513,15 +577,7 @@ object Pipeline extends QueryModule {
         indexPath = Some(Scratch.dir("graft_neardup_idx") + "/idx"))
     }, Some(s"""
       WITH $duckShingleCtes,
-      sig AS (SELECT doc_id, list_transform(range(0, 8), i ->
-                list_min(list_transform(shingles, s ->
-                  ${duckMd5Long("CAST(i AS VARCHAR) || ':' || s")}))) AS sig
-              FROM sh),
-      banded AS (SELECT doc_id, bb.b AS band,
-                   md5(array_to_string(list_transform(
-                     sig[bb.b * 2 + 1 : bb.b * 2 + 2],
-                     x -> CAST(x AS VARCHAR)), ',')) AS bkey
-                 FROM sig CROSS JOIN (SELECT unnest(range(0, 4)) AS b) bb),
+      ${Dedup.duckMinhashBands(8, 4, 2)},
       idx AS (SELECT band, bkey, doc_id AS prior_doc FROM banded
               WHERE doc_id % 2 = 0),
       nk AS (SELECT doc_id, band, bkey FROM banded WHERE doc_id % 2 = 1)
@@ -551,15 +607,7 @@ object Pipeline extends QueryModule {
       Dedup.nearDupAgainstIndexPath(all.filter(col("doc_id") % 3 === 2), p)
     }, Some(s"""
       WITH $duckShingleCtes,
-      sig AS (SELECT doc_id, list_transform(range(0, 8), i ->
-                list_min(list_transform(shingles, s ->
-                  ${duckMd5Long("CAST(i AS VARCHAR) || ':' || s")}))) AS sig
-              FROM sh),
-      banded AS (SELECT doc_id, bb.b AS band,
-                   md5(array_to_string(list_transform(
-                     sig[bb.b * 2 + 1 : bb.b * 2 + 2],
-                     x -> CAST(x AS VARCHAR)), ',')) AS bkey
-                 FROM sig CROSS JOIN (SELECT unnest(range(0, 4)) AS b) bb),
+      ${Dedup.duckMinhashBands(8, 4, 2)},
       idx AS (SELECT band, bkey, doc_id AS prior_doc FROM banded
               WHERE doc_id % 3 IN (0, 1)),
       nk AS (SELECT doc_id, band, bkey FROM banded WHERE doc_id % 3 = 2)
@@ -988,18 +1036,15 @@ object Pipeline extends QueryModule {
       graft.ops.Sampling.temperatureSampleSqrt(gated, "doc_id", "lang",
           150L)
         .groupBy("lang").agg(count(lit(1)).as("n_kept"))
-    }, Some {
-      val enStops = TextAnalysis.langProfiles.toMap.apply("en")
-        .map(w => s"'$w'").mkString("[", ", ", "]")
-      s"""
+    }, Some(s"""
       WITH w AS (SELECT doc_id, source, lang, text,
-                   regexp_extract_all(lower(text), '[a-z0-9]+') AS toks,
+                   $duckTokensSql AS toks,
                    CAST(greatest(length(text), 1) AS DOUBLE) AS n
                  FROM documents),
       q AS (SELECT doc_id, source, lang,
               CAST(len(toks) >= 10
                 AND (length(text) - length(regexp_replace(text, '[a-zA-Z]', '', 'g'))) / n >= 0.6
-                AND CAST(len(list_filter(toks, tt -> list_contains($enStops, tt))) AS DOUBLE)
+                AND CAST(len(list_filter(toks, tt -> list_contains($duckEnStops, tt))) AS DOUBLE)
                     / greatest(len(toks), 1) >= 0.01 AS BIGINT) AS pass
             FROM w),
       srcs AS (SELECT source FROM q GROUP BY source
@@ -1007,10 +1052,7 @@ object Pipeline extends QueryModule {
       gated AS (SELECT doc_id, lang FROM q JOIN srcs USING (source)
                 WHERE pass = 1),
       cnt AS (SELECT lang, COUNT(*) AS c FROM gated GROUP BY 1),
-      den AS (SELECT list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                list_transform(list_sort(list(struct_pack(cls := lang,
-                  s := sqrt(CAST(c AS DOUBLE))))), x -> x.s)),
-                (a, v) -> a + v) AS dn FROM cnt),
+      den AS (SELECT $duckSqrtClassSum AS dn FROM cnt),
       rates AS (SELECT lang, least(CAST(1.0 AS DOUBLE),
                   CAST(150.0 AS DOUBLE) * (sqrt(CAST(c AS DOUBLE)) / dn) /
                   CAST(c AS DOUBLE)) AS r
@@ -1020,8 +1062,7 @@ object Pipeline extends QueryModule {
                  "'tsample:' || CAST(doc_id AS VARCHAR)")} % 1000000) <
                  CAST(floor(r * 1000000) AS BIGINT))
       SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_kept
-      FROM kept GROUP BY 1 ORDER BY 1"""
-    }),
+      FROM kept GROUP BY 1 ORDER BY 1""")),
 
 
     // ---- INCREMENTAL refresh pipeline (CDC composition): the monthly
@@ -1112,7 +1153,7 @@ object Pipeline extends QueryModule {
             coalesce(col("minus"), lit(0L)) +
             coalesce(col("plus"), lit(0L))).as("count_new"))
         .filter(col("count_old") =!= col("count_new"))
-    }, Some("""
+    }, Some(s"""
       WITH old AS (SELECT doc_id, text FROM documents),
       kept AS (SELECT doc_id,
                  CASE WHEN doc_id % 31 = 0 THEN text || ' EDITED'
@@ -1123,10 +1164,10 @@ object Pipeline extends QueryModule {
               SELECT doc_id + 500000, text FROM old WHERE doc_id < 10
               UNION ALL
               SELECT doc_id + 600000, array_to_string(list_reverse(
-                  regexp_extract_all(lower(text), '[a-z0-9]+')), ' ')
+                  $duckTokensSql), ' ')
               FROM old WHERE doc_id >= 10 AND doc_id < 20),
       toksn AS (SELECT doc_id,
-                  regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
+                  $duckTokensSql AS toks
                 FROM neu),
       shn AS (SELECT doc_id,
                 list_distinct(list_transform(range(1, len(toks) - 1),
@@ -1150,9 +1191,9 @@ object Pipeline extends QueryModule {
                   AND doc_b >= 500000),
       final AS (SELECT * FROM neu
                 WHERE doc_id NOT IN (SELECT doc_id FROM drops)),
-      co AS (SELECT unnest(regexp_extract_all(lower(text), '[a-z0-9]+'))
+      co AS (SELECT unnest($duckTokensSql)
                AS token FROM old),
-      cn AS (SELECT unnest(regexp_extract_all(lower(text), '[a-z0-9]+'))
+      cn AS (SELECT unnest($duckTokensSql)
                AS token FROM final),
       a AS (SELECT token, COUNT(*) AS c FROM co GROUP BY 1),
       b AS (SELECT token, COUNT(*) AS c FROM cn GROUP BY 1)
@@ -1261,8 +1302,6 @@ object Pipeline extends QueryModule {
         .select("split", "n_docs", "n_seqs", "n_tokens",
           "max_docs_per_seq")
     }, Some {
-      val enStops = TextAnalysis.langProfiles.toMap.apply("en")
-        .map(w => s"'$w'").mkString("[", ", ", "]")
       val scrubbed = TextAnalysis.redactRules.foldLeft("text") {
         case (c, (p, r)) =>
           s"regexp_replace($c, '${p.replace("'", "''")}', '$r', 'g')"
@@ -1289,7 +1328,7 @@ object Pipeline extends QueryModule {
         SELECT doc_id, $scrubbed AS text, source, lang FROM corpus),
       fps AS (SELECT doc_id,
                 md5(array_to_string(
-                  regexp_extract_all(lower(text), '[a-z0-9]+'), ' ')) AS fp,
+                  $duckTokensSql, ' ')) AS fp,
                 length(text) AS q
               FROM clean),
       keepd AS (SELECT doc_id FROM (
@@ -1300,7 +1339,7 @@ object Pipeline extends QueryModule {
         SELECT c.doc_id, c.text, c.source, c.lang
         FROM clean c JOIN keepd USING (doc_id)),
       toksd AS (SELECT doc_id,
-                  regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
+                  $duckTokensSql AS toks
                 FROM dedup),
       shd AS (SELECT doc_id,
                 list_distinct(list_transform(range(1, len(toks) - 1),
@@ -1329,7 +1368,7 @@ object Pipeline extends QueryModule {
         SELECT * FROM dedup WHERE doc_id % 37 <> 0
           AND doc_id NOT IN (SELECT doc_id FROM hit)),
       wq AS (SELECT doc_id, source, lang, text,
-               regexp_extract_all(lower(text), '[a-z0-9]+') AS toks,
+               $duckTokensSql AS toks,
                CAST(greatest(length(text), 1) AS DOUBLE) AS n
              FROM decon),
       q AS (SELECT doc_id, source, lang FROM wq
@@ -1337,13 +1376,10 @@ object Pipeline extends QueryModule {
               AND (length(text) - length(regexp_replace(text,
                 '[a-zA-Z]', '', 'g'))) / n >= 0.6
               AND CAST(len(list_filter(toks,
-                    tt -> list_contains($enStops, tt))) AS DOUBLE)
+                    tt -> list_contains($duckEnStops, tt))) AS DOUBLE)
                   / greatest(len(toks), 1) >= 0.01),
       cnt AS (SELECT lang, COUNT(*) AS c FROM q GROUP BY 1),
-      den AS (SELECT list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                list_transform(list_sort(list(struct_pack(cls := lang,
-                  s := sqrt(CAST(c AS DOUBLE))))), x -> x.s)),
-                (a, v) -> a + v) AS dn FROM cnt),
+      den AS (SELECT $duckSqrtClassSum AS dn FROM cnt),
       rates AS (SELECT lang, least(CAST(1.0 AS DOUBLE),
                   CAST(200.0 AS DOUBLE) * (sqrt(CAST(c AS DOUBLE)) / dn) /
                   CAST(c AS DOUBLE)) AS r
@@ -1360,15 +1396,13 @@ object Pipeline extends QueryModule {
           dd.text
         FROM samp sm JOIN decon dd USING (doc_id)),
       wc AS (SELECT tok AS w, CAST(COUNT(*) AS BIGINT) AS cnt
-             FROM (SELECT unnest(regexp_extract_all(lower(text),
-                     '[a-z0-9]+')) AS tok
+             FROM (SELECT unnest($duckTokensSql) AS tok
                    FROM spl WHERE split = 'train') tt
              GROUP BY 1),
       s0 AS (SELECT cnt,
           ' ' || regexp_replace(w, '(.)', '\\1 ', 'g') AS ss FROM wc),
       $rounds,
-      aw AS (SELECT DISTINCT unnest(regexp_extract_all(lower(text),
-               '[a-z0-9]+')) AS w FROM spl),
+      aw AS (SELECT DISTINCT unnest($duckTokensSql) AS w FROM spl),
       ws0 AS (SELECT w,
           ' ' || regexp_replace(w, '(.)', '\\1 ', 'g') AS ss FROM aw),
       $wsRounds,
@@ -1377,8 +1411,7 @@ object Pipeline extends QueryModule {
                FROM ws4),
       occ AS (SELECT doc_id, split, tok AS w, COUNT(*) AS c
               FROM (SELECT doc_id, split,
-                      unnest(regexp_extract_all(lower(text),
-                        '[a-z0-9]+')) AS tok FROM spl) z
+                      unnest($duckTokensSql) AS tok FROM spl) z
               GROUP BY 1, 2, 3),
       dt AS (SELECT doc_id, split, SUM(c * n_sym) AS n
              FROM occ JOIN wsym USING (w) GROUP BY 1, 2),
@@ -1456,7 +1489,7 @@ object Pipeline extends QueryModule {
       Dedup.substringDupStats(base.unionByName(planted), 20)
     }, Some(s"""
       WITH toks0 AS (SELECT doc_id,
-             regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
+             $duckTokensSql AS toks
            FROM documents),
       aug AS (SELECT doc_id, toks FROM toks0
               UNION ALL
@@ -1493,7 +1526,7 @@ object Pipeline extends QueryModule {
       Dedup.substringRemove(base.unionByName(planted), 20)
     }, Some(s"""
       WITH toks0 AS (SELECT doc_id,
-             regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
+             $duckTokensSql AS toks
            FROM documents),
       aug AS (SELECT doc_id, toks FROM toks0
               UNION ALL
@@ -1562,15 +1595,7 @@ object Pipeline extends QueryModule {
       }.mkString(",\n      ")
       s"""
       WITH $duckShingleCtes,
-      sig AS (SELECT doc_id, list_transform(range(0, 8), i ->
-                list_min(list_transform(shingles, s ->
-                  ${duckMd5Long("CAST(i AS VARCHAR) || ':' || s")}))) AS sig
-              FROM sh),
-      banded AS (SELECT doc_id, bb.b AS band,
-                   md5(array_to_string(list_transform(
-                     sig[bb.b * 2 + 1 : bb.b * 2 + 2],
-                     x -> CAST(x AS VARCHAR)), ',')) AS bkey
-                 FROM sig CROSS JOIN (SELECT unnest(range(0, 4)) AS b) bb),
+      ${Dedup.duckMinhashBands(8, 4, 2)},
       cands AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
                 FROM banded a JOIN banded b
                   ON a.band = b.band AND a.bkey = b.bkey
@@ -1616,9 +1641,9 @@ object Pipeline extends QueryModule {
       graft.ops.Sampling.tokenShards(withTokens, "doc_id", "n_tokens",
           16384L)
         .select(col("doc_id"), col("n_tokens"), col("shard"))
-    }, Some("""
+    }, Some(s"""
       WITH w AS (SELECT doc_id,
-                   CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+'))
+                   CAST(len($duckTokensSql)
                         AS BIGINT) AS n_tokens
                  FROM documents),
       c AS (SELECT doc_id, n_tokens,
@@ -1642,9 +1667,9 @@ object Pipeline extends QueryModule {
       val counts = docs(s, d).select(col("doc_id"),
         size(expr(tokensSql)).cast("long").as("n_tokens"))
       graft.ops.Pack.packSummary(counts, "doc_id", "n_tokens", 128)
-    }, Some("""
+    }, Some(s"""
       WITH t AS (SELECT doc_id,
-                   CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+'))
+                   CAST(len($duckTokensSql)
                         AS BIGINT) AS n
                  FROM documents),
       tt AS (SELECT doc_id, n,
@@ -1747,10 +1772,7 @@ object Pipeline extends QueryModule {
         .groupBy("lang").agg(count(lit(1)).as("n_kept"))
     }, Some(s"""
       WITH cnt AS (SELECT lang, COUNT(*) AS c FROM documents GROUP BY 1),
-      den AS (SELECT list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                list_transform(list_sort(list(struct_pack(cls := lang,
-                  s := sqrt(CAST(c AS DOUBLE))))), x -> x.s)),
-                (a, v) -> a + v) AS d FROM cnt),
+      den AS (SELECT $duckSqrtClassSum AS d FROM cnt),
       rates AS (SELECT lang, least(CAST(1.0 AS DOUBLE),
                   CAST(300.0 AS DOUBLE) * (sqrt(CAST(c AS DOUBLE)) / d) /
                   CAST(c AS DOUBLE)) AS r
@@ -1782,7 +1804,7 @@ object Pipeline extends QueryModule {
              SELECT doc_id, unnest(list_transform(range(1, len(tks) + 1),
                i -> {'pos': i - 1, 'tok': tks[i]})) AS t
              FROM (SELECT doc_id,
-                     regexp_extract_all(lower(text), '[a-z0-9]+') AS tks
+                     $duckTokensSql AS tks
                    FROM documents))),
       cand AS (SELECT tok FROM occ
                WHERE (${duckMd5Long(
@@ -1909,7 +1931,7 @@ object Pipeline extends QueryModule {
         .withColumn("keep", col("keep").cast("long"))
     }, Some(s"""
       WITH tg AS (SELECT doc_id,
-               regexp_extract_all(lower(text), '[a-z0-9]+') AS tk,
+               $duckTokensSql AS tk,
                (${duckMd5Long("'lmsplit:' || CAST(doc_id AS VARCHAR)")})
                  % 5 <> 0 AS is_train
              FROM documents),
@@ -2129,36 +2151,9 @@ object Pipeline extends QueryModule {
         .orderBy(desc("rrf"), asc("doc_id"))
         .limit(20)
     }, Some(s"""
-      WITH tok AS (SELECT doc_id,
-             unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok
-           FROM documents),
-      pd AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS len,
-               CAST(SUM(CASE WHEN tok = 'hash' THEN 1 ELSE 0 END) AS BIGINT) AS tf_0,
-               CAST(SUM(CASE WHEN tok = 'join' THEN 1 ELSE 0 END) AS BIGINT) AS tf_1,
-               CAST(SUM(CASE WHEN tok = 'stream' THEN 1 ELSE 0 END) AS BIGINT) AS tf_2
-             FROM tok GROUP BY 1),
-      st AS (SELECT CAST(SUM(len) AS BIGINT) AS sl,
-               CAST(COUNT(*) AS BIGINT) AS nd,
-               CAST(SUM(CASE WHEN tf_0 > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df_0,
-               CAST(SUM(CASE WHEN tf_1 > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df_1,
-               CAST(SUM(CASE WHEN tf_2 > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df_2
-             FROM pd),
+      WITH $duckBm25Ctes,
       sc AS (SELECT doc_id, round(
-          round(ln(1.0 + (CAST(nd AS DOUBLE) - CAST(df_0 AS DOUBLE) + 0.5)
-              / (CAST(df_0 AS DOUBLE) + 0.5)), 6)
-            * (CAST(tf_0 AS DOUBLE) * 2.2)
-            / (CAST(tf_0 AS DOUBLE) + 1.2 * (1.0 - 0.75 + 0.75 *
-               (CAST(len AS DOUBLE) / (CAST(sl AS DOUBLE) / CAST(nd AS DOUBLE)))))
-        + round(ln(1.0 + (CAST(nd AS DOUBLE) - CAST(df_1 AS DOUBLE) + 0.5)
-              / (CAST(df_1 AS DOUBLE) + 0.5)), 6)
-            * (CAST(tf_1 AS DOUBLE) * 2.2)
-            / (CAST(tf_1 AS DOUBLE) + 1.2 * (1.0 - 0.75 + 0.75 *
-               (CAST(len AS DOUBLE) / (CAST(sl AS DOUBLE) / CAST(nd AS DOUBLE)))))
-        + round(ln(1.0 + (CAST(nd AS DOUBLE) - CAST(df_2 AS DOUBLE) + 0.5)
-              / (CAST(df_2 AS DOUBLE) + 0.5)), 6)
-            * (CAST(tf_2 AS DOUBLE) * 2.2)
-            / (CAST(tf_2 AS DOUBLE) + 1.2 * (1.0 - 0.75 + 0.75 *
-               (CAST(len AS DOUBLE) / (CAST(sl AS DOUBLE) / CAST(nd AS DOUBLE)))))
+          $duckBm25Score
         , 6) AS score
       FROM pd CROSS JOIN st
       WHERE tf_0 > 0 OR tf_1 > 0 OR tf_2 > 0),
@@ -2476,8 +2471,7 @@ object Pipeline extends QueryModule {
                ${duckL2("qv", "b.centroid")} AS d
              FROM q JOIN b2 b ON q.sub = b.sub),
       sc2 AS (SELECT dt.query_id, af.vec_id AS neighbor_id,
-                list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                  list(dt.d ORDER BY dt.sub)), (acc, v) -> acc + v)
+                ${duckSum("list(dt.d ORDER BY dt.sub)")}
                   AS adist
               FROM dt JOIN af ON dt.sub = af.sub AND dt.cell = af.cell
               WHERE dt.query_id <> af.vec_id GROUP BY 1, 2),
@@ -2544,9 +2538,7 @@ object Pipeline extends QueryModule {
       // same hash-derived hyperplane family per table, single dot per
       // surviving pair (same fold order → bit-identical doubles)
       def dot(x: String, y: String) =
-        s"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), " +
-          s"list_transform(range(1, len($x) + 1), " +
-          s"kk -> $x[kk] * $y[kk])), (acc, v) -> acc + v)"
+        duckSum(s"list_transform(range(1, len($x) + 1), kk -> $x[kk] * $y[kk])")
       s"""
       WITH vd AS (SELECT vec_id,
                     list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vd
@@ -2579,9 +2571,8 @@ object Pipeline extends QueryModule {
       graft.ops.Stats.giniTheil(
         docs(s, d).select(size(expr(tokensSql)).cast("long")
           .as("n_tokens")), "n_tokens")
-    }, Some("""
-      WITH r AS (SELECT CAST(CAST(len(regexp_extract_all(lower(text),
-               '[a-z0-9]+')) AS BIGINT) AS DECIMAL(18,6)) AS v
+    }, Some(s"""
+      WITH r AS (SELECT CAST(CAST(len($duckTokensSql) AS BIGINT) AS DECIMAL(18,6)) AS v
              FROM documents),
       bv AS (SELECT v, CAST(COUNT(*) AS BIGINT) AS t FROM r GROUP BY 1),
       c AS (SELECT *, CAST(SUM(t) OVER (ORDER BY v
@@ -2627,12 +2618,11 @@ object Pipeline extends QueryModule {
         docs(s, d).select(col("source"),
           size(expr(tokensSql)).cast("long").as("n_tokens")),
         "source", "n_tokens")
-    }, Some("""
+    }, Some(s"""
       WITH r AS (SELECT source AS g,
-               CAST(CAST(len(regexp_extract_all(lower(text),
-                 '[a-z0-9]+')) AS BIGINT) AS DECIMAL(18,6)) AS v
+               CAST(CAST(len($duckTokensSql) AS BIGINT) AS DECIMAL(18,6)) AS v
              FROM documents
-             WHERE len(regexp_extract_all(lower(text), '[a-z0-9]+')) > 0),
+             WHERE len($duckTokensSql) > 0),
       gv AS (SELECT g, v, CAST(COUNT(*) AS BIGINT) AS t
              FROM r GROUP BY 1, 2),
       bg AS (SELECT g, CAST(SUM(t) AS BIGINT) AS ng,
@@ -2664,11 +2654,10 @@ object Pipeline extends QueryModule {
       graft.ops.Stats.hillTail(
         docs(s, d).select(size(expr(tokensSql)).cast("long")
           .as("n_tokens")), "n_tokens", 100)
-    }, Some("""
-      WITH r AS (SELECT CAST(CAST(len(regexp_extract_all(lower(text),
-               '[a-z0-9]+')) AS BIGINT) AS DECIMAL(18,6)) AS v
+    }, Some(s"""
+      WITH r AS (SELECT CAST(CAST(len($duckTokensSql) AS BIGINT) AS DECIMAL(18,6)) AS v
              FROM documents
-             WHERE len(regexp_extract_all(lower(text), '[a-z0-9]+')) > 0),
+             WHERE len($duckTokensSql) > 0),
       tp AS (SELECT v FROM r ORDER BY v DESC LIMIT 101),
       th AS (SELECT MIN(v) AS x_min,
                CAST(COUNT(*) AS BIGINT) AS n_top FROM tp),
@@ -2692,17 +2681,14 @@ object Pipeline extends QueryModule {
         .select(col("doc_id"), col("n_tokens"), col("stopword_ratio"))
       graft.ops.Pack.tokenBudgetSelect(counts, "doc_id", "n_tokens",
         "stopword_ratio", 10000L)
-    }, Some {
-      val enStops = TextAnalysis.langProfiles.toMap.apply("en")
-        .map(w => s"'$w'").mkString("[", ", ", "]")
-      s"""
+    }, Some(s"""
       WITH w AS (SELECT doc_id,
-               regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
+               $duckTokensSql AS toks
              FROM documents),
       q AS (SELECT doc_id,
               CAST(len(toks) AS BIGINT) AS n_tokens,
               CAST(round(CAST(len(list_filter(toks,
-                tt -> list_contains($enStops, tt))) AS DOUBLE)
+                tt -> list_contains($duckEnStops, tt))) AS DOUBLE)
                 / greatest(len(toks), 1), 6) AS DECIMAL(18,6)) AS sc
             FROM w),
       c AS (SELECT *, CAST(SUM(n_tokens) OVER (ORDER BY sc DESC,
@@ -2721,14 +2707,13 @@ object Pipeline extends QueryModule {
              FROM c WHERE cum <= 10000)
       SELECT n_docs, total_tokens, CAST(10000 AS BIGINT) AS budget,
         n_selected, tokens_selected, cutoff_score, cutoff_doc_id
-      FROM tt CROSS JOIN sel CROSS JOIN bd"""
-    }),
+      FROM tt CROSS JOIN sel CROSS JOIN bd""")),
 
     QueryDef("t_token_stats", (s, d) => {
       TextAnalysis.tokenStats(docs(s, d))
-    }, Some("""
+    }, Some(s"""
       WITH w AS (SELECT doc_id,
-                   regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
+                   $duckTokensSql AS toks
                  FROM documents)
       SELECT doc_id,
         CAST(len(toks) AS BIGINT) AS n_tokens,
@@ -2770,12 +2755,9 @@ object Pipeline extends QueryModule {
     QueryDef("t_quality_score", (s, d) => {
       TextAnalysis.qualityScore(docs(s, d))
         .withColumn("passes_quality", col("passes_quality").cast("long"))
-    }, Some {
-      val enStops = TextAnalysis.langProfiles.toMap.apply("en")
-        .map(w => s"'$w'").mkString("[", ", ", "]")
-      s"""
+    }, Some(s"""
       WITH w AS (SELECT doc_id, text,
-                   regexp_extract_all(lower(text), '[a-z0-9]+') AS toks,
+                   $duckTokensSql AS toks,
                    CAST(greatest(length(text), 1) AS DOUBLE) AS n
                  FROM documents)
       SELECT doc_id,
@@ -2784,16 +2766,15 @@ object Pipeline extends QueryModule {
         round((length(text) - length(regexp_replace(text, '[a-zA-Z]', '', 'g'))) / n, 6) AS alpha_ratio,
         round((length(text) - length(regexp_replace(text, '[0-9]', '', 'g'))) / n, 6) AS digit_ratio,
         round((length(text) - length(regexp_replace(text, '[.,;:!?''"()-]', '', 'g'))) / n, 6) AS punct_ratio,
-        round(CAST(len(list_filter(toks, tt -> list_contains($enStops, tt))) AS DOUBLE)
+        round(CAST(len(list_filter(toks, tt -> list_contains($duckEnStops, tt))) AS DOUBLE)
               / greatest(len(toks), 1), 6) AS stopword_ratio,
         round(CAST(len(list_distinct(toks)) AS DOUBLE)
               / greatest(len(toks), 1), 6) AS type_token_ratio,
         CAST(len(toks) >= 10
              AND (length(text) - length(regexp_replace(text, '[a-zA-Z]', '', 'g'))) / n >= 0.6
-             AND CAST(len(list_filter(toks, tt -> list_contains($enStops, tt))) AS DOUBLE)
+             AND CAST(len(list_filter(toks, tt -> list_contains($duckEnStops, tt))) AS DOUBLE)
                  / greatest(len(toks), 1) >= 0.01 AS BIGINT) AS passes_quality
-      FROM w ORDER BY doc_id"""
-    }),
+      FROM w ORDER BY doc_id""")),
 
     // ---- Gopher quality-rule battery (TextAnalysis.gopherRules, Rae
     // et al. 2021 Table A1): the 7-rule MassiveText page filter —
@@ -2814,7 +2795,7 @@ object Pipeline extends QueryModule {
                    regexp_extract_all(text, '\\S+') AS words,
                    list_filter(string_split(text, chr(10)),
                      l -> length(trim(l)) > 0) AS lines,
-                   regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
+                   $duckTokensSql AS toks
                  FROM documents),
       c AS (SELECT doc_id,
           CAST(len(words) AS BIGINT) AS n_words,
@@ -2880,19 +2861,16 @@ object Pipeline extends QueryModule {
     // ranking in full.
     QueryDef("t_rake_keywords", (s, d) => {
       TextAnalysis.rakeKeywords(docs(s, d), 3, 4)
-    }, Some {
-      val enStops = TextAnalysis.langProfiles.toMap.apply("en")
-        .map(w => s"'$w'").mkString("[", ", ", "]")
-      s"""
+    }, Some(s"""
       WITH w AS (SELECT doc_id,
-                   regexp_extract_all(lower(text), '[a-z0-9]+') AS tk
+                   $duckTokensSql AS tk
                  FROM documents),
       tok AS (SELECT doc_id,
                 unnest(list_transform(range(1, len(tk) + 1),
                   i -> {'pos': i, 'tok': tk[i]})) AS p
               FROM w),
       fl AS (SELECT doc_id, p.pos AS pos, p.tok AS tok,
-               list_contains($enStops, p.tok) AS stop
+               list_contains($duckEnStops, p.tok) AS stop
              FROM tok),
       gr AS (SELECT doc_id, pos, tok, stop,
                SUM(CASE WHEN stop THEN 1 ELSE 0 END)
@@ -2921,8 +2899,7 @@ object Pipeline extends QueryModule {
                  ORDER BY score DESC, phrase) AS BIGINT) AS rank
              FROM byp)
       SELECT doc_id, rank, phrase, score FROM rk WHERE rank <= 3
-      ORDER BY doc_id, rank"""
-    }),
+      ORDER BY doc_id, rank""")),
 
     // ---- Flesch reading-ease readability (TextAnalysis.readability):
     // the classic quality-filter signal over vowel-group / sentence-run
@@ -2954,11 +2931,10 @@ object Pipeline extends QueryModule {
     // denominator folds exactly in both engines.
     QueryDef("t_domain_mix", (s, d) => {
       TextAnalysis.domainMixWeights(docs(s, d))
-    }, Some("""
+    }, Some(s"""
       WITH pd AS (SELECT lang, source,
               CAST(COUNT(*) AS BIGINT) AS n_docs,
-              CAST(SUM(len(regexp_extract_all(lower(text),
-                '[a-z0-9]+'))) AS BIGINT) AS n_tokens
+              CAST(SUM(len($duckTokensSql)) AS BIGINT) AS n_tokens
             FROM documents GROUP BY 1, 2),
       w AS (SELECT *, CAST(round(pow(CAST(n_tokens AS DOUBLE),
               CAST('0.3' AS DOUBLE)), 6) AS DECIMAL(18,6)) AS w6
@@ -2979,23 +2955,20 @@ object Pipeline extends QueryModule {
     // aggregate on source; quality signals stay per-row expressions.
     QueryDef("t_source_stats", (s, d) => {
       TextAnalysis.sourceStats(docs(s, d))
-    }, Some {
-      val enStops = TextAnalysis.langProfiles.toMap.apply("en")
-        .map(w => s"'$w'").mkString("[", ", ", "]")
-      s"""
+    }, Some(s"""
       WITH w AS (SELECT source, text,
-                   regexp_extract_all(lower(text), '[a-z0-9]+') AS toks,
+                   $duckTokensSql AS toks,
                    CAST(greatest(length(text), 1) AS DOUBLE) AS n
                  FROM documents),
       q AS (SELECT source,
           CAST(length(text) AS BIGINT) AS n_chars,
           round(CAST(len(list_distinct(toks)) AS DOUBLE)
                 / greatest(len(toks), 1), 6) AS ttr,
-          round(CAST(len(list_filter(toks, tt -> list_contains($enStops, tt))) AS DOUBLE)
+          round(CAST(len(list_filter(toks, tt -> list_contains($duckEnStops, tt))) AS DOUBLE)
                 / greatest(len(toks), 1), 6) AS swr,
           CAST(len(toks) >= 10
                AND (length(text) - length(regexp_replace(text, '[a-zA-Z]', '', 'g'))) / n >= 0.6
-               AND CAST(len(list_filter(toks, tt -> list_contains($enStops, tt))) AS DOUBLE)
+               AND CAST(len(list_filter(toks, tt -> list_contains($duckEnStops, tt))) AS DOUBLE)
                    / greatest(len(toks), 1) >= 0.01 AS BIGINT) AS pass
         FROM w)
       SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -3005,8 +2978,7 @@ object Pipeline extends QueryModule {
           AS mean_ttr,
         round(CAST(SUM(CAST(swr AS DECIMAL(12,6))) AS DOUBLE) / COUNT(*), 6)
           AS mean_stopword_ratio
-      FROM q GROUP BY 1 ORDER BY 1"""
-    }),
+      FROM q GROUP BY 1 ORDER BY 1""")),
 
     // ---- One-row dataset card (TextAnalysis.datasetCard): the
     // datasheet a corpus release ships with — size, domain breadth,
@@ -3015,12 +2987,9 @@ object Pipeline extends QueryModule {
     // tiny (lang, source) grid, never an Expand over the corpus.
     QueryDef("pipe_dataset_card", (s, d) => {
       TextAnalysis.datasetCard(docs(s, d))
-    }, Some {
-      val enStops = TextAnalysis.langProfiles.toMap.apply("en")
-        .map(w => s"'$w'").mkString("[", ", ", "]")
-      s"""
+    }, Some(s"""
       WITH w AS (SELECT lang, source, text,
-                   regexp_extract_all(lower(text), '[a-z0-9]+') AS toks,
+                   $duckTokensSql AS toks,
                    CAST(greatest(length(text), 1) AS DOUBLE) AS n
                  FROM documents),
       q AS (SELECT lang, source,
@@ -3030,7 +2999,7 @@ object Pipeline extends QueryModule {
                 / greatest(len(toks), 1), 6) AS ttr,
           CAST(len(toks) >= 10
                AND (length(text) - length(regexp_replace(text, '[a-zA-Z]', '', 'g'))) / n >= 0.6
-               AND CAST(len(list_filter(toks, tt -> list_contains($enStops, tt))) AS DOUBLE)
+               AND CAST(len(list_filter(toks, tt -> list_contains($duckEnStops, tt))) AS DOUBLE)
                    / greatest(len(toks), 1) >= 0.01 AS BIGINT) AS pass
         FROM w),
       tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -3055,8 +3024,7 @@ object Pipeline extends QueryModule {
         n_exact_dups,
         round(CAST(n_exact_dups AS DOUBLE) / CAST(n_docs AS DOUBLE), 6)
           AS exact_dup_rate
-      FROM tot CROSS JOIN dom CROSS JOIN dup"""
-    }),
+      FROM tot CROSS JOIN dom CROSS JOIN dup""")),
 
     // ---- RAG-style overlapping chunking (Pack.chunkOverlap): token
     // windows of 20 every 15 per document (5-token overlap), with the
@@ -3065,9 +3033,9 @@ object Pipeline extends QueryModule {
     // short; token-free docs emit nothing.
     QueryDef("o13_chunk_overlap", (s, d) => {
       graft.ops.Pack.chunkOverlap(docs(s, d), 20, 15)
-    }, Some("""
+    }, Some(s"""
       WITH w AS (SELECT doc_id,
-                   regexp_extract_all(lower(text), '[a-z0-9]+') AS tk
+                   $duckTokensSql AS tk
                  FROM documents),
       c AS (SELECT doc_id, tk, unnest(range(0, len(tk), 15)) AS start
             FROM w WHERE len(tk) > 0)
@@ -3091,7 +3059,7 @@ object Pipeline extends QueryModule {
         .mkString(" ")
       s"""
       WITH w AS (SELECT doc_id,
-                   regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
+                   $duckTokensSql AS toks
                  FROM documents),
       scored AS (SELECT doc_id,
           $scores
@@ -3124,9 +3092,9 @@ object Pipeline extends QueryModule {
     // mass per document.
     QueryDef("t_repetition", (s, d) => {
       TextAnalysis.repetitionScore(docs(s, d), 3)
-    }, Some("""
+    }, Some(s"""
       WITH toks AS (SELECT doc_id,
-                      regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
+                      $duckTokensSql AS toks
                     FROM documents),
       g AS (SELECT doc_id, len(toks) AS n_tokens,
               unnest(list_transform(range(1, len(toks) - 1),
@@ -3144,9 +3112,9 @@ object Pipeline extends QueryModule {
 
     QueryDef("t_fingerprints", (s, d) => {
       TextAnalysis.fingerprints(docs(s, d))
-    }, Some("""
+    }, Some(s"""
       WITH w AS (SELECT doc_id,
-                   array_to_string(regexp_extract_all(lower(text), '[a-z0-9]+'), ' ') AS norm
+                   array_to_string($duckTokensSql, ' ') AS norm
                  FROM documents)
       SELECT doc_id, md5(norm) AS fp_md5,
         list_reduce(list_prepend(CAST(0 AS BIGINT),
@@ -3210,7 +3178,7 @@ object Pipeline extends QueryModule {
         .select(col("doc_id"), col("dim").cast("long").as("dim"),
           col("mean_value").cast("decimal(20,6)").cast("string")
             .as("mean_value"))
-    }, Some("""
+    }, Some(s"""
       WITH m AS (SELECT doc_id, encode(text) AS b FROM documents),
       hx AS (SELECT doc_id, hex(b) AS h, octet_length(b) AS n FROM m),
       sm AS (SELECT doc_id, n,
@@ -3219,8 +3187,7 @@ object Pipeline extends QueryModule {
                    / 128.0) AS samples
              FROM hx)
       SELECT doc_id, CAST(n AS BIGINT) AS dim,
-        CAST(CAST(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), samples),
-          (a, v) -> a + v) / greatest(n, 1) AS DECIMAL(20,6)) AS VARCHAR)
+        CAST(CAST(${duckSum("samples", "a")} / greatest(n, 1) AS DECIMAL(20,6)) AS VARCHAR)
           AS mean_value
       FROM sm ORDER BY doc_id""")),
 
@@ -3240,7 +3207,7 @@ object Pipeline extends QueryModule {
         .select(col("doc_id"), col("dim").cast("long").as("dim"),
           col("mean_value").cast("decimal(20,6)").cast("string")
             .as("mean_value"))
-    }, Some("""
+    }, Some(s"""
       WITH m AS (SELECT doc_id, encode(text) AS b FROM documents),
       hx AS (SELECT doc_id, hex(b) AS h, octet_length(b) AS n FROM m),
       px AS (SELECT doc_id, n,
@@ -3253,8 +3220,7 @@ object Pipeline extends QueryModule {
                    AS FLOAT) / CAST(255 AS FLOAT)])) AS pxs
              FROM hx)
       SELECT doc_id, CAST(n * 3 AS BIGINT) AS dim,
-        CAST(CAST(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), pxs),
-          (a, v) -> a + v) / greatest(n * 3, 1) AS DECIMAL(20,6))
+        CAST(CAST(${duckSum("pxs", "a")} / greatest(n * 3, 1) AS DECIMAL(20,6))
           AS VARCHAR) AS mean_value
       FROM px ORDER BY doc_id""")),
 
@@ -3278,7 +3244,7 @@ object Pipeline extends QueryModule {
             .as("first_px"),
           col("last_px").cast("decimal(20,6)").cast("string")
             .as("last_px"))
-    }, Some("""
+    }, Some(s"""
       WITH m AS (SELECT doc_id, encode(text) AS b FROM documents),
       hx AS (SELECT doc_id, hex(b) AS h, octet_length(b) AS n FROM m),
       sel AS (SELECT doc_id, n,
@@ -3291,8 +3257,7 @@ object Pipeline extends QueryModule {
             AS INT) AS FLOAT) / CAST(255 AS FLOAT)])) AS pxs
         FROM hx)
       SELECT doc_id, CAST(8 AS BIGINT) AS ow, CAST(1 AS BIGINT) AS oh,
-        CAST(CAST(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), pxs),
-          (a, v) -> a + v) / 24 AS DECIMAL(20,6)) AS VARCHAR)
+        CAST(CAST(${duckSum("pxs", "a")} / 24 AS DECIMAL(20,6)) AS VARCHAR)
           AS mean_value,
         CAST(CAST(pxs[1] AS DECIMAL(20,6)) AS VARCHAR) AS first_px,
         CAST(CAST(pxs[24] AS DECIMAL(20,6)) AS VARCHAR) AS last_px
@@ -3510,11 +3475,8 @@ object Pipeline extends QueryModule {
       val mentions = dd.select(col("source").as("target"), col("text"))
       val idfs = graft.ops.TextModels.termIdfs(dd, minDf = 0)
       graft.ops.TextModels.entityMentionTermFrequency(mentions, idfs)
-    }, Some {
-      val norm = "sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), " +
-        "list_transform(es, e2 -> e2.wt * e2.wt)), (a, b) -> a + b))"
-      s"""
-      WITH tk AS (SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok
+    }, Some(s"""
+      WITH tk AS (SELECT doc_id, unnest($duckTokensSql) AS tok
              FROM documents),
       dfq AS (SELECT tok, COUNT(*) AS df
               FROM (SELECT DISTINCT doc_id, tok FROM tk) GROUP BY tok),
@@ -3522,7 +3484,7 @@ object Pipeline extends QueryModule {
       idf AS (SELECT tok, round(ln(CAST(n_docs AS DOUBLE) / df), 6) AS idf
               FROM dfq CROSS JOIN n),
       mt AS (SELECT source AS target,
-               unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok
+               unnest($duckTokensSql) AS tok
              FROM documents),
       tf AS (SELECT target, tok, COUNT(*) AS tf FROM mt GROUP BY 1, 2),
       w AS (SELECT target, tf.tok AS tok,
@@ -3533,11 +3495,10 @@ object Pipeline extends QueryModule {
               FROM w GROUP BY target)
       SELECT target, to_json(list_transform(es, e ->
           struct_pack(tok := e.tok,
-            w := CAST(CAST(CASE WHEN $norm > 0 THEN e.wt / $norm
+            w := CAST(CAST(CASE WHEN $duckWtNorm > 0 THEN e.wt / $duckWtNorm
                            ELSE CAST(0.0 AS DOUBLE) END
                       AS DECIMAL(10,6)) AS VARCHAR))))::VARCHAR AS counts
-      FROM ess ORDER BY target"""
-    }),
+      FROM ess ORDER BY target""")),
 
     // ---- Entity skip-gram corpus + per-class min-count filter at TABLE
     // scale: every document becomes a training sentence for its `source`
@@ -3554,10 +3515,10 @@ object Pipeline extends QueryModule {
         .classMinCountFilter(sentences, "src",
           minWordCount = 100, minEntityCount = 1)
         .select(col("target"), to_json(col("sentence")).as("sentence"))
-    }, Some("""
+    }, Some(s"""
       WITH sent AS (SELECT source AS target, doc_id,
                list_concat([source],
-                 regexp_extract_all(lower(text), '[a-z0-9]+')) AS toks
+                 $duckTokensSql) AS toks
              FROM documents),
       cnt AS (SELECT w, COUNT(*) AS c
               FROM (SELECT unnest(toks) AS w FROM sent) GROUP BY w),
@@ -3587,12 +3548,11 @@ object Pipeline extends QueryModule {
         .groupBy("tok").agg(count(lit(1)).as("df"))
       val nDocs = docs(s, d).agg(count(lit(1)).as("n_docs"))
       dfreq.crossJoin(nDocs)
-        .select(col("tok"), col("df"),
-          round(log(col("n_docs").cast("double") / col("df")), 6).as("idf"))
-    }, Some("""
+        .select(col("tok"), col("df"), graft.ops.TextModels.idf.as("idf"))
+    }, Some(s"""
       WITH tk AS (SELECT DISTINCT doc_id, tok FROM (
                     SELECT doc_id,
-                      unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok
+                      unnest($duckTokensSql) AS tok
                     FROM documents)),
       dfq AS (SELECT tok, COUNT(*) AS df FROM tk GROUP BY tok),
       n AS (SELECT COUNT(*) AS n_docs FROM documents)
@@ -3609,8 +3569,8 @@ object Pipeline extends QueryModule {
       // df from the tf aggregate — one token-explode scan feeds both
       val dfreq = tf.groupBy("tok").agg(count(lit(1)).as("df"))
       val nDocs = docs(s, d).agg(count(lit(1)).as("n_docs"))
-      val idf = dfreq.crossJoin(nDocs).select(col("tok"),
-        round(log(col("n_docs").cast("double") / col("df")), 6).as("idf"))
+      val idf = dfreq.crossJoin(nDocs)
+        .select(col("tok"), graft.ops.TextModels.idf.as("idf"))
       val w = tf.join(idf, "tok").select(col("doc_id"), col("tok"),
         (sqrt(col("tf").cast("double")) * col("idf")).as("wt"))
       // the norm fold is hoisted into its own projection — lambdas get
@@ -3625,12 +3585,9 @@ object Pipeline extends QueryModule {
             "cast(cast(case when nrm > 0 then e.wt / nrm " +
             "else cast(0.0 as double) end as decimal(10,6)) as string) as w))"))
           .as("vec"))
-    }, Some {
-      val norm = "sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), " +
-        "list_transform(es, e2 -> e2.wt * e2.wt)), (a, b) -> a + b))"
-      s"""
+    }, Some(s"""
       WITH tk AS (SELECT doc_id,
-                    unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok
+                    unnest($duckTokensSql) AS tok
                   FROM documents),
       tf AS (SELECT doc_id, tok, COUNT(*) AS tf FROM tk GROUP BY 1, 2),
       dfq AS (SELECT tok, COUNT(*) AS df FROM (SELECT DISTINCT doc_id, tok FROM tk)
@@ -3645,11 +3602,10 @@ object Pipeline extends QueryModule {
               FROM w GROUP BY doc_id)
       SELECT doc_id, to_json(list_transform(es, e ->
           struct_pack(tok := e.tok,
-            w := CAST(CAST(CASE WHEN $norm > 0 THEN e.wt / $norm
+            w := CAST(CAST(CASE WHEN $duckWtNorm > 0 THEN e.wt / $duckWtNorm
                            ELSE CAST(0.0 AS DOUBLE) END
                       AS DECIMAL(10,6)) AS VARCHAR))))::VARCHAR AS vec
-      FROM ess ORDER BY doc_id"""
-    }),
+      FROM ess ORDER BY doc_id""")),
 
     // ---- A3: group-to-map (ref groupByKey().mapValues(dict),
     // sift/models/links.py:124-127) via map_from_entries over sorted
@@ -3677,9 +3633,9 @@ object Pipeline extends QueryModule {
     // total rides as a broadcast 1-row frame (the idf shape).
     QueryDef("t_unigram_nll", (s, d) => {
       TextAnalysis.unigramNll(docs(s, d))
-    }, Some("""
+    }, Some(s"""
       WITH toks AS (SELECT doc_id,
-             unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok
+             unnest($duckTokensSql) AS tok
            FROM documents),
       cnt AS (SELECT tok, CAST(COUNT(*) AS BIGINT) AS cnt FROM toks
               GROUP BY 1),
@@ -3697,14 +3653,8 @@ object Pipeline extends QueryModule {
     // ride as broadcast 1-row frames.
     QueryDef("m_bigram_pmi", (s, d) => {
       graft.ops.TextModels.bigramPmi(docs(s, d), 5L)
-    }, Some("""
-      WITH toks AS (SELECT regexp_extract_all(lower(text), '[a-z0-9]+') AS tk
-                    FROM documents),
-      pairs AS (SELECT unnest(list_transform(range(1, len(tk)),
-                  i -> {'src': tk[i], 'dst': tk[i+1]})) AS p FROM toks),
-      bi AS (SELECT p.src AS src, p.dst AS dst,
-               CAST(COUNT(*) AS BIGINT) AS w
-             FROM pairs WHERE p.src <> p.dst GROUP BY 1, 2),
+    }, Some(s"""
+      WITH ${duckWordGraph("bi")},
       uc AS (SELECT tok, CAST(COUNT(*) AS BIGINT) AS c FROM (
                SELECT unnest(tk) AS tok FROM toks) GROUP BY 1),
       tb AS (SELECT CAST(SUM(w) AS BIGINT) AS M FROM bi),
@@ -3729,37 +3679,10 @@ object Pipeline extends QueryModule {
     QueryDef("m_bm25_topk", (s, d) => {
       graft.ops.TextModels.bm25TopK(docs(s, d),
         Seq("hash", "join", "stream"), 10)
-    }, Some("""
-      WITH tok AS (SELECT doc_id,
-             unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok
-           FROM documents),
-      pd AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS len,
-               CAST(SUM(CASE WHEN tok = 'hash' THEN 1 ELSE 0 END) AS BIGINT) AS tf_0,
-               CAST(SUM(CASE WHEN tok = 'join' THEN 1 ELSE 0 END) AS BIGINT) AS tf_1,
-               CAST(SUM(CASE WHEN tok = 'stream' THEN 1 ELSE 0 END) AS BIGINT) AS tf_2
-             FROM tok GROUP BY 1),
-      st AS (SELECT CAST(SUM(len) AS BIGINT) AS sl,
-               CAST(COUNT(*) AS BIGINT) AS nd,
-               CAST(SUM(CASE WHEN tf_0 > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df_0,
-               CAST(SUM(CASE WHEN tf_1 > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df_1,
-               CAST(SUM(CASE WHEN tf_2 > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df_2
-             FROM pd)
+    }, Some(s"""
+      WITH $duckBm25Ctes
       SELECT doc_id, round(
-          round(ln(1.0 + (CAST(nd AS DOUBLE) - CAST(df_0 AS DOUBLE) + 0.5)
-              / (CAST(df_0 AS DOUBLE) + 0.5)), 6)
-            * (CAST(tf_0 AS DOUBLE) * 2.2)
-            / (CAST(tf_0 AS DOUBLE) + 1.2 * (1.0 - 0.75 + 0.75 *
-               (CAST(len AS DOUBLE) / (CAST(sl AS DOUBLE) / CAST(nd AS DOUBLE)))))
-        + round(ln(1.0 + (CAST(nd AS DOUBLE) - CAST(df_1 AS DOUBLE) + 0.5)
-              / (CAST(df_1 AS DOUBLE) + 0.5)), 6)
-            * (CAST(tf_1 AS DOUBLE) * 2.2)
-            / (CAST(tf_1 AS DOUBLE) + 1.2 * (1.0 - 0.75 + 0.75 *
-               (CAST(len AS DOUBLE) / (CAST(sl AS DOUBLE) / CAST(nd AS DOUBLE)))))
-        + round(ln(1.0 + (CAST(nd AS DOUBLE) - CAST(df_2 AS DOUBLE) + 0.5)
-              / (CAST(df_2 AS DOUBLE) + 0.5)), 6)
-            * (CAST(tf_2 AS DOUBLE) * 2.2)
-            / (CAST(tf_2 AS DOUBLE) + 1.2 * (1.0 - 0.75 + 0.75 *
-               (CAST(len AS DOUBLE) / (CAST(sl AS DOUBLE) / CAST(nd AS DOUBLE)))))
+          $duckBm25Score
         , 6) AS score
       FROM pd CROSS JOIN st
       WHERE tf_0 > 0 OR tf_1 > 0 OR tf_2 > 0
@@ -3775,9 +3698,9 @@ object Pipeline extends QueryModule {
       val sp = s; import sp.implicits._
       graft.ops.TextModels.qldJoin(docs(s, d),
         Seq("hash", "join", "stream").toDF("term"), 10)
-    }, Some("""
+    }, Some(s"""
       WITH tok AS (SELECT doc_id,
-             unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok
+             unnest($duckTokensSql) AS tok
            FROM documents),
       lens AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS len
                FROM tok GROUP BY 1),
@@ -3810,38 +3733,11 @@ object Pipeline extends QueryModule {
     QueryDef("m_prf_expansion", (s, d) => {
       graft.ops.TextModels.prfExpand(docs(s, d),
         Seq("hash", "join", "stream"), 5, 5, 10)
-    }, Some("""
-      WITH tok AS (SELECT doc_id,
-             unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok
-           FROM documents),
-      pd AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS len,
-               CAST(SUM(CASE WHEN tok = 'hash' THEN 1 ELSE 0 END) AS BIGINT) AS tf_0,
-               CAST(SUM(CASE WHEN tok = 'join' THEN 1 ELSE 0 END) AS BIGINT) AS tf_1,
-               CAST(SUM(CASE WHEN tok = 'stream' THEN 1 ELSE 0 END) AS BIGINT) AS tf_2
-             FROM tok GROUP BY 1),
-      st AS (SELECT CAST(SUM(len) AS BIGINT) AS sl,
-               CAST(COUNT(*) AS BIGINT) AS nd,
-               CAST(SUM(CASE WHEN tf_0 > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df_0,
-               CAST(SUM(CASE WHEN tf_1 > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df_1,
-               CAST(SUM(CASE WHEN tf_2 > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df_2
-             FROM pd),
+    }, Some(s"""
+      WITH $duckBm25Ctes,
       fb AS (SELECT doc_id FROM (
                SELECT doc_id, round(
-                   round(ln(1.0 + (CAST(nd AS DOUBLE) - CAST(df_0 AS DOUBLE) + 0.5)
-                       / (CAST(df_0 AS DOUBLE) + 0.5)), 6)
-                     * (CAST(tf_0 AS DOUBLE) * 2.2)
-                     / (CAST(tf_0 AS DOUBLE) + 1.2 * (1.0 - 0.75 + 0.75 *
-                        (CAST(len AS DOUBLE) / (CAST(sl AS DOUBLE) / CAST(nd AS DOUBLE)))))
-                 + round(ln(1.0 + (CAST(nd AS DOUBLE) - CAST(df_1 AS DOUBLE) + 0.5)
-                       / (CAST(df_1 AS DOUBLE) + 0.5)), 6)
-                     * (CAST(tf_1 AS DOUBLE) * 2.2)
-                     / (CAST(tf_1 AS DOUBLE) + 1.2 * (1.0 - 0.75 + 0.75 *
-                        (CAST(len AS DOUBLE) / (CAST(sl AS DOUBLE) / CAST(nd AS DOUBLE)))))
-                 + round(ln(1.0 + (CAST(nd AS DOUBLE) - CAST(df_2 AS DOUBLE) + 0.5)
-                       / (CAST(df_2 AS DOUBLE) + 0.5)), 6)
-                     * (CAST(tf_2 AS DOUBLE) * 2.2)
-                     / (CAST(tf_2 AS DOUBLE) + 1.2 * (1.0 - 0.75 + 0.75 *
-                        (CAST(len AS DOUBLE) / (CAST(sl AS DOUBLE) / CAST(nd AS DOUBLE)))))
+                   $duckBm25Score
                  , 6) AS score
                FROM pd CROSS JOIN st
                WHERE tf_0 > 0 OR tf_1 > 0 OR tf_2 > 0
@@ -3854,9 +3750,7 @@ object Pipeline extends QueryModule {
               FROM tok JOIN fb USING (doc_id) GROUP BY 1),
       expn AS (SELECT tok AS term FROM (
                  SELECT f.tok,
-                   round(CAST(f.ftf AS DOUBLE) * round(ln(1.0 +
-                     (CAST(nd AS DOUBLE) - CAST(df AS DOUBLE) + 0.5) /
-                     (CAST(df AS DOUBLE) + 0.5)), 6), 6) AS escore
+                   round(CAST(f.ftf AS DOUBLE) * ${duckBm25Idf("df")}, 6) AS escore
                  FROM ftf f JOIN dfa USING (tok) CROSS JOIN nd1
                  WHERE f.tok NOT IN ('hash', 'join', 'stream')
                  ORDER BY escore DESC, tok LIMIT 5) z),
@@ -3873,12 +3767,7 @@ object Pipeline extends QueryModule {
               FROM tf2 GROUP BY 1),
       sc AS (SELECT tf2.doc_id,
                CAST(round(
-                 round(ln(1.0 + (CAST(nd AS DOUBLE) - CAST(df AS DOUBLE)
-                     + 0.5) / (CAST(df AS DOUBLE) + 0.5)), 6)
-                   * (CAST(tf AS DOUBLE) * 2.2)
-                   / (CAST(tf AS DOUBLE) + 1.2 * (1.0 - 0.75 + 0.75 *
-                      (CAST(len AS DOUBLE) / (CAST(sl AS DOUBLE) /
-                       CAST(nd AS DOUBLE))))), 6) AS DECIMAL(18,6)) AS ts
+                 ${duckBm25Term("tf", "df")}, 6) AS DECIMAL(18,6)) AS ts
              FROM tf2 JOIN df2 USING (tok) JOIN lens USING (doc_id)
              CROSS JOIN st2)
       SELECT doc_id, round(CAST(SUM(ts) AS DOUBLE), 6) AS score
@@ -3893,36 +3782,9 @@ object Pipeline extends QueryModule {
       graft.ops.TextModels.rankEval(docs(s, d),
         Seq("hash", "join", "stream"), 10)
     }, Some(s"""
-      WITH tok AS (SELECT doc_id,
-             unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok
-           FROM documents),
-      pd AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS len,
-               CAST(SUM(CASE WHEN tok = 'hash' THEN 1 ELSE 0 END) AS BIGINT) AS tf_0,
-               CAST(SUM(CASE WHEN tok = 'join' THEN 1 ELSE 0 END) AS BIGINT) AS tf_1,
-               CAST(SUM(CASE WHEN tok = 'stream' THEN 1 ELSE 0 END) AS BIGINT) AS tf_2
-             FROM tok GROUP BY 1),
-      st AS (SELECT CAST(SUM(len) AS BIGINT) AS sl,
-               CAST(COUNT(*) AS BIGINT) AS nd,
-               CAST(SUM(CASE WHEN tf_0 > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df_0,
-               CAST(SUM(CASE WHEN tf_1 > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df_1,
-               CAST(SUM(CASE WHEN tf_2 > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df_2
-             FROM pd),
+      WITH $duckBm25Ctes,
       sc AS (SELECT doc_id, round(
-          round(ln(1.0 + (CAST(nd AS DOUBLE) - CAST(df_0 AS DOUBLE) + 0.5)
-              / (CAST(df_0 AS DOUBLE) + 0.5)), 6)
-            * (CAST(tf_0 AS DOUBLE) * 2.2)
-            / (CAST(tf_0 AS DOUBLE) + 1.2 * (1.0 - 0.75 + 0.75 *
-               (CAST(len AS DOUBLE) / (CAST(sl AS DOUBLE) / CAST(nd AS DOUBLE)))))
-        + round(ln(1.0 + (CAST(nd AS DOUBLE) - CAST(df_1 AS DOUBLE) + 0.5)
-              / (CAST(df_1 AS DOUBLE) + 0.5)), 6)
-            * (CAST(tf_1 AS DOUBLE) * 2.2)
-            / (CAST(tf_1 AS DOUBLE) + 1.2 * (1.0 - 0.75 + 0.75 *
-               (CAST(len AS DOUBLE) / (CAST(sl AS DOUBLE) / CAST(nd AS DOUBLE)))))
-        + round(ln(1.0 + (CAST(nd AS DOUBLE) - CAST(df_2 AS DOUBLE) + 0.5)
-              / (CAST(df_2 AS DOUBLE) + 0.5)), 6)
-            * (CAST(tf_2 AS DOUBLE) * 2.2)
-            / (CAST(tf_2 AS DOUBLE) + 1.2 * (1.0 - 0.75 + 0.75 *
-               (CAST(len AS DOUBLE) / (CAST(sl AS DOUBLE) / CAST(nd AS DOUBLE)))))
+          $duckBm25Score
         , 6) AS score,
           CAST((CASE WHEN tf_0 > 0 THEN 1 ELSE 0 END) +
                (CASE WHEN tf_1 > 0 THEN 1 ELSE 0 END) +
@@ -3967,12 +3829,7 @@ object Pipeline extends QueryModule {
     QueryDef("g_textrank", (s, d) => {
       graft.ops.Graph.textRank(docs(s, d), 5)
     }, Some(s"""
-      WITH toks AS (SELECT regexp_extract_all(lower(text), '[a-z0-9]+') AS tk
-                    FROM documents),
-      pairs AS (SELECT unnest(list_transform(range(1, len(tk)),
-                  i -> {'src': tk[i], 'dst': tk[i+1]})) AS p FROM toks),
-      e AS (SELECT p.src AS src, p.dst AS dst, CAST(COUNT(*) AS BIGINT) AS w
-            FROM pairs WHERE p.src <> p.dst GROUP BY 1, 2),
+      WITH ${duckWordGraph()},
       ow AS (SELECT src, SUM(w) AS ow FROM e GROUP BY 1),
       ew AS (SELECT e.src, e.dst, e.w, ow.ow FROM e JOIN ow USING (src)),
       nodes AS (SELECT DISTINCT unnest(tk) AS node FROM toks),
@@ -3987,12 +3844,7 @@ object Pipeline extends QueryModule {
     QueryDef("g_hits", (s, d) => {
       graft.ops.Graph.hits(graft.ops.Graph.wordGraph(docs(s, d)), 3)
     }, Some(s"""
-      WITH toks AS (SELECT regexp_extract_all(lower(text), '[a-z0-9]+') AS tk
-                    FROM documents),
-      pairs AS (SELECT unnest(list_transform(range(1, len(tk)),
-                  i -> {'src': tk[i], 'dst': tk[i+1]})) AS p FROM toks),
-      e AS (SELECT p.src AS src, p.dst AS dst, CAST(COUNT(*) AS BIGINT) AS w
-            FROM pairs WHERE p.src <> p.dst GROUP BY 1, 2),
+      WITH ${duckWordGraph()},
       nodes AS (SELECT DISTINCT node FROM (
         SELECT src AS node FROM e UNION ALL SELECT dst FROM e) z),
       h0 AS (SELECT node, CAST(1000000 AS BIGINT) AS hub FROM nodes),
@@ -4008,13 +3860,8 @@ object Pipeline extends QueryModule {
     // all 3 rounds.
     QueryDef("g_katz_centrality", (s, d) => {
       graft.ops.Graph.katz(graft.ops.Graph.wordGraph(docs(s, d)), 3)
-    }, Some("""
-      WITH toks AS (SELECT regexp_extract_all(lower(text), '[a-z0-9]+') AS tk
-                    FROM documents),
-      pairs AS (SELECT unnest(list_transform(range(1, len(tk)),
-                  i -> {'src': tk[i], 'dst': tk[i+1]})) AS p FROM toks),
-      e AS (SELECT p.src AS src, p.dst AS dst, CAST(COUNT(*) AS BIGINT) AS w
-            FROM pairs WHERE p.src <> p.dst GROUP BY 1, 2),
+    }, Some(s"""
+      WITH ${duckWordGraph()},
       nodes AS (SELECT DISTINCT node FROM (
         SELECT src AS node FROM e UNION ALL SELECT dst FROM e) z),
       k0 AS (SELECT node, CAST(1000000 AS BIGINT) AS rank FROM nodes),
@@ -4041,11 +3888,8 @@ object Pipeline extends QueryModule {
       graft.ops.Graph.linkPrediction(
         graft.ops.Graph.wordGraph(docs(s, d)).select("src", "dst"),
         maxDegree = 30L, k = 50)
-    }, Some("""
-      WITH toks AS (SELECT regexp_extract_all(lower(text), '[a-z0-9]+') AS tk
-                    FROM documents),
-      pairs AS (SELECT unnest(list_transform(range(1, len(tk)),
-                  i -> {'src': tk[i], 'dst': tk[i+1]})) AS p FROM toks),
+    }, Some(s"""
+      WITH $duckBigramCtes,
       de AS (SELECT DISTINCT p.src AS src, p.dst AS dst FROM pairs
              WHERE p.src <> p.dst),
       und AS (SELECT DISTINCT a, b FROM (
@@ -4078,11 +3922,8 @@ object Pipeline extends QueryModule {
     QueryDef("g_triangles", (s, d) => {
       graft.ops.Graph.triangleCount(
         graft.ops.Graph.wordGraph(docs(s, d)).select("src", "dst"))
-    }, Some("""
-      WITH toks AS (SELECT regexp_extract_all(lower(text), '[a-z0-9]+') AS tk
-                    FROM documents),
-      pairs AS (SELECT unnest(list_transform(range(1, len(tk)),
-                  i -> {'src': tk[i], 'dst': tk[i+1]})) AS p FROM toks),
+    }, Some(s"""
+      WITH $duckBigramCtes,
       de AS (SELECT DISTINCT p.src AS src, p.dst AS dst FROM pairs
              WHERE p.src <> p.dst),
       und AS (SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
@@ -4127,10 +3968,7 @@ object Pipeline extends QueryModule {
       } yield Seq(s"('q$x','q$y')", s"('r$x','r$y')")).flatten ++
         Seq("('q1','r1')")).mkString(", ")
       s"""
-      WITH toks AS (SELECT regexp_extract_all(lower(text), '[a-z0-9]+') AS tk
-                    FROM documents),
-      pairs AS (SELECT unnest(list_transform(range(1, len(tk)),
-                  i -> {'src': tk[i], 'dst': tk[i+1]})) AS p FROM toks),
+      WITH $duckBigramCtes,
       de AS (SELECT p.src AS src, p.dst AS dst FROM pairs
              WHERE p.src <> p.dst
              UNION ALL
@@ -4169,10 +4007,7 @@ object Pipeline extends QueryModule {
       } yield Seq(s"('q$x','q$y')", s"('r$x','r$y')")).flatten ++
         Seq("('q1','r1')")).mkString(", ")
       s"""
-      WITH toks AS (SELECT regexp_extract_all(lower(text), '[a-z0-9]+') AS tk
-                    FROM documents),
-      pairs AS (SELECT unnest(list_transform(range(1, len(tk)),
-                  i -> {'src': tk[i], 'dst': tk[i+1]})) AS p FROM toks),
+      WITH $duckBigramCtes,
       de AS (SELECT p.src AS src, p.dst AS dst FROM pairs
              WHERE p.src <> p.dst
              UNION ALL
@@ -4216,11 +4051,8 @@ object Pipeline extends QueryModule {
     QueryDef("g_assortativity", (s, d) => {
       graft.ops.Graph.assortativity(
         graft.ops.Graph.wordGraph(docs(s, d)).select("src", "dst"))
-    }, Some("""
-      WITH toks AS (SELECT regexp_extract_all(lower(text), '[a-z0-9]+') AS tk
-                    FROM documents),
-      pairs AS (SELECT unnest(list_transform(range(1, len(tk)),
-                  i -> {'src': tk[i], 'dst': tk[i+1]})) AS p FROM toks),
+    }, Some(s"""
+      WITH $duckBigramCtes,
       de AS (SELECT p.src AS src, p.dst AS dst FROM pairs
              WHERE p.src <> p.dst),
       und AS (SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
@@ -4267,10 +4099,7 @@ object Pipeline extends QueryModule {
         graft.ops.Graph.wordGraph(docs(s, d)).select("src", "dst")
           .unionByName(planted), 2, 6)
     }, Some(s"""
-      WITH toks AS (SELECT regexp_extract_all(lower(text), '[a-z0-9]+') AS tk
-                    FROM documents),
-      pairs AS (SELECT unnest(list_transform(range(1, len(tk)),
-                  i -> {'src': tk[i], 'dst': tk[i+1]})) AS p FROM toks),
+      WITH $duckBigramCtes,
       de AS (SELECT p.src AS src, p.dst AS dst FROM pairs
              WHERE p.src <> p.dst
              UNION ALL
@@ -4299,11 +4128,8 @@ object Pipeline extends QueryModule {
         .select(col("w").as("node"))
       graft.ops.Graph.bfsDistances(
         graft.ops.Graph.wordGraph(dd).select("src", "dst"), srcs, 3)
-    }, Some("""
-      WITH toks AS (SELECT regexp_extract_all(lower(text), '[a-z0-9]+')
-                      AS tk FROM documents),
-      pairs AS (SELECT unnest(list_transform(range(1, len(tk)),
-                  i -> {'src': tk[i], 'dst': tk[i+1]})) AS p FROM toks),
+    }, Some(s"""
+      WITH $duckBigramCtes,
       e0 AS MATERIALIZED (
         SELECT DISTINCT least(p.src, p.dst) AS u,
           greatest(p.src, p.dst) AS v
@@ -4350,13 +4176,7 @@ object Pipeline extends QueryModule {
         graft.ops.Graph.wordNodes(dd), graft.ops.Graph.wordGraph(dd),
         srcs, 4)
     }, Some(s"""
-      WITH toks AS (SELECT regexp_extract_all(lower(text), '[a-z0-9]+')
-                      AS tk FROM documents),
-      pairs AS (SELECT unnest(list_transform(range(1, len(tk)),
-                  i -> {'src': tk[i], 'dst': tk[i+1]})) AS p FROM toks),
-      e AS (SELECT p.src AS src, p.dst AS dst,
-              CAST(COUNT(*) AS BIGINT) AS w
-            FROM pairs WHERE p.src <> p.dst GROUP BY 1, 2),
+      WITH ${duckWordGraph()},
       ow AS (SELECT src, SUM(w) AS ow FROM e GROUP BY 1),
       ew AS (SELECT e.src, e.dst, e.w, ow.ow FROM e JOIN ow USING (src)),
       uni AS (SELECT unnest(tk) AS w FROM toks),
@@ -4377,9 +4197,7 @@ object Pipeline extends QueryModule {
   /** DuckDB twin of [[graft.ops.Pq]]'s squared-L2 sequential fold. */
   private def duckL2(a: String, b: String): String = {
     val diff = s"(CAST($a[kk] AS DOUBLE) - CAST($b[kk] AS DOUBLE))"
-    s"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), " +
-      s"list_transform(range(1, len($a) + 1), kk -> $diff * $diff)), " +
-      s"(acc, v) -> acc + v)"
+    duckSum(s"list_transform(range(1, len($a) + 1), kk -> $diff * $diff)")
   }
 
   /** DuckDB twin of one PQ assignment round (argmin squared-L2, cell
@@ -4436,8 +4254,7 @@ object Pipeline extends QueryModule {
                ${duckL2("qv", "b.centroid")} AS d
              FROM q JOIN b2 b ON q.sub = b.sub),
       sc2 AS (SELECT dt.query_id, af.vec_id AS neighbor_id,
-                list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                  list(dt.d ORDER BY dt.sub)), (acc, v) -> acc + v)
+                ${duckSum("list(dt.d ORDER BY dt.sub)")}
                   AS adist
               FROM dt JOIN af ON dt.sub = af.sub AND dt.cell = af.cell
               WHERE dt.query_id <> af.vec_id GROUP BY 1, 2),
@@ -4516,8 +4333,7 @@ object Pipeline extends QueryModule {
                ${duckL2("qv", "b.centroid")} AS d
              FROM q JOIN b2 b ON q.sub = b.sub),
       sc2 AS (SELECT dt.query_id, af.vec_id AS neighbor_id,
-                list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                  list(dt.d ORDER BY dt.sub)), (acc, v) -> acc + v)
+                ${duckSum("list(dt.d ORDER BY dt.sub)")}
                   AS adist
               FROM dt
               JOIN af ON dt.sub = af.sub AND dt.cell = af.cell

@@ -143,4 +143,10 @@ object Tables {
       case _ => unix_micros(col("ts").cast(TimestampType))
     }
   }
+
+  /** DuckDB twin of [[events]] for the oracles: CTE `e` with the exact
+    * microsecond epoch `ts_us`, which DuckDB reads off either `ts` form.
+    */
+  val duckEventsCte: String = "e AS (SELECT user_id, event_id, event_type, " +
+    "epoch_us(ts) AS ts_us FROM events)"
 }

@@ -5,6 +5,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
 import graft.ops.Pins.PinSyntax
+import graft.ops.Hashing.duckTokensSql
+import graft.functions.KmvSketch
+import graft.functions.VectorFold.duckSum
 
 /** Relational operator coverage (SURVEY.md §2.3-§2.7): the full join
   * surface, aggregation forms (incl. cube/rollup/grouping sets), window
@@ -415,9 +418,9 @@ object Relational extends QueryModule {
       words.join(broadcast(vocab), Seq("w"), "left_outer")
         .select(coalesce(col("rank"), lit(50)).as("rank"))
         .groupBy("rank").agg(count(lit(1)).as("n"))
-    }, Some("""
+    }, Some(s"""
       WITH words AS (
-        SELECT unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS w
+        SELECT unnest($duckTokensSql) AS w
         FROM documents),
       vocab AS (
         SELECT w, rank FROM (
@@ -499,15 +502,13 @@ object Relational extends QueryModule {
         .select(size(col("ks")).cast("long").as("n_min"),
           expr("try_element_at(ks, -1)").as("kth"),
           expr(graft.functions.KmvSketch.estimateSql("ks", k)).as("est"))
-    }, Some("""
+    }, Some(s"""
       WITH h AS (SELECT DISTINCT
           CAST(('0x' || substring(md5(CAST(l_partkey AS VARCHAR)),1,15)) AS BIGINT) AS h
         FROM lineitem),
       mins AS (SELECT h FROM h ORDER BY h LIMIT 256)
       SELECT CAST(COUNT(*) AS BIGINT) AS n_min, MAX(h) AS kth,
-        CAST(CASE WHEN COUNT(*) < 256 THEN COUNT(*)
-             ELSE floor(255.0 * 1152921504606846976.0 / CAST(MAX(h) AS DOUBLE))
-             END AS BIGINT) AS est
+        ${KmvSketch.duckEstimate("COUNT(*)", "MAX(h)", 256)} AS est
       FROM mins""")),
 
     // ---- KMV SET ALGEBRA (Beyer et al. 2007): two sketches from ONE
@@ -544,7 +545,7 @@ object Relational extends QueryModule {
           floor(col("n_common").cast("double") /
             col("n_u").cast("double") *
             col("union_est").cast("double")).cast("long").as("inter_est"))
-    }, Some("""
+    }, Some(s"""
       WITH ha AS (SELECT DISTINCT
           CAST(('0x' || substring(md5(CAST(l_partkey AS VARCHAR)),1,15))
             AS BIGINT) AS h
@@ -565,9 +566,8 @@ object Relational extends QueryModule {
           (SELECT CAST(COUNT(*) AS BIGINT) FROM u
            WHERE h IN (SELECT h FROM a) AND h IN (SELECT h FROM b))
             AS n_common),
-      ue AS (SELECT *, CAST(CASE WHEN n_u < 256 THEN n_u
-               ELSE floor(255.0 * 1152921504606846976.0 /
-                 CAST(kth AS DOUBLE)) END AS BIGINT) AS union_est
+      ue AS (SELECT *, ${KmvSketch.duckEstimate("n_u", "kth", 256)}
+               AS union_est
              FROM st)
       SELECT n_a, n_b, n_u, union_est,
         round(CAST(n_common AS DOUBLE) / CAST(n_u AS DOUBLE), 6)
@@ -617,9 +617,7 @@ object Relational extends QueryModule {
       arr AS (SELECT list(rank ORDER BY bucket) AS rl FROM regs),
       e AS (SELECT
         CAST(len(list_filter(rl, r -> r = 0)) AS BIGINT) AS zeros,
-        list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-          list_transform(rl, r -> pow(CAST(0.5 AS DOUBLE), r))),
-          (a, v) -> a + v) AS denom
+        ${duckSum("list_transform(rl, r -> pow(CAST(0.5 AS DOUBLE), r))", "a")} AS denom
         FROM arr)
       SELECT zeros,
         round(CASE WHEN CAST('${0.7213 / (1 + 1.079 / 512) * 512 * 512}'
@@ -763,10 +761,10 @@ object Relational extends QueryModule {
         to_json(array_sort(array_distinct(
           expr(graft.ops.Hashing.tokens()))))
           .as("vocab"))
-    }, Some("""
+    }, Some(s"""
       SELECT doc_id,
         to_json(list_sort(list_distinct(
-          regexp_extract_all(lower(text), '[a-z0-9]+'))))::VARCHAR
+          $duckTokensSql)))::VARCHAR
           AS vocab
       FROM documents ORDER BY doc_id""")),
 
@@ -817,17 +815,17 @@ object Relational extends QueryModule {
           to_json(transform(col("vd"), x =>
             (x / col("n")).cast(DecimalType(10, 6)).cast("string")))
             .as("unit"))
-    }, Some("""
+    }, Some {
+      val sumSq = duckSum("list_transform(embedding, " +
+        "y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE))", "a", "b")
+      s"""
       SELECT vec_id,
         to_json(list_transform(
           list_transform(embedding, y -> CAST(y AS DOUBLE)),
-          x -> CAST(CAST(x / sqrt(list_reduce(
-            list_prepend(CAST(0.0 AS DOUBLE),
-              list_transform(embedding,
-                y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE))),
-            (a, b) -> a + b)) AS DECIMAL(10,6)) AS VARCHAR)))::VARCHAR
+          x -> CAST(CAST(x / sqrt($sumSq) AS DECIMAL(10,6)) AS VARCHAR)))::VARCHAR
           AS unit
-      FROM embeddings ORDER BY vec_id""")),
+      FROM embeddings ORDER BY vec_id"""
+    }),
 
     // ---- ranking window functions.
     QueryDef("w_rank_funcs", (s, d) => {
@@ -976,9 +974,9 @@ object Relational extends QueryModule {
         .globalOrdinal(byCount, Seq(desc("cnt"), asc("w")), "rank")
         .filter(col("rank") >= 5 && col("rank") < 30)
         .select("w", "cnt", "rank")
-    }, Some("""
+    }, Some(s"""
       WITH words AS (
-        SELECT unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS w
+        SELECT unnest($duckTokensSql) AS w
         FROM documents),
       ranked AS (
         SELECT w, COUNT(*) AS cnt,
@@ -1041,9 +1039,7 @@ object Relational extends QueryModule {
         s"""SELECT '$c' AS "column", CAST(COUNT(*) AS BIGINT) AS n_rows,
            |  CAST(SUM(CASE WHEN $c IS NULL THEN 1 ELSE 0 END) AS BIGINT)
            |    AS n_null,
-           |  (SELECT CAST(CASE WHEN COUNT(*) < 256 THEN COUNT(*)
-           |     ELSE floor(255.0 * 1152921504606846976.0 /
-           |                CAST(MAX(h) AS DOUBLE)) END AS BIGINT)
+           |  (SELECT ${KmvSketch.duckEstimate("COUNT(*)", "MAX(h)", 256)}
            |   FROM (SELECT DISTINCT CAST(('0x' || substring(
            |           md5(CAST($c AS VARCHAR)),1,15)) AS BIGINT) AS h
            |         FROM lineitem WHERE $c IS NOT NULL

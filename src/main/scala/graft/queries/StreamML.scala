@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.ml.feature.Word2Vec
 import graft.ops.EventAnalytics
 import graft.streaming.Events
+import graft.ops.Hashing.duckTokensSql
 
 /** Streaming (§2.9) and ML (M1) coverage. The streaming query's oracle is
   * the equivalent batch aggregation (a bounded file source processed in
@@ -135,16 +136,7 @@ object StreamML extends QueryModule {
       Events.neardupDedupBuckets(s, d)
     }, Some(s"""
       WITH ${Pipeline.duckShingleCtes},
-      sig AS (SELECT doc_id, list_transform(range(0, 8), i ->
-                list_min(list_transform(shingles, s ->
-                  ${graft.ops.Hashing.duckMd5Long(
-                    "CAST(i AS VARCHAR) || ':' || s")}))) AS sig
-              FROM sh),
-      banded AS (SELECT doc_id, bb.b AS band,
-                   md5(array_to_string(list_transform(
-                     sig[bb.b * 2 + 1 : bb.b * 2 + 2],
-                     x -> CAST(x AS VARCHAR)), ',')) AS bkey
-                 FROM sig CROSS JOIN (SELECT unnest(range(0, 4)) AS b) bb)
+      ${graft.ops.Dedup.duckMinhashBands(8, 4, 2)}
       SELECT DISTINCT band, bkey FROM banded ORDER BY band, bkey""")),
 
     // ---- §2.9 + sketch family: the KMV distinct sketch as a STREAMING
@@ -159,10 +151,7 @@ object StreamML extends QueryModule {
         "CAST(event_id AS VARCHAR)")} AS h FROM events),
       mins AS (SELECT h FROM h ORDER BY h LIMIT 256)
       SELECT CAST(COUNT(*) AS BIGINT) AS n_min, MAX(h) AS kth,
-        CAST(CASE WHEN COUNT(*) < 256 THEN COUNT(*)
-             ELSE floor(255.0 * 1152921504606846976.0 /
-                        CAST(MAX(h) AS DOUBLE))
-             END AS BIGINT) AS est
+        ${graft.functions.KmvSketch.duckEstimate("COUNT(*)", "MAX(h)", 256)} AS est
       FROM mins""")),
 
     // ---- §2.9 + forecast family: the EWMA-8 daily forecast twin.
@@ -280,9 +269,8 @@ object StreamML extends QueryModule {
     // e_transitions.
     QueryDef("st_transitions", (s, d) => {
       Events.transitionCounts(s, d)
-    }, Some("""
-      WITH e AS (SELECT user_id, event_id, event_type, epoch_us(ts)
-                   AS ts_us FROM events),
+    }, Some(s"""
+      WITH ${Tables.duckEventsCte},
       p AS (SELECT COALESCE(lag(event_type, 1) OVER (
                 PARTITION BY user_id ORDER BY ts_us, event_id),
                 '__start__') AS from_type,
@@ -308,8 +296,8 @@ object StreamML extends QueryModule {
         .select(col("word"),
           size(org.apache.spark.ml.functions.vector_to_array(col("vector")))
             .cast("long").as("dim"))
-    }, Some("""
-      WITH w AS (SELECT unnest(regexp_extract_all(lower(text), '[a-z0-9]+'))
+    }, Some(s"""
+      WITH w AS (SELECT unnest($duckTokensSql)
                    AS word
                  FROM documents)
       SELECT word, CAST(16 AS BIGINT) AS dim

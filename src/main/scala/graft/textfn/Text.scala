@@ -15,8 +15,9 @@ package graft.textfn
 object Text {
 
   /** Engine tokenizer spec: lowercase, maximal runs of [a-z0-9]. Mirrors
-    * the SQL `regexp_extract_all(lower(text), '[a-z0-9]+')` used by every
-    * oracle-checked query so JVM and SQL paths agree exactly.
+    * the Spark SQL `graft.ops.Hashing.tokens` and its one DuckDB twin,
+    * `graft.ops.Hashing.duckTokens`, so JVM and SQL paths agree exactly
+    * (TextSpec checks the first pair, the gate crosscheck the second).
     */
   private val TokenRe = "[a-z0-9]+".r
   def tokenize(text: String): Vector[String] =

@@ -68,4 +68,20 @@ class TextSpec extends AnyFunSuite {
       assert(h >= 0 && h < Text.FpMod)
     }
   }
+
+  test("Text.tokenize equals the Spark SQL tokenizer Hashing.tokens") {
+    val spark = SharedSpark.session
+    import spark.implicits._
+    // uppercase, digits, punctuation, Latin-1 (É, ß), dotted İ, the
+    // Kelvin sign (lowercases to ASCII k), astral characters, ""
+    val texts = Seq(
+      "Hello, World! x2 3.14 foo_bar-BAZ",
+      "\u00c9COLE Stra\u00dfe 42\u00df \u00e9t\u00e9 \u0130stanbul",
+      "\u212aelvin 273\u212a and \ud835\udc00lpha \ud83d\ude00 emoji9",
+      "")
+    val got = texts.toDF("text")
+      .select(org.apache.spark.sql.functions.expr(graft.ops.Hashing.tokensSql))
+      .as[Seq[String]].collect().toSeq
+    assert(got == texts.map(Text.tokenize))
+  }
 }
